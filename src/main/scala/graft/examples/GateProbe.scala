@@ -16,6 +16,10 @@ object GateProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val modality = args.lift(1).getOrElse("image")
     val rounds = args.lift(2).map(_.toInt).getOrElse(3)
+    if (!(Set("image", "text", "audio", "sem")(modality) || modality.startsWith("entry:"))) {
+      System.err.println(s"unknown modality '$modality' — expected image|text|audio|sem|entry:<query>")
+      sys.exit(2)
+    }
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
@@ -134,8 +138,6 @@ object GateProbe {
               "vec_id", "embedding", "ts", model, threshold = 0.4)
           }
           phase("final count") { kept.select("vec_id").count() }
-        case other =>
-          println(s"unknown modality '$other' — expected image|text|audio|sem|entry:<query>")
       }
     } finally {
       // A failing round must still release the temp dir and the session.

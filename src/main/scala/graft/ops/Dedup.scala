@@ -863,7 +863,12 @@ object Dedup {
     * all intervals share the same width, so "overlapping or
     * contiguous" reduces to `p <= prev_p + window`, and a running
     * max-end is unnecessary). Per-doc windows partition by id — no
-    * global sort anywhere. */
+    * global sort anywhere.
+    *
+    * The two corpus passes must see the same rows: `df` has to be
+    * deterministic. A source that can change between two scans (a
+    * rand()-derived column, an unseeded sample, files still being
+    * written) can make the passes disagree; cache such a `df` first. */
   def duplicateSpanRanges(df: DataFrame, idCol: String, textCol: String,
                           window: Int = 8, minDocs: Int = 2): DataFrame = {
     require(window >= 2, "window must be >= 2 tokens")
@@ -952,8 +957,11 @@ object Dedup {
     * dup_span_frac) for docs with >= 1 duplicated span. The span-count
     * side comes narrowly from the shingle-array length; the join
     * against the duplicated-span set is a plain equi-join on the span
-    * key (hash-shuffles and scales out; NOT broadcast — at corpus
-    * scale the duplicated-span set is large). */
+    * key with no broadcast hint, since that set's size depends on the
+    * data: AQE broadcasts it at runtime when it measures small and
+    * skew-splits hot-span partitions when it does not. Like
+    * [[duplicateSpanRanges]], `df` is scanned twice and must be
+    * deterministic — cache it otherwise. */
   def duplicateSpanFraction(df: DataFrame, idCol: String, textCol: String,
                             window: Int = 8): DataFrame = {
     val withSh = df.select(col(idCol).as("id"),

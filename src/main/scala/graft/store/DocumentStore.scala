@@ -23,20 +23,29 @@ import graft.ops.TextSearch
   * versions under one root:
   *
   * {{{
-  * <path>/MANIFEST.json          # current version + dim/metric/count/nlist
+  * <path>/_commits/manifest_<n>  # manifest commits (newest two kept):
+  * #                               version, dim/metric/count/nlist,
+  * #                               chunk geometry, Bloom params, layout
+  * #                               file count, IVF drift ledger
   * <path>/v<N>/essential/        # parquet: id, text, source, category,
   * #                               metadata_hash, vec [, cluster=...]
   * <path>/v<N>/centroids/        # parquet (IVF only): cluster, centroid
   * <path>/v<N>/payload/          # parquet: doc_id, text, metadata,
   * #                               payload_json (full-fidelity record)
+  * <path>/v<N>/dedup_bloom.bin   # ingest-dedup Bloom filter
+  * <path>/v<N>/dedup_keys/       # parquet: sha-sorted (k, id) key table
+  * <path>/v<N>/chunks/           # parquet (multi-vector only): id, vec
+  * <path>/v<N>/lexical|pq|tuning # optional derived indexes and curves
   * }}}
   *
-  * Mutation (add/delete) writes a NEW version directory and atomically
-  * swaps the manifest pointer — the Spark-native version of the
-  * reference's temp-file + move dance (vectorstore.py:563-581).
-  * `StoreConfig.keepVersions` retains that many snapshots (MVCC-style
-  * grace for readers still planned against an older version); older
-  * ones are pruned on each swap.
+  * Mutation (add/delete) writes a NEW version directory and then
+  * publishes the next manifest commit through [[Commits]] — the
+  * Spark-native version of the reference's temp-file + move dance
+  * (vectorstore.py:563-581); the highest commit wins, so readers never
+  * see a moment without one. `StoreConfig.keepVersions` is the number
+  * of versions kept on disk, the live one included (MVCC-style grace
+  * for readers still planned against an older version); older ones are
+  * pruned after each publish.
   *
   * Deletion does NOT re-embed anything: vectors are stored as data, so
   * the reference's O(n) re-embed on delete (index.py:404-440, an
@@ -49,13 +58,14 @@ final class DocumentStore private (
     val spark: SparkSession,
     val path: String,
     val config: StoreConfig,
-    val embedder: Embedder) {
+    val embedder: Embedder,
+    published: Option[(Long, StoreManifest)]) {
 
   import DocumentStore._
 
   // Serializes MUTATIONS within this driver: concurrent add/delete
   // Futures (the async API) must not race on the same next-version
-  // directory and manifest swap. Reads stay lock-free (snapshot
+  // directory and manifest commit. Reads stay lock-free (snapshot
   // isolation via version dirs + keepVersions). Cross-driver writers
   // are out of scope — one writer process per store path, like any
   // single-writer table format.
@@ -67,8 +77,23 @@ final class DocumentStore private (
   // window only. See writeVersion.
   private val fullSweepArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
 
-  @volatile private var manifest: StoreManifest = readManifest(spark, path)
-    .getOrElse(StoreManifest(0L, embedder.dim, config.metric, 0L, config.nlist))
+  private def emptyManifest = StoreManifest(0L, embedder.dim, config.metric, 0L, config.nlist)
+  @volatile private var manifest: StoreManifest = published.fold(emptyManifest)(_._2)
+  // Number of the manifest commit `manifest` was published as (-1 =
+  // none yet). Guarded by mutationLock, like every publish.
+  private var commit: Long = published.fold(-1L)(_._1)
+
+  /** Publish `m` as the next manifest commit, then make it live. The
+    * newest two commits are kept: a reader that listed the commits just
+    * before this publish can still open the one it picked. */
+  private def publish(m: StoreManifest): Unit = {
+    val dir = commitDir(path)
+    val fs = fsOf(spark, dir)
+    Commits.publish(fs, dir, CommitPrefix, commit + 1, renderManifest(m))
+    commit += 1
+    manifest = m
+    Commits.prune(fs, dir, CommitPrefix, below = commit - 1)
+  }
 
   private def versionDir(v: Long) = s"$path/v$v"
   private def essentialDir(v: Long) = s"${versionDir(v)}/essential"
@@ -80,7 +105,6 @@ final class DocumentStore private (
   private def pqDir(v: Long) = s"${versionDir(v)}/pq"
   private def chunksDir(v: Long) = s"${versionDir(v)}/chunks"
   private def tuningDir(v: Long) = s"${versionDir(v)}/tuning"
-  private def ivfStatsDir(v: Long) = s"${versionDir(v)}/ivf_stats"
 
   // --- snapshot pinning for multi-step reads -------------------------
   // A read operation that touches the store more than once (hits +
@@ -95,7 +119,7 @@ final class DocumentStore private (
   // the live pointer.
   // CAVEAT: pinning gives version-CONSISTENCY, not retention. With
   // keepVersions=1 (the default) a concurrent mutation prunes the
-  // pinned version's dirs right after its pointer swap, so the pinned
+  // pinned version's dirs right after its manifest commit, so the pinned
   // reader can still crash loudly with FileNotFound mid-operation.
   // Concurrent async mutation + read requires keepVersions >= 2
   // (see StoreConfig.keepVersions).
@@ -127,7 +151,7 @@ final class DocumentStore private (
   /** Time-travel read: the essential store AS OF snapshot `version`,
     * readable for any version still retained by
     * `StoreConfig.keepVersions` (mutations write new version dirs and
-    * prune `keepVersions` behind the pointer) — the audit/
+    * keep `keepVersions` of them, the live one included) — the audit/
     * reproducibility read of a versioned store: "what did the store
     * contain when job X ran?". */
   def essentialAt(version: Long): DataFrame = versionedRead(version, essentialDir)
@@ -554,21 +578,15 @@ final class DocumentStore private (
             .select(sha2(col("text"), 256).as("k"))
           // Fold executor-side: build the batch's keys into a filter
           // with the SAME creation params as the persisted one (from
-          // the .meta sidecar) — identical (expectedNumItems, fpp)
-          // yields identical numBits/numHashFunctions, so the bitwise
+          // the manifest) — identical (expectedNumItems, fpp) yields
+          // identical numBits/numHashFunctions, so the bitwise
           // mergeInPlace is exact. The driver receives ONE bloom-sized
           // blob from the aggregate instead of every batch key — a
-          // 100M-row ingest batch no longer pins the driver. Legacy
-          // stores without the sidecar (or an incompatible merge) fall
-          // back to the driver fold, which is correct at batch size.
-          val merged = loadBloomParams() match {
-            case Some((n, fpp)) =>
-              try { b.mergeInPlace(keys.stat.bloomFilter("k", n, fpp)); true }
-              catch { case _: Exception => false }
-            case None => false
-          }
-          if (!merged)
-            keys.collect().foreach(r => b.putString(r.getString(0)))
+          // 100M-row ingest batch no longer pins the driver. An
+          // all-null-text batch has no keys: Spark's aggregate then
+          // yields no filter at all (an NPE) and there is nothing to fold.
+          try b.mergeInPlace(keys.stat.bloomFilter("k", manifest.bloomExpected, manifest.bloomFpp))
+          catch { case _: NullPointerException => () }
           writeBloom(manifest.version, b)
         }
         // Key-table append, also BEFORE any row publishes (the same
@@ -607,23 +625,20 @@ final class DocumentStore private (
         if (manifest.chunkSize > 0)
           appendTo(chunkRows(added), chunksDir(manifest.version))
         appendTo(added, essentialDir(manifest.version))
-        // Staleness ledger: fold this batch's assignment distances
-        // into the per-version sidecar (batch-sized agg + a tiny
-        // overwrite — the same cost class as the bloom fold).
-        centroidModel.foreach { model =>
-          readIvfStats(manifest.version).foreach { case (base0, n0, s0) =>
-            val r = added
-              .withColumn("__c", model.assignCol(col("vec")))
-              .withColumn("__d", model.distToCol(col("vec"), col("__c")))
-              .agg(count(col("__d")).as("n"),
-                sum(coalesce(col("__d"), lit(0.0))).as("s")).head
-            val batchSum = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
-            writeIvfStats(manifest.version, base0,
-              n0 + r.getLong(0), s0 + batchSum)
-          }
+        // Staleness ledger: this batch's assignment distances (one
+        // batch-sized agg) fold into the drift ledger in the same
+        // commit that publishes the new count.
+        val (dn, ds) = centroidModel.fold((0L, 0.0)) { model =>
+          val r = added
+            .withColumn("__c", model.assignCol(col("vec")))
+            .withColumn("__d", model.distToCol(col("vec"), col("__c")))
+            .agg(count(col("__d")).as("n"),
+              sum(coalesce(col("__d"), lit(0.0))).as("s")).head
+          (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
         }
-        manifest = manifest.copy(count = offset + nNew)
-        writeManifest(spark, path, manifest)
+        publish(manifest.copy(count = offset + nNew,
+          ivfAppendedN = manifest.ivfAppendedN + dn,
+          ivfAppendedSum = manifest.ivfAppendedSum + ds))
       }
     } finally base.unpersist()
   }
@@ -653,8 +668,8 @@ final class DocumentStore private (
     }
   }
 
-  /** Write a new snapshot version (optionally IVF-clustered), swap the
-    * manifest pointer, prune old versions.
+  /** Write a new snapshot version (optionally IVF-clustered), publish
+    * its manifest commit, prune old versions.
     *
     * `carriedChunks` (multi-vector mode): pre-embedded chunk rows
     * (id, vec) — already renumbered to the NEW snapshot's ids — that
@@ -669,6 +684,7 @@ final class DocumentStore private (
     val count = ess.count()
 
     var modelOpt: Option[IvfIndex.Model] = None
+    var ivfBaseline = 0.0
     if (IvfIndex.shouldUseIvf(config.nlist, count)) {
       // config.nlist = -1 (AUTO) fits with nlist = 0, the IvfIndex
       // auto mode — the cluster count derives from the corpus via the
@@ -688,14 +704,13 @@ final class DocumentStore private (
         .coalesce(1).write.mode("overwrite").parquet(centroidsDir(v))
       // Staleness baseline for incremental ingest: the fit-time mean
       // assignment distance (per-row k-means cost). Appends against
-      // frozen centroids accumulate their own mean next to it; the
-      // ratio is the drift gate (see needsCompaction). One extra agg
-      // over the cached essential rows.
+      // frozen centroids accumulate their own mean next to it in the
+      // manifest; the ratio is the drift gate (see needsCompaction).
+      // One extra agg over the cached essential rows.
       val baseRow = ess
         .withColumn("__c", model.assignCol(col("vec")))
         .agg(avg(model.distToCol(col("vec"), col("__c"))).as("m")).head
-      val baseline = if (baseRow.isNullAt(0)) 0.0 else baseRow.getDouble(0)
-      writeIvfStats(v, baseline, 0L, 0.0)
+      if (!baseRow.isNullAt(0)) ivfBaseline = baseRow.getDouble(0)
     } else {
       // Range-partition + sort by id: each file covers a disjoint id
       // range, so getDocumentById/getDocumentsByIds read one file's row
@@ -710,18 +725,17 @@ final class DocumentStore private (
     // Layout baseline for the small-files advisory: the data-file
     // count this fresh write produced (one listing; appends grow the
     // count from here, recommendCompaction compares against it).
-    writeLayoutBaseline(v, countDataFiles(essentialDir(v)))
+    val layoutFiles = countDataFiles(essentialDir(v))
     payloadDf.write.mode("overwrite").parquet(payloadDir(v))
     // Ingest-dedup Bloom filter for the new snapshot: one narrow pass
     // over the (cached) essential rows; sized to the snapshot count.
-    if (config.dedupBloomFpp > 0.0) {
-      val expected = math.max(count, 1L)
+    // Its creation params go into the manifest: incremental appends
+    // rebuild a BATCH filter with the same (n, fpp) so the
+    // executor-side merge is bit-compatible (see addDFIncremental).
+    val bloomExpected = if (config.dedupBloomFpp > 0.0) math.max(count, 1L) else 0L
+    if (bloomExpected > 0L) {
       writeBloom(v, ess.select(sha2(col("text"), 256).as("k"))
-        .stat.bloomFilter("k", expected, config.dedupBloomFpp))
-      // Sidecar the creation params: incremental appends rebuild a
-      // BATCH filter with the same (n, fpp) so the executor-side merge
-      // is bit-compatible (see addDFIncremental).
-      writeBloomMeta(v, expected, config.dedupBloomFpp)
+        .stat.bloomFilter("k", bloomExpected, config.dedupBloomFpp))
       // Dedup key table, SORTED by sha: the Bloom-confirm path probes
       // it with an isin pushdown so parquet min/max skips every row
       // group without a probed key — per-ingest confirm cost is then
@@ -765,38 +779,23 @@ final class DocumentStore private (
     ess.unpersist()
 
     val nlistUsed = modelOpt.map(_.nlist).getOrElse(0)
-    manifest = StoreManifest(v, embedder.dim, config.metric, count, nlistUsed,
+    publish(StoreManifest(v, embedder.dim, config.metric, count, nlistUsed,
       chunkSize = config.chunkSize,
       chunkOverlap = if (config.chunkSize > 0) config.chunkOverlap else 0,
-      autoNlist = config.nlist == -1)
-    writeManifest(spark, path, manifest)
-    // Snapshot retention: keep the last `keepVersions` versions so
-    // readers holding an older snapshot (a long job planned against
-    // v-1) finish undisturbed — MVCC-style grace. Default 1 = prune
-    // immediately after the pointer swap. The sweep probes only a
-    // BOUNDED window below the cutoff (each write makes at most one new
-    // version stale; earlier writes already swept everything older), so
-    // per-mutation cost is O(window) filesystem calls, not O(total
-    // versions) — a store at v10000 must not issue 10000 exists() RPCs
-    // per write. The first write of this instance arms a directory-list
-    // full sweep to collect strays left by a previous process's crash;
-    // the +8 slack absorbs sweeps skipped by crashes since.
-    val cutoff = v - config.keepVersions
-    if (fullSweepArmed.getAndSet(false)) {
-      val VDir = "v(\\d+)".r
-      val fs = fsFor(path)
-      if (fs.exists(hadoopPath(path))) fs.listStatus(hadoopPath(path)).foreach { st =>
-        st.getPath.getName match {
-          case VDir(n) if st.isDirectory && n.toLong <= cutoff =>
-            fs.delete(st.getPath, true); ()
-          case _ => ()
-        }
-      }
-    } else {
-      (math.max(1L, cutoff - 8) to cutoff).foreach { stale =>
-        deleteDir(spark, versionDir(stale))
-      }
-    }
+      autoNlist = config.nlist == -1,
+      bloomExpected = bloomExpected,
+      bloomFpp = if (bloomExpected > 0L) config.dedupBloomFpp else 0.0,
+      layoutFiles = layoutFiles,
+      ivfBaselineMean = ivfBaseline))
+    // Snapshot retention: keepVersions versions stay on disk, the live
+    // one included, so readers holding an older snapshot (a long job
+    // planned against v-1) finish undisturbed — MVCC-style grace.
+    // Default 1 = prune the replaced version right after the publish.
+    // This instance's first write sweeps with a full listing (strays a
+    // previous process's crash left behind), later ones a bounded
+    // window.
+    Commits.sweepVersionDirs(fsFor(path), hadoopPath(path),
+      below = v - config.keepVersions + 1, full = fullSweepArmed.getAndSet(false))
     // Measured-recall auto-tuning (opt-in): every IVF snapshot build
     // re-measures the nprobe/recall trade-off on the fresh clustering
     // and persists the curve; searches pick up the choice via
@@ -821,37 +820,13 @@ final class DocumentStore private (
     try bloom.writeTo(out) finally out.close()
   }
 
-  private def loadBloom(): Option[BloomFilter] = {
-    val p = bloomPath(manifest.version)
-    val fs = fsFor(p)
-    if (!fs.exists(hadoopPath(p))) None
+  private def loadBloom(): Option[BloomFilter] =
+    if (manifest.bloomExpected == 0L) None
     else {
-      val in = fs.open(hadoopPath(p))
+      val p = bloomPath(manifest.version)
+      val in = fsFor(p).open(hadoopPath(p))
       try Some(BloomFilter.readFrom(in)) finally in.close()
     }
-  }
-
-  /** The persisted bloom's creation params (`expectedNumItems fpp`),
-    * written by [[writeBloomMeta]] at snapshot time. None for stores
-    * written before the sidecar existed. */
-  private def loadBloomParams(): Option[(Long, Double)] = {
-    val p = bloomPath(manifest.version) + ".meta"
-    val fs = fsFor(p)
-    if (!fs.exists(hadoopPath(p))) None
-    else {
-      val in = fs.open(hadoopPath(p))
-      try {
-        val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        val parts = txt.split("\\s+")
-        Some((parts(0).toLong, parts(1).toDouble))
-      } catch { case _: Exception => None }
-      finally in.close()
-    }
-  }
-
-  // --- layout baseline sidecar (small-files compaction advisory) -----
-
-  private def layoutMetaPath(v: Long) = s"${versionDir(v)}/layout_files.meta"
 
   /** Count the `part-*` data files under `dir` (recursive — clustered
     * layouts nest them under partition dirs). One listing, no data IO. */
@@ -866,30 +841,6 @@ final class DocumentStore private (
       }
       files
     }
-  }
-
-  private def writeLayoutBaseline(v: Long, files: Long): Unit = {
-    val p = layoutMetaPath(v)
-    val out = fsFor(p).create(hadoopPath(p), true)
-    try out.write(files.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readLayoutBaseline(v: Long): Option[Long] = {
-    val p = layoutMetaPath(v)
-    val fs = fsFor(p)
-    if (!fs.exists(hadoopPath(p))) None
-    else {
-      val in = fs.open(hadoopPath(p))
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      catch { case _: Exception => None }
-      finally in.close()
-    }
-  }
-
-  private def writeBloomMeta(v: Long, n: Long, fpp: Double): Unit = {
-    val p = bloomPath(v) + ".meta"
-    val out = fsFor(p).create(hadoopPath(p), true)
-    try out.write(s"$n $fpp".getBytes("UTF-8")) finally out.close()
   }
 
   // ------------------------------------------------------------------
@@ -1360,42 +1311,24 @@ final class DocumentStore private (
   // Centroid-staleness gate (round-8): incremental appends assign new
   // rows to FROZEN centroids, so the partition layout drifts as the
   // data does. The gate compares appended rows' mean assignment
-  // distance to the fit-time baseline — one tiny sidecar per version.
+  // distance to the fit-time baseline — both kept in the manifest.
   // ------------------------------------------------------------------
-
-  private def writeIvfStats(v: Long, baseline: Double,
-                            appendedN: Long, appendedSum: Double): Unit = {
-    import spark.implicits._
-    Seq((baseline, appendedN, appendedSum))
-      .toDF("baseline_mean", "appended_n", "appended_sum")
-      .coalesce(1).write.mode("overwrite").parquet(ivfStatsDir(v))
-  }
-
-  private def readIvfStats(v: Long): Option[(Double, Long, Double)] = {
-    val dir = ivfStatsDir(v)
-    if (!fsFor(dir).exists(hadoopPath(dir))) None
-    else {
-      val r = spark.read.parquet(dir).head
-      Some((r.getDouble(0), r.getLong(1), r.getDouble(2)))
-    }
-  }
 
   /** Appended-rows drift: mean assignment distance of rows added by
     * [[addDFIncremental]] since the last snapshot fit, as a RATIO to
     * the fit-time baseline. None when nothing was appended (or the
-    * store is flat / predates the gate). ~1.0 = appends look like the
-    * fitted data; growing ratio = the frozen centroids no longer
-    * describe what is being ingested. */
-  def centroidDriftRatio: Option[Double] = withSnapshot {
-    readIvfStats(snap.version).flatMap { case (baseline, n, sum) =>
-      if (n == 0L) None
-      else {
-        val appendedMean = sum / n
-        Some(
-          if (baseline > 0.0) appendedMean / baseline
-          else if (appendedMean > 0.0) Double.PositiveInfinity
-          else 1.0)
-      }
+    * store is flat). ~1.0 = appends look like the fitted data; growing
+    * ratio = the frozen centroids no longer describe what is being
+    * ingested. */
+  def centroidDriftRatio: Option[Double] = {
+    val m = snap
+    if (m.nlist == 0 || m.ivfAppendedN == 0L) None
+    else {
+      val appendedMean = m.ivfAppendedSum / m.ivfAppendedN
+      Some(
+        if (m.ivfBaselineMean > 0.0) appendedMean / m.ivfBaselineMean
+        else if (appendedMean > 0.0) Double.PositiveInfinity
+        else 1.0)
     }
   }
 
@@ -1417,9 +1350,9 @@ final class DocumentStore private (
     *    (recall of nprobe-pruned searches erodes);
     *  - `small-files(files=n, baseline=b)` — the essential layout
     *    holds more than max(2×, +8) the data files the snapshot write
-    *    itself produced (recorded in a per-version sidecar at write
-    *    time); every append lands new unsorted files, and scan task
-    *    count + footer overhead grow with them;
+    *    itself produced (recorded in the manifest at write time);
+    *    every append lands new unsorted files, and scan task count +
+    *    footer overhead grow with them;
     *  - `bloom-capacity(count=n, sized_for=m)` — the live count
     *    exceeds `bloomSlack` × the dedup Bloom's creation capacity, so
     *    its fpp has degraded past the design point and ingest batches
@@ -1431,9 +1364,10 @@ final class DocumentStore private (
     * three (re-fit + re-layout + Bloom rebuild at the current count)
     * and the nprobe half of the fourth (it replays the recorded
     * tuning); a stale PQ curve needs [[buildPqIndex]] +
-    * [[tunePqCandidates]]. Cost: the drift sidecar read, ONE recursive
-    * directory listing, the Bloom .meta sidecar, and two tiny tuning
-    * sidecar reads — no data scan, safe to poll after every append. */
+    * [[tunePqCandidates]]. Cost: ONE recursive directory listing and
+    * two tiny tuning sidecar reads (drift, layout and Bloom figures
+    * come from the in-memory manifest) — no data scan, safe to poll
+    * after every append. */
   def recommendCompaction(driftThreshold: Double = 1.25,
                           bloomSlack: Double = 2.0): Seq[String] = withSnapshot {
     require(driftThreshold > 0.0, "driftThreshold must be positive")
@@ -1443,22 +1377,15 @@ final class DocumentStore private (
       reasons += f"centroid-drift(ratio=$r%.3f)"
     }
     val files = countDataFiles(essentialDir(snap.version))
-    if (files > 0) {
-      // Baseline = the file count the snapshot write itself produced
-      // (sidecar written by writeVersion); legacy versions without one
-      // fall back to the fresh-write estimate (ceil(count/250k) range
-      // files, or >= one per cluster for IVF). The absolute +8 slack
-      // keeps tiny stores from flagging after a couple of appends.
-      val baseline = readLayoutBaseline(snap.version).getOrElse(
-        math.max(math.max(1L, (snap.count + 249999L) / 250000L),
-          snap.nlist.toLong))
-      if (files > math.max(2L * baseline, baseline + 8L))
-        reasons += s"small-files(files=$files, baseline=$baseline)"
-    }
-    loadBloomParams().foreach { case (sizedFor, _) =>
-      if (snap.count > bloomSlack * sizedFor)
-        reasons += s"bloom-capacity(count=${snap.count}, sized_for=$sizedFor)"
-    }
+    // Baseline = the file count the snapshot write itself produced. The
+    // absolute +8 slack keeps tiny stores from flagging after a couple
+    // of appends.
+    val baseline = snap.layoutFiles
+    if (files > math.max(2L * baseline, baseline + 8L))
+      reasons += s"small-files(files=$files, baseline=$baseline)"
+    val sizedFor = snap.bloomExpected
+    if (sizedFor > 0L && snap.count > bloomSlack * sizedFor)
+      reasons += s"bloom-capacity(count=${snap.count}, sized_for=$sizedFor)"
     reasons ++= tuningStale.map(s => s"tuning-stale($s)")
     reasons.toSeq
   }
@@ -2108,7 +2035,8 @@ final class DocumentStore private (
     * vectorstore.py:482-490). */
   def drop(): Unit = mutationLock.synchronized {
     deleteDir(spark, path)
-    manifest = StoreManifest(0L, embedder.dim, config.metric, 0L, config.nlist)
+    manifest = emptyManifest
+    commit = -1L
     // A rebuild at this path restarts versions at 1, so every
     // version-keyed cache for the old generation must go: the global
     // centroid cache (keyed (path, version) — a collision would prune
@@ -2240,7 +2168,14 @@ object DocumentStore {
       spark: SparkSession, path: String,
       texts: Seq[String], metadatas: Seq[Map[String, String]] = Nil,
       config: StoreConfig = StoreConfig(), embedder: Embedder): DocumentStore = {
-    val store = new DocumentStore(spark, path, config, embedder)
+    val store = fresh(spark, path, config, embedder)
+    store.addTexts(texts, metadatas)
+    store
+  }
+
+  /** An empty store at `path`, deleting any store published there. */
+  private def fresh(spark: SparkSession, path: String, config: StoreConfig,
+                    embedder: Embedder): DocumentStore = {
     if (readManifest(spark, path).isDefined) {
       deleteDir(spark, path)
       // New generation at an existing path: versions restart at 1, so
@@ -2248,9 +2183,7 @@ object DocumentStore {
       // entries would silently serve the DEAD corpus's centroids.
       invalidateModelCaches(path)
     }
-    store.manifest = StoreManifest(0L, embedder.dim, config.metric, 0L, config.nlist)
-    store.addTexts(texts, metadatas)
-    store
+    new DocumentStore(spark, path, config, embedder, None)
   }
 
   /** Factory from Documents (reference from_documents,
@@ -2285,12 +2218,7 @@ object DocumentStore {
   def fromDF(
       spark: SparkSession, path: String, staged: DataFrame,
       config: StoreConfig = StoreConfig(), embedder: Embedder): DocumentStore = {
-    val store = new DocumentStore(spark, path, config, embedder)
-    if (readManifest(spark, path).isDefined) {
-      deleteDir(spark, path)
-      invalidateModelCaches(path) // see fromTexts
-    }
-    store.manifest = StoreManifest(0L, embedder.dim, config.metric, 0L, config.nlist)
+    val store = fresh(spark, path, config, embedder)
     store.addDF(staged)
     store
   }
@@ -2301,8 +2229,9 @@ object DocumentStore {
     * dimension-from-index check (index.py:660-661). */
   def load(spark: SparkSession, path: String, embedder: Embedder,
            config: StoreConfig = StoreConfig()): DocumentStore = {
-    val m = readManifest(spark, path).getOrElse(
+    val published = readCommit(spark, path).getOrElse(
       throw new StorageException(s"no store manifest at $path"))
+    val m = published._2
     if (m.dim != embedder.dim) throw new IndexException(
       s"embedder dim ${embedder.dim} != stored dim ${m.dim}")
     // Restore STORED index parameters, not the caller's defaults: a
@@ -2319,77 +2248,50 @@ object DocumentStore {
       // from the snapshot manifest.
       config.copy(metric = m.metric,
         nlist = if (m.autoNlist) -1 else m.nlist.toInt,
-        chunkSize = m.chunkSize, chunkOverlap = m.chunkOverlap), embedder)
+        chunkSize = m.chunkSize, chunkOverlap = m.chunkOverlap), embedder,
+      Some(published))
   }
 
   // ---------------- manifest + fs helpers ----------------
 
-  private val ManifestName = "MANIFEST.json"
+  private val CommitPrefix = "manifest_"
+  private def commitDir(path: String) = new Path(s"$path/_commits")
+  private def fsOf(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[store] def readManifest(spark: SparkSession, path: String): Option[StoreManifest] = {
-    val p = new Path(s"$path/$ManifestName")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readParsed(f: Path): Option[StoreManifest] = {
-      val in = fs.open(f)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      Some(parseManifest(txt))
-    }
-    if (fs.exists(p)) readParsed(p)
-    else {
-      // Crash window of writeManifest's delete+rename: if the .tmp was
-      // fully written and closed before the swap began, it IS the
-      // manifest. But a crash mid-write of the very FIRST manifest (no
-      // dst yet) leaves a PARTIAL .tmp — so the fallback only trusts a
-      // .tmp that parses; garbage means no store was ever published,
-      // and the correct answer is "absent", not a parse exception.
-      val tmp = new Path(s"$path/.$ManifestName.tmp")
-      if (!fs.exists(tmp)) None
-      else try readParsed(tmp)
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
-  }
+  private[store] def readManifest(spark: SparkSession, path: String): Option[StoreManifest] =
+    readCommit(spark, path).map(_._2)
 
-  private[store] def writeManifest(spark: SparkSession, path: String, m: StoreManifest): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val tmp = new Path(s"$path/.$ManifestName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(renderManifest(m).getBytes("UTF-8")) finally out.close()
-    val dst = new Path(s"$path/$ManifestName")
-    // Pointer swap (reference's shutil.move, vectorstore.py:563-581).
-    // delete+rename isn't atomic on every FS: readManifest heals the
-    // crash window by falling back to the fully-written .tmp file.
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) throw new StorageException(s"manifest rename failed: $tmp -> $dst")
+  /** The latest manifest commit: its number and the manifest. */
+  private def readCommit(spark: SparkSession, path: String): Option[(Long, StoreManifest)] = {
+    val dir = commitDir(path)
+    Commits.latest(fsOf(spark, dir), dir, CommitPrefix)
+      .map { case (n, txt) => n -> parseManifest(txt) }
   }
 
   private[store] def renderManifest(m: StoreManifest): String =
-    s"""{"version":${m.version},"dim":${m.dim},"metric":"${m.metric}","count":${m.count},"nlist":${m.nlist},"chunk_size":${m.chunkSize},"chunk_overlap":${m.chunkOverlap},"auto_nlist":${m.autoNlist}}"""
+    s"""{"version":${m.version},"dim":${m.dim},"metric":"${m.metric}","count":${m.count},""" +
+      s""""nlist":${m.nlist},"chunk_size":${m.chunkSize},"chunk_overlap":${m.chunkOverlap},""" +
+      s""""auto_nlist":${m.autoNlist},"bloom_expected":${m.bloomExpected},""" +
+      s""""bloom_fpp":${m.bloomFpp},"layout_files":${m.layoutFiles},""" +
+      s""""ivf_baseline_mean":${m.ivfBaselineMean},"ivf_appended_n":${m.ivfAppendedN},""" +
+      s""""ivf_appended_sum":${m.ivfAppendedSum}}"""
 
   private[store] def parseManifest(s: String): StoreManifest = {
-    def longOf(k: String): Long =
-      s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(s)
-        .map(_.group(1).toLong)
+    def field(k: String): String =
+      s""""$k"\\s*:\\s*"?([^",}]*)""".r.findFirstMatchIn(s).map(_.group(1).trim)
         .getOrElse(throw new StorageException(s"manifest missing $k: $s"))
-    // Lenient: manifests written before multi-vector mode existed have
-    // no chunk fields — they are single-vector stores (0).
-    def longOr0(k: String): Long =
-      s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(s)
-        .map(_.group(1).toLong).getOrElse(0L)
-    def strOf(k: String): String =
-      s""""$k"\\s*:\\s*"([^"]*)"""".r.findFirstMatchIn(s)
-        .map(_.group(1))
-        .getOrElse(throw new StorageException(s"manifest missing $k: $s"))
-    // Lenient like the chunk fields: pre-r16 manifests have no
-    // auto_nlist — they were explicit-nlist (or flat) stores (false).
-    val auto = """\"auto_nlist\"\s*:\s*(true|false)""".r
-      .findFirstMatchIn(s).exists(_.group(1) == "true")
-    StoreManifest(longOf("version"), longOf("dim").toInt, strOf("metric"),
-      longOf("count"), longOf("nlist").toInt,
-      chunkSize = longOr0("chunk_size").toInt,
-      chunkOverlap = longOr0("chunk_overlap").toInt,
-      autoNlist = auto)
+    StoreManifest(field("version").toLong, field("dim").toInt, field("metric"),
+      field("count").toLong, field("nlist").toInt,
+      chunkSize = field("chunk_size").toInt,
+      chunkOverlap = field("chunk_overlap").toInt,
+      autoNlist = field("auto_nlist").toBoolean,
+      bloomExpected = field("bloom_expected").toLong,
+      bloomFpp = field("bloom_fpp").toDouble,
+      layoutFiles = field("layout_files").toLong,
+      ivfBaselineMean = field("ivf_baseline_mean").toDouble,
+      ivfAppendedN = field("ivf_appended_n").toLong,
+      ivfAppendedSum = field("ivf_appended_sum").toDouble)
   }
 
   private[store] def deleteDir(spark: SparkSession, dir: String): Unit = {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.embed.Embedder
-import graft.store.DocumentStore
+import graft.store.{Commits, DocumentStore}
 
 /** Structured Streaming operators: continuous ingest into the document
   * store, watermarked windowed aggregation, and stateful 30-minute-gap
@@ -43,10 +43,12 @@ object StreamingOps {
     * into a versioned parquet table via [[graft.ops.Mutations.applyCdc]]
     * — the streaming path that keeps a training corpus in sync with an
     * operational source. Copy-on-write: every batch writes snapshot dir
-    * `v{n+1}` then swaps a pointer file; readers resolve the pointer
-    * with a version-dir-scan fallback, so they always land on a
-    * complete version even mid-swap. Batch 0 against an absent table
-    * bootstraps from the non-delete change rows.
+    * `v{n+1}` then publishes pointer commit `_commits/pointer_{n+1}`
+    * through [[graft.store.Commits]]; readers take the highest commit,
+    * so they always land on a complete version, and a snapshot dir
+    * written without its commit (a crash in between) stays invisible
+    * until the replayed batch overwrites it. Batch 0 against an absent
+    * table bootstraps from the non-delete change rows.
     *
     * `orderCols`: when a micro-batch can carry SEVERAL changes for one
     * key (any real CDC feed), pass the change-sequence columns — each
@@ -57,20 +59,22 @@ object StreamingOps {
     * table). Without orderCols the caller asserts
     * at-most-one-change-per-key-per-batch.
     *
-    * `keepVersions` snapshots are retained behind the pointer (reader
-    * grace); older ones are deleted each batch — a snapshot per
-    * micro-batch would otherwise grow storage without bound. */
+    * `keepVersions` counts the snapshots kept BEHIND the live one:
+    * after publishing version n the batch deletes every version below
+    * n - keepVersions, so keepVersions = 1 keeps the live version plus
+    * the one it replaced (reader grace). A snapshot per micro-batch
+    * would otherwise grow storage without bound. */
   def cdcApplyStream(changes: DataFrame, tablePath: String, keys: Seq[String],
                      checkpointDir: String, opCol: String = "op",
                      orderCols: Seq[String] = Nil,
                      keepVersions: Int = 2):
       org.apache.spark.sql.streaming.StreamingQuery = {
     // One full sweep per stream (re)start: the steady-state sweep below
-    // probes a bounded window, so versions stranded by >8 missed
-    // opportunities (crash-looping stream, table produced before the
-    // sweep existed) would otherwise leak forever. A directory LISTING
-    // here is per-start, not per-batch, so its O(versions) cost never
-    // lands on the hot loop.
+    // probes a bounded window, so versions stranded by missed sweeps
+    // (crash-looping stream, table produced before the sweep existed)
+    // would otherwise leak forever. A directory LISTING here is
+    // per-start, not per-batch, so its O(versions) cost never lands on
+    // the hot loop.
     val fullSweepArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
     changes.writeStream
       .outputMode(OutputMode.Append())
@@ -92,39 +96,15 @@ object StreamingOps {
           }
           val next = cur.getOrElse(-1L) + 1
           merged.write.mode("overwrite").parquet(s"$tablePath/v$next")
-          writeCdcPointer(spark, tablePath, next)
-          // Retention: a full snapshot per micro-batch grows without
-          // bound otherwise. keepVersions snapshots stay behind the
-          // pointer as reader grace (same posture as the document
-          // store's keepVersions). The sweep probes only a BOUNDED
-          // window below the cutoff: each batch makes at most one new
-          // version stale and earlier batches already swept everything
-          // older, so on a long-running stream the per-batch cost stays
-          // O(window) filesystem calls, not O(total batches). The +8
-          // slack absorbs sweeps skipped by crashes mid-batch.
-          // EXCLUSIVE upper bound: versions next-keepVersions .. next
-          // must survive as the reader-grace window — deleting AT the
-          // bound would leave only keepVersions-1 snapshots and yank
-          // the just-replaced version from under a reader that resolved
-          // the pointer moments before the swap.
           val fs = fsFor(spark, tablePath)
-          val cutoff = next - keepVersions
-          if (fullSweepArmed.getAndSet(false)) {
-            val tableDir = new org.apache.hadoop.fs.Path(tablePath)
-            val VDir = "v(\\d+)".r
-            fs.listStatus(tableDir).foreach { st =>
-              st.getPath.getName match {
-                case VDir(n) if st.isDirectory && n.toLong < cutoff =>
-                  fs.delete(st.getPath, true); ()
-                case _ => ()
-              }
-            }
-          } else {
-            (math.max(0L, cutoff - 8) until cutoff).foreach { stale =>
-              val d = new org.apache.hadoop.fs.Path(s"$tablePath/v$stale")
-              if (fs.exists(d)) { fs.delete(d, true); () }
-            }
-          }
+          publishCdcPointer(fs, tablePath, next)
+          // EXCLUSIVE cutoff: versions next-keepVersions .. next survive
+          // as the reader-grace window — deleting AT the cutoff would
+          // leave only keepVersions-1 snapshots behind the pointer and
+          // yank the just-replaced version from under a reader that
+          // resolved the pointer moments before the publish.
+          Commits.sweepVersionDirs(fs, new org.apache.hadoop.fs.Path(tablePath),
+            below = next - keepVersions, full = fullSweepArmed.getAndSet(false))
         }
       }
       .start()
@@ -136,53 +116,26 @@ object StreamingOps {
     currentCdcVersion(spark, tablePath)
       .map(v => spark.read.parquet(s"$tablePath/v$v"))
 
-  private def pointerPath(tablePath: String) = s"$tablePath/LATEST"
+  private val CdcPrefix = "pointer_"
+  private def cdcCommitDir(tablePath: String) =
+    new org.apache.hadoop.fs.Path(s"$tablePath/_commits")
+
+  /** Point readers at snapshot `v<v>`: publish pointer commit `v`,
+    * keeping the newest two commits (a reader that listed them just
+    * before this publish can still resolve the one it picked). */
+  private[streaming] def publishCdcPointer(fs: org.apache.hadoop.fs.FileSystem,
+                                           tablePath: String, v: Long): Unit = {
+    Commits.publish(fs, cdcCommitDir(tablePath), CdcPrefix, v, v.toString)
+    Commits.prune(fs, cdcCommitDir(tablePath), CdcPrefix, below = v - 1)
+  }
 
   private def fsFor(spark: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def currentCdcVersion(spark: SparkSession, tablePath: String): Option[Long] = {
-    val fs = fsFor(spark, tablePath)
-    val p = new org.apache.hadoop.fs.Path(pointerPath(tablePath))
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    } else {
-      // Pointer-swap window (delete-then-rename isn't atomic on every
-      // FS) or a crash between snapshot write and pointer update: fall
-      // back to the highest complete version directory — every written
-      // v<N> is complete before the pointer ever references it, so the
-      // max is always safe to read.
-      val root = new org.apache.hadoop.fs.Path(tablePath)
-      if (!fs.exists(root)) None
-      else {
-        val versions = fs.listStatus(root).toSeq
-          .map(_.getPath.getName)
-          .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
-          .map(_.drop(1).toLong)
-          // a crash mid-write leaves a version dir without its
-          // _SUCCESS marker — never resolve to one
-          .filter(v => fs.exists(
-            new org.apache.hadoop.fs.Path(s"$tablePath/v$v/_SUCCESS")))
-        if (versions.isEmpty) None else Some(versions.max)
-      }
-    }
-  }
-
-  private def writeCdcPointer(spark: SparkSession, tablePath: String, v: Long): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val tmp = new org.apache.hadoop.fs.Path(pointerPath(tablePath) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(pointerPath(tablePath))
-    // HDFS rename refuses an existing destination — swap like
-    // DocumentStore.writeManifest does.
-    if (fs.exists(dst)) fs.delete(dst, false)
-    fs.rename(tmp, dst)
-  }
+  /** The version the highest pointer commit names (commit n = v<n>). */
+  private def currentCdcVersion(spark: SparkSession, tablePath: String): Option[Long] =
+    Commits.list(fsFor(spark, tablePath), cdcCommitDir(tablePath), CdcPrefix).maxOption
 
   /** Watermarked tumbling- or hopping-window counts per event type:
     * readStream -> withWatermark -> window agg (late data dropped after
@@ -978,10 +931,10 @@ object StreamingOps {
     * Crash-safe by ordering (each step idempotent, re-runnable):
     * (1) write the new blob(s) to `_compact/v=<n+1>` / `_compact/
     *     l0=<n+1>` (overwrite);
-    * (2) PUBLISH by renaming a fully-written temp file into the
-    *     marker `_compact/hwm_<n+1>` (content: the mark plus the live
-    *     blob versions) — readers pick the HIGHEST marker, so the old
-    *     state stays authoritative until this atomic rename;
+    * (2) PUBLISH the marker `_compact/hwm_<n+1>` as a
+    *     [[graft.store.Commits]] commit (content: the mark plus the
+    *     live blob versions) — readers pick the HIGHEST marker, so the
+    *     old state stays authoritative until its atomic rename;
     * (3) sweep merged batch dirs, then stale blobs/markers with ONE
     *     CYCLE of grace (r16 ADVICE): the previous marker and every
     *     blob it references SURVIVE this sweep and are reclaimed by
@@ -1091,22 +1044,11 @@ object StreamingOps {
           .parquet(l0DataPath(indexPath, nextVersion))
         (prev.l1, prev.l0 :+ nextVersion)
       }
-    // Publish: write the marker to a dot-prefixed temp name (readers'
-    // listStatus filter never sees it), then RENAME into place — the
-    // rename is the atomic switch, so a concurrent gate read can never
-    // glimpse a created-but-unwritten marker and fail parsing its
-    // empty content.
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$indexPath/_compact/hwm_$nextVersion")
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$indexPath/_compact/.hwm_$nextVersion.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$mark l1=$l1Out l0=${l0Out.mkString(";")}\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(marker, false) // a crashed prior publish of the SAME version
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(
-        s"compactBandIndex: could not publish $marker")
+    // Publish: the marker commit is the atomic switch, so a concurrent
+    // gate read can never glimpse a created-but-unwritten marker.
+    val compactDir = new org.apache.hadoop.fs.Path(s"$indexPath/_compact")
+    Commits.publish(fs, compactDir, MarkerPrefix, nextVersion,
+      s"$mark l1=$l1Out l0=${l0Out.mkString(";")}\n")
     // Sweep: merged dirs first, then stale blobs/markers with one cycle
     // of grace — version `prev.version` and every blob IT references
     // survive until the next compaction (see the scaladoc's concurrent
@@ -1120,22 +1062,17 @@ object StreamingOps {
         fs.delete(st.getPath, true); ()
       }
     }
-    val keepMarkers = Set(nextVersion, prev.version)
+    Commits.prune(fs, compactDir, MarkerPrefix, below = prev.version)
     val keepBlobs: Set[String] =
       (if (l1Out >= 0L) Set(s"v=$l1Out") else Set.empty[String]) ++
         l0Out.map(v => s"l0=$v") ++
         (if (prev.l1 >= 0L) Set(s"v=${prev.l1}") else Set.empty[String]) ++
         prev.l0.map(v => s"l0=$v")
-    val compactDir = new org.apache.hadoop.fs.Path(s"$indexPath/_compact")
     fs.listStatus(compactDir).foreach { st =>
       val n = st.getPath.getName
-      val stale =
-        (n.startsWith("hwm_") &&
-          scala.util.Try(n.stripPrefix("hwm_").toLong).toOption
-            .exists(v => !keepMarkers.contains(v))) ||
-        ((n.startsWith("v=") || n.startsWith("l0=")) && !keepBlobs.contains(n)) ||
-        n.endsWith(".tmp")
-      if (stale) { fs.delete(st.getPath, true); () }
+      if ((n.startsWith("v=") || n.startsWith("l0=")) && !keepBlobs.contains(n)) {
+        fs.delete(st.getPath, true); ()
+      }
     }
   }
 
@@ -1159,32 +1096,22 @@ object StreamingOps {
   private def compactState(fs: org.apache.hadoop.fs.FileSystem,
                            indexPath: String): CompactState = {
     val dir = new org.apache.hadoop.fs.Path(s"$indexPath/_compact")
-    if (!fs.exists(dir)) return CompactState.never
-    val versions = fs.listStatus(dir).flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("hwm_"))
-        scala.util.Try(n.stripPrefix("hwm_").toLong).toOption
-      else None
-    }
-    if (versions.isEmpty) return CompactState.never
-    val v = versions.max
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$indexPath/_compact/hwm_$v"))
-    val content =
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-      finally in.close()
-    val tokens = content.split("\\s+").toSeq
-    val hwm = tokens.head.toLong
-    if (tokens.size == 1) CompactState(hwm, v, v, Nil) // legacy format
-    else {
-      def tok(prefix: String): Option[String] =
-        tokens.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
-      val l1 = tok("l1=").map(_.toLong).getOrElse(v)
-      val l0 = tok("l0=").toSeq.flatMap(_.split(";").toSeq)
-        .filter(_.nonEmpty).map(_.toLong)
-      CompactState(hwm, v, l1, l0)
+    Commits.latest(fs, dir, MarkerPrefix).fold(CompactState.never) { case (v, content) =>
+      val tokens = content.trim.split("\\s+").toSeq
+      val hwm = tokens.head.toLong
+      if (tokens.size == 1) CompactState(hwm, v, v, Nil) // legacy format
+      else {
+        def tok(prefix: String): Option[String] =
+          tokens.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+        val l1 = tok("l1=").map(_.toLong).getOrElse(v)
+        val l0 = tok("l0=").toSeq.flatMap(_.split(";").toSeq)
+          .filter(_.nonEmpty).map(_.toLong)
+        CompactState(hwm, v, l1, l0)
+      }
     }
   }
+
+  private val MarkerPrefix = "hwm_"
 
   private def compactDataPath(indexPath: String, version: Long): String =
     s"$indexPath/_compact/v=$version"

@@ -84,14 +84,14 @@ final case class StoreConfig(
     dim: Int = 64,
     nlist: Int = 0,
     nprobe: Int = 8,
-    // Snapshot versions retained behind the live pointer (MVCC grace for
-    // readers pinned to an older version). With the default 1, the
-    // retention sweep deletes the just-replaced version dir immediately
-    // after the pointer swap — a reader pinned concurrently with an
-    // async mutation can then fail loudly with FileNotFound
-    // mid-operation (never wrong rows). Concurrent async mutation +
-    // read REQUIRES keepVersions >= 2; keep 1 only for single-writer,
-    // no-overlapping-reads usage.
+    // Snapshot versions kept on disk, the live one INCLUDED: after
+    // publishing version v the store deletes every version at or below
+    // v - keepVersions. The default 1 keeps the live version only, so
+    // the just-replaced version dir goes right after the manifest
+    // commit — a reader pinned concurrently with an async mutation can
+    // then fail loudly with FileNotFound mid-operation (never wrong
+    // rows). Concurrent async mutation + read REQUIRES keepVersions >=
+    // 2; keep 1 only for single-writer, no-overlapping-reads usage.
     keepVersions: Int = 1,
     // False-positive rate for the persisted ingest-dedup Bloom filter
     // (~1.2 bytes/doc at 0.01, driver/broadcast-resident). 0 disables —
@@ -125,14 +125,14 @@ final case class StoreConfig(
 
 /** Persisted store manifest (replaces index.faiss + metadata.json
   * sidecar, reference index.py:609-635): current snapshot version plus
-  * the config needed to interpret the parquet data. */
+  * the config needed to interpret the parquet data, and the scalar
+  * per-version bookkeeping mutations update in the same commit. */
 final case class StoreManifest(
     version: Long,
     dim: Int,
     metric: String,
     count: Long,
     nlist: Int,
-    centroids: Seq[Seq[Double]] = Nil,
     // Multi-vector mode persisted with the store (like nlist), so a
     // load() restores chunked search without the caller re-specifying
     // it. 0 = single-vector store.
@@ -146,4 +146,19 @@ final case class StoreManifest(
     // grows instead of freezing at the first fit's value — freezing is
     // exactly the measured r15 ×100 cliff the auto mode exists to
     // prevent.
-    autoNlist: Boolean = false)
+    autoNlist: Boolean = false,
+    // Creation params of the version's dedup Bloom filter
+    // (expectedNumItems, fpp); bloomExpected = 0 means no filter.
+    // Incremental appends rebuild a batch filter with the same params
+    // so the bitwise merge is exact.
+    bloomExpected: Long = 0L,
+    bloomFpp: Double = 0.0,
+    // Data-file count of the version's essential layout as its
+    // snapshot write produced it — the small-files advisory baseline.
+    layoutFiles: Long = 0L,
+    // IVF drift ledger (IVF versions only): the fit-time mean
+    // assignment distance, and the count and distance sum of rows
+    // appended against the frozen centroids since.
+    ivfBaselineMean: Double = 0.0,
+    ivfAppendedN: Long = 0L,
+    ivfAppendedSum: Double = 0.0)

@@ -1,0 +1,80 @@
+package graft.store
+
+import java.net.URI
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
+
+import graft.{SparkSpec, StorageException, StoreConfig}
+import graft.embed.HashEmbedder
+import graft.streaming.StreamingOps
+
+/** A local filesystem under the `failrename` scheme whose rename of a
+  * `.tmp` file reports failure — what HDFS returns for, e.g., an
+  * existing destination or a missing parent. Every other rename (Spark's
+  * output-committer moves) goes through, so only commit publishes fail. */
+class FailingRenameFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("failrename:///")
+  override def rename(src: Path, dst: Path): Boolean =
+    !src.getName.endsWith(".tmp") && super.rename(src, dst)
+  // The local statuses load permissions through java.io.File, which
+  // accepts `file:` URIs only — hand out plain statuses instead.
+  override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
+  private def plain(s: FileStatus) = new FileStatus(s.getLen, s.isDirectory,
+    s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
+}
+
+class CommitsSpec extends SparkSpec {
+
+  private val emb = HashEmbedder(dim = 16)
+  private def tmpDir(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def failingPath(prefix: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failrename.impl", classOf[FailingRenameFs].getName)
+    s"failrename://${tmpDir(prefix)}"
+  }
+
+  test("the highest published commit wins; temp files stay invisible; prune keeps the cutoff") {
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(tmpDir("graft-commits"), "_commits")
+    assert(Commits.latest(fs, dir, "c_").isEmpty)
+    Commits.publish(fs, dir, "c_", 0L, "zero")
+    Commits.publish(fs, dir, "c_", 1L, "one")
+    // A crash between create and rename of commit 2.
+    fs.create(new Path(dir, ".c_2.tmp")).close()
+    assert(Commits.latest(fs, dir, "c_").contains(1L -> "one"))
+    Commits.prune(fs, dir, "c_", below = 1L)
+    assert(Commits.list(fs, dir, "c_") == Seq(1L))
+    assert(!fs.exists(new Path(dir, ".c_2.tmp")))
+  }
+
+  test("a store manifest publish whose rename fails raises, naming both paths") {
+    val path = s"${failingPath("graft-failrename-store")}/store"
+    val e = intercept[StorageException] {
+      DocumentStore.fromTexts(spark, path, Seq("a", "b"), Nil, StoreConfig(), emb)
+    }
+    assert(e.getMessage.contains("_commits/.manifest_0.tmp") &&
+      e.getMessage.contains("_commits/manifest_0"), e.getMessage)
+    assert(DocumentStore.readManifest(spark, path).isEmpty)
+  }
+
+  test("a CDC pointer publish whose rename fails raises, and readers see no table") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val table = s"${failingPath("graft-failrename-cdc")}/table"
+    val input = MemoryStream[(Long, String, String)]
+    val q = StreamingOps.cdcApplyStream(input.toDF().toDF("k", "name", "op"),
+      table, Seq("k"), s"${tmpDir("graft-failrename-ckpt")}/ckpt")
+    try {
+      input.addData((1L, "one", "insert"))
+      val e = intercept[StreamingQueryException] { q.processAllAvailable() }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[StorageException] &&
+        c.getMessage.contains("_commits/pointer_0")), e.toString)
+      assert(StreamingOps.cdcTable(spark, table).isEmpty)
+    } finally q.stop()
+  }
+}

@@ -552,20 +552,28 @@ class DocumentStoreSpec extends SparkSpec {
   }
 
   test("readManifest treats a partial .tmp with no published manifest as absent") {
-    // crash mid-write of the very FIRST manifest: a truncated .tmp and
-    // no dst — the store was never published, so load must say absent
-    // (None), not throw a parse error on the garbage.
+    // A crash between creating a manifest commit's temp file and its
+    // rename leaves a stray `.manifest_<n>.tmp`. With no earlier commit
+    // the store was never published: readers must say absent (None),
+    // not parse the garbage.
     val dir = tmp()
-    new java.io.File(dir).mkdirs()
+    val commits = new java.io.File(dir, "_commits")
+    commits.mkdirs()
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, ".MANIFEST.json.tmp"), """{"ver""")
+      commits.toPath.resolve(".manifest_0.tmp"), """{"ver""")
     assert(DocumentStore.readManifest(spark, dir).isEmpty)
-    // but a COMPLETE .tmp (crash after close, before the swap) heals
-    val m = graft.StoreManifest(3L, 8, "cosine", 42L, 0)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, ".MANIFEST.json.tmp"),
-      DocumentStore.renderManifest(m))
-    assert(DocumentStore.readManifest(spark, dir).contains(m))
+    intercept[graft.StorageException] { DocumentStore.load(spark, dir, emb) }
+    // With an earlier commit, a stray temp for the next one is ignored
+    // even when it is complete: readers stay on the published commit.
+    val store = DocumentStore.fromTexts(spark, dir, Seq("a", "b"), Nil, StoreConfig(), emb)
+    val live = store.currentManifest
+    java.nio.file.Files.writeString(commits.toPath.resolve(".manifest_1.tmp"),
+      DocumentStore.renderManifest(live.copy(version = live.version + 1, count = 99L)))
+    assert(DocumentStore.readManifest(spark, dir).contains(live))
+    assert(DocumentStore.load(spark, dir, emb).documentCount == 2)
+    // The next publish takes the temp name over; the new commit wins.
+    store.addTexts(Seq("c"))
+    assert(DocumentStore.readManifest(spark, dir).map(_.count).contains(3L))
   }
 
   test("deleteByTexts deletes only first occurrence and reports misses") {

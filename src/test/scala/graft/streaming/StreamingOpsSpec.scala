@@ -744,12 +744,14 @@ class StreamingOpsSpec extends SparkSpec {
       // both snapshot versions exist (copy-on-write, readers unbroken)
       assert(new java.io.File(s"$dir/table/v0").isDirectory)
       assert(new java.io.File(s"$dir/table/v1").isDirectory)
-      // reader survives a missing pointer (mid-swap window): falls back
-      // to the highest complete version dir
-      assert(new java.io.File(s"$dir/table/LATEST").delete())
-      val viaFallback = StreamingOps.cdcTable(spark, s"$dir/table").get
+      // A snapshot dir written without its pointer commit (a crash
+      // between the two) stays invisible: readers stay on the previous
+      // commit's version.
+      Seq((9L, "unpublished", 90)).toDF("k", "name", "v")
+        .write.parquet(s"$dir/table/v2")
+      val unpublished = StreamingOps.cdcTable(spark, s"$dir/table").get
         .collect().map(_.getAs[Long]("k")).toSet
-      assert(viaFallback == Set(1L, 3L))
+      assert(unpublished == Set(1L, 3L))
     } finally q.stop()
   }
 
@@ -913,8 +915,8 @@ class StreamingOpsSpec extends SparkSpec {
     // steady-state probe window (which only reaches 8 versions back).
     val snap = Seq((1L, "old", 0)).toDF("k", "name", "v")
     for (ver <- Seq(0, 1, 3, 12)) snap.write.parquet(s"$dir/table/v$ver")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/table/LATEST"),
-      "12".getBytes("UTF-8"))
+    StreamingOps.publishCdcPointer(new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), s"$dir/table", 12L)
     val q = StreamingOps.cdcApplyStream(
       input.toDF().toDF("k", "name", "v", "op"),
       s"$dir/table", Seq("k"), s"$dir/ckpt", keepVersions = 1)
