@@ -38,21 +38,25 @@ import graft.ops.TextSearch
   * <path>/v<N>/lexical|pq|tuning # optional derived indexes and curves
   * }}}
   *
-  * Mutation (add/delete) writes a NEW version directory and then
-  * publishes the next manifest commit through [[Commits]] — the
-  * Spark-native version of the reference's temp-file + move dance
-  * (vectorstore.py:563-581); the highest commit wins, so readers never
-  * see a moment without one. `StoreConfig.keepVersions` is the number
-  * of versions kept on disk, the live one included (MVCC-style grace
-  * for readers still planned against an older version); older ones are
-  * pruned after each publish.
+  * Every snapshot mutation (add, delete, upsert, compact) goes through
+  * ONE copy-on-write rewrite ([[rewrite]]): it writes a NEW version
+  * directory and then publishes the next manifest commit through
+  * [[Commits]] — the Spark-native version of the reference's temp-file
+  * + move dance (vectorstore.py:563-581); the highest commit wins, so
+  * readers never see a moment without one. `StoreConfig.keepVersions`
+  * is the number of versions kept on disk, the live one included
+  * (MVCC-style grace for readers still planned against an older
+  * version); older ones are pruned after each publish. Only
+  * [[addDFIncremental]] appends in place instead.
   *
-  * Deletion does NOT re-embed anything: vectors are stored as data, so
-  * the reference's O(n) re-embed on delete (index.py:404-440, an
-  * artifact of FAISS flat indexes lacking deletion) becomes two
-  * anti-joins. Ids are reassigned densely 0..n-1 after deletion exactly
-  * like the reference (index.py:433-435) — ids are positional, not
-  * stable keys.
+  * The essential store owns the ids. A delete renumbers its survivors
+  * once, densely 0..n-1 like the reference (index.py:433-435) — ids
+  * are positional, not stable keys — and the payload and chunk tables
+  * follow that one old → new id map, the role of the reference's
+  * doc_id ↔ frame mapping (index.py:130-132). A payload or chunk row
+  * whose id names no live document drops out. Nothing is re-embedded:
+  * vectors are stored as data, so the reference's O(n) re-embed on
+  * delete (index.py:404-440) becomes joins.
   */
 final class DocumentStore private (
     val spark: SparkSession,
@@ -182,71 +186,103 @@ final class DocumentStore private (
     * str(0..len(texts)-1) of the INPUT — a reference surface
     * inconsistency we replicate deliberately (vectorstore.py:221). */
   def addTexts(texts: Seq[String], metadatas: Seq[Map[String, String]] = Nil): Seq[String] = {
-    if (!(metadatas.isEmpty || metadatas.length == texts.length)) throw new IngestException(
-      s"texts/metadatas length mismatch: ${texts.length} vs ${metadatas.length}")
-    val metas = if (metadatas.isEmpty) Seq.fill(texts.length)(Map.empty[String, String]) else metadatas
-    import spark.implicits._
-    val staged = texts.zip(metas).toDF("text", "metadata")
-    appendBuild(staged)
+    rewrite(staged = Some(stage(texts, metadatas)))
     texts.indices.map(_.toString)
   }
 
   /** Bulk ingest from a DataFrame with columns (text STRING,
     * metadata MAP<STRING,STRING>). The scale path: no driver-side data. */
-  def addDF(staged: DataFrame): Unit = appendBuild(staged)
+  def addDF(staged: DataFrame): Unit = rewrite(staged = Some(staged))
 
   /** Document-list adapter over addTexts (reference I2,
     * vectorstore.py:254-270). */
   def addDocuments(docs: Seq[Doc]): Seq[String] =
     addTexts(docs.map(_.text), docs.map(_.metadata))
 
-  private def appendBuild(staged: DataFrame): Unit = mutationLock.synchronized {
-    val existing =
-      if (manifest.count > 0) Some(essential.select("id", "text", "source", "category", "metadata_hash", "vec"))
-      else None
-    // Offset from the DATA, not the manifest (same hardening as
-    // addDFIncremental): a crashed incremental append can leave orphan
-    // rows with ids >= manifest.count on disk; since `existing` reads
-    // the disk (orphans included), minting new ids from the stale count
-    // would publish DUPLICATE ids and permanently break the dense-id
-    // invariant.
-    val offset = existing match {
-      case None => 0L
-      case Some(ex) => ex.agg(max("id")).head.get(0) match {
-        case null => 0L
-        case m    => m.asInstanceOf[Long] + 1L
-      }
-    }
-    val base = buildNewRows(staged, existing, offset, loadBloom())
+  /** In-memory texts + metadata as a staged (text, metadata) batch. */
+  private def stage(texts: Seq[String], metadatas: Seq[Map[String, String]]): DataFrame = {
+    if (!(metadatas.isEmpty || metadatas.length == texts.length)) throw new IngestException(
+      s"texts/metadatas length mismatch: ${texts.length} vs ${metadatas.length}")
+    val metas = if (metadatas.isEmpty) Seq.fill(texts.length)(Map.empty[String, String]) else metadatas
+    import spark.implicits._
+    texts.zip(metas).toDF("text", "metadata")
+  }
+
+  /** The one copy-on-write rewrite behind every snapshot mutation, and
+    * so the one place that decides which payload and chunk rows belong
+    * to which live document. The essential store owns the ids; the
+    * payload and the chunk table follow them:
+    *
+    *  - `doomed` (an `id` column) given: the survivors are renumbered
+    *    ONCE, densely in old-id order (index.py:433-435), and
+    *    materialized. The payload and the chunk table are carried
+    *    through that `__old_id → id` map, so a row whose id names no
+    *    survivor — a deleted document or a crash orphan — drops out of
+    *    the join, and chunk vectors travel as data (zero embed calls).
+    *  - `compacting`: no renumbering. The payload is carried through
+    *    the live essential ids, one row per doc_id; chunks are rebuilt
+    *    from text, the heal for duplicate chunk rows a retried
+    *    incremental append leaves.
+    *  - neither (append): ids are stable, so the payload and the chunk
+    *    table keep only ids below the mint offset — a pushed-down filter
+    *    that drops exactly the orphans of a crashed incremental append
+    *    (see [[addDFIncremental]]), whose ids this batch mints next.
+    *
+    * Payload rows are carried by doc_id only, never by hash: a corrupted
+    * row stays for [[verifyIntegrity]] to report. `staged` builds at the
+    * survivor offset and dedups against the survivors — through the
+    * persisted Bloom only when nothing is deleted, since the filter
+    * still holds deleted texts. An append batch that dedups to nothing
+    * publishes nothing; a rewrite left with no survivor and no incoming
+    * row drops the store. */
+  private def rewrite(doomed: Option[DataFrame] = None, staged: Option[DataFrame] = None,
+                      compacting: Boolean = false): Unit = mutationLock.synchronized {
+    val live = if (manifest.count > 0) Some(essentialProjection(essential)) else None
+    val renumbered = for (ex <- live; d <- doomed) yield withDenseId(
+      ex.join(d, Seq("id"), "left_anti").withColumnRenamed("id", "__old_id").orderBy("__old_id"),
+      "id").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // A fully-deduped (or empty) batch against an existing store is a
-      // no-op: don't rewrite the corpus, re-fit IVF, and churn versions
-      // for zero new rows (the incremental path has the same guard).
-      if (existing.isDefined && base.isEmpty) return
-      val allEssential = existing match {
-        case Some(ex) => ex.unionByName(essentialProjection(base))
-        case None     => essentialProjection(base)
-      }
-      val allPayload = existing match {
-        case Some(_) => payload.unionByName(payloadProjection(base))
-        case None    => payloadProjection(base)
-      }
-      // Multi-vector append: ids are stable (append never renumbers),
-      // so existing chunks carry verbatim and only the BATCH's chunks
-      // are embedded — O(batch) inference, not O(corpus). The carry is
-      // clipped to ids BELOW the mint offset: a crashed incremental
-      // append can leave orphan chunk rows for ids its essential write
-      // never published (chunks land first — see addDFIncremental), and
-      // this batch mints exactly those ids next, so carrying the orphans
-      // verbatim would attach the dead batch's vectors to the NEW
-      // documents (a poisoned searchMaxSim hit, not just a stale stat).
-      // Live essential ids are 0..offset-1 by construction, so the
-      // clip drops precisely the orphans.
-      val carry = existing.flatMap(_ => existingChunks())
-        .map(_.where(col("id") < offset)
-          .unionByName(chunkRows(essentialProjection(base))))
-      writeVersion(allEssential, allPayload, carry)
-    } finally base.unpersist()
+      // Renumbered: the survivor count, which also materializes the
+      // map every table reads. Otherwise the offset comes from the DATA,
+      // not the manifest: a crashed incremental append can leave
+      // essential orphans with ids >= manifest.count on disk, and
+      // minting from the stale count would publish duplicate ids.
+      val offset = renumbered.fold(live.fold(0L)(nextId))(_.count())
+      val survivors = renumbered.orElse(live)
+      val idMap = renumbered.map(_.select("__old_id", "id")).orElse(
+        if (compacting) live.map(_.select(col("id").as("__old_id"), col("id"))) else None)
+      val base = staged.map(buildNewRows(_, survivors, offset,
+        if (doomed.isEmpty) loadBloom() else None))
+      try {
+        val nNew = base.fold(0L)(_._2)
+        if (nNew == 0L && staged.isDefined && doomed.isEmpty && live.isDefined) return
+        // The wipe rule counts SURVIVORS, never manifest.count minus the
+        // doomed: crash-orphaned essential rows can inflate a match count
+        // past the live total, and a count test would drop live documents.
+        if (nNew == 0L && renumbered.isDefined && offset == 0L) { drop(); return }
+        def carry(df: DataFrame, key: String, cols: Seq[String]): DataFrame = idMap match {
+          case Some(m) => df.withColumnRenamed(key, "__old_id").join(m, "__old_id")
+            .withColumnRenamed("id", key).select(cols.head, cols.tail: _*)
+          case None => df.where(col(key) < offset)
+        }
+        def plusNew(kept: Option[DataFrame], rows: DataFrame => DataFrame): DataFrame =
+          (kept ++ base.map(b => rows(b._1))).reduce(_.unionByName(_, allowMissingColumns = true))
+        val keptPayload = live.map(_ => carry(
+          if (compacting) payload.dropDuplicates("doc_id") else payload, "doc_id",
+          Seq("doc_id", "text", "metadata", "payload_json")))
+        val keptChunks = if (compacting) None
+          else live.flatMap(_ => existingChunks()).map(carry(_, "id", Seq("id", "vec")))
+        writeVersion(plusNew(survivors, essentialProjection),
+          plusNew(keptPayload, payloadProjection),
+          keptChunks.map(c => plusNew(Some(c), b => chunkRows(essentialProjection(b)))))
+      } finally base.foreach(_._1.unpersist())
+    } finally renumbered.foreach(_.unpersist())
+  }
+
+  /** The next id to mint past every essential row on disk. */
+  private def nextId(ex: DataFrame): Long = ex.agg(max("id")).head.get(0) match {
+    case null => 0L
+    case m    => m.asInstanceOf[Long] + 1L
   }
 
   private def essentialProjection(base: DataFrame): DataFrame =
@@ -269,7 +305,9 @@ final class DocumentStore private (
     * multi-vector, the live config still matches the manifest's chunk
     * geometry (a changed chunkSize/chunkOverlap invalidates every
     * existing window), and the table exists on disk. None ⇒ the caller
-    * lets writeVersion rebuild from the essential text. */
+    * lets writeVersion rebuild from the essential text. Carrying it
+    * through the id map costs one equi-join of (id, vec) pairs —
+    * survivor IO — versus model inference over every chunk. */
   private def existingChunks(): Option[DataFrame] = {
     val dir = chunksDir(manifest.version)
     if (manifest.chunkSize > 0 && config.chunkSize == manifest.chunkSize &&
@@ -279,32 +317,19 @@ final class DocumentStore private (
     else None
   }
 
-  /** Carry surviving chunk vectors across a delete/renumber WITHOUT
-    * re-embedding: inner-join the previous snapshot's chunk table
-    * against `idMap` (__old_id → id, the dense renumbering the mutation
-    * already computes) — deleted docs' chunks drop out of the join,
-    * survivors get their new doc id, and the vectors travel as data.
-    * One equi-join shuffling (old_id, vec) pairs — survivor IO, the
-    * cost class the copy-on-write rewrite already pays — versus model
-    * inference over every chunk in the corpus. */
-  private def chunkCarry(idMap: DataFrame): Option[DataFrame] =
-    existingChunks().map(_.withColumnRenamed("id", "__old_id")
-      .join(idMap, Seq("__old_id"))
-      .select("id", "vec"))
-
   private def payloadProjection(base: DataFrame): DataFrame =
     base.select(col("id").as("doc_id"), col("text"), col("metadata"),
       to_json(struct(col("text"), col("metadata"))).as("payload_json"))
 
   /** Dedup + embed + project one staged batch into a CACHED base of new
-    * rows with dense ids starting at the current count. Caching is
+    * rows with dense ids starting at `offset`, and its row count. Caching is
     * load-bearing, not an optimization: the essential and payload writes
     * both derive from this plan, and recomputing it from a staged input
     * that changed between the two writes would produce payload rows that
     * do not match the essential rows already written. */
   private def buildNewRows(staged: DataFrame, existing: Option[DataFrame],
                            offset: Long,
-                           bloom: Option[BloomFilter] = None): DataFrame = {
+                           bloom: Option[BloomFilter] = None): (DataFrame, Long) = {
     // Pin the staged batch ONCE before anything reads it: zipWithIndex
     // alone runs a partition-count job plus the final compute, and the
     // Bloom confirm both COLLECTS maybe-keys from and anti-joins
@@ -372,8 +397,7 @@ final class DocumentStore private (
     // Materialize base's cache (load-bearing — see callers) from the
     // still-pinned input before the finally releases it; otherwise the
     // first downstream action would re-execute the raw staged plan.
-    base.count()
-    base
+    (base, base.count())
     } finally { pinned.unpersist(); () }
   }
 
@@ -412,28 +436,27 @@ final class DocumentStore private (
     * bloom-fold discipline), so it only ever OVERAPPROXIMATES — a
     * phantom (k, id) from a crashed append matches in step 2, fetches
     * nothing in step 3 (the id never published), and the row is
-    * re-admitted. Fallbacks preserve the old exact shape: a missing
-    * key table (legacy store), or more than [[DocumentStore.MaxConfirmKeys]]
-    * maybe keys / candidate ids (a batch that is mostly dups —
-    * corpus-sized work is then inherent), run the plain anti-join. */
+    * re-admitted. The key table always exists next to the Bloom: the
+    * same writeVersion writes both before the manifest publishes. More
+    * than [[DocumentStore.MaxConfirmKeys]] maybe keys / candidate ids
+    * (a batch that is mostly dups — corpus-sized work is then inherent)
+    * run the plain anti-join. */
   private def confirmDups(flagged: DataFrame, ex: DataFrame): DataFrame = {
-    val keysDir = dedupKeysDir(manifest.version)
-    def legacyConfirm(): DataFrame =
+    def plainConfirm(): DataFrame =
       flagged.where(!col("__maybe")).drop("__maybe")
         .unionByName(flagged.where(col("__maybe")).drop("__maybe")
           .join(ex.select(col("text").as("__ex_text")),
             col("text") <=> col("__ex_text"), "left_anti"))
-    if (!fsFor(keysDir).exists(hadoopPath(keysDir))) return legacyConfirm()
     val cap = DocumentStore.MaxConfirmKeys
     val maybeKeys = flagged.where(col("__maybe"))
       .select(sha2(col("text"), 256).as("__k")).distinct()
       .limit(cap + 1).collect().map(r => Option(r.getString(0)))
     if (maybeKeys.isEmpty) return flagged.drop("__maybe")
-    if (maybeKeys.length > cap) return legacyConfirm()
+    if (maybeKeys.length > cap) return plainConfirm()
     val nonNull = maybeKeys.flatten.toSeq
     val hasNull = maybeKeys.exists(_.isEmpty)
     val inCap = DocumentStore.SafeInProbe
-    val keyTable = spark.read.parquet(keysDir)
+    val keyTable = spark.read.parquet(dedupKeysDir(manifest.version))
     // Probe-mode split. In form: above `pushdown.inFilterThreshold`
     // (default 10) Spark degrades a parquet In filter to a [min, max]
     // RANGE filter — random shas span the whole key space, so every
@@ -463,7 +486,7 @@ final class DocumentStore private (
     val candIds = matched
       .select("id").distinct().limit(cap + 1).collect().map(_.getLong(0))
     if (candIds.isEmpty) return flagged.drop("__maybe")
-    if (candIds.length > cap) return legacyConfirm()
+    if (candIds.length > cap) return plainConfirm()
     // Candidate-TEXT fetch + final anti-join. Two hazards shape this:
     // (a) MaxConfirmKeys bounds candidate COUNT, not BYTES — 100k
     //     1 MB documents would be a ~100 GB broadcast/collect, so the
@@ -540,29 +563,28 @@ final class DocumentStore private (
     * Failure atomicity: all appends run off one CACHED row set
     * (identical rows in every store by construction), payload and (in
     * multi-vector mode) chunk rows land BEFORE essential, and the
-    * manifest count is bumped last — so a
-    * crash mid-append leaves either invisible orphan payload/chunk rows
-    * (harmless: payload is keyed by doc_id and joined from essential)
-    * or nothing; it never publishes essential rows without their
-    * payload, and the unbumped count means a retry re-derives the same
-    * id range for a batch that then dedups against what was already
-    * published. [[compact]] rewrites the snapshot from the essential
-    * rows and so also drops any orphan payload rows. */
+    * manifest count is bumped last — so a crash mid-append never
+    * publishes essential rows without their payload; it leaves either
+    * nothing or orphan payload/chunk rows at ids >= the live count,
+    * which the next snapshot rewrite (any add, delete, upsert or
+    * [[compact]]) drops (see [[rewrite]]). One window stays open: a
+    * RETRY through this method before such a rewrite re-derives the
+    * same id range and mints over the orphans, so a retried document
+    * then has a second payload row — [[verifyIntegrity]] lists both (a
+    * `mismatch` when the dead batch's metadata differs) and compact()
+    * keeps one of them, not necessarily the retried one — and extra
+    * chunk rows until compact() rebuilds them. */
   def addDFIncremental(staged: DataFrame): Unit = mutationLock.synchronized {
-    if (manifest.count == 0) { appendBuild(staged); return }
-    val existing = essential.select("id", "text", "source", "category", "metadata_hash", "vec")
+    if (manifest.count == 0) { rewrite(staged = Some(staged)); return }
+    val existing = essentialProjection(essential)
     // Offset from the DATA, not the manifest: if a prior incremental
     // append crashed between the essential write and the manifest bump,
     // manifest.count undercounts and reusing it would hand out ids that
     // already exist on disk.
-    val offset = existing.agg(max("id")).head.get(0) match {
-      case null => 0L
-      case m    => m.asInstanceOf[Long] + 1L
-    }
+    val offset = nextId(existing)
     val bloom = loadBloom()
-    val base = buildNewRows(staged, Some(existing), offset, bloom)
+    val (base, nNew) = buildNewRows(staged, Some(existing), offset, bloom)
     try {
-      val nNew = base.count()
       if (nNew > 0) {
         // Fold the new keys into the persisted Bloom filter BEFORE the
         // essential rows publish (batch-sized driver work; capacity was
@@ -588,20 +610,18 @@ final class DocumentStore private (
           try b.mergeInPlace(keys.stat.bloomFilter("k", manifest.bloomExpected, manifest.bloomFpp))
           catch { case _: NullPointerException => () }
           writeBloom(manifest.version, b)
-        }
-        // Key-table append, also BEFORE any row publishes (the same
-        // overapproximation discipline as the bloom fold): a phantom
-        // (k, id) left by a crash here matches in confirmDups step 2
-        // but fetches no essential row in step 3, so the retried batch
-        // is re-admitted — while appending AFTER publish would let a
-        // crash UNDERapproximate and re-ingest published texts as
-        // duplicates. One batch-sized file per ingest; writeVersion
-        // regenerates the sorted layout (compact() is the heal for
-        // accumulated small key files too).
-        if (fsFor(dedupKeysDir(manifest.version))
-            .exists(hadoopPath(dedupKeysDir(manifest.version))))
+          // Key-table append (every Bloom store has one), also BEFORE
+          // any row publishes — the same overapproximation discipline:
+          // a phantom (k, id) left by a crash here matches in
+          // confirmDups step 2 but fetches no essential row in step 3,
+          // so the retried batch is re-admitted — while appending AFTER
+          // publish would let a crash UNDERapproximate and re-ingest
+          // published texts as duplicates. One batch-sized file per
+          // ingest; writeVersion regenerates the sorted layout
+          // (compact() is the heal for accumulated small key files too).
           base.select(sha2(col("text"), 256).as("k"), col("id"))
             .write.mode("append").parquet(dedupKeysDir(manifest.version))
+        }
         payloadProjection(base)
           .write.mode("append").parquet(payloadDir(manifest.version))
         val added = essentialProjection(base)
@@ -646,8 +666,10 @@ final class DocumentStore private (
   /** Re-layout the current snapshot (copy-on-write, same data): re-fit
     * IVF clustering when gated, range-sort the flat layout by id, and
     * merge the small files incremental appends accumulate. Also
-    * reconciles after a crashed incremental append: duplicate payload
-    * rows from a retried batch (same doc_id) collapse to one.
+    * reconciles after a crashed incremental append: the payload is
+    * carried through the live essential ids, so orphan payload rows
+    * drop out and duplicate rows of one doc_id (a retried batch)
+    * collapse to one, and chunks are rebuilt from text.
     *
     * Tuning lifecycle: if nprobe was ever tuned on this store
     * (manually or via the config gate) and the fresh snapshot didn't
@@ -658,9 +680,8 @@ final class DocumentStore private (
     * instead (rebuilding its per-snapshot index is an explicit
     * [[buildPqIndex]] + [[tunePqCandidates]] decision). */
   def compact(): Unit = mutationLock.synchronized {
-    writeVersion(
-      essential.select("id", "text", "source", "category", "metadata_hash", "vec"),
-      payload.dropDuplicates("doc_id"))
+    if (manifest.count == 0) throw new IndexException("store is empty or not built")
+    rewrite(compacting = true)
     readTuningHistory("nprobe").foreach { h =>
       val dir = s"${tuningDir(manifest.version)}/nprobe"
       if (manifest.nlist > 0 && !fsFor(dir).exists(hadoopPath(dir)))
@@ -673,14 +694,21 @@ final class DocumentStore private (
     *
     * `carriedChunks` (multi-vector mode): pre-embedded chunk rows
     * (id, vec) — already renumbered to the NEW snapshot's ids — that
-    * replace the from-scratch chunk+embed rebuild. Mutation callers pass
-    * the previous snapshot's chunk table carried through their delete/
-    * renumber (see [[chunkCarry]]); None rebuilds from the essential
-    * text (first build, compact(), chunk-config change). */
+    * replace the from-scratch chunk+embed rebuild ([[rewrite]] carries
+    * the previous snapshot's table through its id map); None rebuilds
+    * from the essential text (first build, compact(), chunk-config
+    * change).
+    *
+    * `essentialDf` may carry extra columns (the renumbering's __old_id);
+    * only the essential projection is written. A frame the caller has
+    * already persisted (a delete's renumbered survivors) is read as is,
+    * not cached a second time. */
   private def writeVersion(essentialDf: DataFrame, payloadDf: DataFrame,
-                           carriedChunks: Option[DataFrame] = None): Unit = {
+                           carriedChunks: Option[DataFrame]): Unit = {
     val v = manifest.version + 1
-    val ess = essentialDf.cache()
+    val owned = essentialDf.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val cached = if (owned) essentialDf.cache() else essentialDf
+    val ess = essentialProjection(cached)
     val count = ess.count()
 
     var modelOpt: Option[IvfIndex.Model] = None
@@ -776,7 +804,7 @@ final class DocumentStore private (
           ch.write.mode("overwrite").parquet(chunksDir(v))
       }
     }
-    ess.unpersist()
+    if (owned) cached.unpersist()
 
     val nlistUsed = modelOpt.map(_.nlist).getOrElse(0)
     publish(StoreManifest(v, embedder.dim, config.metric, count, nlistUsed,
@@ -1474,20 +1502,18 @@ final class DocumentStore private (
 
   /** BM25 score set for the query terms: served from the persisted
     * index when one exists AND covers exactly the current document
-    * count (its stats row records the indexed n_docs — incremental
-    * appends since the build make it stale and force the scan path).
+    * count (its `built_for` sidecar records the store count at build
+    * time — incremental appends since the build make it stale and force
+    * the scan path).
     * Index-backed and scan-time scores are bit-identical, so callers
     * cannot observe which path ran. */
   private def lexicalScores(queryTerms: Seq[String]): DataFrame = {
     val dir = lexicalDir(snap.version)
     // Freshness = the store count recorded at build time (the
     // `built_for` sidecar) still matches: incremental appends since
-    // the build bump the count and force the scan path. Legacy indexes
-    // without the sidecar fall back to the stats n_docs compare (which
-    // is exact only for all-non-null-text stores — the sidecar exists
-    // because stats counts only docs writeIndex could tokenize).
+    // the build bump the count and force the scan path. An index
+    // without the sidecar reads as stale.
     val builtForDir = s"$dir/built_for"
-    val statsDir = s"$dir/stats"
     // Completeness first: a crash mid-writeIndex leaves new postings
     // next to stale df/stats (silently wrong scores); the _complete
     // marker is removed before any data write, so a torn index reads
@@ -1497,14 +1523,9 @@ final class DocumentStore private (
     // scores stay correct via the scan path, but such stores pay the
     // full BM25 scan until buildLexicalIndex is re-run once — a
     // documented perf-only upgrade step, never a wrong answer.
-    val fresh = TextSearch.indexComplete(spark, dir) && {
-      if (fsFor(builtForDir).exists(hadoopPath(builtForDir)))
-        spark.read.parquet(builtForDir).head.getLong(0) == snap.count
-      else fsFor(statsDir).exists(hadoopPath(statsDir)) && {
-        spark.read.parquet(statsDir).head.getAs[Double]("n_docs").toLong ==
-          snap.count
-      }
-    }
+    val fresh = TextSearch.indexComplete(spark, dir) &&
+      fsFor(builtForDir).exists(hadoopPath(builtForDir)) &&
+      spark.read.parquet(builtForDir).head.getLong(0) == snap.count
     if (fresh) TextSearch.searchIndexScores(spark, dir, queryTerms)
     else TextSearch.bm25Scores(essential.select(col("id"), col("text")),
       "id", "text", queryTerms)
@@ -1712,29 +1733,7 @@ final class DocumentStore private (
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     val doomedIds = essential.where(condition).select("id")
     val removed = doomedIds.count()
-    if (removed == 0) return 0L
-    val survivorsE = essential.join(doomedIds, Seq("id"), "left_anti")
-    // Whole-store wipe is decided by SURVIVORS being empty, never by
-    // `removed >= manifest.count`: crash-orphaned essential rows (ids
-    // >= manifest.count, see addDFIncremental) can inflate the match
-    // count past the live total, and the count-based test would then
-    // drop() surviving documents — silent data loss.
-    if (survivorsE.isEmpty) { drop(); return removed }
-    val survivorsP = payload.join(
-      doomedIds.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
-    // Old id retained through the renumbering for the multi-vector
-    // chunk carry — see deleteByIds for the caching rationale.
-    val chunked = manifest.chunkSize > 0
-    val reKeyed = withDenseId(
-      survivorsE.withColumnRenamed("id", "__old_id").orderBy("__old_id"), "id")
-    val reBase = if (chunked)
-      reKeyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else reKeyed
-    val reE = reBase.select("id", "text", "source", "category", "metadata_hash", "vec")
-    val reP = withDenseId(survivorsP.orderBy("doc_id").drop("doc_id"), "doc_id")
-      .select("doc_id", "text", "metadata", "payload_json")
-    try writeVersion(reE, reP, chunkCarry(reBase.select("__old_id", "id")))
-    finally if (chunked) { reBase.unpersist(); () }
+    if (removed > 0) rewrite(doomed = Some(doomedIds))
     removed
   }
 
@@ -1891,33 +1890,8 @@ final class DocumentStore private (
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     val bad = ids.filter(i => i < 0 || i >= manifest.count)
     if (bad.nonEmpty) throw new IndexException(s"invalid ids: ${bad.mkString(",")} (count=${manifest.count})")
-
     import spark.implicits._
-    val idsDf = ids.toDF("id")
-    val survivorsE = essential.join(broadcast(idsDf), Seq("id"), "left_anti")
-    val survivorsP = payload.join(
-      broadcast(idsDf.withColumnRenamed("id", "doc_id")), Seq("doc_id"), "left_anti")
-
-    if (manifest.count - ids.distinct.length <= 0) { drop(); return true }
-
-    // Dense id reassignment preserving order (index.py:433-435). The
-    // old id rides along as __old_id: multi-vector stores use the
-    // old→new map to carry surviving chunk vectors instead of
-    // re-embedding the corpus (see chunkCarry). Cached when chunked —
-    // the essential write and the carry join both consume the
-    // renumbering, and ONE materialization guarantees they see the
-    // same assignment.
-    val chunked = manifest.chunkSize > 0
-    val reKeyed = withDenseId(
-      survivorsE.withColumnRenamed("id", "__old_id").orderBy("__old_id"), "id")
-    val reBase = if (chunked)
-      reKeyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else reKeyed
-    val reE = reBase.select("id", "text", "source", "category", "metadata_hash", "vec")
-    val reP = withDenseId(survivorsP.orderBy("doc_id").drop("doc_id"), "doc_id")
-      .select("doc_id", "text", "metadata", "payload_json")
-    try writeVersion(reE, reP, chunkCarry(reBase.select("__old_id", "id")))
-    finally if (chunked) { reBase.unpersist(); () }
+    rewrite(doomed = Some(broadcast(ids.toDF("id"))))
     true
   }
 
@@ -1931,12 +1905,17 @@ final class DocumentStore private (
     // and the inner deleteByIds removes the WRONG documents.
     if (texts.isEmpty) return false
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
+    val firstIds = firstOccurrences(texts)
+    firstIds.nonEmpty && deleteByIds(firstIds)
+  }
+
+  /** The lowest id of each of `texts` present in the store — the rows
+    * [[deleteByTexts]] deletes and [[upsertTexts]] replaces. */
+  private def firstOccurrences(texts: Seq[String]): Seq[Long] = {
     import spark.implicits._
-    val tdf = texts.distinct.toDF("text")
-    val firstIds = essential.join(broadcast(tdf), Seq("text"), "left_semi")
+    essential.join(broadcast(texts.distinct.toDF("text")), Seq("text"), "left_semi")
       .groupBy("text").agg(min("id").as("id"))
-      .select("id").as[Long].collect()
-    if (firstIds.isEmpty) false else deleteByIds(firstIds.toSeq)
+      .select("id").as[Long].collect().toSeq
   }
 
   // ------------------------------------------------------------------
@@ -1974,60 +1953,18 @@ final class DocumentStore private (
     * offset — is ONE copy-on-write version under ONE lock acquisition.
     * There is no intermediate "deleted but not yet re-added" published
     * state for a crash to expose or a concurrent async mutation to
-    * interleave into (the lock is re-entrant, so the empty-store /
-    * pure-append delegations to [[addTexts]] stay atomic too). */
+    * interleave into. An upsert that matches no stored text is a plain
+    * append. */
   def upsertTexts(texts: Seq[String],
                   metadatas: Seq[Map[String, String]] = Nil): Seq[String] = mutationLock.synchronized {
-    if (!(metadatas.isEmpty || metadatas.length == texts.length)) throw new IngestException(
-      s"texts/metadatas length mismatch: ${texts.length} vs ${metadatas.length}")
-    if (manifest.count == 0) return addTexts(texts, metadatas)
+    val staged = stage(texts, metadatas)
+    val firstIds = if (manifest.count == 0) Nil else firstOccurrences(texts)
     import spark.implicits._
-    val tdf = texts.distinct.toDF("text")
-    val firstIds = essential.join(broadcast(tdf), Seq("text"), "left_semi")
-      .groupBy("text").agg(min("id").as("id"))
-      .select("id").as[Long].collect().toSeq
-    if (firstIds.isEmpty) return addTexts(texts, metadatas) // pure append
-    val idsDf = firstIds.toDF("id")
-    val survivorsE = essential.join(broadcast(idsDf), Seq("id"), "left_anti")
-    val survivorsP = payload.join(
-      broadcast(idsDf.withColumnRenamed("id", "doc_id")), Seq("doc_id"), "left_anti")
-    // Dense-id recompaction of the survivors (delete semantics,
-    // index.py:433-435), then the incoming batch builds at the
-    // survivor-count offset — same dedup-vs-store as any ingest, now
-    // against the survivors (later duplicate copies of a matched text
-    // still win over the incoming row, as in the composed form). The
-    // persisted Bloom is NOT passed: it still contains the just-replaced
-    // texts, and correctness here needs the exact anti-join anyway.
-    // CACHED like buildNewRows' base and writeVersion's ess: the
-    // recompaction pipeline (anti-join + global orderBy + zipWithIndex)
-    // is consumed at least three times — the survivor count, the
-    // dedup anti-join inside buildNewRows, and the snapshot write —
-    // and uncached it would re-scan the corpus each time.
-    val reBase = withDenseId(
-      survivorsE.withColumnRenamed("id", "__old_id").orderBy("__old_id"), "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val reE = reBase.select("id", "text", "source", "category", "metadata_hash", "vec")
-    val reP = withDenseId(survivorsP.orderBy("doc_id").drop("doc_id"), "doc_id")
-      .select("doc_id", "text", "metadata", "payload_json")
-    val metas = if (metadatas.isEmpty) Seq.fill(texts.length)(Map.empty[String, String]) else metadatas
-    val staged = texts.zip(metas).toDF("text", "metadata")
-    // Offset = ACTUAL survivor count (recompacted ids are dense
-    // 0..n-1): deriving it from manifest.count would collide with the
-    // recompacted ids when crash-orphaned rows inflate the on-disk row
-    // count past the manifest (see appendBuild). Counting reE (not
-    // survivorsE) also forces the cache before its other consumers.
-    val survivorCount = reE.count()
-    val base = buildNewRows(staged, Some(reE), survivorCount)
-    // Multi-vector carry: survivors' chunk vectors travel through the
-    // old→new id map un-re-embedded; only the INCOMING batch's chunks
-    // are embedded (its text may differ from anything replaced).
-    val carrySurv = chunkCarry(reBase.select("__old_id", "id"))
-    try {
-      if (base.isEmpty) writeVersion(reE, reP, carrySurv) // publish just the deletes
-      else writeVersion(reE.unionByName(essentialProjection(base)),
-        reP.unionByName(payloadProjection(base)),
-        carrySurv.map(_.unionByName(chunkRows(essentialProjection(base)))))
-    } finally { base.unpersist(); reBase.unpersist(); () }
+    // The incoming batch dedups against the survivors without the Bloom
+    // (it still holds the replaced texts): a later duplicate copy of a
+    // matched text still wins over the incoming row, as in delete+add.
+    rewrite(doomed = if (firstIds.isEmpty) None else Some(broadcast(firstIds.toDF("id"))),
+      staged = Some(staged))
     texts.indices.map(_.toString)
   }
 
@@ -2084,8 +2021,9 @@ final class DocumentStore private (
     * longer hashes to the stored token — corruption or out-of-band
     * edit), `missing_payload` (essential row with no payload row —
     * broken store), `orphan_payload` (payload row with no essential
-    * row — harmless leftover of a crashed incremental append; compact()
-    * removes them). Filter `status != 'ok'` for the defect list. */
+    * row — harmless leftover of a crashed incremental append; compact(),
+    * like every snapshot rewrite, removes them). Filter `status != 'ok'`
+    * for the defect list. */
   def verifyIntegrity(): DataFrame = withSnapshot {
     if (snap.count == 0) throw new StorageException("store is empty or not built")
     // Presence is tracked with explicit side flags, NOT hash nullness:

@@ -22,7 +22,7 @@ object StreamingOps {
 
   /** Continuous ingest: stream of (text, metadata) rows appended to a
     * DocumentStore per micro-batch, via the O(batch) incremental append
-    * path — NOT addDF/appendBuild, which unions the batch with the
+    * path — NOT addDF, which unions the batch with the
     * whole corpus and rewrites a full snapshot: on a continuous stream
     * that is O(N) I/O per micro-batch and O(N²) cumulative, with batch
     * duration growing until it blows the trigger interval. Dedup-vs-

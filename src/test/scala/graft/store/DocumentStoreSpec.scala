@@ -1310,6 +1310,46 @@ class DocumentStoreSpec extends SparkSpec {
     assert(ids.contains(8L), s"new id must mint past the orphan: $ids")
   }
 
+  test("every snapshot rewrite drops a crash-orphaned payload row instead of attaching it to a live doc") {
+    import org.apache.spark.sql.functions.{lit, map}
+    val crashedMeta = Map("source" -> "crashed.txt", "category" -> "dead-batch")
+    val cases: Seq[(String, DocumentStore => Unit, Map[String, Map[String, String]])] = Seq(
+      ("addTexts", _.addTexts(Seq("a doc appended after the crash"), Seq(Map("source" -> "a.txt"))),
+        Map("a doc appended after the crash" -> Map("source" -> "a.txt"))),
+      ("deleteByIds then addTexts", { s =>
+        s.deleteByIds(Seq(0L))
+        s.addTexts(Seq("a doc appended after the delete"), Seq(Map("source" -> "b.txt")))
+      }, Map("a doc appended after the delete" -> Map("source" -> "b.txt"))),
+      ("upsertTexts", _.upsertTexts(Seq(texts(2)), Seq(Map("source" -> "patched.txt"))),
+        Map(texts(2) -> Map("source" -> "patched.txt"))),
+      ("compact", _.compact(), Map.empty))
+    cases.foreach { case (name, mutate, written) =>
+      val dir = tmp()
+      val store = DocumentStore.fromTexts(spark, dir, texts, metas, StoreConfig(), emb)
+      // Simulate addDFIncremental's crash window: a payload row landed
+      // at the next id (doc_id = count), but its essential row never did.
+      val v = store.currentManifest.version
+      store.payload.limit(1)
+        .withColumn("doc_id", lit(store.documentCount))
+        .withColumn("text", lit("crashed batch doc"))
+        .withColumn("metadata", map(crashedMeta.toSeq.flatMap { case (k, x) => Seq(lit(k), lit(x)) }: _*))
+        .write.mode("append").parquet(s"$dir/v$v/payload")
+      mutate(store)
+      val expected = texts.zip(metas).toMap ++ written
+      val bad = store.verifyIntegrity().where("status != 'ok'").collect()
+      assert(bad.isEmpty, s"$name: ${bad.mkString(", ")}")
+      val n = store.documentCount
+      val rows = store.getDocumentsByIds(0L until n, includeFullMetadata = true).collect()
+      val ids = rows.map(_.getAs[Long]("doc_id")).toSeq
+      assert(ids.sorted == (0L until n), s"$name: one row per id expected, got $ids")
+      rows.foreach { r =>
+        val text = r.getAs[String]("text")
+        assert(r.getAs[scala.collection.Map[String, String]]("metadata").toMap == expected(text),
+          s"$name: doc ${r.getAs[Long]("doc_id")} ($text) carries the wrong metadata")
+      }
+    }
+  }
+
   test("cross-batch dedup treats null text like the intra-batch screen (one kept)") {
     import spark.implicits._
     val store = DocumentStore.fromTexts(spark, tmp(), Seq("seed doc"), Nil,
