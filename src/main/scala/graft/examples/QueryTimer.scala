@@ -53,8 +53,8 @@ object QueryTimer {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        // listener events are async; give the queue a beat
-        Thread.sleep(150)
+        // listener events are async: count them all before printing
+        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
         println(f"TIMER $name round=$r $sec%7.3f s jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get}")
       }
     }

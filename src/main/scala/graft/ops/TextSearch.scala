@@ -115,9 +115,10 @@ object TextSearch {
     * crash mid-rebuild leaves a TORN index (new postings with stale
     * df/stats — silently wrong scores, not an error). A `_complete`
     * marker is therefore removed FIRST and rewritten only after the
-    * last write: readers gate on [[indexComplete]] (DocumentStore's
-    * lexical freshness check does) and treat a marker-less index as
-    * absent, falling back to the scan path instead of mixing epochs. */
+    * last write: readers gate on [[indexComplete]] and treat a
+    * marker-less index as absent, falling back to the scan path
+    * instead of mixing epochs. (DocumentStore gates on its manifest
+    * entry instead, published after this call returns.) */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
                  dir: String, numFiles: Int = 16): Unit = {
     val spark = docs.sparkSession

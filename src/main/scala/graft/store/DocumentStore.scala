@@ -6,6 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 import org.apache.spark.util.sketch.BloomFilter
+import org.json4s.{Extraction, JNothing, MappingException}
+import org.json4s.jackson.JsonMethods
+import scala.util.control.NonFatal
 
 import graft._
 import graft.embed.Embedder
@@ -26,7 +29,9 @@ import graft.ops.TextSearch
   * <path>/_commits/manifest_<n>  # manifest commits (newest two kept):
   * #                               version, dim/metric/count/nlist,
   * #                               chunk geometry, Bloom params, layout
-  * #                               file count, IVF drift ledger
+  * #                               file count, IVF drift ledger, which
+  * #                               derived indexes are live, tuning
+  * #                               curves and last tuning params
   * <path>/v<N>/essential/        # parquet: id, text, source, category,
   * #                               metadata_hash, vec [, cluster=...]
   * <path>/v<N>/centroids/        # parquet (IVF only): cluster, centroid
@@ -35,8 +40,16 @@ import graft.ops.TextSearch
   * <path>/v<N>/dedup_bloom.bin   # ingest-dedup Bloom filter
   * <path>/v<N>/dedup_keys/       # parquet: sha-sorted (k, id) key table
   * <path>/v<N>/chunks/           # parquet (multi-vector only): id, vec
-  * <path>/v<N>/lexical|pq|tuning # optional derived indexes and curves
+  * <path>/v<N>/lexical/          # optional BM25 index (postings, terms,
+  * #                               stats), live iff the manifest says so
+  * <path>/v<N>/pq/               # optional PQ index (codebooks, codes
+  * #                               [, rotation]), live iff the manifest
+  * #                               says so
   * }}}
+  *
+  * A derived-index build publishes the manifest without the index's
+  * entry, writes the index in place, then publishes the entry, so a
+  * crash mid-build leaves the index absent, never torn.
   *
   * Every snapshot mutation (add, delete, upsert, compact) goes through
   * ONE copy-on-write rewrite ([[rewrite]]): it writes a NEW version
@@ -99,6 +112,14 @@ final class DocumentStore private (
     Commits.prune(fs, dir, CommitPrefix, below = commit - 1)
   }
 
+  /** Step one of a derived-index rebuild: publish `without`, the live
+    * manifest minus the index's entry, unless that changes nothing (a
+    * first build has no entry yet). The caller then writes the index in
+    * place and publishes the entry, so a crash mid-build leaves the
+    * index absent, never torn. */
+  private def retract(without: StoreManifest): Unit =
+    if (without != manifest) publish(without)
+
   private def versionDir(v: Long) = s"$path/v$v"
   private def essentialDir(v: Long) = s"${versionDir(v)}/essential"
   private def payloadDir(v: Long) = s"${versionDir(v)}/payload"
@@ -108,7 +129,6 @@ final class DocumentStore private (
   private def lexicalDir(v: Long) = s"${versionDir(v)}/lexical"
   private def pqDir(v: Long) = s"${versionDir(v)}/pq"
   private def chunksDir(v: Long) = s"${versionDir(v)}/chunks"
-  private def tuningDir(v: Long) = s"${versionDir(v)}/tuning"
 
   // --- snapshot pinning for multi-step reads -------------------------
   // A read operation that touches the store more than once (hits +
@@ -682,15 +702,16 @@ final class DocumentStore private (
   def compact(): Unit = mutationLock.synchronized {
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     rewrite(compacting = true)
-    readTuningHistory("nprobe").foreach { h =>
-      val dir = s"${tuningDir(manifest.version)}/nprobe"
-      if (manifest.nlist > 0 && !fsFor(dir).exists(hadoopPath(dir)))
+    manifest.tuned.get("nprobe").foreach { h =>
+      if (manifest.nlist > 0 && !manifest.curves.contains("nprobe"))
         tuneNprobe(h.targetRecall, h.k, h.sampleQueries, h.settings, h.seed)
     }
   }
 
   /** Write a new snapshot version (optionally IVF-clustered), publish
-    * its manifest commit, prune old versions.
+    * its manifest commit, prune old versions. The new manifest has no
+    * derived index and no tuning curve; it carries the last tuning
+    * params forward.
     *
     * `carriedChunks` (multi-vector mode): pre-embedded chunk rows
     * (id, vec) — already renumbered to the NEW snapshot's ids — that
@@ -814,7 +835,8 @@ final class DocumentStore private (
       bloomExpected = bloomExpected,
       bloomFpp = if (bloomExpected > 0L) config.dedupBloomFpp else 0.0,
       layoutFiles = layoutFiles,
-      ivfBaselineMean = ivfBaseline))
+      ivfBaselineMean = ivfBaseline,
+      tuned = manifest.tuned))
     // Snapshot retention: keepVersions versions stay on disk, the live
     // one included, so readers holding an older snapshot (a long job
     // planned against v-1) finish undisturbed — MVCC-style grace.
@@ -876,37 +898,35 @@ final class DocumentStore private (
   // complement to the vector index, persisted alongside the snapshot.
   // ------------------------------------------------------------------
 
-  /** Build/refresh the persisted inverted index for the CURRENT
-    * snapshot version (postings/df/stats under the version dir — see
-    * TextSearch.writeIndex). Incremental appends after the build make
-    * it stale; stale indexes are detected and bypassed, so building is
-    * always safe and never required. */
-  def buildLexicalIndex(numFiles: Int = 16): Unit = withSnapshot {
-    // Pinned like buildPqIndex: the index write and its built_for
-    // sidecar must land under the SAME version a concurrent mutation
-    // can't swap between them.
-    if (snap.count == 0) throw new IndexException("store is empty or not built")
+  /** Build/refresh the persisted inverted index for the live snapshot
+    * version (postings/df/stats under the version dir — see
+    * TextSearch.writeIndex), under the mutation lock. A rebuild first
+    * publishes the manifest without its `lexicalFor` entry, then writes
+    * the index in place, then publishes `lexicalFor` = the store count.
+    * Incremental appends after the build change the count and make the
+    * index stale; stale or absent indexes are bypassed by the scan
+    * path, so building is always safe and never required. */
+  def buildLexicalIndex(numFiles: Int = 16): Unit = mutationLock.synchronized {
+    if (manifest.count == 0) throw new IndexException("store is empty or not built")
+    retract(manifest.copy(lexicalFor = None))
     TextSearch.writeIndex(essential.select(col("id"), col("text")),
-      "id", "text", lexicalDir(snap.version), numFiles)
-    // Freshness sidecar: the STORE count at build time. The index's
-    // own stats n_docs counts non-null-TEXT docs only (writeIndex
-    // filters them), so comparing it to snap.count would brand a fresh
-    // index permanently stale the moment one null-text doc exists.
-    import spark.implicits._
-    Seq(snap.count).toDF("store_count").coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"${lexicalDir(snap.version)}/built_for")
+      "id", "text", lexicalDir(manifest.version), numFiles)
+    publish(manifest.copy(lexicalFor = Some(manifest.count)))
   }
 
-  /** Build/refresh a product-quantization index for the CURRENT
-    * snapshot: fit per-subspace codebooks (PqIndex.fit, m·ksub KMeans
-    * centroids) on the stored vectors and persist codebooks + per-doc
-    * codes under the version dir — the store-level FAISS IndexPQ
-    * artifact. Codes are `m` small ints per doc (vs `dim` floats —
-    * 32× smaller at m=8/dim=64), so the ADC prescreen scans a fraction
-    * of the bytes the exact scan reads. Incremental appends make it
-    * stale; stale indexes are detected and bypassed, so building is
-    * always safe and never required.
+  /** Build/refresh a product-quantization index for the live snapshot,
+    * under the mutation lock: fit per-subspace codebooks (PqIndex.fit,
+    * m·ksub KMeans centroids) on the stored vectors and persist
+    * codebooks + per-doc codes under the version dir — the store-level
+    * FAISS IndexPQ artifact. Codes are `m` small ints per doc (vs `dim`
+    * floats — 32× smaller at m=8/dim=64), so the ADC prescreen scans a
+    * fraction of the bytes the exact scan reads. A rebuild first
+    * publishes the manifest without its `pqFor` entry, then writes the
+    * index in place, then publishes `pqFor` = the store count with
+    * `pqRotated`, so a torn build reads as absent and searches fall
+    * back to exact. Incremental appends change the count and make the
+    * index stale; stale indexes are bypassed, so building is always
+    * safe and never required.
     *
     * `rotate = true` builds the OPQ variant: a PCA rotation is fitted
     * first ([[PqIndex.fitRotation]] — parametric OPQ) and codebooks +
@@ -919,20 +939,18 @@ final class DocumentStore private (
     * vectors — rotations are orthonormal, so the ranks agree. */
   def buildPqIndex(m: Int = 8, ksub: Int = 16, seed: Long = 42L,
                    rotate: Boolean = false, fitFraction: Double = 1.0,
-                   fitPartitions: Int = 0): Unit = withSnapshot {
-    // withSnapshot pins ONE manifest for the whole build: the body
+                   fitPartitions: Int = 0): Unit = mutationLock.synchronized {
+    // The mutation lock holds ONE version for the whole build: the body
     // reads `essential` three to four times (rotation fit, PQ fit,
-    // encode), and without the pin each read re-resolved the live
-    // pointer — a concurrent mutation could yield a rotation fitted on
-    // vN with codes encoded from vN+1, written into pqDir(vN) behind a
-    // count-only freshness gate that still passed. `fitFraction`/
-    // `fitPartitions` (FAISS-style sample training) reach both fits:
-    // at corpus scale a full-fraction fit persists the whole vector
-    // column twice and runs PCA over the corpus — the sample knob is
-    // the documented scale posture and must be reachable from here.
-    if (snap.count == 0) throw new IndexException("store is empty or not built")
+    // encode), and a concurrent mutation could otherwise yield a
+    // rotation fitted on vN with codes encoded from vN+1.
+    // `fitFraction`/`fitPartitions` (FAISS-style sample training) reach
+    // both fits: at corpus scale a full-fraction fit persists the whole
+    // vector column twice and runs PCA over the corpus — the sample
+    // knob is the documented scale posture and must be reachable here.
+    if (manifest.count == 0) throw new IndexException("store is empty or not built")
     if (embedder.dim % m != 0) throw new IndexException(s"dim ${embedder.dim} not divisible by m=$m")
-    val dir = pqDir(snap.version)
+    val dir = pqDir(manifest.version)
     import spark.implicits._
     val rotOpt =
       if (rotate) Some(PqIndex.fitRotation(essential, "vec", m,
@@ -947,20 +965,11 @@ final class DocumentStore private (
         (PqIndex.fit(essential, "vec", m, ksub, seed,
           fitFraction = fitFraction, fitPartitions = fitPartitions), essential)
     }
-    // REBUILD discipline: the previous build's meta stays fresh-looking
-    // for this whole rebuild (same snapshot, same n_docs), so a crash
-    // between the first artifact write and the final meta write would
-    // otherwise pair OLD codes with a NEW rotation (or rotated codes
-    // with a deleted rotation) behind a passing freshness gate —
-    // silently garbage ADC ranks. Invalidate meta FIRST (the lexical
-    // index's _complete discipline): any torn state now reads as
-    // absent and searches fall back to exact.
-    DocumentStore.deleteDir(spark, s"$dir/meta")
-    // Rotation state lands BEFORE meta (the freshness gate): a torn
-    // build reads as absent, never as unrotated-codes-with-rotation or
-    // vice versa. A plain rebuild over a previously-rotated index must
-    // REMOVE the stale rotation, or loadPq would rotate queries against
-    // unrotated codes — silently wrong ADC ranks.
+    // A crash mid-rebuild would otherwise pair OLD codes with a NEW
+    // rotation behind a live entry — silently garbage ADC ranks.
+    retract(manifest.copy(pqFor = None, pqRotated = false))
+    // A plain rebuild over a previously-rotated index removes the stale
+    // rotation too, so no reader can pair it with unrotated codes.
     rotOpt match {
       case Some(rot) =>
         rot.rows.zipWithIndex.map { case (r, i) => (i, r) }
@@ -979,9 +988,7 @@ final class DocumentStore private (
         model.encodeCol(
           col(if (rotate) "__rvec" else "vec"), roundScale = 4).as("codes"))
       .write.mode("overwrite").parquet(s"$dir/codes")
-    Seq((snap.count, m, ksub))
-      .toDF("n_docs", "m", "ksub")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    publish(manifest.copy(pqFor = Some(manifest.count), pqRotated = rotate))
     // Opt-in measured-recall tuning: the PQ build ships with its
     // rerank-depth/recall curve (see tunePqCandidates).
     if (config.tuneTargetRecall > 0.0)
@@ -998,7 +1005,7 @@ final class DocumentStore private (
     * hash lands on a stride, capped at `n` — stable across runs and
     * partitionings, spread over the id range. */
   private def tuningSample(n: Int, seed: Long): Array[(Long, Seq[Double])] = {
-    val stride = math.max(1L, snap.count / n)
+    val stride = math.max(1L, manifest.count / n)
     // Null vectors (null-text docs, which the store supports) can't be
     // queries; and the hash-stride filter can come back empty for tiny
     // n — fall back to the first n embeddable rows rather than NPE
@@ -1030,9 +1037,9 @@ final class DocumentStore private (
   /** Tune nprobe from a MEASURED recall target: sweep `candidates`
     * nprobe values over a seeded `sampleQueries`-query sample, score
     * each against the exact top-k ([[graft.ops.Eval.recallAtK]]), and
-    * persist the (nprobe, mean recall, mean scanned-corpus fraction)
-    * curve under the snapshot's `tuning/nprobe` dir — next to the
-    * manifest, so the trade-off travels with the store. The cheapest
+    * publish the (nprobe, mean recall, mean scanned-corpus fraction)
+    * curve in the manifest with this pass's params, so the trade-off
+    * travels with the store. Runs under the mutation lock. The cheapest
     * setting meeting `targetRecall` is marked `chosen` (the largest
     * candidate if none reaches it) and becomes [[effectiveNprobe]] —
     * every subsequent search on this snapshot uses it automatically.
@@ -1046,8 +1053,8 @@ final class DocumentStore private (
   def tuneNprobe(targetRecall: Double = 0.95, k: Int = 10,
                  sampleQueries: Int = 20,
                  candidates: Seq[Int] = Seq(1, 2, 4, 8),
-                 seed: Long = 42L): Seq[TuningPoint] = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
+                 seed: Long = 42L): Seq[TuningPoint] = mutationLock.synchronized {
+    if (manifest.count == 0) throw new SearchException("store is empty or not built")
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall out of (0,1]: $targetRecall")
     val model = loadCentroids().getOrElse(throw new IndexException(
@@ -1061,9 +1068,10 @@ final class DocumentStore private (
     val clusterSizes = essential.groupBy("cluster").count().collect()
       .filter(!_.isNullAt(0)).map(r => r.getInt(0) -> r.getLong(1)).toMap
     // Denominator = REACHABLE rows (sum of non-null cluster sizes), not
-    // snap.count: null-vec docs are excluded from the numerator's probe
-    // sums, and counting them below would make costFraction understate
-    // the scan and never reach 1.0 even when every cluster is probed.
+    // the store count: null-vec docs are excluded from the numerator's
+    // probe sums, and counting them below would make costFraction
+    // understate the scan and never reach 1.0 even when every cluster
+    // is probed.
     val total = math.max(clusterSizes.values.sum, 1L).toDouble
     import spark.implicits._
     // The WHOLE sweep is ONE batched scoring job: every (candidate
@@ -1108,26 +1116,24 @@ final class DocumentStore private (
     val curve = points.map { case (np, r, f) =>
       TuningPoint(np, r, f, chosen = np == chosenNp)
     }
-    writeCurve("nprobe", curve)
-    tuningCache.put(snap.version, Some(chosenNp))
-    writeTuningHistory("nprobe", targetRecall, k, sampleQueries, seed, candidates)
-    curve
+    publishTuning("nprobe", curve,
+      TuningParams(manifest.version, targetRecall, k, sampleQueries, seed, candidates))
   }
 
-  /** Persist a tuning curve under the snapshot's tuning dir (the
-    * parquet twin of [[tuningCurve]]'s reader). */
-  private def writeCurve(kind: String, curve: Seq[TuningPoint]): Unit = {
-    import spark.implicits._
-    curve.toDF().withColumnRenamed("costFraction", "cost_fraction")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${tuningDir(snap.version)}/$kind")
+  /** Publish a tuning pass: the live version's curve and the pass's
+    * params, in one manifest commit. Returns the curve. */
+  private def publishTuning(kind: String, curve: Seq[TuningPoint],
+                            params: TuningParams): Seq[TuningPoint] = {
+    publish(manifest.copy(curves = manifest.curves + (kind -> curve),
+      tuned = manifest.tuned + (kind -> params)))
+    curve
   }
 
   /** Tune the PQ rerank depth the same way: for each depth d =
     * factor·k, approx top-k = exact rerank of the d best ADC
     * candidates; the curve (depth, mean recall, rerank fraction d/N)
-    * is persisted under `tuning/pq`. The scan side is the persisted
-    * codes table; per query the top max-depth ADC candidates (with
+    * is published in the manifest like nprobe's. The scan side is the
+    * persisted codes table; per query the top max-depth ADC candidates (with
     * their exact vectors) come back to the driver ONCE, so the depth
     * sweep is driver arithmetic — |sample| bounded jobs total. The
     * chosen depth is recorded in the curve AND adopted: a
@@ -1137,14 +1143,14 @@ final class DocumentStore private (
   def tunePqCandidates(targetRecall: Double = 0.95, k: Int = 10,
                        sampleQueries: Int = 20,
                        depthFactors: Seq[Int] = Seq(2, 4, 8),
-                       seed: Long = 42L): Seq[TuningPoint] = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
+                       seed: Long = 42L): Seq[TuningPoint] = mutationLock.synchronized {
+    if (manifest.count == 0) throw new SearchException("store is empty or not built")
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall out of (0,1]: $targetRecall")
     val (pqModel, codes, pqRot) = loadPq().getOrElse(throw new IndexException(
       "tunePqCandidates requires a fresh buildPqIndex for this snapshot"))
     val depths = depthFactors.filter(_ >= 1).map(f =>
-      math.min(f.toLong * k, snap.count).toInt).distinct.sorted
+      math.min(f.toLong * k, manifest.count).toInt).distinct.sorted
     require(depths.nonEmpty, "no usable rerank depths")
     val sample = tuningSample(sampleQueries, seed)
     val exactIds = exactTopIds(sample, k).collect()
@@ -1200,7 +1206,7 @@ final class DocumentStore private (
         if (truth.isEmpty) 1.0 else rerank.intersect(truth).size.toDouble / truth.size
       }
       val recall = math.rint(recalls.sum / recalls.length * 10000) / 10000.0
-      val frac = math.rint(d / snap.count.toDouble * 10000) / 10000.0
+      val frac = math.rint(d / manifest.count.toDouble * 10000) / 10000.0
       (d, recall, frac)
     }
     val chosenD = points.find(_._2 >= targetRecall).map(_._1)
@@ -1208,75 +1214,37 @@ final class DocumentStore private (
     val curve = points.map { case (d, r, f) =>
       TuningPoint(d, r, f, chosen = d == chosenD)
     }
-    writeCurve("pq", curve)
-    pqTuningCache.put(snap.version, Some(chosenD))
-    writeTuningHistory("pq", targetRecall, k, sampleQueries, seed, depthFactors)
-    curve
+    publishTuning("pq", curve,
+      TuningParams(manifest.version, targetRecall, k, sampleQueries, seed, depthFactors))
   }
 
-  /** The persisted tuning curve for the current snapshot (`"nprobe"` or
-    * `"pq"`), if a tuning pass has written one. */
-  def tuningCurve(kind: String): Option[Seq[TuningPoint]] = {
-    val dir = s"${tuningDir(snap.version)}/$kind"
-    if (!fsFor(dir).exists(hadoopPath(dir))) None
-    else Some(spark.read.parquet(dir).orderBy("setting").collect()
-      .map(r => TuningPoint(r.getAs[Int]("setting"), r.getAs[Double]("recall"),
-        r.getAs[Double]("cost_fraction"), r.getAs[Boolean]("chosen"))).toSeq)
-  }
+  /** The tuning curve of the current snapshot (`"nprobe"` or `"pq"`),
+    * if a tuning pass has published one for it. */
+  def tuningCurve(kind: String): Option[Seq[TuningPoint]] = snap.curves.get(kind)
 
   // ------------------------------------------------------------------
-  // Tuning lifecycle across mutations (round-10): curves live in the
-  // VERSION dir (staleness-by-construction — a mutation orphans them),
-  // but the PARAMS of the last explicit tuning pass live in a
-  // store-level sidecar that survives version pruning. That is what
-  // lets compact() replay the measurement on the fresh layout, and
-  // what lets tuningStale REPORT (instead of silently reverting to
-  // static defaults) on snapshots whose curve a mutation dropped.
+  // Tuning lifecycle across mutations (round-10): a curve belongs to the
+  // version it was measured on (a new version has none), but the PARAMS
+  // of the last tuning pass of each kind travel with every manifest
+  // commit. That is what lets compact() replay the measurement on the
+  // fresh layout, and what lets tuningStale REPORT (instead of silently
+  // reverting to static defaults) on snapshots whose curve a mutation
+  // dropped.
   // ------------------------------------------------------------------
-  private def tuningHistoryDir(kind: String) = s"$path/tuning_last/$kind"
-
-  private case class TuneParams(version: Long, targetRecall: Double, k: Int,
-                                sampleQueries: Int, seed: Long, settings: Seq[Int])
-
-  private def writeTuningHistory(kind: String, targetRecall: Double, k: Int,
-                                 sampleQueries: Int, seed: Long,
-                                 settings: Seq[Int]): Unit = {
-    import spark.implicits._
-    Seq((snap.version, targetRecall, k, sampleQueries, seed, settings))
-      .toDF("version", "target_recall", "k", "sample_queries", "seed", "settings")
-      .coalesce(1).write.mode("overwrite").parquet(tuningHistoryDir(kind))
-  }
-
-  private def readTuningHistory(kind: String): Option[TuneParams] = {
-    val dir = tuningHistoryDir(kind)
-    if (!fsFor(dir).exists(hadoopPath(dir))) None
-    else try {
-      spark.read.parquet(dir).collect().headOption.map(r => TuneParams(
-        r.getAs[Long]("version"), r.getAs[Double]("target_recall"),
-        r.getAs[Int]("k"), r.getAs[Int]("sample_queries"),
-        r.getAs[Long]("seed"), r.getSeq[Int](r.fieldIndex("settings"))))
-    } catch {
-      // mode("overwrite") is delete-then-write, so a crash can leave
-      // the dir present with no readable parquet; tuningStale is
-      // documented as safe to poll after every mutation, and compact()
-      // reads this — a torn sidecar must read as ABSENT (the _complete
-      // discipline), not brick every compact until a manual rm.
-      case _: org.apache.spark.sql.AnalysisException => None
-    }
-  }
 
   /** Forget the recorded last-tuning params for `"nprobe"` or `"pq"`
     * — the opt-out for a store that deliberately abandoned a tuned
     * index (otherwise [[tuningStale]] keeps reporting it). */
-  def clearTuningHistory(kind: String): Unit =
-    deleteDir(spark, tuningHistoryDir(kind))
+  def clearTuningHistory(kind: String): Unit = mutationLock.synchronized {
+    if (manifest.tuned.contains(kind)) publish(manifest.copy(tuned = manifest.tuned - kind))
+  }
 
   /** Reason-coded tuning staleness — the mutation-side complement of
     * the adoption rule: a tuned nprobe/PQ depth applies only to the
     * snapshot it was measured on, so any mutation silently drops
     * searches back to the static defaults. Each entry names a kind
-    * whose LAST tuning pass (recorded params sidecar) predates the
-    * current snapshot and whose current snapshot has no fresh curve:
+    * whose LAST tuning pass (params recorded in the manifest) predates
+    * the current snapshot and whose current snapshot has no curve:
     * `nprobe(tuned_at=v3, current=v5)`. Fixes: [[compact]] re-tunes
     * nprobe automatically from the recorded params; PQ needs
     * [[buildPqIndex]] + [[tunePqCandidates]] (the index itself is
@@ -1284,56 +1252,31 @@ final class DocumentStore private (
     * encode cost to every compact, so it stays explicit);
     * [[clearTuningHistory]] opts out. Empty = nothing stale. Flat
     * (non-IVF) snapshots skip the nprobe entry — no probe pruning to
-    * tune. */
-  def tuningStale: Seq[String] = withSnapshot {
+    * tune. Reads the pinned manifest only. */
+  def tuningStale: Seq[String] = {
+    val m = snap
     Seq("nprobe", "pq").flatMap { kind =>
-      readTuningHistory(kind) match {
-        case Some(h) if h.version < snap.version &&
-            (kind != "nprobe" || snap.nlist > 0) &&
-            !fsFor(s"${tuningDir(snap.version)}/$kind")
-              .exists(hadoopPath(s"${tuningDir(snap.version)}/$kind")) =>
-          Some(s"$kind(tuned_at=v${h.version}, current=v${snap.version})")
-        case _ => None
+      m.tuned.get(kind).collect {
+        case h if h.version < m.version && (kind != "nprobe" || m.nlist > 0) &&
+            !m.curves.contains(kind) =>
+          s"$kind(tuned_at=v${h.version}, current=v${m.version})"
       }
     }
   }
 
-  // (version -> tuned nprobe) memo: one tiny parquet read per snapshot,
-  // not per search; a mutation bumps the version, so staleness is
-  // impossible by construction (same doctrine as the centroid cache).
-  private val tuningCache =
-    scala.collection.concurrent.TrieMap.empty[Long, Option[Int]]
-  private def tunedNprobe(v: Long): Option[Int] =
-    tuningCache.getOrElseUpdate(v, {
-      val dir = s"${tuningDir(v)}/nprobe"
-      if (!fsFor(dir).exists(hadoopPath(dir))) None
-      else spark.read.parquet(dir).where(col("chosen"))
-        .select("setting").collect().headOption.map(_.getInt(0))
-    })
+  /** The setting a tuning pass on this snapshot chose for `kind`. */
+  private def tunedSetting(kind: String): Option[Int] =
+    snap.curves.get(kind).flatMap(_.find(_.chosen)).map(_.setting)
 
   /** The nprobe searches actually use: the measured-recall choice when
     * a tuning pass has run on this snapshot, else the static config. */
-  def effectiveNprobe: Int = tunedNprobe(snap.version).getOrElse(config.nprobe)
-
-  // (version -> tuned PQ rerank depth) memo — the PQ twin of
-  // tunedNprobe, same staleness-by-construction doctrine (a mutation
-  // bumps the version; the new version has no curve until re-tuned).
-  private val pqTuningCache =
-    scala.collection.concurrent.TrieMap.empty[Long, Option[Int]]
-  private def tunedPqDepth(v: Long): Option[Int] =
-    pqTuningCache.getOrElseUpdate(v, {
-      val dir = s"${tuningDir(v)}/pq"
-      if (!fsFor(dir).exists(hadoopPath(dir))) None
-      else spark.read.parquet(dir).where(col("chosen"))
-        .select("setting").collect().headOption.map(_.getInt(0))
-    })
+  def effectiveNprobe: Int = tunedSetting("nprobe").getOrElse(config.nprobe)
 
   /** The PQ rerank depth a no-argument [[similaritySearchPq]] uses:
     * the measured-recall choice when [[tunePqCandidates]] has run on
     * this snapshot, else the static default (100) — the adoption twin
     * of [[effectiveNprobe]], so both tuned knobs apply symmetrically. */
-  def effectivePqCandidates: Int =
-    tunedPqDepth(snap.version).getOrElse(DefaultPqCandidates)
+  def effectivePqCandidates: Int = tunedSetting("pq").getOrElse(DefaultPqCandidates)
 
   // ------------------------------------------------------------------
   // Centroid-staleness gate (round-8): incremental appends assign new
@@ -1392,9 +1335,9 @@ final class DocumentStore private (
     * three (re-fit + re-layout + Bloom rebuild at the current count)
     * and the nprobe half of the fourth (it replays the recorded
     * tuning); a stale PQ curve needs [[buildPqIndex]] +
-    * [[tunePqCandidates]]. Cost: ONE recursive directory listing and
-    * two tiny tuning sidecar reads (drift, layout and Bloom figures
-    * come from the in-memory manifest) — no data scan, safe to poll
+    * [[tunePqCandidates]]. Cost: ONE recursive directory listing;
+    * every other figure (drift, layout baseline, Bloom capacity, tuning
+    * state) comes from the pinned manifest — no data scan, safe to poll
     * after every append. */
   def recommendCompaction(driftThreshold: Double = 1.25,
                           bloomSlack: Double = 2.0): Seq[String] = withSnapshot {
@@ -1418,35 +1361,29 @@ final class DocumentStore private (
     reasons.toSeq
   }
 
-  /** The persisted PQ index for the current version, if present AND
-    * fresh (its meta row records the indexed n_docs). */
-  /** Load the persisted PQ artifact for the pinned snapshot: the
-    * codebook model, the codes table, and — when the index was built
-    * with `rotate = true` — the OPQ rotation, which consumers apply to
-    * the QUERY before any ADC against these (rotated-space) codes. */
+  /** Load the PQ index of the pinned snapshot when the manifest lists
+    * it as live (`pqFor` = the current count): the codebook model, the
+    * codes table, and — when `pqRotated` — the OPQ rotation, which
+    * consumers apply to the QUERY before any ADC against these
+    * (rotated-space) codes. None = absent or stale. */
   private def loadPq(): Option[(PqIndex.Model, DataFrame,
       Option[PqIndex.MatrixRotation])] = {
-    val dir = pqDir(snap.version)
-    val metaDir = s"$dir/meta"
-    if (!fsFor(metaDir).exists(hadoopPath(metaDir))) None
+    val m = snap
+    if (!m.pqFor.contains(m.count)) None
     else {
-      val meta = spark.read.parquet(metaDir).head
-      if (meta.getAs[Long]("n_docs") != snap.count) None
-      else {
-        val books = spark.read.parquet(s"$dir/codebooks")
-          .orderBy("sub", "code").collect()
-          .groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
-          .map(_._2.sortBy(_.getAs[Int]("code"))
-            .map(_.getSeq[Double](2).toIndexedSeq).toIndexedSeq)
-          .toIndexedSeq
-        val rotDir = s"$dir/rotation"
-        val rot =
-          if (!fsFor(rotDir).exists(hadoopPath(rotDir))) None
-          else Some(PqIndex.MatrixRotation(
-            spark.read.parquet(rotDir).orderBy("idx").collect()
-              .map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq))
-        Some((PqIndex.Model(books), spark.read.parquet(s"$dir/codes"), rot))
-      }
+      val dir = pqDir(m.version)
+      val books = spark.read.parquet(s"$dir/codebooks")
+        .orderBy("sub", "code").collect()
+        .groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
+        .map(_._2.sortBy(_.getAs[Int]("code"))
+          .map(_.getSeq[Double](2).toIndexedSeq).toIndexedSeq)
+        .toIndexedSeq
+      val rot =
+        if (!m.pqRotated) None
+        else Some(PqIndex.MatrixRotation(
+          spark.read.parquet(s"$dir/rotation").orderBy("idx").collect()
+            .map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq))
+      Some((PqIndex.Model(books), spark.read.parquet(s"$dir/codes"), rot))
     }
   }
 
@@ -1501,32 +1438,15 @@ final class DocumentStore private (
   }
 
   /** BM25 score set for the query terms: served from the persisted
-    * index when one exists AND covers exactly the current document
-    * count (its `built_for` sidecar records the store count at build
-    * time — incremental appends since the build make it stale and force
-    * the scan path).
+    * index when the pinned manifest lists it as live for the current
+    * document count (`lexicalFor`; incremental appends since the build
+    * change the count and force the scan path), from a scan otherwise.
     * Index-backed and scan-time scores are bit-identical, so callers
     * cannot observe which path ran. */
   private def lexicalScores(queryTerms: Seq[String]): DataFrame = {
-    val dir = lexicalDir(snap.version)
-    // Freshness = the store count recorded at build time (the
-    // `built_for` sidecar) still matches: incremental appends since
-    // the build bump the count and force the scan path. An index
-    // without the sidecar reads as stale.
-    val builtForDir = s"$dir/built_for"
-    // Completeness first: a crash mid-writeIndex leaves new postings
-    // next to stale df/stats (silently wrong scores); the _complete
-    // marker is removed before any data write, so a torn index reads
-    // as absent here and the scan path serves instead. An index written
-    // BEFORE the marker existed is indistinguishable from a torn
-    // rebuild (neither has the marker), so it also reads as absent:
-    // scores stay correct via the scan path, but such stores pay the
-    // full BM25 scan until buildLexicalIndex is re-run once — a
-    // documented perf-only upgrade step, never a wrong answer.
-    val fresh = TextSearch.indexComplete(spark, dir) &&
-      fsFor(builtForDir).exists(hadoopPath(builtForDir)) &&
-      spark.read.parquet(builtForDir).head.getLong(0) == snap.count
-    if (fresh) TextSearch.searchIndexScores(spark, dir, queryTerms)
+    val m = snap
+    if (m.lexicalFor.contains(m.count))
+      TextSearch.searchIndexScores(spark, lexicalDir(m.version), queryTerms)
     else TextSearch.bm25Scores(essential.select(col("id"), col("text")),
       "id", "text", queryTerms)
   }
@@ -1974,14 +1894,11 @@ final class DocumentStore private (
     deleteDir(spark, path)
     manifest = emptyManifest
     commit = -1L
-    // A rebuild at this path restarts versions at 1, so every
-    // version-keyed cache for the old generation must go: the global
-    // centroid cache (keyed (path, version) — a collision would prune
-    // searches with the DEAD corpus's centroids) and this instance's
-    // tuned-nprobe memo.
+    // A rebuild at this path restarts versions at 1, so the global
+    // centroid cache (keyed (path, version)) must forget the old
+    // generation — a collision would prune searches with the DEAD
+    // corpus's centroids.
     DocumentStore.invalidateModelCaches(path)
-    tuningCache.clear()
-    pqTuningCache.clear()
   }
 
   // ------------------------------------------------------------------
@@ -2207,29 +2124,25 @@ object DocumentStore {
       .map { case (n, txt) => n -> parseManifest(txt) }
   }
 
-  private[store] def renderManifest(m: StoreManifest): String =
-    s"""{"version":${m.version},"dim":${m.dim},"metric":"${m.metric}","count":${m.count},""" +
-      s""""nlist":${m.nlist},"chunk_size":${m.chunkSize},"chunk_overlap":${m.chunkOverlap},""" +
-      s""""auto_nlist":${m.autoNlist},"bloom_expected":${m.bloomExpected},""" +
-      s""""bloom_fpp":${m.bloomFpp},"layout_files":${m.layoutFiles},""" +
-      s""""ivf_baseline_mean":${m.ivfBaselineMean},"ivf_appended_n":${m.ivfAppendedN},""" +
-      s""""ivf_appended_sum":${m.ivfAppendedSum}}"""
+  // The manifest is the case class rendered field for field under
+  // snake_case keys; an absent Option renders as null, so a well-formed
+  // manifest names every field.
+  private implicit val manifestFormats: org.json4s.Formats = org.json4s.DefaultFormats
+    .withEmptyValueStrategy(org.json4s.prefs.EmptyValueStrategy.preserve)
+  private val ManifestFields = StoreManifest(0L, 0, "", 0L, 0).productElementNames.toSeq
 
+  private[store] def renderManifest(m: StoreManifest): String =
+    JsonMethods.compact(JsonMethods.render(Extraction.decompose(m).snakizeKeys))
+
+  /** Parse a manifest commit; malformed content or a missing field
+    * raises a [[StorageException]] naming the content. */
   private[store] def parseManifest(s: String): StoreManifest = {
-    def field(k: String): String =
-      s""""$k"\\s*:\\s*"?([^",}]*)""".r.findFirstMatchIn(s).map(_.group(1).trim)
-        .getOrElse(throw new StorageException(s"manifest missing $k: $s"))
-    StoreManifest(field("version").toLong, field("dim").toInt, field("metric"),
-      field("count").toLong, field("nlist").toInt,
-      chunkSize = field("chunk_size").toInt,
-      chunkOverlap = field("chunk_overlap").toInt,
-      autoNlist = field("auto_nlist").toBoolean,
-      bloomExpected = field("bloom_expected").toLong,
-      bloomFpp = field("bloom_fpp").toDouble,
-      layoutFiles = field("layout_files").toLong,
-      ivfBaselineMean = field("ivf_baseline_mean").toDouble,
-      ivfAppendedN = field("ivf_appended_n").toLong,
-      ivfAppendedSum = field("ivf_appended_sum").toDouble)
+    def fail(why: String) = new StorageException(s"manifest $why: $s")
+    val json = try JsonMethods.parse(s).camelizeKeys
+      catch { case NonFatal(e) => throw fail(s"malformed (${e.getMessage})") }
+    ManifestFields.find(k => (json \ k) == JNothing).foreach(k => throw fail(s"missing $k"))
+    try json.extract[StoreManifest]
+    catch { case e: MappingException => throw fail(s"malformed (${e.getMessage})") }
   }
 
   private[store] def deleteDir(spark: SparkSession, dir: String): Unit = {

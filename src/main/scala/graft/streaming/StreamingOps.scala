@@ -350,23 +350,35 @@ object StreamingOps {
                           numHashes: Int = 16, bands: Int = 4,
                           compactEvery: Int = 0):
       org.apache.spark.sql.streaming.StreamingQuery =
+    gateStream(stream, indexPath, survivorsPath, checkpointDir, compactEvery) {
+      (batch, batchId) => nearDupScreenBatch(batch, indexPath, batchId, idCol,
+        textCol, tsCol, n, numHashes, bands)
+    }
+
+  /** The micro-batch loop every ingest gate shares: screen the batch,
+    * overwrite its own `batch=<id>` survivors partition (replays
+    * rewrite the same dir instead of duplicating rows — idempotent under
+    * foreachBatch's at-least-once delivery), then [[maybeCompact]] the
+    * index, whose row schema is `indexSchema`. */
+  private def gateStream(stream: DataFrame, indexPath: String,
+                         survivorsPath: String, checkpointDir: String,
+                         compactEvery: Int,
+                         indexSchema: org.apache.spark.sql.types.StructType =
+                           bandOnlySchema)(
+      screen: (DataFrame, Long) => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val kept = nearDupScreenBatch(batch, indexPath, batchId, idCol,
-            textCol, tsCol, n, numHashes, bands)
-          // Overwrite the batch's own partition: replays rewrite the
-          // same dir instead of duplicating rows (idempotent under
-          // foreachBatch's at-least-once delivery).
-          kept.write.mode("overwrite").parquet(s"$survivorsPath/batch=$batchId")
-          maybeCompact(batch.sparkSession, indexPath, batchId, compactEvery)
+          screen(batch, batchId).write.mode("overwrite")
+            .parquet(s"$survivorsPath/batch=$batchId")
+          maybeCompact(batch.sparkSession, indexPath, batchId, compactEvery, indexSchema)
         }
       }
       .start()
 
-  /** The in-stream compaction trigger shared by the three ingest
+  /** The in-stream compaction trigger shared by the four ingest
     * gates: fires on every `compactEvery`-th batch id, marks at
     * batchId−1 (see [[nearDupIngestStream]] for why that is always
     * committed), and skips silently when a previous trigger already
@@ -374,8 +386,7 @@ object StreamingOps {
     * whatever ids actually run). */
   private def maybeCompact(spark: SparkSession, indexPath: String,
                            batchId: Long, compactEvery: Int,
-                           dataSchema: org.apache.spark.sql.types.StructType =
-                             bandOnlySchema): Unit =
+                           dataSchema: org.apache.spark.sql.types.StructType): Unit =
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       val fs = fsFor(spark, indexPath)
       val st = compactState(fs, indexPath)
@@ -439,18 +450,10 @@ object StreamingOps {
                                tsCol: String = "ts", bands: Int = 4,
                                compactEvery: Int = 0):
       org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val kept = imageNearDupScreenBatch(batch, indexPath, batchId,
-            idCol, bytesCol, tsCol, bands)
-          kept.write.mode("overwrite").parquet(s"$survivorsPath/batch=$batchId")
-          maybeCompact(batch.sparkSession, indexPath, batchId, compactEvery)
-        }
-      }
-      .start()
+    gateStream(stream, indexPath, survivorsPath, checkpointDir, compactEvery) {
+      (batch, batchId) => imageNearDupScreenBatch(batch, indexPath, batchId,
+        idCol, bytesCol, tsCol, bands)
+    }
 
   /** One micro-batch of the perceptual gate (batch-mode incremental
     * screening works with a caller-managed monotone batchId, like
@@ -500,18 +503,10 @@ object StreamingOps {
                                tsCol: String = "ts", bands: Int = 4,
                                compactEvery: Int = 0):
       org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val kept = audioNearDupScreenBatch(batch, indexPath, batchId,
-            idCol, bytesCol, tsCol, bands)
-          kept.write.mode("overwrite").parquet(s"$survivorsPath/batch=$batchId")
-          maybeCompact(batch.sparkSession, indexPath, batchId, compactEvery)
-        }
-      }
-      .start()
+    gateStream(stream, indexPath, survivorsPath, checkpointDir, compactEvery) {
+      (batch, batchId) => audioNearDupScreenBatch(batch, indexPath, batchId,
+        idCol, bytesCol, tsCol, bands)
+    }
 
   /** One micro-batch of the audio gate (batch-mode incremental
     * screening works with a caller-managed monotone batchId, like the
@@ -570,19 +565,11 @@ object StreamingOps {
                              tsCol: String = "ts", roundScale: Int = 4,
                              compactEvery: Int = 0):
       org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val kept = semNearDupScreenBatch(batch, indexPath, batchId,
-            idCol, vecCol, tsCol, model, threshold, roundScale)
-          kept.write.mode("overwrite").parquet(s"$survivorsPath/batch=$batchId")
-          maybeCompact(batch.sparkSession, indexPath, batchId, compactEvery,
-            semIndexSchema)
-        }
-      }
-      .start()
+    gateStream(stream, indexPath, survivorsPath, checkpointDir, compactEvery,
+        semIndexSchema) {
+      (batch, batchId) => semNearDupScreenBatch(batch, indexPath, batchId,
+        idCol, vecCol, tsCol, model, threshold, roundScale)
+    }
 
   /** One micro-batch of the semantic gate (batch-mode incremental
     * screening works with a caller-managed monotone batchId, like the

@@ -125,8 +125,9 @@ final case class StoreConfig(
 
 /** Persisted store manifest (replaces index.faiss + metadata.json
   * sidecar, reference index.py:609-635): current snapshot version plus
-  * the config needed to interpret the parquet data, and the scalar
-  * per-version bookkeeping mutations update in the same commit. */
+  * the config needed to interpret the parquet data, the scalar
+  * per-version bookkeeping mutations update in the same commit, and the
+  * one record of which derived indexes and tuning curves are live. */
 final case class StoreManifest(
     version: Long,
     dim: Int,
@@ -161,4 +162,29 @@ final case class StoreManifest(
     // appended against the frozen centroids since.
     ivfBaselineMean: Double = 0.0,
     ivfAppendedN: Long = 0L,
-    ivfAppendedSum: Double = 0.0)
+    ivfAppendedSum: Double = 0.0,
+    // Derived indexes of this version, each live only while its entry
+    // is present: the store count the lexical (BM25) index and the PQ
+    // index were built at (a count that no longer matches = stale), and
+    // whether the PQ index carries an OPQ rotation. A new version has
+    // none of them.
+    lexicalFor: Option[Long] = None,
+    pqFor: Option[Long] = None,
+    pqRotated: Boolean = false,
+    // This version's measured tuning curves by kind ("nprobe", "pq");
+    // a new version has none until re-tuned.
+    curves: Map[String, Seq[TuningPoint]] = Map.empty,
+    // The params of the last tuning pass of each kind, carried across
+    // versions: compact() replays them, tuningStale reports them.
+    tuned: Map[String, TuningParams] = Map.empty)
+
+/** The params of one tuning pass ([[graft.store.DocumentStore.tuneNprobe]]
+  * / `tunePqCandidates`), recorded in the manifest with the version it
+  * ran on; `settings` are the nprobe candidates or PQ depth factors. */
+final case class TuningParams(
+    version: Long,
+    targetRecall: Double,
+    k: Int,
+    sampleQueries: Int,
+    seed: Long,
+    settings: Seq[Int])

@@ -12,6 +12,12 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Block until every listener event posted so far has been delivered
+    * (the bus is `private[spark]`), so listener-side counters are
+    * complete when a timed action returns. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Column -> ANALYZABLE Catalyst tree. [[expression]] wraps the
     * column's node in an opaque `ColumnNodeExpression` — fine when the
     * classic Dataset API converts it later, but a FunctionRegistry

@@ -31,10 +31,12 @@ class CommitsSpec extends SparkSpec {
 
   private val emb = HashEmbedder(dim = 16)
   private def tmpDir(prefix: String) = Files.createTempDirectory(prefix).toString
-  private def failingPath(prefix: String): String = {
+  private def failingPath(prefix: String): String = failing(tmpDir(prefix))
+  /** The local path `dir` seen through the failing-rename filesystem. */
+  private def failing(dir: String): String = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.failrename.impl", classOf[FailingRenameFs].getName)
-    s"failrename://${tmpDir(prefix)}"
+    s"failrename://$dir"
   }
 
   test("the highest published commit wins; temp files stay invisible; prune keeps the cutoff") {
@@ -59,6 +61,43 @@ class CommitsSpec extends SparkSpec {
     assert(e.getMessage.contains("_commits/.manifest_0.tmp") &&
       e.getMessage.contains("_commits/manifest_0"), e.getMessage)
     assert(DocumentStore.readManifest(spark, path).isEmpty)
+  }
+
+  test("the manifest round-trips every field; malformed or incomplete content raises") {
+    val m = graft.StoreManifest(3L, 16, "cosine", 42L, 4, lexicalFor = Some(42L),
+      pqFor = Some(40L), pqRotated = true,
+      curves = Map("nprobe" -> Seq(graft.TuningPoint(1, 0.5, 0.25, chosen = true))),
+      tuned = Map("pq" -> graft.TuningParams(2L, 0.9, 5, 6, 42L, Seq(2, 4))))
+    assert(DocumentStore.parseManifest(DocumentStore.renderManifest(m)) == m)
+    val missing = DocumentStore.renderManifest(m).replace(""""pq_rotated":true,""", "")
+    Seq("""{"ver""", missing).foreach { bad =>
+      val e = intercept[StorageException](DocumentStore.parseManifest(bad))
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
+  }
+
+  test("a derived-index build whose manifest publish fails leaves no entry") {
+    val dir = s"${tmpDir("graft-failrename-index")}/store"
+    val docs = (0 until 40).map(i => s"derived index doc $i about topic ${i % 4}")
+    DocumentStore.fromTexts(spark, dir, docs, Nil, StoreConfig(), emb)
+    val store = DocumentStore.load(spark, failing(dir), emb)
+    def reopened() = DocumentStore.load(spark, dir, emb)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+    def raisesNamingCommit(build: => Unit): Unit = {
+      val e = intercept[StorageException](build)
+      assert(e.getMessage.contains("_commits/.manifest_") &&
+        e.getMessage.contains("_commits/manifest_"), e.getMessage)
+    }
+    val terms = Seq("topic", "doc")
+    val scanHits = rows(reopened().searchLexical(terms, k = 5))
+    raisesNamingCommit(store.buildLexicalIndex())
+    assert(DocumentStore.readManifest(spark, dir).exists(_.lexicalFor.isEmpty))
+    assert(rows(reopened().searchLexical(terms, k = 5)) == scanHits)
+    raisesNamingCommit(store.buildPqIndex(m = 8, ksub = 4))
+    assert(DocumentStore.readManifest(spark, dir).exists(_.pqFor.isEmpty))
+    val fresh = reopened()
+    assert(rows(fresh.similaritySearchPq("topic 2 doc", k = 3, candidates = 3)) ==
+      rows(fresh.similaritySearch("topic 2 doc", k = 3)))
   }
 
   test("a CDC pointer publish whose rename fails raises, and readers see no table") {

@@ -923,21 +923,26 @@ class DocumentStoreSpec extends SparkSpec {
     assert(viaHam.length == 2 && viaHam.forall(_.getAs[String]("text") != null))
   }
 
-  test("a torn tuning_last sidecar reads as ABSENT: staleness polls and compact() survive") {
+  test("a torn tuning commit reads as the last published manifest") {
     val many = (0 until 200).map(i => s"torn doc $i about theme ${i % 8}")
-    val store = DocumentStore.fromTexts(spark, tmp(), many, Nil,
+    val dir = tmp()
+    val store = DocumentStore.fromTexts(spark, dir, many, Nil,
       StoreConfig(nlist = 4, nprobe = 1), emb)
     store.tuneNprobe(targetRecall = 0.99, k = 5, sampleQueries = 8)
-    // Simulate the overwrite crash window: dir present, parquet gone.
-    val dir = new java.io.File(s"${store.path}/tuning_last/nprobe")
-    assert(dir.isDirectory)
-    dir.listFiles().foreach(f => assert(f.delete(), s"couldn't clear $f"))
-    // Pre-fix these threw AnalysisException ('unable to infer schema')
-    // and bricked every poll/compact until a manual rm.
-    assert(store.tuningStale.isEmpty)
-    assert(!store.recommendCompaction().exists(_.startsWith("tuning-stale")))
-    store.compact() // must not throw; no recorded params -> no replay
-    assert(store.documentCount == many.length)
+    // Simulate a crash between creating the next manifest commit's temp
+    // file and its rename: readers stay on the tuned commit.
+    val commits = new java.io.File(dir, "_commits")
+    val next = commits.list().flatMap(_.stripPrefix("manifest_").toLongOption).max + 1
+    java.nio.file.Files.writeString(
+      commits.toPath.resolve(s".manifest_$next.tmp"), """{"ver""")
+    val reloaded = DocumentStore.load(spark, dir, emb)
+    assert(reloaded.currentManifest == store.currentManifest)
+    assert(reloaded.tuningStale.isEmpty)
+    assert(!reloaded.recommendCompaction().exists(_.startsWith("tuning-stale")))
+    reloaded.compact() // must not throw; replays the published params
+    assert(reloaded.documentCount == many.length)
+    assert(reloaded.tuningCurve("nprobe").exists(_.count(_.chosen) == 1))
+    assert(reloaded.tuningStale.isEmpty)
   }
 
   test("tuning lifecycle: mutations REPORT staleness; compact() replays the recorded tuneNprobe; PQ stays reported until cleared") {
@@ -970,6 +975,35 @@ class DocumentStoreSpec extends SparkSpec {
     assert(after.exists(_.startsWith("pq(")), after.mkString(";"))
     store.clearTuningHistory("pq")
     assert(store.tuningStale.isEmpty)
+  }
+
+  test("tuned and indexed state survives load; a delete then reports both kinds stale") {
+    val many = (0 until 200).map(i => s"reload doc $i about theme ${i % 8}")
+    val dir = tmp()
+    val store = DocumentStore.fromTexts(spark, dir, many, Nil,
+      StoreConfig(nlist = 4, nprobe = 1), emb)
+    store.tuneNprobe(targetRecall = 0.99, k = 5, sampleQueries = 8)
+    store.buildPqIndex(m = 8, ksub = 4)
+    store.tunePqCandidates(targetRecall = 0.9, k = 5, sampleQueries = 6)
+    store.buildLexicalIndex()
+    val loaded = DocumentStore.load(spark, dir, emb)
+    assert(loaded.currentManifest == store.currentManifest)
+    assert(loaded.effectiveNprobe == store.effectiveNprobe)
+    assert(loaded.effectivePqCandidates == store.effectivePqCandidates)
+    Seq("nprobe", "pq").foreach { kind =>
+      assert(loaded.tuningCurve(kind).isDefined)
+      assert(loaded.tuningCurve(kind) == store.tuningCurve(kind))
+    }
+    assert(loaded.tuningStale.isEmpty)
+    // The manifest is the only record: no per-index sidecar on disk.
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).toArray
+      .map(_.toString.stripPrefix(dir))
+    assert(!files.exists(f => f.contains("/tuning") || f.contains("built_for") ||
+      f.contains("/pq/meta")), files.mkString("\n"))
+    loaded.deleteByIds(Seq(0L))
+    val stale = loaded.tuningStale
+    assert(stale.exists(_.startsWith("nprobe(")) && stale.exists(_.startsWith("pq(")),
+      stale.mkString(";"))
   }
 
   test("tuneTargetRecall in config: IVF build and buildPqIndex write their curves unprompted") {
