@@ -739,8 +739,7 @@ object SparkEntry {
     // downstream ranking decision engine-independent on top of that.
     val (model, vals) = pinCentroids(IvfIndex.fitCached(
       s"$dir/embeddings", emb, "embedding",
-      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25,
-      fitPartitions = 2))
+      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25))
     ivfSearchCentroidValues = Some(vals)
     val assigned = emb.withColumn("cluster",
       model.assignCol(col("embedding"), roundScale = 4))
@@ -770,8 +769,7 @@ object SparkEntry {
     val emb = table(s, dir, "embeddings")
     val (model, vals) = pinCentroids(IvfIndex.fitCached(
       s"$dir/embeddings", emb, "embedding",
-      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25,
-      fitPartitions = 2))
+      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25))
     semdedupCentroidValues = Some(vals)
     SemDedup.flag(emb, "vec_id", "embedding", model, threshold = 0.4,
       roundScale = 4)
@@ -789,8 +787,7 @@ object SparkEntry {
     val emb = table(s, dir, "embeddings")
     val (model, vals) = pinCentroids(IvfIndex.fitCached(
       s"$dir/embeddings", emb, "embedding",
-      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25,
-      fitPartitions = 2))
+      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25))
     semdedup2CentroidValues = Some(vals)
     SemDedup.flag(emb, "vec_id", "embedding", model, threshold = 0.4,
       roundScale = 4, nProbes = 2)
@@ -821,8 +818,7 @@ object SparkEntry {
     // the cached model depend on which query ran first.
     val (model, vals) = pinCentroids(IvfIndex.fitCached(
       s"$dir/embeddings|nonnull", emb, "embedding",
-      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25,
-      fitPartitions = 2))
+      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25))
     tuningCurveCentroidValues = Some(vals)
     val assigned = emb.withColumn("cluster",
       model.assignCol(col("embedding"), roundScale = 4))
@@ -2127,8 +2123,7 @@ object SparkEntry {
     val emb = table(s, dir, "embeddings")
     val (model, vals) = pinCentroids(IvfIndex.fitCached(
       s"$dir/embeddings", emb, "embedding",
-      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25,
-      fitPartitions = 2))
+      nlist = 8, maxIter = 2, initMode = "random", fitFraction = 0.25))
     semGateCentroidValues = Some(vals)
     val staged = emb.select(col("vec_id"), col("embedding"))
       .withColumn("ts", col("vec_id")) // monotone arrival order

@@ -123,7 +123,7 @@ object GateProbe {
             graft.index.IvfIndex.fitCached(
               s"$sfDir/embeddings", emb, "embedding",
               nlist = 8, maxIter = 2, initMode = "random",
-              fitFraction = 0.25, fitPartitions = 2)
+              fitFraction = 0.25)
           }
           val staged = emb.select(col("vec_id"), col("embedding"))
             .withColumn("ts", col("vec_id"))

@@ -267,8 +267,7 @@ object ScaleBench {
     "semdedup_auto" -> ((s: SparkSession, dir: String) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val model = graft.index.IvfIndex.fit(emb, "embedding", nlist = 0,
-        maxIter = 2, initMode = "random", fitFraction = 0.25,
-        fitPartitions = 8)
+        maxIter = 2, initMode = "random", fitFraction = 0.25)
       graft.ops.SemDedup.flag(emb, "vec_id", "embedding", model,
           threshold = 0.4)
         .agg(count(lit(1)).as("rows"), sum("is_dup").as("dups"))

@@ -32,3 +32,7 @@ final class IndexException(message: String) extends GraftException(message)
 
 /** Storage-layer failure: missing/corrupt manifest or snapshot. */
 final class StorageException(message: String) extends GraftException(message)
+
+/** A mutation through a store instance that another writer has
+  * published past: raised before anything is written. */
+final class ConcurrentWriteException(message: String) extends GraftException(message)

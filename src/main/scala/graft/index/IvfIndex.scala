@@ -1,7 +1,5 @@
 package graft.index
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
@@ -11,10 +9,12 @@ import graft.functions.VectorFunctions._
   * src/langchain_memvid/index.py:239-291 conversion/training; activation
   * gate index.py:152-166; nprobe pruning implicit in faiss).
   *
-  * Spark mapping (SURVEY §4): k-means coarse quantization = MLlib
-  * KMeans; the inverted lists = a `cluster` partition column on the
-  * essential store (`write.partitionBy("cluster")`); nprobe = a
-  * driver-side "N nearest centroids" computation (centroids are tiny)
+  * Spark mapping (SURVEY §4): k-means coarse quantization = a
+  * driver-side [[LocalKMeans]] fit on a collected sample of at most
+  * 256 points per list (FAISS's cap); the inverted lists = a
+  * `cluster` partition column on the essential store
+  * (`write.partitionBy("cluster")`); nprobe = a driver-side "N
+  * nearest centroids" computation (centroids are tiny)
   * feeding a `WHERE cluster IN (...)` filter that Catalyst turns into
   * partition pruning — only ~nprobe/nlist of the data is read at all.
   */
@@ -147,29 +147,37 @@ object IvfIndex {
     }
   }
 
-  /** Train a coarse quantizer with MLlib KMeans (seeded — deterministic
-    * for fixed data/partitioning, like the reference's faiss kmeans on a
-    * fixed corpus, index.py:274).
+  /** FAISS's `max_points_per_centroid`: a fit trains on at most this
+    * many points per list, however large the corpus. */
+  val MaxPointsPerCentroid: Int = 256
+
+  /** Driver memory bound of a fit's training sample: at most this many
+    * bytes of vectors (8 per element) are collected. It binds once
+    * 256·k·dim·8 exceeds it — k ≥ 342 at dim 384, a corpus of about
+    * 3.5M rows under the auto nlist — and the fit then trains on fewer
+    * points per list (64 at k = 1 366, dim 384). */
+  val MaxSampleBytes: Long = 256L << 20
+
+  /** Train a coarse quantizer on the driver: one seeded sample of at
+    * most [[MaxPointsPerCentroid]]·k non-null vectors (and at most
+    * [[MaxSampleBytes]]) is collected in one Spark job and
+    * [[LocalKMeans]] fits it — the reference's in-process faiss
+    * training on a capped sample (index.py:239-291, 274).
+    * Deterministic for fixed data/partitioning and seed.
     *
-    * Coarse quantizers don't need polished centroids — recall comes from
-    * nprobe — so the production knobs are: `initMode = "random"` (skips
-    * the ~5 extra k-means|| init passes), low `maxIter`, and
-    * `fitFraction` < 1 to train on a seeded sample (at 100 TB you never
-    * fit k-means on the full corpus; FAISS trains on a sample too). The
-    * training set is coalesced into a few partitions: per-iteration task
-    * overhead dominates on a sample, and the sample is small by
-    * construction.
+    * Coarse quantizers don't need polished centroids — recall comes
+    * from nprobe — so `initMode = "random"` and a low `maxIter` are the
+    * cheap settings, and `fitFraction` < 1 trains on a seeded sample of
+    * the corpus (the caps apply on top of it).
     *
-    * The sample is persisted and FORCED (count) before `km.fit`: KMeans
-    * runs several jobs (init passes + one per iteration), and an uncached
-    * lineage of scan → exchange → sample → coalesce would re-execute per
-    * job — a long dependency chain that amplifies any contention window.
-    * With the persist forced up front, every fit job reads a
-    * sample-sized cached table; non-NONE storage also tells MLlib to
-    * skip its own (lazy) internal persist. */
+    * `rowCount` and `dim` are the row count of `df` and the length of
+    * its vectors when the caller already has them (a store write counts
+    * its rows anyway and knows its dim): the fit is then the one
+    * collect job. Otherwise a count and a one-row read come first. They
+    * size the caps and, for the auto nlist, the corpus estimate. */
   def fit(df: DataFrame, vecCol: String, nlist: Int, seed: Long = 42L,
           maxIter: Int = 20, initMode: String = "k-means||",
-          fitFraction: Double = 1.0, fitPartitions: Int = 0): Model = {
+          fitFraction: Double = 1.0, rowCount: Long = -1L, dim: Int = -1): Model = {
     // Sentinel unification (r16 ADVICE): StoreConfig documents -1 as
     // AUTO while fit's native auto sentinel is 0 — a caller passing the
     // documented -1 straight in must not hit a runtime error, so both
@@ -179,25 +187,26 @@ object IvfIndex {
     // answered by being made at all.)
     require(nlist >= -1,
       s"nlist $nlist must be > 0, or 0/-1 for auto (√n rule)")
-    val prepared = trainingSample(df, vecCol, fitFraction, fitPartitions,
-      seed, "IvfIndex.fit")
-    try {
-      // AUTO-NLIST (r15 verdict #1): nlist = 0 derives the cluster
-      // count from the data via [[autoNlist]] instead of trusting a
-      // caller's fixed config — the one way callers fell off the scale
-      // posture (a pinned nlist=8 while the corpus grew ×100 measured
-      // 544.8 s vs ~8.5 s with the √n value; BENCH_NOTES r15). The
-      // count job is free here: trainingSample just forced the persist,
-      // so this reads cached partition counts.
-      val k = if (nlist > 0) nlist else autoNlist(prepared.count(), fitFraction)
-      // (nlist -1 and 0 both reach autoNlist above — one path, one fit.)
-      val features = prepared.select(array_to_vector(col("__v")).as("features"))
-      val km = new KMeans()
-        .setK(k).setSeed(seed).setMaxIter(maxIter).setInitMode(initMode)
-        .setFeaturesCol("features")
-      val model = km.fit(features)
-      Model(model.clusterCenters.toIndexedSeq.map(_.toArray.toIndexedSeq))
-    } finally { prepared.unpersist(); () }
+    val (points, k) = trainingSet(df, vecCol, nlist, seed, fitFraction, rowCount, dim)
+    Model(LocalKMeans.train(points, k, seed, maxIter, initMode)
+      .map(_.toIndexedSeq).toIndexedSeq)
+  }
+
+  /** The fit's training points and cluster count k. AUTO-NLIST (r15
+    * verdict #1): nlist 0 (or -1) derives k via [[autoNlist]] instead
+    * of trusting a caller's fixed config — a pinned nlist=8 while the
+    * corpus grew ×100 measured 544.8 s vs ~8.5 s with the √n value
+    * (BENCH_NOTES r15). When the sample fits under the cap, k comes
+    * from the exact sample size; a capped sample uses the count. */
+  private[index] def trainingSet(df: DataFrame, vecCol: String, nlist: Int,
+      seed: Long, fitFraction: Double, rowCount: Long,
+      dim: Int): (Array[Array[Double]], Int) = {
+    val (n, d) = shape(df, vecCol, rowCount, dim)
+    val kEst = if (nlist > 0) nlist else autoNlist(n)
+    val (points, capped) = cappedSample(df, vecCol, n, d, fitFraction,
+      MaxPointsPerCentroid.toLong * kEst, seed, "IvfIndex.fit")
+    val k = if (nlist > 0) nlist else if (capped) kEst else autoNlist(points.length, fitFraction)
+    (capSample(points, MaxPointsPerCentroid * k, seed), k)
   }
 
   /** The scale-safe cluster count for a corpus of (estimated) size n:
@@ -213,7 +222,7 @@ object IvfIndex {
     * `sampleCount` is the TRAINING-SAMPLE size; `fitFraction` scales it
     * back to the corpus estimate (the rule sizes clusters for the data
     * the model will assign, not the subsample it trained on). The
-    * result is clamped to sampleCount — KMeans cannot fit more
+    * result is clamped to sampleCount — k-means cannot fit more
     * clusters than it has points. */
   def autoNlist(sampleCount: Long, fitFraction: Double = 1.0): Int = {
     val est = math.ceil(sampleCount / math.min(math.max(fitFraction, 1e-9), 1.0)).toLong
@@ -221,35 +230,58 @@ object IvfIndex {
     math.min(k, math.max(sampleCount, 1L)).toInt
   }
 
-  /** The ONE fit-sample scaffolding shared by [[fit]] and
-    * [[PqIndex.fit]]: seeded sample → NULL-vector drop (nulls carry no
-    * training signal and NPE inside MLlib's feature conversion) →
-    * optional coalesce (per-iteration task overhead dominates on a
-    * sample) → persisted and FORCED (KMeans runs several jobs; an
-    * unforced lineage re-executes scan→sample per job) → loud
-    * empty-sample guard instead of an opaque KMeans failure. Returns
-    * the CACHED frame with the raw double vectors as `__v`; the caller
-    * owns the unpersist. */
-  private[index] def trainingSample(df: DataFrame, vecCol: String,
-      fitFraction: Double, fitPartitions: Int, seed: Long,
-      who: String): DataFrame = {
-    val base =
-      if (fitFraction < 1.0) df.sample(withReplacement = false, fitFraction, seed) else df
-    val sampled = base
-      .select(graft.functions.VectorFunctions.asDouble(col(vecCol)).as("__v"))
-      .where(col("__v").isNotNull)
-    val prepared = if (fitPartitions > 0) sampled.coalesce(fitPartitions) else sampled
-    prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = try prepared.count() catch {
-      case e: Throwable => prepared.unpersist(); throw e
-    }
-    if (n == 0L) {
-      prepared.unpersist()
-      throw new IllegalArgumentException(
-        s"$who: empty (or all-null) training sample — raise fitFraction or check the vector column")
-    }
-    prepared
+  /** The row count of `df` and the length of its vectors: the given
+    * values, else a count job and a job that reads the first vector
+    * (the vector column may be computed, e.g. rotated: only that row
+    * evaluates it). */
+  private[index] def shape(df: DataFrame, vecCol: String, rowCount: Long,
+                           dim: Int): (Long, Int) = {
+    val n = if (rowCount >= 0L) rowCount else df.count()
+    val d = if (dim > 0) dim else df.select(size(col(vecCol)).as("__d"))
+      .where(col("__d") > 0).limit(1).collect().headOption.fold(0)(_.getInt(0))
+    (n, d)
   }
+
+  /** The training sample shared by [[fit]] and [[PqIndex.fit]]: a
+    * seeded sample of at most `maxPoints` non-null vectors of `df` (`n`
+    * rows of `dim` elements), and at most [[MaxSampleBytes]], collected
+    * in ONE job. Returns it with whether a cap sized the sample (else
+    * it is the plain `fitFraction` sample). */
+  private[index] def cappedSample(df: DataFrame, vecCol: String, n: Long, dim: Int,
+      fitFraction: Double, maxPoints: Long, seed: Long,
+      who: String): (Array[Array[Double]], Boolean) = {
+    val cap = math.max(1L,
+      math.min(maxPoints, MaxSampleBytes / (8L * math.max(dim, 1)))).toInt
+    val capped = n * fitFraction > cap
+    val fraction = if (capped) cap.toDouble / n else fitFraction
+    val points = sampleFrame(df, vecCol, fraction, seed)
+      .collect().map(_.getSeq[Double](0).toArray)
+    if (points.isEmpty) throw emptySample(who)
+    (capSample(points, cap, seed), capped)
+  }
+
+  /** Seeded sample (when `fraction` < 1) → NULL-vector drop (nulls
+    * carry no training signal), the raw double vectors as `__v`. */
+  private[index] def sampleFrame(df: DataFrame, vecCol: String, fraction: Double,
+                                 seed: Long): DataFrame = {
+    val base =
+      if (fraction < 1.0) df.sample(withReplacement = false, fraction, seed) else df
+    base.select(asDouble(col(vecCol)).as("__v")).where(col("__v").isNotNull)
+  }
+
+  /** The loud guard for a fit with nothing to train on, instead of an
+    * opaque k-means failure. */
+  private[index] def emptySample(who: String): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$who: empty (or all-null) training sample — raise fitFraction or check the vector column")
+
+  /** At most `max` of `points`: a seeded subset, kept in sample order
+    * (a Bernoulli sample can overshoot its expected size). */
+  private def capSample(points: Array[Array[Double]], max: Int,
+                        seed: Long): Array[Array[Double]] =
+    if (points.length <= max) points
+    else new scala.util.Random(seed).shuffle(points.indices.toVector)
+      .take(max).sorted.map(points(_)).toArray
 
   // (logical key, data version) -> model. Versioned so mutable stores
   // get correctness by construction: a mutation bumps the version, the
@@ -295,14 +327,13 @@ object IvfIndex {
   def fitCached(key: String, df: => DataFrame, vecCol: String, nlist: Int,
                 seed: Long = 42L, maxIter: Int = 20,
                 initMode: String = "k-means||", fitFraction: Double = 1.0,
-                fitPartitions: Int = 0, version: Long = 0L): Model = {
+                version: Long = 0L): Model = {
     // Normalize the auto sentinel BEFORE keying: -1 and 0 are the same
     // fit (see [[fit]]), so they must share one cache entry — two keys
     // would double-fit and double-cache identical models.
     val nl = if (nlist == -1) 0 else nlist
-    modelCached(s"$key|$vecCol|$nl|$seed|$maxIter|$initMode|$fitFraction|$fitPartitions",
-      version)(
-      fit(df, vecCol, nl, seed, maxIter, initMode, fitFraction, fitPartitions))
+    modelCached(s"$key|$vecCol|$nl|$seed|$maxIter|$initMode|$fitFraction", version)(
+      fit(df, vecCol, nl, seed, maxIter, initMode, fitFraction))
   }
 
   /** Drop every cached model whose logical key starts with `keyPrefix`

@@ -1,7 +1,5 @@
 package graft.index
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
@@ -126,31 +124,24 @@ object PqIndex {
     }
   }
 
-  /** Train: `m` independent MLlib KMeans fits, one per subspace slice.
-    * Same sampling/seeding posture as [[IvfIndex.fit]] — PQ codebooks
-    * are trained on a sample at scale (FAISS does the same). */
+  /** Train: `m` independent [[LocalKMeans]] fits, one per subspace
+    * slice (seeded `seed + sub`), all on ONE collected sample of at
+    * most [[IvfIndex.MaxPointsPerCentroid]]·ksub vectors — the same
+    * sampling posture as [[IvfIndex.fit]] (FAISS trains PQ codebooks on
+    * a capped sample too). Three Spark jobs: a count and a one-row read
+    * that size the cap, then the collect. */
   def fit(df: DataFrame, vecCol: String, m: Int, ksub: Int, seed: Long = 42L,
-          maxIter: Int = 20, fitFraction: Double = 1.0,
-          fitPartitions: Int = 0): Model = {
-    // Shared scaffolding (null-drop, coalesce, persist+force, empty
-    // guard) lives in IvfIndex.trainingSample — the two fit paths had
-    // drifted (the IVF side was missing the null/empty guards) before
-    // it was extracted. The dim probe reads the forced cache.
-    val prepared = IvfIndex.trainingSample(df, vecCol, fitFraction,
-      fitPartitions, seed, "PqIndex.fit")
-    try {
-      val dim = prepared.select(size(col("__v"))).head.getInt(0)
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val dsub = dim / m
-      val features = prepared.select((0 until m).map(sub =>
-        array_to_vector(slice(col("__v"), sub * dsub + 1, dsub)).as(s"f$sub")): _*)
-      val books = (0 until m).map { sub =>
-        val km = new KMeans().setK(ksub).setSeed(seed + sub).setMaxIter(maxIter)
-          .setFeaturesCol(s"f$sub")
-        km.fit(features).clusterCenters.toIndexedSeq.map(_.toArray.toIndexedSeq)
-      }
-      Model(books)
-    } finally { prepared.unpersist(); () }
+          maxIter: Int = 20, fitFraction: Double = 1.0): Model = {
+    val (n, d) = IvfIndex.shape(df, vecCol, -1L, -1)
+    val (points, _) = IvfIndex.cappedSample(df, vecCol, n, d, fitFraction,
+      IvfIndex.MaxPointsPerCentroid.toLong * ksub, seed, "PqIndex.fit")
+    val dim = points.head.length
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    val dsub = dim / m
+    Model((0 until m).map { sub =>
+      LocalKMeans.train(points.map(_.slice(sub * dsub, (sub + 1) * dsub)),
+        ksub, seed + sub, maxIter).map(_.toIndexedSeq).toIndexedSeq
+    })
   }
 
   /** ADC top-k candidates + exact rerank: rank all rows by quantized
@@ -349,11 +340,14 @@ object PqIndex {
     * matrix (fine for embedding dims; this is the standard OPQ
     * training shape), the eigendecomposition is driver-side d³. */
   def fitRotation(df: DataFrame, vecCol: String, m: Int,
-                  fitFraction: Double = 1.0, fitPartitions: Int = 0,
-                  seed: Long = 42L): MatrixRotation = {
-    val prepared = IvfIndex.trainingSample(df, vecCol, fitFraction,
-      fitPartitions, seed, "PqIndex.fitRotation")
+                  fitFraction: Double = 1.0, seed: Long = 42L): MatrixRotation = {
+    // The covariance pass runs several jobs over the sample: persisted
+    // and FORCED up front, so they read a cached table instead of
+    // re-executing scan → sample each time.
+    val prepared = IvfIndex.sampleFrame(df, vecCol, fitFraction, seed)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      if (prepared.count() == 0L) throw IvfIndex.emptySample("PqIndex.fitRotation")
       val dim = prepared.select(size(col("__v"))).head.getInt(0)
       require(dim % m == 0, s"dim $dim not divisible by m=$m")
       val dsub = dim / m
@@ -380,12 +374,10 @@ object PqIndex {
     * returned pair with [[searchRotated]]. */
   def fitRotated(df: DataFrame, vecCol: String, m: Int, ksub: Int,
                  seed: Long = 42L, maxIter: Int = 20,
-                 fitFraction: Double = 1.0,
-                 fitPartitions: Int = 0): (MatrixRotation, Model) = {
-    val rot = fitRotation(df, vecCol, m, fitFraction, fitPartitions, seed)
+                 fitFraction: Double = 1.0): (MatrixRotation, Model) = {
+    val rot = fitRotation(df, vecCol, m, fitFraction, seed)
     val rotated = df.withColumn("__rvec", rot.rotateCol(col(vecCol)))
-    val model = fit(rotated, "__rvec", m, ksub, seed, maxIter,
-      fitFraction, fitPartitions)
+    val model = fit(rotated, "__rvec", m, ksub, seed, maxIter, fitFraction)
     (rot, model)
   }
 

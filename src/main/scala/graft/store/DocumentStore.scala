@@ -34,7 +34,8 @@ import graft.ops.TextSearch
   * #                               curves and last tuning params
   * <path>/v<N>/essential/        # parquet: id, text, source, category,
   * #                               metadata_hash, vec [, cluster=...]
-  * <path>/v<N>/centroids/        # parquet (IVF only): cluster, centroid
+  * <path>/v<N>/centroids         # binary (IVF only): nlist, dim, then
+  * #                               the centroid doubles in list order
   * <path>/v<N>/payload/          # parquet: doc_id, text, metadata,
   * #                               payload_json (full-fidelity record)
   * <path>/v<N>/dedup_bloom.bin   # ingest-dedup Bloom filter
@@ -83,10 +84,38 @@ final class DocumentStore private (
   // Serializes MUTATIONS within this driver: concurrent add/delete
   // Futures (the async API) must not race on the same next-version
   // directory and manifest commit. Reads stay lock-free (snapshot
-  // isolation via version dirs + keepVersions). Cross-driver writers
-  // are out of scope — one writer process per store path, like any
-  // single-writer table format.
+  // isolation via version dirs + keepVersions). A second writer on the
+  // same path (another instance or process) is detected, not
+  // serialized: see [[exclusive]].
   private val mutationLock = new Object
+
+  /** Run a mutation under [[mutationLock]]. The outermost call first
+    * checks that the latest published commit is this instance's own —
+    * the same number AND the same manifest (one listing and one small
+    * read of the commit dir; a rebuild at the same path restarts the
+    * numbering, so the number alone cannot tell generations apart). A
+    * stale instance — a second `load` of the same path, another job,
+    * or one that outlived a rebuild — raises a
+    * [[ConcurrentWriteException]] before it writes anything, instead of
+    * overwriting the version dir the newer manifest points at. Two
+    * writers that both pass the check before either publishes still
+    * collide; only per-commit version dirs would close that window. */
+  private def exclusive[A](body: => A): A =
+    if (Thread.holdsLock(mutationLock)) body
+    else mutationLock.synchronized {
+      val dir = commitDir(path)
+      val latest = Commits.latest(fsOf(spark, dir), dir, CommitPrefix)
+      val latestN = latest.fold(-1L)(_._1)
+      if (latestN != commit) throw new ConcurrentWriteException(
+        s"store $path is at manifest commit $latestN, this instance at commit $commit: " +
+          "another writer published since this instance was loaded; load the store again")
+      if (latest.exists { case (_, txt) =>
+            renderManifest(parseManifest(txt)) != renderManifest(manifest) })
+        throw new ConcurrentWriteException(
+          s"store $path was rebuilt: its manifest commit $latestN is not the one this " +
+            "instance holds under that number; load the store again")
+      body
+    }
 
   // Arms a one-time directory-list retention sweep on this instance's
   // first snapshot write (collects stray version dirs a previous
@@ -123,7 +152,7 @@ final class DocumentStore private (
   private def versionDir(v: Long) = s"$path/v$v"
   private def essentialDir(v: Long) = s"${versionDir(v)}/essential"
   private def payloadDir(v: Long) = s"${versionDir(v)}/payload"
-  private def centroidsDir(v: Long) = s"${versionDir(v)}/centroids"
+  private def centroidsPath(v: Long) = s"${versionDir(v)}/centroids"
   private def bloomPath(v: Long) = s"${versionDir(v)}/dedup_bloom.bin"
   private def dedupKeysDir(v: Long) = s"${versionDir(v)}/dedup_keys"
   private def lexicalDir(v: Long) = s"${versionDir(v)}/lexical"
@@ -256,7 +285,7 @@ final class DocumentStore private (
     * publishes nothing; a rewrite left with no survivor and no incoming
     * row drops the store. */
   private def rewrite(doomed: Option[DataFrame] = None, staged: Option[DataFrame] = None,
-                      compacting: Boolean = false): Unit = mutationLock.synchronized {
+                      compacting: Boolean = false): Unit = exclusive {
     val live = if (manifest.count > 0) Some(essentialProjection(essential)) else None
     val renumbered = for (ex <- live; d <- doomed) yield withDenseId(
       ex.join(d, Seq("id"), "left_anti").withColumnRenamed("id", "__old_id").orderBy("__old_id"),
@@ -594,7 +623,7 @@ final class DocumentStore private (
     * `mismatch` when the dead batch's metadata differs) and compact()
     * keeps one of them, not necessarily the retried one — and extra
     * chunk rows until compact() rebuilds them. */
-  def addDFIncremental(staged: DataFrame): Unit = mutationLock.synchronized {
+  def addDFIncremental(staged: DataFrame): Unit = exclusive {
     if (manifest.count == 0) { rewrite(staged = Some(staged)); return }
     val existing = essentialProjection(essential)
     // Offset from the DATA, not the manifest: if a prior incremental
@@ -699,7 +728,7 @@ final class DocumentStore private (
     * to the static default. PQ is reported stale by [[tuningStale]]
     * instead (rebuilding its per-snapshot index is an explicit
     * [[buildPqIndex]] + [[tunePqCandidates]] decision). */
-  def compact(): Unit = mutationLock.synchronized {
+  def compact(): Unit = exclusive {
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     rewrite(compacting = true)
     manifest.tuned.get("nprobe").foreach { h =>
@@ -740,26 +769,25 @@ final class DocumentStore private (
       // √n rule, and the manifest records the model's ACTUAL nlist
       // (nlistUsed below), so load/search/tune see a concrete value.
       val model = IvfIndex.fit(ess, "vec",
-        if (config.nlist == -1) 0 else config.nlist)
+        if (config.nlist == -1) 0 else config.nlist, rowCount = count, dim = embedder.dim)
       modelOpt = Some(model)
+      // Staleness baseline for incremental ingest: the fit-time mean
+      // assignment distance (per-row k-means cost) over every essential
+      // row, observed on the essential write itself. Appends against
+      // frozen centroids accumulate their own mean next to it in the
+      // manifest; the ratio is the drift gate (see needsCompaction).
+      val baseline = org.apache.spark.sql.Observation()
       // Within each cluster partition, sort by id so point lookups still
       // prune row groups on the id min/max statistics.
       ess.withColumn("cluster", model.assignCol(col("vec")))
+        .observe(baseline, avg(model.distToCol(col("vec"), col("cluster"))).as("m"))
         .sortWithinPartitions("cluster", "id")
         .write.mode("overwrite").partitionBy("cluster").parquet(essentialDir(v))
-      import spark.implicits._
-      model.centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toDF("cluster", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(centroidsDir(v))
-      // Staleness baseline for incremental ingest: the fit-time mean
-      // assignment distance (per-row k-means cost). Appends against
-      // frozen centroids accumulate their own mean next to it in the
-      // manifest; the ratio is the drift gate (see needsCompaction).
-      // One extra agg over the cached essential rows.
-      val baseRow = ess
-        .withColumn("__c", model.assignCol(col("vec")))
-        .agg(avg(model.distToCol(col("vec"), col("__c"))).as("m")).head
-      if (!baseRow.isNullAt(0)) ivfBaseline = baseRow.getDouble(0)
+      writeCentroids(v, model)
+      baseline.get("m") match {
+        case m: Double => ivfBaseline = m
+        case _ => () // no row has a vector
+      }
     } else {
       // Range-partition + sort by id: each file covers a disjoint id
       // range, so getDocumentById/getDocumentsByIds read one file's row
@@ -870,6 +898,18 @@ final class DocumentStore private (
     try bloom.writeTo(out) finally out.close()
   }
 
+  /** The centroids as one small driver-written file: nlist, dim, then
+    * the doubles, centroid by centroid. */
+  private def writeCentroids(v: Long, model: IvfIndex.Model): Unit = {
+    val out = new java.io.DataOutputStream(
+      fsFor(centroidsPath(v)).create(hadoopPath(centroidsPath(v)), true))
+    try {
+      out.writeInt(model.nlist)
+      out.writeInt(model.centroids.head.length)
+      model.centroids.foreach(_.foreach(out.writeDouble))
+    } finally out.close()
+  }
+
   private def loadBloom(): Option[BloomFilter] =
     if (manifest.bloomExpected == 0L) None
     else {
@@ -906,7 +946,7 @@ final class DocumentStore private (
     * Incremental appends after the build change the count and make the
     * index stale; stale or absent indexes are bypassed by the scan
     * path, so building is always safe and never required. */
-  def buildLexicalIndex(numFiles: Int = 16): Unit = mutationLock.synchronized {
+  def buildLexicalIndex(numFiles: Int = 16): Unit = exclusive {
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     retract(manifest.copy(lexicalFor = None))
     TextSearch.writeIndex(essential.select(col("id"), col("text")),
@@ -916,7 +956,7 @@ final class DocumentStore private (
 
   /** Build/refresh a product-quantization index for the live snapshot,
     * under the mutation lock: fit per-subspace codebooks (PqIndex.fit,
-    * m·ksub KMeans centroids) on the stored vectors and persist
+    * m·ksub k-means centroids) on a sample of the stored vectors and persist
     * codebooks + per-doc codes under the version dir — the store-level
     * FAISS IndexPQ artifact. Codes are `m` small ints per doc (vs `dim`
     * floats — 32× smaller at m=8/dim=64), so the ADC prescreen scans a
@@ -938,32 +978,31 @@ final class DocumentStore private (
     * O(d²) once per search); the exact rerank keeps original-space
     * vectors — rotations are orthonormal, so the ranks agree. */
   def buildPqIndex(m: Int = 8, ksub: Int = 16, seed: Long = 42L,
-                   rotate: Boolean = false, fitFraction: Double = 1.0,
-                   fitPartitions: Int = 0): Unit = mutationLock.synchronized {
+                   rotate: Boolean = false, fitFraction: Double = 1.0): Unit = exclusive {
     // The mutation lock holds ONE version for the whole build: the body
     // reads `essential` three to four times (rotation fit, PQ fit,
     // encode), and a concurrent mutation could otherwise yield a
     // rotation fitted on vN with codes encoded from vN+1.
-    // `fitFraction`/`fitPartitions` (FAISS-style sample training) reach
-    // both fits: at corpus scale a full-fraction fit persists the whole
-    // vector column twice and runs PCA over the corpus — the sample
-    // knob is the documented scale posture and must be reachable here.
+    // `fitFraction` (FAISS-style sample training) reaches both fits: at
+    // corpus scale a full-fraction rotation fit runs PCA over the
+    // corpus — the sample knob is the documented scale posture and must
+    // be reachable here; the codebook fit collects its capped sample.
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     if (embedder.dim % m != 0) throw new IndexException(s"dim ${embedder.dim} not divisible by m=$m")
     val dir = pqDir(manifest.version)
     import spark.implicits._
     val rotOpt =
       if (rotate) Some(PqIndex.fitRotation(essential, "vec", m,
-        fitFraction = fitFraction, fitPartitions = fitPartitions, seed = seed))
+        fitFraction = fitFraction, seed = seed))
       else None
     val (model, encodeInput) = rotOpt match {
       case Some(rot) =>
         val rotated = essential.withColumn("__rvec", rot.rotateCol(col("vec")))
         (PqIndex.fit(rotated, "__rvec", m, ksub, seed,
-          fitFraction = fitFraction, fitPartitions = fitPartitions), rotated)
+          fitFraction = fitFraction), rotated)
       case None =>
         (PqIndex.fit(essential, "vec", m, ksub, seed,
-          fitFraction = fitFraction, fitPartitions = fitPartitions), essential)
+          fitFraction = fitFraction), essential)
     }
     // A crash mid-rebuild would otherwise pair OLD codes with a NEW
     // rotation behind a live entry — silently garbage ADC ranks.
@@ -1053,7 +1092,7 @@ final class DocumentStore private (
   def tuneNprobe(targetRecall: Double = 0.95, k: Int = 10,
                  sampleQueries: Int = 20,
                  candidates: Seq[Int] = Seq(1, 2, 4, 8),
-                 seed: Long = 42L): Seq[TuningPoint] = mutationLock.synchronized {
+                 seed: Long = 42L): Seq[TuningPoint] = exclusive {
     if (manifest.count == 0) throw new SearchException("store is empty or not built")
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall out of (0,1]: $targetRecall")
@@ -1143,7 +1182,7 @@ final class DocumentStore private (
   def tunePqCandidates(targetRecall: Double = 0.95, k: Int = 10,
                        sampleQueries: Int = 20,
                        depthFactors: Seq[Int] = Seq(2, 4, 8),
-                       seed: Long = 42L): Seq[TuningPoint] = mutationLock.synchronized {
+                       seed: Long = 42L): Seq[TuningPoint] = exclusive {
     if (manifest.count == 0) throw new SearchException("store is empty or not built")
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall out of (0,1]: $targetRecall")
@@ -1235,7 +1274,7 @@ final class DocumentStore private (
   /** Forget the recorded last-tuning params for `"nprobe"` or `"pq"`
     * — the opt-out for a store that deliberately abandoned a tuned
     * index (otherwise [[tuningStale]] keeps reporting it). */
-  def clearTuningHistory(kind: String): Unit = mutationLock.synchronized {
+  def clearTuningHistory(kind: String): Unit = exclusive {
     if (manifest.tuned.contains(kind)) publish(manifest.copy(tuned = manifest.tuned - kind))
   }
 
@@ -1532,17 +1571,20 @@ final class DocumentStore private (
   }
 
   // Centroids are persisted per snapshot version, so the in-memory copy
-  // is memoized under (path, version): search-many pays the parquet
-  // read + collect once per snapshot instead of once per query, and a
-  // mutation (version bump) gets fresh centroids with NO manual
-  // invalidation — the versioned key IS the invalidation.
+  // is memoized under (path, version): search-many reads the file once
+  // per snapshot instead of once per query, and a mutation (version
+  // bump) gets fresh centroids with NO manual invalidation — the
+  // versioned key IS the invalidation.
   private def loadCentroids(): Option[IvfIndex.Model] =
     if (snap.nlist > 0) {
       Some(IvfIndex.modelCached(s"$path#centroids", snap.version) {
-        val rows = spark.read.parquet(centroidsDir(snap.version))
-          .orderBy("cluster").collect()
-        IvfIndex.Model(rows.map(r =>
-          r.getSeq[Double](r.fieldIndex("centroid")).toIndexedSeq).toIndexedSeq)
+        val p = centroidsPath(snap.version)
+        val in = new java.io.DataInputStream(fsFor(p).open(hadoopPath(p)))
+        try {
+          val nlist = in.readInt()
+          val dim = in.readInt()
+          IvfIndex.Model(IndexedSeq.fill(nlist)(IndexedSeq.fill(dim)(in.readDouble())))
+        } finally in.close()
       })
     } else None
 
@@ -1649,7 +1691,7 @@ final class DocumentStore private (
     * matching id set flows through a semijoin, never the driver (a
     * broad predicate can match hundreds of millions of rows). Returns
     * the number of documents removed. */
-  def deleteWhere(condition: org.apache.spark.sql.Column): Long = mutationLock.synchronized {
+  def deleteWhere(condition: org.apache.spark.sql.Column): Long = exclusive {
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     val doomedIds = essential.where(condition).select("id")
     val removed = doomedIds.count()
@@ -1805,7 +1847,7 @@ final class DocumentStore private (
     * (reference delete matrix, tests/test_index.py:162-261). Ids are
     * recompacted to 0..n-1 afterwards (index.py:433-435). Deleting the
     * last document removes the store (vectorstore.py:482-490). */
-  def deleteByIds(ids: Seq[Long]): Boolean = mutationLock.synchronized {
+  def deleteByIds(ids: Seq[Long]): Boolean = exclusive {
     if (ids.isEmpty) return false
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     val bad = ids.filter(i => i < 0 || i >= manifest.count)
@@ -1817,7 +1859,7 @@ final class DocumentStore private (
 
   /** Delete by texts — only the FIRST (lowest-id) occurrence per text is
     * deleted, reference semantics (index.py:389-393). */
-  def deleteByTexts(texts: Seq[String]): Boolean = mutationLock.synchronized {
+  def deleteByTexts(texts: Seq[String]): Boolean = exclusive {
     // The whole resolve-then-delete runs under the (re-entrant)
     // mutation lock: ids are POSITIONAL and densely recompacted by
     // every mutation, so resolving them outside the lock opens a
@@ -1876,7 +1918,7 @@ final class DocumentStore private (
     * interleave into. An upsert that matches no stored text is a plain
     * append. */
   def upsertTexts(texts: Seq[String],
-                  metadatas: Seq[Map[String, String]] = Nil): Seq[String] = mutationLock.synchronized {
+                  metadatas: Seq[Map[String, String]] = Nil): Seq[String] = exclusive {
     val staged = stage(texts, metadatas)
     val firstIds = if (manifest.count == 0) Nil else firstOccurrences(texts)
     import spark.implicits._
@@ -1890,7 +1932,7 @@ final class DocumentStore private (
 
   /** Remove the entire store from disk (reference empty-store removal,
     * vectorstore.py:482-490). */
-  def drop(): Unit = mutationLock.synchronized {
+  def drop(): Unit = exclusive {
     deleteDir(spark, path)
     manifest = emptyManifest
     commit = -1L
@@ -1939,8 +1981,10 @@ final class DocumentStore private (
     * edit), `missing_payload` (essential row with no payload row —
     * broken store), `orphan_payload` (payload row with no essential
     * row — harmless leftover of a crashed incremental append; compact(),
-    * like every snapshot rewrite, removes them). Filter `status != 'ok'`
-    * for the defect list. */
+    * like every snapshot rewrite, removes them), and one
+    * `count_mismatch` row (null doc_id) when the manifest's document
+    * count differs from the essential row count. Filter
+    * `status != 'ok'` for the defect list. */
   def verifyIntegrity(): DataFrame = withSnapshot {
     if (snap.count == 0) throw new StorageException("store is empty or not built")
     // Presence is tracked with explicit side flags, NOT hash nullness:
@@ -1961,6 +2005,12 @@ final class DocumentStore private (
           .when(col("stored_hash") <=> col("computed_hash"), lit("ok"))
           .otherwise(lit("mismatch")))
       .drop("__has_essential", "__has_payload")
+      .unionByName(essential.agg(count(lit(1)).as("__n"))
+        .where(col("__n") =!= lit(snap.count))
+        .select(lit(null).cast("long").as("doc_id"),
+          lit(null).cast("string").as("stored_hash"),
+          lit(null).cast("string").as("computed_hash"),
+          lit("count_mismatch").as("status")))
   }
 }
 
