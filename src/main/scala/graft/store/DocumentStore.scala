@@ -1,13 +1,16 @@
 package graft.store
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 import org.json4s.{Extraction, JNothing, MappingException}
 import org.json4s.jackson.JsonMethods
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import graft._
@@ -62,6 +65,14 @@ import graft.ops.TextSearch
   * (MVCC-style grace for readers still planned against an older
   * version); older ones are pruned after each publish. Only
   * [[addDFIncremental]] appends in place instead.
+  *
+  * The incoming rows of an add or upsert come either from a driver
+  * `Seq` (addTexts, addDocuments, upsertTexts, fromTexts, fromDocuments
+  * and their async twins), deduped, keyed and numbered on the driver
+  * ([[buildLocalRows]]), or from a DataFrame (addDF, fromDF,
+  * addDFIncremental), built on the executors ([[buildNewRows]]). The
+  * input type picks the path: a `Seq` is already on the driver, while a
+  * DataFrame may be corpus-sized.
   *
   * The essential store owns the ids. A delete renumbers its survivors
   * once, densely 0..n-1 like the reference (index.py:433-435) — ids
@@ -187,18 +198,24 @@ final class DocumentStore private (
       try body finally pinnedSnapshot.remove()
     }
 
+  // Store tables are read with their known schema: an inferring read
+  // runs a footer job before every query. An IVF layout's `cluster`
+  // column is not in the schema; partition discovery appends it.
+
   /** Current essential store (searchable projection + vectors). */
-  def essential: DataFrame = spark.read.parquet(essentialDir(snap.version))
+  def essential: DataFrame =
+    spark.read.schema(EssentialSchema).parquet(essentialDir(snap.version))
 
   /** Current full-fidelity payload store. */
-  def payload: DataFrame = spark.read.parquet(payloadDir(snap.version))
+  def payload: DataFrame =
+    spark.read.schema(PayloadSchema).parquet(payloadDir(snap.version))
 
   /** Current chunk table (multi-vector mode only): (id, vec[, cluster])
     * — one row per chunkSize-token window of each document. */
   def chunkVectors: DataFrame = {
     if (snap.chunkSize <= 0) throw new SearchException(
       "store is not multi-vector: build with StoreConfig.chunkSize > 0")
-    spark.read.parquet(chunksDir(snap.version))
+    spark.read.schema(ChunkSchema).parquet(chunksDir(snap.version))
   }
 
   /** Time-travel read: the essential store AS OF snapshot `version`,
@@ -233,28 +250,31 @@ final class DocumentStore private (
     * intra-batch and vs. the existing store) are dropped with
     * first-occurrence-wins (index.py:202-218), yet the returned ids are
     * str(0..len(texts)-1) of the INPUT — a reference surface
-    * inconsistency we replicate deliberately (vectorstore.py:221). */
+    * inconsistency we replicate deliberately (vectorstore.py:221).
+    * The batch is already on the driver, so its new rows are built
+    * there ([[buildLocalRows]]): before the write, Spark only confirms
+    * Bloom hits against the key table and embeds the kept rows. */
   def addTexts(texts: Seq[String], metadatas: Seq[Map[String, String]] = Nil): Seq[String] = {
-    rewrite(staged = Some(stage(texts, metadatas)))
+    rewrite(staged = Some(Right(stage(texts, metadatas))))
     texts.indices.map(_.toString)
   }
 
   /** Bulk ingest from a DataFrame with columns (text STRING,
-    * metadata MAP<STRING,STRING>). The scale path: no driver-side data. */
-  def addDF(staged: DataFrame): Unit = rewrite(staged = Some(staged))
+    * metadata MAP<STRING,STRING>). The scale path: no driver-side data;
+    * the new rows are built on the executors ([[buildNewRows]]). */
+  def addDF(staged: DataFrame): Unit = rewrite(staged = Some(Left(staged)))
 
   /** Document-list adapter over addTexts (reference I2,
     * vectorstore.py:254-270). */
   def addDocuments(docs: Seq[Doc]): Seq[String] =
     addTexts(docs.map(_.text), docs.map(_.metadata))
 
-  /** In-memory texts + metadata as a staged (text, metadata) batch. */
-  private def stage(texts: Seq[String], metadatas: Seq[Map[String, String]]): DataFrame = {
+  /** In-memory texts + metadata as (text, metadata) pairs; a length
+    * mismatch raises before any job runs. */
+  private def stage(texts: Seq[String], metadatas: Seq[Map[String, String]]): LocalBatch = {
     if (!(metadatas.isEmpty || metadatas.length == texts.length)) throw new IngestException(
       s"texts/metadatas length mismatch: ${texts.length} vs ${metadatas.length}")
-    val metas = if (metadatas.isEmpty) Seq.fill(texts.length)(Map.empty[String, String]) else metadatas
-    import spark.implicits._
-    texts.zip(metas).toDF("text", "metadata")
+    if (metadatas.isEmpty) texts.map((_, Map.empty[String, String])) else texts.zip(metadatas)
   }
 
   /** The one copy-on-write rewrite behind every snapshot mutation, and
@@ -281,10 +301,13 @@ final class DocumentStore private (
     * row stays for [[verifyIntegrity]] to report. `staged` builds at the
     * survivor offset and dedups against the survivors — through the
     * persisted Bloom only when nothing is deleted, since the filter
-    * still holds deleted texts. An append batch that dedups to nothing
+    * still holds deleted texts. A DataFrame (`Left`) is built on the
+    * executors ([[buildNewRows]]), a driver batch (`Right`) on the
+    * driver ([[buildLocalRows]]). An append batch that dedups to nothing
     * publishes nothing; a rewrite left with no survivor and no incoming
     * row drops the store. */
-  private def rewrite(doomed: Option[DataFrame] = None, staged: Option[DataFrame] = None,
+  private def rewrite(doomed: Option[DataFrame] = None,
+                      staged: Option[Either[DataFrame, LocalBatch]] = None,
                       compacting: Boolean = false): Unit = exclusive {
     val live = if (manifest.count > 0) Some(essentialProjection(essential)) else None
     val renumbered = for (ex <- live; d <- doomed) yield withDenseId(
@@ -300,8 +323,11 @@ final class DocumentStore private (
       val survivors = renumbered.orElse(live)
       val idMap = renumbered.map(_.select("__old_id", "id")).orElse(
         if (compacting) live.map(_.select(col("id").as("__old_id"), col("id"))) else None)
-      val base = staged.map(buildNewRows(_, survivors, offset,
-        if (doomed.isEmpty) loadBloom() else None))
+      val base = staged.map { s =>
+        val bloom = if (doomed.isEmpty) loadBloom() else None
+        s.fold(buildNewRows(_, survivors, offset, bloom),
+          buildLocalRows(_, survivors, offset, bloom))
+      }
       try {
         val nNew = base.fold(0L)(_._2)
         if (nNew == 0L && staged.isDefined && doomed.isEmpty && live.isDefined) return
@@ -362,7 +388,7 @@ final class DocumentStore private (
     if (manifest.chunkSize > 0 && config.chunkSize == manifest.chunkSize &&
         config.chunkOverlap == manifest.chunkOverlap &&
         fsFor(dir).exists(hadoopPath(dir)))
-      Some(spark.read.parquet(dir).select("id", "vec"))
+      Some(spark.read.schema(ChunkSchema).parquet(dir).select("id", "vec"))
     else None
   }
 
@@ -370,8 +396,13 @@ final class DocumentStore private (
     base.select(col("id").as("doc_id"), col("text"), col("metadata"),
       to_json(struct(col("text"), col("metadata"))).as("payload_json"))
 
-  /** Dedup + embed + project one staged batch into a CACHED base of new
-    * rows with dense ids starting at `offset`, and its row count. Caching is
+  /** Dedup + embed + project one staged DataFrame into a CACHED base of
+    * new rows with dense ids starting at `offset`, and its row count —
+    * the path of [[addDF]], [[addDFIncremental]] and the factories over
+    * them, where the batch may be corpus-sized and never reaches the
+    * driver: a window for the intra-batch dedup, two `zipWithIndex`
+    * passes and an executor-side Bloom probe ([[confirmDups]]). A
+    * driver batch takes [[buildLocalRows]] instead. Caching is
     * load-bearing, not an optimization: the essential and payload writes
     * both derive from this plan, and recomputing it from a staged input
     * that changed between the two writes would produce payload rows that
@@ -431,23 +462,133 @@ final class DocumentStore private (
       }
     }
 
-    // Embed (narrow map stage) + essential projection + integrity hash
-    // (index.py:220-237). Hash = sha256 over key-sorted metadata JSON —
-    // an opaque self-consistency token (SURVEY §7.4), recomputable by
-    // [[verifyIntegrity]] (same shared expression).
-    val embedded = embedder.embed(fresh, "text", "vec")
-      .withColumn("source", col("metadata").getItem("source"))
-      .withColumn("category", col("metadata").getItem("category"))
-      .withColumn("metadata_hash", DocumentStore.metadataHashCol(col("metadata")))
-
     // Dense id assignment at the append offset (index.py:230):
     // zipWithIndex (no shuffle), input order preserved via sort by seq.
-    val base = withDenseId(embedded.orderBy("seq"), "id", offset).cache()
+    val base = withDenseId(newRowProjection(fresh).orderBy("seq"), "id", offset).cache()
     // Materialize base's cache (load-bearing — see callers) from the
     // still-pinned input before the finally releases it; otherwise the
     // first downstream action would re-execute the raw staged plan.
     (base, base.count())
     } finally { pinned.unpersist(); () }
+  }
+
+  /** Embed (narrow map stage) + the columns derived from the metadata:
+    * source, category and the integrity hash (index.py:220-237). Hash =
+    * sha256 over key-sorted metadata JSON — an opaque self-consistency
+    * token (SURVEY §7.4), recomputable by [[verifyIntegrity]] (same
+    * shared expression). Both new-row builders end here. */
+  private def newRowProjection(rows: DataFrame): DataFrame =
+    embedder.embed(rows, "text", "vec")
+      .withColumn("source", col("metadata").getItem("source"))
+      .withColumn("category", col("metadata").getItem("category"))
+      .withColumn("metadata_hash", DocumentStore.metadataHashCol(col("metadata")))
+
+  /** [[buildNewRows]] for a batch the driver already holds, with the
+    * same result — first occurrence wins, dense ids from `offset` in
+    * input order — and no Spark job over the batch itself:
+    *
+    *  1. each text takes its stored form: Spark keeps UTF-8 bytes, so
+    *     texts that differ only in unpaired surrogates (each encodes as
+    *     '?') are one text to the store, and must be one text here;
+    *  2. intra-batch dedup by first occurrence, all null texts one key;
+    *  3. with a Bloom, a text's key is the hex sha-256 of its UTF-8
+    *     bytes (the function `sha2(text, 256)` calls, so it equals the
+    *     key table's), and only the texts the filter flags, and a null
+    *     text, are confirmed: the [[keyProbe]] of their keys, then the
+    *     [[probe]] of the candidate ids' texts, compared exactly here.
+    *     A fetched text is a copy of a batch text (barring a sha
+    *     collision or a crash phantom, which the exact compare rejects),
+    *     one row per candidate id, so the batch bounds the fetch and no
+    *     byte budget or fallback is needed (unlike [[confirmDups]]); a
+    *     phantom id that never published fetches nothing. Without a Bloom (a
+    *     rewrite that deletes, or `dedupBloomFpp = 0`): one null-safe
+    *     semi-join of the survivors' texts against the batch's;
+    *  4. ids `offset + i` over the kept rows, in one local frame of one
+    *     slice per `advisoryPartitionSizeInBytes` of text: a small batch
+    *     is one partition, and so one file per table, as the coalesced
+    *     sort of the DataFrame path gives.
+    *
+    * Like [[buildNewRows]], it returns the rows cached; built from
+    * driver values, the cache is filled by the first write. */
+  private def buildLocalRows(batch: LocalBatch, existing: Option[DataFrame], offset: Long,
+                             bloom: Option[BloomFilter]): (DataFrame, Long) = {
+    import java.nio.charset.StandardCharsets.UTF_8
+    // (stored text, metadata, its UTF-8 bytes) per first occurrence
+    val firsts = batch.map { case (t, m) =>
+      val bytes = if (t == null) null else t.getBytes(UTF_8)
+      (if (t == null) null else new String(bytes, UTF_8), m, bytes)
+    }.distinctBy(r => Option(r._1))
+    def texts(df: DataFrame): Set[Option[String]] =
+      df.collect().map(r => Option(r.getString(0))).toSet
+    val stored = existing.fold(Set.empty[Option[String]]) { ex =>
+      bloom match {
+        case Some(b) =>
+          val flagged = firsts.iterator
+            .map(r => if (r._3 == null) null else DigestUtils.sha256Hex(r._3))
+            .filter(k => k == null || b.mightContainString(k)).toSeq
+          val ids = if (flagged.isEmpty) Array.empty[Long]
+            else keyProbe(flagged).select("id").collect().map(_.getLong(0)).distinct
+          if (ids.isEmpty) Set.empty
+          else texts(probe(ex, "id", ids.toSeq).select("text"))
+        case None =>
+          import spark.implicits._
+          texts(ex.select("text").join(firsts.map(_._1).toDF("__b"),
+            col("text") <=> col("__b"), "left_semi"))
+      }
+    }
+    val kept = firsts.filterNot(r => stored(Option(r._1)))
+    val textBytes = kept.iterator.map(r => if (r._3 == null) 0L else r._3.length.toLong).sum
+    val sliceBytes = JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    val slices = math.min(math.max(kept.length, 1).toLong,
+      math.max(1L, (textBytes + sliceBytes - 1) / sliceBytes)).toInt
+    val rows = kept.zipWithIndex.map { case ((t, m, _), i) => Row(offset + i, t, m) }
+    val frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, slices),
+      LocalRowSchema)
+    (newRowProjection(frame).cache(), rows.length.toLong)
+  }
+
+  /** The live version's key-table rows (k, id) whose key is one of
+    * `keys` (null: the null text's), through [[probe]] — an action's
+    * input only. */
+  private def keyProbe(keys: Seq[String]): DataFrame =
+    probe(spark.read.schema(KeyTableSchema).parquet(dedupKeysDir(manifest.version)), "k", keys)
+
+  /** The rows of `df` whose column `c` equals one of `values` (a null
+    * value matches a null), in the cheaper safe form:
+    *  - up to [[DocumentStore.SafeInProbe]] values, an `In` filter
+    *    pushed into the parquet scan: min/max statistics skip every row
+    *    group without a probed value (the key table is sha-sorted, the
+    *    essential store id-laid-out). Above
+    *    `pushdown.inFilterThreshold` (default 10) Spark degrades a pushed
+    *    In to a [min, max] RANGE filter — random shas span the whole key
+    *    space, so every row group would match — so the plan is bound to
+    *    a session clone with the threshold raised (cloned-session conf,
+    *    the mechanism of withBoundedTopKConf). Callers consume it with
+    *    an action, never as the input of a returned plan: the raised
+    *    conf must not reach the caller's embed and store writes;
+    *  - above that, [[probeJoin]]: the pushed In compiles to an or-CHAIN
+    *    whose evaluation overflows a cold-JVM task stack at depth ~768
+    *    (measured; JIT'd frames survive 1000+, so warm tests lie; see
+    *    SafeInProbe). */
+  private def probe(df: DataFrame, c: String, values: Seq[Any]): DataFrame = {
+    val nonNull = values.filter(_ != null)
+    if (nonNull.length > SafeInProbe) probeJoin(df, c, values)
+    else {
+      val cond = (if (nonNull.nonEmpty) Some(col(c).isin(nonNull: _*)) else None) ++
+        (if (nonNull.length < values.length) Some(col(c).isNull) else None)
+      org.apache.spark.sql.GraftSqlBridge.withSessionConfs(df.where(cond.reduce(_ || _)),
+        Map("spark.sql.parquet.pushdown.inFilterThreshold" -> (SafeInProbe + 1).toString))
+    }
+  }
+
+  /** [[probe]]'s join form: broadcast the values and null-safe
+    * semi-join `df` — no row-group pruning, but a shuffle-free columnar
+    * scan, and a plain plan that may feed other plans. */
+  private def probeJoin(df: DataFrame, c: String, values: Seq[Any]): DataFrame = {
+    val pv = spark.createDataFrame(values.map(Row(_)).asJava,
+      StructType(Seq(StructField("__pv", df.schema(c).dataType))))
+    df.join(broadcast(pv), col(c) <=> col("__pv"), "leftsemi")
   }
 
   /** Exact cross-batch dedup for rows the Bloom flagged `__maybe`,
@@ -460,20 +601,17 @@ final class DocumentStore private (
     *
     *  1. collect the distinct maybe shas (≤ batch-sized; driver
     *     decision point);
-    *  2. probe the snapshot's sha-SORTED key table: up to
-    *     [[DocumentStore.SafeInProbe]] keys as an `isin` pushdown —
+    *  2. probe the snapshot's sha-SORTED key table ([[keyProbe]]): up
+    *     to [[DocumentStore.SafeInProbe]] keys as an `isin` pushdown —
     *     parquet min/max skips every row group not containing a probed
     *     key, so this reads O(|maybe|) row groups, not the corpus;
     *     larger sets as a BROADCAST join against the key table — no
     *     row-group pruning, but a shuffle-free columnar scan of the
-    *     2-column table (never of the corpus texts). The split exists
-    *     because a parquet In pushdown compiles to an or-CHAIN whose
-    *     evaluation recursion overflows the task stack at depth
-    *     ~768 on a cold JVM (measured; see SafeInProbe) — the In form
-    *     is only safe when small;
+    *     2-column table (never of the corpus texts); see [[probe]] for
+    *     why the In form is only safe when small;
     *  3. fetch the matched candidate ids' TEXTS from the id-laid-out
     *     essential store (the same pruned point-lookup path as
-    *     getDocumentsByIds; same In-vs-broadcast split) and anti-join
+    *     getDocumentsByIds; the same [[probe]]) and anti-join
     *     the batch against them — driver-collected + broadcast only
     *     while the measured candidate bytes stay under
     *     [[DocumentStore.MaxConfirmTextBytes]] (the row cap bounds
@@ -489,7 +627,10 @@ final class DocumentStore private (
     * same writeVersion writes both before the manifest publishes. More
     * than [[DocumentStore.MaxConfirmKeys]] maybe keys / candidate ids
     * (a batch that is mostly dups — corpus-sized work is then inherent)
-    * run the plain anti-join. */
+    * run the plain anti-join. The key probe and the id fetch are the
+    * ones [[buildLocalRows]] runs for a driver batch, whose own bytes
+    * bound what it fetches, so it needs neither the byte budget nor
+    * the fallback. */
   private def confirmDups(flagged: DataFrame, ex: DataFrame): DataFrame = {
     def plainConfirm(): DataFrame =
       flagged.where(!col("__maybe")).drop("__maybe")
@@ -499,77 +640,30 @@ final class DocumentStore private (
     val cap = DocumentStore.MaxConfirmKeys
     val maybeKeys = flagged.where(col("__maybe"))
       .select(sha2(col("text"), 256).as("__k")).distinct()
-      .limit(cap + 1).collect().map(r => Option(r.getString(0)))
+      .limit(cap + 1).collect().map(_.getString(0))
     if (maybeKeys.isEmpty) return flagged.drop("__maybe")
     if (maybeKeys.length > cap) return plainConfirm()
-    val nonNull = maybeKeys.flatten.toSeq
-    val hasNull = maybeKeys.exists(_.isEmpty)
-    val inCap = DocumentStore.SafeInProbe
-    val keyTable = spark.read.parquet(dedupKeysDir(manifest.version))
-    // Probe-mode split. In form: above `pushdown.inFilterThreshold`
-    // (default 10) Spark degrades a parquet In filter to a [min, max]
-    // RANGE filter — random shas span the whole key space, so every
-    // row group would "match" and the probe silently reads the full
-    // corpus-sized table; the threshold is therefore raised, scoped to
-    // this one plan (cloned-session conf, same mechanism as
-    // withBoundedTopKConf) — but ONLY up to SafeInProbe values,
-    // because the pushed In compiles to an or-chain whose evaluation
-    // overflows a cold-JVM task stack at depth ~768 (measured; JIT'd
-    // frames survive 1000+, so warm tests lie). Join form: broadcast
-    // the probe keys and null-safe-join the key table — no pruning,
-    // but a shuffle-free scan of 2 thin columns, never of the corpus.
-    val matched =
-      if (nonNull.length <= inCap) {
-        val probeCond =
-          (if (nonNull.nonEmpty) Some(col("k").isin(nonNull: _*)) else None) ++
-            (if (hasNull) Some(col("k").isNull) else None)
-        org.apache.spark.sql.GraftSqlBridge.withSessionConfs(
-          keyTable.where(probeCond.reduce(_ || _)),
-          Map("spark.sql.parquet.pushdown.inFilterThreshold" ->
-            (inCap + 1).toString))
-      } else {
-        import spark.implicits._
-        val probe = maybeKeys.map(_.orNull).toSeq.toDF("__pk")
-        keyTable.join(broadcast(probe), col("k") <=> col("__pk"), "leftsemi")
-      }
-    val candIds = matched
+    val candIds = keyProbe(maybeKeys.toSeq)
       .select("id").distinct().limit(cap + 1).collect().map(_.getLong(0))
     if (candIds.isEmpty) return flagged.drop("__maybe")
     if (candIds.length > cap) return plainConfirm()
-    // Candidate-TEXT fetch + final anti-join. Two hazards shape this:
-    // (a) MaxConfirmKeys bounds candidate COUNT, not BYTES — 100k
-    //     1 MB documents would be a ~100 GB broadcast/collect, so the
-    //     broadcast path is gated on a measured byte budget;
-    // (b) the raised In-filter conf must not ESCAPE this method: the
-    //     old shape rebound the RETURNED plan to the cloned session,
-    //     so the caller's embed, id assignment, and all three store
-    //     writes silently executed under the altered pushdown conf
-    //     (and every ingest batch allocated a fresh SessionState for
-    //     the lifetime of its frame). The scoped conf is now consumed
-    //     by bounded IN-METHOD actions only — nothing cloned is ever
-    //     returned.
+    // Candidate-TEXT fetch + final anti-join. MaxConfirmKeys bounds
+    // candidate COUNT, not BYTES — 100k 1 MB documents would be a
+    // ~100 GB broadcast/collect — so the broadcast path is gated on a
+    // measured byte budget.
     import spark.implicits._
-    def joinFormFetch(): DataFrame =
-      ex.join(broadcast(candIds.toSeq.toDF("__cid")),
-          col("id") === col("__cid"), "leftsemi")
-        .select(col("text").as("__ex_text")).distinct()
-    if (candIds.length <= inCap) {
+    if (candIds.length <= SafeInProbe) {
       // In-form fetch: row-group-pruned point reads of the candidate
-      // texts — but only execute it under the scoped conf, inside this
-      // method. The byte probe reads octet lengths through the same
-      // pruned path (bounded), then the texts are COLLECTED (the bytes
-      // a broadcast would ship to the driver anyway) and rebuilt as a
-      // local frame on the caller's session.
-      val pruned = org.apache.spark.sql.GraftSqlBridge.withSessionConfs(
-        ex.where(col("id").isin(candIds.toSeq: _*))
-          .select(col("text").as("__ex_text")).distinct(),
-        Map("spark.sql.parquet.pushdown.inFilterThreshold" ->
-          (inCap + 1).toString))
+      // texts, executed only here (see probe). The byte probe reads
+      // octet lengths through the same pruned path (bounded), then the
+      // texts are COLLECTED (the bytes a broadcast would ship to the
+      // driver anyway) and rebuilt as a local frame on the caller's
+      // session.
+      val pruned = probe(ex, "id", candIds.toSeq)
+        .select(col("text").as("__ex_text")).distinct()
       // Persist across the two actions (byte probe, then collect):
-      // both consume the same pruned point-read, and this is the HOT
-      // ingest path — without the cache every under-budget confirm
-      // paid the candidate-text fetch twice. Bounded: <= cap rows, and
-      // the collect only proceeds under the byte budget.
+      // both consume the same pruned point-read. Bounded: <= cap rows,
+      // and the collect only proceeds under the byte budget.
       pruned.persist()
       try {
         val approxBytes = pruned
@@ -591,8 +685,9 @@ final class DocumentStore private (
     // anti-join — AQE may still broadcast the candidate side at
     // runtime if it measures small, but nothing forces an unbounded
     // byte collection.
-    flagged.drop("__maybe")
-      .join(joinFormFetch(), col("text") <=> col("__ex_text"), "left_anti")
+    flagged.drop("__maybe").join(
+      probeJoin(ex, "id", candIds.toSeq).select(col("text").as("__ex_text")).distinct(),
+      col("text") <=> col("__ex_text"), "left_anti")
   }
 
   /** SCALE-PATH append: write ONLY the new rows into the current
@@ -624,7 +719,7 @@ final class DocumentStore private (
     * keeps one of them, not necessarily the retried one — and extra
     * chunk rows until compact() rebuilds them. */
   def addDFIncremental(staged: DataFrame): Unit = exclusive {
-    if (manifest.count == 0) { rewrite(staged = Some(staged)); return }
+    if (manifest.count == 0) { rewrite(staged = Some(Left(staged))); return }
     val existing = essentialProjection(essential)
     // Offset from the DATA, not the manifest: if a prior incremental
     // append crashed between the essential write and the manifest bump,
@@ -685,25 +780,25 @@ final class DocumentStore private (
         // until compact(), which rebuilds the chunk table — the same
         // heal as duplicate payload rows).
         val centroidModel = loadCentroids()
-        def appendTo(df: DataFrame, dir: String): Unit = centroidModel match {
+        // Staleness ledger: this batch's assignment distances, observed
+        // on the essential append itself, fold into the drift ledger in
+        // the same commit that publishes the new count.
+        val drift = org.apache.spark.sql.Observation()
+        def appendTo(df: DataFrame, dir: String, observed: Boolean): Unit = centroidModel match {
           case Some(model) =>
-            df.withColumn("cluster", model.assignCol(col("vec")))
+            val clustered = df.withColumn("cluster", model.assignCol(col("vec")))
+            val d = model.distToCol(col("vec"), col("cluster"))
+            (if (observed) clustered.observe(drift, count(d).as("n"),
+                sum(coalesce(d, lit(0.0))).as("s")) else clustered)
               .write.mode("append").partitionBy("cluster").parquet(dir)
           case None => df.write.mode("append").parquet(dir)
         }
         if (manifest.chunkSize > 0)
-          appendTo(chunkRows(added), chunksDir(manifest.version))
-        appendTo(added, essentialDir(manifest.version))
-        // Staleness ledger: this batch's assignment distances (one
-        // batch-sized agg) fold into the drift ledger in the same
-        // commit that publishes the new count.
-        val (dn, ds) = centroidModel.fold((0L, 0.0)) { model =>
-          val r = added
-            .withColumn("__c", model.assignCol(col("vec")))
-            .withColumn("__d", model.distToCol(col("vec"), col("__c")))
-            .agg(count(col("__d")).as("n"),
-              sum(coalesce(col("__d"), lit(0.0))).as("s")).head
-          (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
+          appendTo(chunkRows(added), chunksDir(manifest.version), observed = false)
+        appendTo(added, essentialDir(manifest.version), observed = true)
+        val (dn, ds) = centroidModel.fold((0L, 0.0)) { _ =>
+          val r = drift.get
+          (r("n").asInstanceOf[Long], Option(r("s")).fold(0.0)(_.asInstanceOf[Double]))
         }
         publish(manifest.copy(count = offset + nNew,
           ivfAppendedN = manifest.ivfAppendedN + dn,
@@ -1548,7 +1643,7 @@ final class DocumentStore private (
     if (snap.chunkSize <= 0) throw new SearchException(
       "store is not multi-vector: build with StoreConfig.chunkSize > 0")
     val qv = embedder.embedQuery(query)
-    val chunks = spark.read.parquet(chunksDir(snap.version))
+    val chunks = spark.read.schema(ChunkSchema).parquet(chunksDir(snap.version))
     val space = loadCentroids() match {
       case Some(model) =>
         val probes = model.nearestCentroids(qv.toSeq, effectiveNprobe)
@@ -1872,12 +1967,13 @@ final class DocumentStore private (
   }
 
   /** The lowest id of each of `texts` present in the store — the rows
-    * [[deleteByTexts]] deletes and [[upsertTexts]] replaces. */
+    * [[deleteByTexts]] deletes and [[upsertTexts]] replaces. The matches
+    * are copies of `texts`, so they are collected and reduced here. */
   private def firstOccurrences(texts: Seq[String]): Seq[Long] = {
     import spark.implicits._
     essential.join(broadcast(texts.distinct.toDF("text")), Seq("text"), "left_semi")
-      .groupBy("text").agg(min("id").as("id"))
-      .select("id").as[Long].collect().toSeq
+      .select("text", "id").as[(String, Long)].collect()
+      .groupMapReduce(_._1)(_._2)(math.min).values.toSeq
   }
 
   // ------------------------------------------------------------------
@@ -1916,17 +2012,21 @@ final class DocumentStore private (
     * There is no intermediate "deleted but not yet re-added" published
     * state for a crash to expose or a concurrent async mutation to
     * interleave into. An upsert that matches no stored text is a plain
-    * append. */
+    * append. The batch is on the driver, so its rows are built there
+    * (see [[addTexts]]); the Spark work before the write is the
+    * first-occurrence lookup, the survivor renumbering and one semi-join
+    * of the survivors' texts against the batch's. */
   def upsertTexts(texts: Seq[String],
                   metadatas: Seq[Map[String, String]] = Nil): Seq[String] = exclusive {
     val staged = stage(texts, metadatas)
     val firstIds = if (manifest.count == 0) Nil else firstOccurrences(texts)
     import spark.implicits._
-    // The incoming batch dedups against the survivors without the Bloom
-    // (it still holds the replaced texts): a later duplicate copy of a
-    // matched text still wins over the incoming row, as in delete+add.
+    // The incoming batch is built on the driver ([[buildLocalRows]]) and
+    // dedups against the survivors without the Bloom (it still holds
+    // the replaced texts): a later duplicate copy of a matched text
+    // still wins over the incoming row, as in delete+add.
     rewrite(doomed = if (firstIds.isEmpty) None else Some(broadcast(firstIds.toDF("id"))),
-      staged = Some(staged))
+      staged = Some(Right(staged)))
     texts.indices.map(_.toString)
   }
 
@@ -2015,6 +2115,21 @@ final class DocumentStore private (
 }
 
 object DocumentStore {
+
+  /** A mutation's in-memory batch: (text, metadata) pairs. */
+  private type LocalBatch = Seq[(String, Map[String, String])]
+
+  // The store tables' data schemas. An IVF layout's `cluster` partition
+  // column is not listed: partition discovery appends it.
+  private val EssentialSchema = StructType.fromDDL(
+    "id BIGINT, text STRING, source STRING, category STRING, metadata_hash STRING, vec ARRAY<DOUBLE>")
+  private val PayloadSchema = StructType.fromDDL(
+    "doc_id BIGINT, text STRING, metadata MAP<STRING, STRING>, payload_json STRING")
+  private val KeyTableSchema = StructType.fromDDL("k STRING, id BIGINT")
+  private val ChunkSchema = StructType.fromDDL("id BIGINT, vec ARRAY<DOUBLE>")
+  /** A driver batch's new rows before the shared embed projection. */
+  private val LocalRowSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+    StructField("text", StringType), StructField("metadata", MapType(StringType, StringType))))
 
   /** Static PQ rerank depth when no measured curve exists for the
     * snapshot — see [[DocumentStore.similaritySearchPq]]. */
