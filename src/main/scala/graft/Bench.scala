@@ -86,14 +86,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val forceRetry = sys.env.get("SPARK_GRAFT_BENCH_RETRY_TEST")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = MainUtil.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LogHygiene.muteAuditedWindowWarning()
 
@@ -119,10 +114,7 @@ object Bench {
     // are kept: they are the per-query noise baseline for the retry
     // gate (overhead-bound queries cost about the same at sf0.001 as at
     // sf0.1, so a >5x gap on this box is contention, not data).
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").schema
-    }
+    SparkEntry.AllTables.foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").schema)
     val warmDir = {
       val parent = java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent
       val sibling = if (parent == null) None else Some(parent.resolve("sf0.001"))
@@ -160,19 +152,7 @@ object Bench {
     }
 
     // --- canary: fixed constant-cost job, the box-noise seismograph ---
-    // One codegen'd sum task per local core (32 partitions x 1M longs):
-    // the job briefly OCCUPIES every core, so external contention
-    // inflates its stragglers roughly linearly with the run-queue depth
-    // — a handful of under-parallelized micro-tasks would ride the
-    // scheduler's gaps and barely notice (measured: 8x512k tasks read
-    // ~0.2 s under a 2:1 hog burst that inflates real queries 2-10x).
-    import org.apache.spark.sql.functions.{sum => fsum, col => fcol}
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 32L << 20, 1L, 32).agg(fsum(fcol("id"))).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    canaryOnce() // untimed: pay the canary's own codegen/JIT before reading it
+    MainUtil.canaryRun(spark) // untimed: pay the canary's own codegen/JIT before reading it
     // Stderr marker (stdout carries only the JSON contract): lets an
     // external monitor correlate box events with the timed window.
     System.err.println(
@@ -183,15 +163,7 @@ object Bench {
     val canaries = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     def readCanary(): Unit = {
       val off = (System.nanoTime() - benchT0) / 1e9
-      // MIN of two back-to-back executions per reading: an isolated
-      // straggler (the GC tail of the heavy query that just finished,
-      // one preempted task) rarely hits both, while genuine box
-      // contention — the thing a reading is FOR — slows both. Measured
-      // at sf0.1/CPUS=32: single-execution quiet readings straggle to
-      // ~0.42 s (over the 0.3 floor — one spiked reading false-flags
-      // its 8 bounding queries); min-of-2 quiet readings stay under
-      // ~0.18 s.
-      canaries += ((off, math.min(canaryOnce(), canaryOnce())))
+      canaries += ((off, MainUtil.canaryReading(spark)))
     }
     val canaryEvery = 4
 

@@ -28,7 +28,7 @@ import graft.ops.{AsofJoin, Contamination, Dedup, Drift, Dsir, Eval, EventOps, L
   */
 object SparkEntry {
 
-  private val AllTables = Seq("region", "nation", "customer", "supplier", "part",
+  private[graft] val AllTables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
   // DataFrame handles are cached per (session, dir, table): re-creating
@@ -177,7 +177,7 @@ object SparkEntry {
         e: java.util.Map.Entry[SparkSession, String]): Boolean = size() > 8
   }
 
-  private def registerViews(s: SparkSession, dir: String): Unit =
+  private[graft] def registerViews(s: SparkSession, dir: String): Unit =
     viewDir.synchronized {
       if (viewDir.get(s) != dir) {
         AllTables.foreach(n => table(s, dir, n).createOrReplaceTempView(n))

@@ -1,22 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // Adversarial-config hook (robustness runs, e.g. broadcast joins
     // disabled): SPARK_GRAFT_CONF="k=v;k=v". Results must be IDENTICAL
     // under any such config — that's the point of checking.
-    MainUtil.applyConfEnv(builder)
-    val spark = builder.getOrCreate()
+    val spark = MainUtil.applyConfEnv(MainUtil.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LogHygiene.muteAuditedWindowWarning()
     new java.io.File(outDir).mkdirs()

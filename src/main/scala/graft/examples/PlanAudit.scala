@@ -1,16 +1,12 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for the headline queries so the
   * shuffle/pushdown/codegen shape can be audited (SURVEY §4).
   * Run: sbt "runMain graft.examples.PlanAudit [queryName ...]"
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-plans").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8").getOrCreate()
+    val spark = graft.MainUtil.localSession(8).appName("graft-plans").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val which = if (args.nonEmpty) args.toSet

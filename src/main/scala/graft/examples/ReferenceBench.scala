@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 import graft.StoreConfig
 import graft.embed.HashEmbedder
 import graft.store.DocumentStore
@@ -19,10 +17,9 @@ import graft.store.DocumentStore
   */
 object ReferenceBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-refbench").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8").getOrCreate()
+    // Eight shuffle partitions whatever SPARK_GRAFT_CPUS says.
+    val spark = graft.MainUtil.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+      .appName("graft-refbench").config("spark.sql.shuffle.partitions", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def texts(n: Int): Seq[String] =

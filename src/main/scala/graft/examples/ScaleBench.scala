@@ -312,12 +312,7 @@ object ScaleBench {
     // subset without paying for the whole table again.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.MainUtil.localSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val x1 = s"$base/x1"
@@ -541,23 +536,16 @@ object ScaleBench {
     * protocol as [[build]]'s documents table, skipping every other
     * table (irrelevant here and expensive at high ×N). */
   private def buildDocsOnly(spark: SparkSession, src: String, out: String,
-                            replicas: Int): Unit = {
-    val done = new java.io.File(s"$out/_BUILT")
-    if (done.exists()) return
+                            replicas: Int): Unit = graft.MainUtil.buildOnce(out) {
     replicatedDocuments(spark.read.parquet(s"$src/documents.parquet"), replicas)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    done.getParentFile.mkdirs()
-    done.createNewFile()
-    ()
   }
 
   /** Tables-subset replica build for the ×100 decade section — the
     * [[build]] protocol (same id offsets, same document salt) applied
     * only to the tables the measured queries read. */
   private def buildSubset(spark: SparkSession, src: String, out: String,
-                          replicas: Int, tables: Set[String]): Unit = {
-    val done = new java.io.File(s"$out/_BUILT")
-    if (done.exists()) return
+                          replicas: Int, tables: Set[String]): Unit = graft.MainUtil.buildOnce(out) {
     if (tables("documents"))
       replicatedDocuments(spark.read.parquet(s"$src/documents.parquet"), replicas)
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
@@ -574,17 +562,12 @@ object ScaleBench {
             .withColumn("o_custkey", col("o_custkey") + i * 100000000L))
         .reduce(_ unionByName _)
         .write.mode("overwrite").parquet(s"$out/orders.parquet")
-    done.getParentFile.mkdirs()
-    done.createNewFile()
-    ()
   }
 
-  /** Write `replicas` key-offset copies of the sf tables into `out`
-    * (idempotent: skips if the directory already exists). */
+  /** Write `replicas` key-offset copies of the sf tables into `out`,
+    * once. */
   private def build(spark: SparkSession, src: String, out: String,
-                    replicas: Int): Unit = {
-    val done = new java.io.File(s"$out/_BUILT")
-    if (done.exists()) return
+                    replicas: Int): Unit = graft.MainUtil.buildOnce(out) {
     def rep(table: String)(f: (DataFrame, Int) => DataFrame): Unit = {
       val srcDf = spark.read.parquet(s"$src/$table.parquet")
       (0 until replicas).map(i => f(srcDf, i))
@@ -629,8 +612,5 @@ object ScaleBench {
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     }
-    done.getParentFile.mkdirs()
-    done.createNewFile()
-    ()
   }
 }

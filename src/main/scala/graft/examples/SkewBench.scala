@@ -114,15 +114,9 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val base = if (args.length > 1) args(1) else "/tmp/graft_skew"
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // Extra confs, Verify-protocol style (`SPARK_GRAFT_CONF="k=v;k=v"`)
     // — used to A/B e.g. the ObjectHashAggregate sort fallback below.
-    graft.MainUtil.applyConfEnv(builder)
-    val spark = builder.getOrCreate()
+    val spark = graft.MainUtil.applyConfEnv(graft.MainUtil.localSession(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.{Dedup, Sampling}
 
@@ -269,28 +263,18 @@ object SkewBench {
     * shingle skew would make a large corpus needlessly expensive to
     * write and is irrelevant here). */
   private def buildEventsOnly(spark: SparkSession, src: String, out: String,
-                              replicas: Int): Unit = {
-    val done = new java.io.File(s"$out/_BUILT")
-    if (done.exists()) return
+                              replicas: Int): Unit = graft.MainUtil.buildOnce(out) {
     writeReplicatedEvents(spark, src, out, replicas)
-    done.getParentFile.mkdirs()
-    done.createNewFile()
-    ()
   }
 
   /** Write the ×`replicas` skewed corpus (documents + events) —
-    * idempotent via a _BUILT marker, same protocol as ScaleBench. */
+    * once (`MainUtil.buildOnce`). */
   private def build(spark: SparkSession, src: String, out: String,
-                    replicas: Int): Unit = {
-    val done = new java.io.File(s"$out/_BUILT")
-    if (done.exists()) return
+                    replicas: Int): Unit = graft.MainUtil.buildOnce(out) {
     val docs = spark.read.parquet(s"$src/documents.parquet")
     SkewCorpus.withBoilerplate(
         SkewCorpus.replicateTokenPrefixed(docs, replicas), "doc_id", "text")
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     writeReplicatedEvents(spark, src, out, replicas)
-    done.getParentFile.mkdirs()
-    done.createNewFile()
-    ()
   }
 }

@@ -224,18 +224,20 @@ final class DocumentStore private (
     * keep `keepVersions` of them, the live one included) — the audit/
     * reproducibility read of a versioned store: "what did the store
     * contain when job X ran?". */
-  def essentialAt(version: Long): DataFrame = versionedRead(version, essentialDir)
+  def essentialAt(version: Long): DataFrame =
+    versionedRead(version, essentialDir, EssentialSchema)
 
   /** Time-travel read of the payload store — see [[essentialAt]]. */
-  def payloadAt(version: Long): DataFrame = versionedRead(version, payloadDir)
+  def payloadAt(version: Long): DataFrame = versionedRead(version, payloadDir, PayloadSchema)
 
-  private def versionedRead(version: Long, dirOf: Long => String): DataFrame = {
+  private def versionedRead(version: Long, dirOf: Long => String,
+                            schema: StructType): DataFrame = {
     if (!(version >= 1 && version <= manifest.version)) throw new StorageException(
       s"version $version out of range 1..${manifest.version}")
     val dir = dirOf(version)
     if (!fsFor(dir).exists(hadoopPath(dir))) throw new StorageException(
       s"version $version already pruned (keepVersions=${config.keepVersions})")
-    spark.read.parquet(dir)
+    spark.read.schema(schema).parquet(dir)
   }
 
   def documentCount: Long = manifest.count
@@ -2163,7 +2165,9 @@ object DocumentStore {
     * confirm plans sit deeper in the call stack than the bare-scan
     * harness that measured it). Probe sets larger than this switch to
     * a broadcast-join probe — no row-group pruning, but a shuffle-free
-    * columnar scan bounded by the thin key table, never the corpus. */
+    * columnar scan bounded by the thin key table, never the corpus.
+    * Measure it with `graft.examples.Profile <sfDir> in:<n>`, one size
+    * per JVM. */
   val SafeInProbe: Int = 256
 
   /** The store's metadata integrity token (reference index.py:224-226):

@@ -78,7 +78,12 @@ final case class FrameMappingStats(
   * the corpus via the √n rule ([[graft.index.IvfIndex.autoNlist]]) —
   * the scale-safe default for growing stores, persisted across
   * save/load (`auto_nlist` in the manifest), so the cluster count
-  * keeps tracking corpus size instead of freezing at the first fit. */
+  * keeps tracking corpus size instead of freezing at the first fit.
+  *
+  * `dim` is read by nothing: the embedder's dimension is authoritative
+  * (it is what the manifest records, and `DocumentStore.load` checks
+  * the embedder against the manifest). The field stays for source
+  * compatibility with callers that pass it by name. */
 final case class StoreConfig(
     metric: String = "cosine",
     dim: Int = 64,

@@ -152,10 +152,17 @@ class DriverBatchSpec extends SparkSpec {
       val store = DocumentStore.fromTexts(spark, dir, docs, Nil, cfg, emb)
       assert((store.currentManifest.nlist > 0) == (name == "IVF"), name)
       val v = store.currentManifest.version
-      assert(store.essential.schema == essentialSchema, s"$name: ${store.essential.schema}")
-      assert(store.payload.schema == payloadSchema, s"$name: ${store.payload.schema}")
-      assert(store.essential.schema == spark.read.parquet(s"$dir/v$v/essential").schema, name)
-      assert(store.payload.schema == spark.read.parquet(s"$dir/v$v/payload").schema, name)
+      // the live reads and the time-travel reads of the same version
+      val (reads, jobs) = JobProbe(spark)(Seq(
+        ("live", store.essential, store.payload),
+        ("at", store.essentialAt(v), store.payloadAt(v))))
+      assert(jobs.isEmpty, s"$name: ${jobs.length} jobs to open the reads")
+      for ((read, essential, payload) <- reads) {
+        assert(essential.schema == essentialSchema, s"$name $read: ${essential.schema}")
+        assert(payload.schema == payloadSchema, s"$name $read: ${payload.schema}")
+        assert(essential.schema == spark.read.parquet(s"$dir/v$v/essential").schema, name)
+        assert(payload.schema == spark.read.parquet(s"$dir/v$v/payload").schema, name)
+      }
       assert(store.essential.count() == docs.length, name)
     }
   }
