@@ -105,9 +105,7 @@ object SparkEntry {
       // rows when a row-group midpoint falls inside it, so a one-group
       // file runs as one task no matter how many splits cover it.
       val bytesPerRow = onDisk / math.max(rows, 1L)
-      // SPARK_GRAFT_NO_FANOUT=1 disables the guard (perf A/B debugging).
-      if (rowGroups * 4 < cores && onDisk >= 256 * 1024 && bytesPerRow >= 64 &&
-          !sys.env.get("SPARK_GRAFT_NO_FANOUT").contains("1"))
+      if (rowGroups * 4 < cores && onDisk >= 256 * 1024 && bytesPerRow >= 64)
         df.repartition(cores)
       else df
     })
@@ -158,10 +156,12 @@ object SparkEntry {
   private def scratch(dir: String, name: String): String =
     s"$matDir/${dirKey(dir)}/$name"
 
+  /** Read back with the schema just written: an inferring read runs a
+    * footer job per call. */
   private def materialize(df: DataFrame, dir: String, name: String): DataFrame = {
     val path = scratch(dir, name)
     df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   // Temp views point at ONE dir per session; re-register only when the

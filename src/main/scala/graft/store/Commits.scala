@@ -3,30 +3,64 @@ package graft.store
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 import graft.StorageException
 
-/** The one way a versioned artifact becomes visible: the store
-  * manifest, the CDC table pointer and the gate-index compaction marker
-  * all publish through here (the reference's temp-file + move dance,
-  * vectorstore.py:563-581, without its delete-then-move window).
+/** The one publish-and-sweep rule of every versioned artifact: the
+  * store manifest, the CDC table pointer and the gate-index compaction
+  * marker all publish and retain through here (the reference's
+  * temp-file + move dance, vectorstore.py:563-581, without its
+  * delete-then-move window).
   *
   * A commit is a write-once file `<dir>/<prefix><n>`:
   *  - '''publish''' writes the content to the dot-prefixed temp file
   *    `<dir>/.<prefix><n>.tmp` and renames it into place — a reader
   *    never sees a half-written commit, and a crash leaves only a temp
-  *    file no reader looks at;
+  *    file no reader looks at. It then keeps the newest two commits: a
+  *    reader that listed the commits just before the publish can still
+  *    open the one it picked;
   *  - '''read''': the highest published `n` wins, so the previous
   *    commit stays authoritative until the rename lands and there is
-  *    no moment with no commit at all;
-  *  - '''prune''' deletes commits below a caller-given `n` plus stray
-  *    temp files.
+  *    no moment with no commit at all.
   *
-  * One writer per `dir`: callers serialize their own publishes.
+  * '''Retention''' is the Delta Lake log's rule (Armbrust et al., VLDB
+  * 2020) at directory granularity: what the kept commits name is live,
+  * everything else is garbage. [[sweep]] is the only code that lists a
+  * directory to delete from it; each artifact dooms the entries its
+  * kept commits do not name, right after its publish:
+  *  - the store: `v<N>` dirs below `live − keepVersions + 1`, so
+  *    `keepVersions` versions stay, the live one included;
+  *  - the CDC table: `v<N>` dirs below `live − keepVersions`, so
+  *    `keepVersions` versions stay behind the live one;
+  *  - the gate index: merged `batch=<j>` dirs at or below the new mark,
+  *    `v=`/`l0=` blobs neither of the two kept markers names, and drop
+  *    scratch of earlier batches.
+  * A crash between a write and its publish, or between a publish and
+  * its sweep, leaves only entries no kept commit names; every sweep
+  * lists its whole directory, so the next write collects them however
+  * old they are.
   *
-  * [[sweepVersionDirs]] is the matching retention sweep for the
-  * `v<N>` snapshot directories such a commit points at. */
+  * '''File-system requirement:''' renaming a file onto an existing file
+  * must fail (return false or throw), as it does on HDFS and on
+  * Hadoop's checksummed local file system (`LocalFileSystem`, and
+  * Hive's `ProxyLocalFileSystem` over it, the `file:` default when Hive
+  * is on the classpath). That makes a commit number put-if-absent: of
+  * two writers that publish the same `n`, the second rename fails and
+  * raises, and the first commit's content stands (`CommitsSpec` pins
+  * it). `RawLocalFileSystem` does NOT qualify: its rename replaces an
+  * existing file.
+  *
+  * '''One writer per `dir'''': the store detects a second writer before
+  * it writes (`DocumentStore.exclusive`); the CDC pointer is
+  * single-writer per table (one stream per table, its batches
+  * serialized by the stream); the gate index takes one compaction at a
+  * time. */
 private[graft] object Commits {
+
+  /** The file system holding `path`, under the session's Hadoop conf. */
+  def fsFor(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Published commit numbers under `dir` (unordered; empty when the
     * dir does not exist). Temp files and foreign names are ignored. */
@@ -45,9 +79,10 @@ private[graft] object Commits {
       finally in.close()
     }
 
-  /** Publish `content` as commit `n`. A rename that reports failure
-    * raises, naming both paths: a silently unpublished commit would
-    * leave readers on the previous state with no error anywhere. */
+  /** Publish `content` as commit `n`, then keep the newest two commits.
+    * A rename that reports failure raises, naming both paths: a
+    * silently unpublished commit would leave readers on the previous
+    * state with no error anywhere. */
   def publish(fs: FileSystem, dir: Path, prefix: String, n: Long, content: String): Unit = {
     val tmp = new Path(dir, s".$prefix$n.tmp")
     val dst = new Path(dir, s"$prefix$n")
@@ -55,45 +90,28 @@ private[graft] object Commits {
     try out.write(content.getBytes(UTF_8)) finally out.close()
     if (!fs.rename(tmp, dst))
       throw new StorageException(s"commit rename failed: $tmp -> $dst")
+    prune(fs, dir, prefix, below = n - 1)
   }
 
   /** Delete every commit numbered below `below`, and stray temp files
     * of this prefix (a crash between create and rename). */
   def prune(fs: FileSystem, dir: Path, prefix: String, below: Long): Unit =
+    sweep(fs, dir)(name =>
+      (name.startsWith(prefix) && name.stripPrefix(prefix).toLongOption.exists(_ < below)) ||
+        (name.startsWith(s".$prefix") && name.endsWith(".tmp")))
+
+  /** List `dir` once and delete, recursively, each entry whose name
+    * `doomed` accepts. A missing `dir` has nothing to delete. */
+  def sweep(fs: FileSystem, dir: Path)(doomed: String => Boolean): Unit =
     if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-      val name = st.getPath.getName
-      val stale =
-        (name.startsWith(prefix) && name.stripPrefix(prefix).toLongOption.exists(_ < below)) ||
-          (name.startsWith(s".$prefix") && name.endsWith(".tmp"))
-      if (stale) { fs.delete(st.getPath, false); () }
+      if (doomed(st.getPath.getName)) { fs.delete(st.getPath, true); () }
     }
 
   private val VersionDir = "v(\\d+)".r
 
-  /** Retention sweep of the `v<N>` snapshot dirs under `root`: delete
-    * every version below `below` (exclusive — the caller turns its own
-    * `keepVersions` into this cutoff). `full` lists `root` once and
-    * collects everything below the cutoff, strays a previous process's
-    * crash left behind included; otherwise only the [[SweepWindow]]
-    * versions just below the cutoff are probed. Each write makes at
-    * most one version stale and earlier sweeps took everything older,
-    * so steady-state cost is O(window) filesystem calls, not O(total
-    * versions); the window's slack absorbs sweeps skipped by crashes.
-    * Callers arm `full` on the first write of an instance or stream. */
-  def sweepVersionDirs(fs: FileSystem, root: Path, below: Long, full: Boolean): Unit =
-    if (full) {
-      if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-        st.getPath.getName match {
-          case VersionDir(n) if st.isDirectory && n.toLong < below =>
-            fs.delete(st.getPath, true); ()
-          case _ => ()
-        }
-      }
-    } else (math.max(0L, below - SweepWindow) until below).foreach { v =>
-      val d = new Path(root, s"v$v")
-      if (fs.exists(d)) { fs.delete(d, true); () }
-    }
-
-  /** Versions the steady-state sweep probes below its cutoff. */
-  private val SweepWindow = 8L
+  /** Dooms the `v<N>` snapshot dirs numbered below `cutoff`. */
+  def versionsBelow(cutoff: Long): String => Boolean = {
+    case VersionDir(n) => n.toLongOption.exists(_ < cutoff)
+    case _ => false
+  }
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -18,6 +18,7 @@ import graft.embed.Embedder
 import graft.functions.VectorFunctions
 import graft.index.{IvfIndex, PqIndex, VectorIndex}
 import graft.ops.TextSearch
+import graft.store.Commits.fsFor
 
 /** The VectorStore-equivalent facade (reference:
   * src/langchain_memvid/vectorstore.py — `MemVid`): ingest, top-k
@@ -57,13 +58,11 @@ import graft.ops.TextSearch
   *
   * Every snapshot mutation (add, delete, upsert, compact) goes through
   * ONE copy-on-write rewrite ([[rewrite]]): it writes a NEW version
-  * directory and then publishes the next manifest commit through
-  * [[Commits]] — the Spark-native version of the reference's temp-file
-  * + move dance (vectorstore.py:563-581); the highest commit wins, so
-  * readers never see a moment without one. `StoreConfig.keepVersions`
-  * is the number of versions kept on disk, the live one included
-  * (MVCC-style grace for readers still planned against an older
-  * version); older ones are pruned after each publish. Only
+  * directory, publishes the next manifest commit and sweeps, under the
+  * one publish-and-sweep rule of [[Commits]] (which also holds the
+  * crash reasoning). `StoreConfig.keepVersions` is the number of
+  * versions kept on disk, the live one included (MVCC-style grace for
+  * readers still planned against an older version). Only
   * [[addDFIncremental]] appends in place instead.
   *
   * The incoming rows of an add or upsert come either from a driver
@@ -114,8 +113,7 @@ final class DocumentStore private (
   private def exclusive[A](body: => A): A =
     if (Thread.holdsLock(mutationLock)) body
     else mutationLock.synchronized {
-      val dir = commitDir(path)
-      val latest = Commits.latest(fsOf(spark, dir), dir, CommitPrefix)
+      val latest = Commits.latest(fsFor(spark, path), commitDir(path), CommitPrefix)
       val latestN = latest.fold(-1L)(_._1)
       if (latestN != commit) throw new ConcurrentWriteException(
         s"store $path is at manifest commit $latestN, this instance at commit $commit: " +
@@ -128,28 +126,18 @@ final class DocumentStore private (
       body
     }
 
-  // Arms a one-time directory-list retention sweep on this instance's
-  // first snapshot write (collects stray version dirs a previous
-  // process's crash left behind); subsequent writes sweep a bounded
-  // window only. See writeVersion.
-  private val fullSweepArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
-
   private def emptyManifest = StoreManifest(0L, embedder.dim, config.metric, 0L, config.nlist)
   @volatile private var manifest: StoreManifest = published.fold(emptyManifest)(_._2)
   // Number of the manifest commit `manifest` was published as (-1 =
   // none yet). Guarded by mutationLock, like every publish.
   private var commit: Long = published.fold(-1L)(_._1)
 
-  /** Publish `m` as the next manifest commit, then make it live. The
-    * newest two commits are kept: a reader that listed the commits just
-    * before this publish can still open the one it picked. */
+  /** Publish `m` as the next manifest commit, then make it live. */
   private def publish(m: StoreManifest): Unit = {
-    val dir = commitDir(path)
-    val fs = fsOf(spark, dir)
-    Commits.publish(fs, dir, CommitPrefix, commit + 1, renderManifest(m))
+    Commits.publish(fsFor(spark, path), commitDir(path), CommitPrefix, commit + 1,
+      renderManifest(m))
     commit += 1
     manifest = m
-    Commits.prune(fs, dir, CommitPrefix, below = commit - 1)
   }
 
   /** Step one of a derived-index rebuild: publish `without`, the live
@@ -235,7 +223,7 @@ final class DocumentStore private (
     if (!(version >= 1 && version <= manifest.version)) throw new StorageException(
       s"version $version out of range 1..${manifest.version}")
     val dir = dirOf(version)
-    if (!fsFor(dir).exists(hadoopPath(dir))) throw new StorageException(
+    if (!fsFor(spark, dir).exists(hadoopPath(dir))) throw new StorageException(
       s"version $version already pruned (keepVersions=${config.keepVersions})")
     spark.read.schema(schema).parquet(dir)
   }
@@ -389,7 +377,7 @@ final class DocumentStore private (
     val dir = chunksDir(manifest.version)
     if (manifest.chunkSize > 0 && config.chunkSize == manifest.chunkSize &&
         config.chunkOverlap == manifest.chunkOverlap &&
-        fsFor(dir).exists(hadoopPath(dir)))
+        fsFor(spark, dir).exists(hadoopPath(dir)))
       Some(spark.read.schema(ChunkSchema).parquet(dir).select("id", "vec"))
     else None
   }
@@ -962,15 +950,10 @@ final class DocumentStore private (
       layoutFiles = layoutFiles,
       ivfBaselineMean = ivfBaseline,
       tuned = manifest.tuned))
-    // Snapshot retention: keepVersions versions stay on disk, the live
-    // one included, so readers holding an older snapshot (a long job
-    // planned against v-1) finish undisturbed — MVCC-style grace.
-    // Default 1 = prune the replaced version right after the publish.
-    // This instance's first write sweeps with a full listing (strays a
-    // previous process's crash left behind), later ones a bounded
-    // window.
-    Commits.sweepVersionDirs(fsFor(path), hadoopPath(path),
-      below = v - config.keepVersions + 1, full = fullSweepArmed.getAndSet(false))
+    // Retention (see Commits): keepVersions versions stay, the live one
+    // included.
+    Commits.sweep(fsFor(spark, path), hadoopPath(path))(
+      Commits.versionsBelow(v - config.keepVersions + 1))
     // Measured-recall auto-tuning (opt-in): every IVF snapshot build
     // re-measures the nprobe/recall trade-off on the fresh clustering
     // and persists the curve; searches pick up the choice via
@@ -987,11 +970,9 @@ final class DocumentStore private (
   // ------------------------------------------------------------------
 
   private def hadoopPath(s: String) = new Path(s)
-  private def fsFor(s: String) =
-    hadoopPath(s).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def writeBloom(v: Long, bloom: BloomFilter): Unit = {
-    val out = fsFor(bloomPath(v)).create(hadoopPath(bloomPath(v)), true)
+    val out = fsFor(spark, bloomPath(v)).create(hadoopPath(bloomPath(v)), true)
     try bloom.writeTo(out) finally out.close()
   }
 
@@ -999,7 +980,7 @@ final class DocumentStore private (
     * the doubles, centroid by centroid. */
   private def writeCentroids(v: Long, model: IvfIndex.Model): Unit = {
     val out = new java.io.DataOutputStream(
-      fsFor(centroidsPath(v)).create(hadoopPath(centroidsPath(v)), true))
+      fsFor(spark, centroidsPath(v)).create(hadoopPath(centroidsPath(v)), true))
     try {
       out.writeInt(model.nlist)
       out.writeInt(model.centroids.head.length)
@@ -1011,14 +992,14 @@ final class DocumentStore private (
     if (manifest.bloomExpected == 0L) None
     else {
       val p = bloomPath(manifest.version)
-      val in = fsFor(p).open(hadoopPath(p))
+      val in = fsFor(spark, p).open(hadoopPath(p))
       try Some(BloomFilter.readFrom(in)) finally in.close()
     }
 
   /** Count the `part-*` data files under `dir` (recursive — clustered
     * layouts nest them under partition dirs). One listing, no data IO. */
   private def countDataFiles(dir: String): Long = {
-    val fs = fsFor(dir)
+    val fs = fsFor(spark, dir)
     if (!fs.exists(hadoopPath(dir))) 0L
     else {
       var files = 0L
@@ -1508,7 +1489,7 @@ final class DocumentStore private (
     if (!m.pqFor.contains(m.count)) None
     else {
       val dir = pqDir(m.version)
-      val books = spark.read.parquet(s"$dir/codebooks")
+      val books = spark.read.schema(PqCodebookSchema).parquet(s"$dir/codebooks")
         .orderBy("sub", "code").collect()
         .groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
         .map(_._2.sortBy(_.getAs[Int]("code"))
@@ -1517,9 +1498,11 @@ final class DocumentStore private (
       val rot =
         if (!m.pqRotated) None
         else Some(PqIndex.MatrixRotation(
-          spark.read.parquet(s"$dir/rotation").orderBy("idx").collect()
+          spark.read.schema(PqRotationSchema).parquet(s"$dir/rotation").orderBy("idx")
+            .collect()
             .map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq))
-      Some((PqIndex.Model(books), spark.read.parquet(s"$dir/codes"), rot))
+      Some((PqIndex.Model(books), spark.read.schema(PqCodesSchema).parquet(s"$dir/codes"),
+        rot))
     }
   }
 
@@ -1676,7 +1659,7 @@ final class DocumentStore private (
     if (snap.nlist > 0) {
       Some(IvfIndex.modelCached(s"$path#centroids", snap.version) {
         val p = centroidsPath(snap.version)
-        val in = new java.io.DataInputStream(fsFor(p).open(hadoopPath(p)))
+        val in = new java.io.DataInputStream(fsFor(spark, p).open(hadoopPath(p)))
         try {
           val nlist = in.readInt()
           val dim = in.readInt()
@@ -2129,6 +2112,10 @@ object DocumentStore {
     "doc_id BIGINT, text STRING, metadata MAP<STRING, STRING>, payload_json STRING")
   private val KeyTableSchema = StructType.fromDDL("k STRING, id BIGINT")
   private val ChunkSchema = StructType.fromDDL("id BIGINT, vec ARRAY<DOUBLE>")
+  // The PQ index tables buildPqIndex writes.
+  private val PqCodebookSchema = StructType.fromDDL("sub INT, code INT, centroid ARRAY<DOUBLE>")
+  private val PqRotationSchema = StructType.fromDDL("idx INT, row ARRAY<DOUBLE>")
+  private val PqCodesSchema = StructType.fromDDL("id BIGINT, codes ARRAY<INT>")
   /** A driver batch's new rows before the shared embed projection. */
   private val LocalRowSchema = StructType(Seq(StructField("id", LongType, nullable = false),
     StructField("text", StringType), StructField("metadata", MapType(StringType, StringType))))
@@ -2280,16 +2267,13 @@ object DocumentStore {
 
   private val CommitPrefix = "manifest_"
   private def commitDir(path: String) = new Path(s"$path/_commits")
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private[store] def readManifest(spark: SparkSession, path: String): Option[StoreManifest] =
     readCommit(spark, path).map(_._2)
 
   /** The latest manifest commit: its number and the manifest. */
   private def readCommit(spark: SparkSession, path: String): Option[(Long, StoreManifest)] = {
-    val dir = commitDir(path)
-    Commits.latest(fsOf(spark, dir), dir, CommitPrefix)
+    Commits.latest(fsFor(spark, path), commitDir(path), CommitPrefix)
       .map { case (n, txt) => n -> parseManifest(txt) }
   }
 
@@ -2316,13 +2300,13 @@ object DocumentStore {
 
   private[store] def deleteDir(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, dir)
     if (fs.exists(p)) fs.delete(p, true)
   }
 
   private[store] def dirSize(spark: SparkSession, dir: String): Long = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, dir)
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 

@@ -2,12 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.embed.Embedder
 import graft.store.{Commits, DocumentStore}
+import graft.store.Commits.fsFor
 
 /** Structured Streaming operators: continuous ingest into the document
   * store, watermarked windowed aggregation, and stateful 30-minute-gap
@@ -43,12 +45,11 @@ object StreamingOps {
     * into a versioned parquet table via [[graft.ops.Mutations.applyCdc]]
     * — the streaming path that keeps a training corpus in sync with an
     * operational source. Copy-on-write: every batch writes snapshot dir
-    * `v{n+1}` then publishes pointer commit `_commits/pointer_{n+1}`
-    * through [[graft.store.Commits]]; readers take the highest commit,
-    * so they always land on a complete version, and a snapshot dir
-    * written without its commit (a crash in between) stays invisible
-    * until the replayed batch overwrites it. Batch 0 against an absent
-    * table bootstraps from the non-delete change rows.
+    * `v{n+1}`, publishes pointer commit `_commits/pointer_{n+1}` and
+    * sweeps, under the one publish-and-sweep rule of
+    * [[graft.store.Commits]] (which also holds the crash reasoning and
+    * the single-writer-per-table requirement). Batch 0 against an
+    * absent table bootstraps from the non-delete change rows.
     *
     * `orderCols`: when a micro-batch can carry SEVERAL changes for one
     * key (any real CDC feed), pass the change-sequence columns — each
@@ -60,22 +61,14 @@ object StreamingOps {
     * at-most-one-change-per-key-per-batch.
     *
     * `keepVersions` counts the snapshots kept BEHIND the live one:
-    * after publishing version n the batch deletes every version below
+    * after publishing version n the batch sweeps every version below
     * n - keepVersions, so keepVersions = 1 keeps the live version plus
-    * the one it replaced (reader grace). A snapshot per micro-batch
-    * would otherwise grow storage without bound. */
+    * the one it replaced (reader grace). */
   def cdcApplyStream(changes: DataFrame, tablePath: String, keys: Seq[String],
                      checkpointDir: String, opCol: String = "op",
                      orderCols: Seq[String] = Nil,
                      keepVersions: Int = 2):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    // One full sweep per stream (re)start: the steady-state sweep below
-    // probes a bounded window, so versions stranded by missed sweeps
-    // (crash-looping stream, table produced before the sweep existed)
-    // would otherwise leak forever. A directory LISTING here is
-    // per-start, not per-batch, so its O(versions) cost never lands on
-    // the hot loop.
-    val fullSweepArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
     changes.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
@@ -98,13 +91,7 @@ object StreamingOps {
           merged.write.mode("overwrite").parquet(s"$tablePath/v$next")
           val fs = fsFor(spark, tablePath)
           publishCdcPointer(fs, tablePath, next)
-          // EXCLUSIVE cutoff: versions next-keepVersions .. next survive
-          // as the reader-grace window — deleting AT the cutoff would
-          // leave only keepVersions-1 snapshots behind the pointer and
-          // yank the just-replaced version from under a reader that
-          // resolved the pointer moments before the publish.
-          Commits.sweepVersionDirs(fs, new org.apache.hadoop.fs.Path(tablePath),
-            below = next - keepVersions, full = fullSweepArmed.getAndSet(false))
+          Commits.sweep(fs, new Path(tablePath))(Commits.versionsBelow(next - keepVersions))
         }
       }
       .start()
@@ -117,21 +104,11 @@ object StreamingOps {
       .map(v => spark.read.parquet(s"$tablePath/v$v"))
 
   private val CdcPrefix = "pointer_"
-  private def cdcCommitDir(tablePath: String) =
-    new org.apache.hadoop.fs.Path(s"$tablePath/_commits")
+  private def cdcCommitDir(tablePath: String) = new Path(s"$tablePath/_commits")
 
-  /** Point readers at snapshot `v<v>`: publish pointer commit `v`,
-    * keeping the newest two commits (a reader that listed them just
-    * before this publish can still resolve the one it picked). */
-  private[streaming] def publishCdcPointer(fs: org.apache.hadoop.fs.FileSystem,
-                                           tablePath: String, v: Long): Unit = {
+  /** Point readers at snapshot `v<v>`: publish pointer commit `v`. */
+  private[streaming] def publishCdcPointer(fs: FileSystem, tablePath: String, v: Long): Unit =
     Commits.publish(fs, cdcCommitDir(tablePath), CdcPrefix, v, v.toString)
-    Commits.prune(fs, cdcCommitDir(tablePath), CdcPrefix, below = v - 1)
-  }
-
-  private def fsFor(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The version the highest pointer commit names (commit n = v<n>). */
   private def currentCdcVersion(spark: SparkSession, tablePath: String): Option[Long] =
@@ -768,8 +745,8 @@ object StreamingOps {
     * replay proceeds down the normal path.
     *
     * Dir pruning: `batch > hwm` — per-batch dirs at or below the mark
-    * may still exist mid-compaction or through the sweep's grace cycle
-    * (the blob is written and published BEFORE the dirs are deleted) —
+    * may still exist mid-compaction or after a crashed sweep (the blob
+    * is written and published BEFORE the dirs are deleted) —
     * reading both would only duplicate rows, which the drop-set
     * distinct absorbs, but excluding them keeps the scan pruned. */
   private def readGateIndex(spark: SparkSession, indexPath: String,
@@ -788,7 +765,7 @@ object StreamingOps {
         org.apache.spark.sql.types.LongType))
     val dataCols = dataSchema.fieldNames.toSeq.map(col)
     val dirIndex =
-      if (fs.exists(new org.apache.hadoop.fs.Path(indexPath)))
+      if (fs.exists(new Path(indexPath)))
         spark.read.schema(indexSchema)
           .option("basePath", indexPath).parquet(indexPath)
           .where(col("batch") > st.hwm && col("batch") < batchId)
@@ -800,9 +777,7 @@ object StreamingOps {
     // sub-blobs the leveled compaction currently holds (bounded by
     // its maxL0/fraction rules) — one multi-path read, not one job
     // per blob.
-    val blobPaths =
-      (if (st.l1 >= 0L) Seq(compactDataPath(indexPath, st.l1)) else Nil) ++
-        st.l0.map(l0DataPath(indexPath, _))
+    val blobPaths = st.blobs.map(b => s"$indexPath/_compact/$b")
     if (blobPaths.isEmpty) dirIndex
     else dirIndex.unionAll(spark.read.schema(dataSchema)
       .parquet(blobPaths: _*))
@@ -850,20 +825,13 @@ object StreamingOps {
     * before returning is replay-safe: a replayed batch N re-creates
     * its own dir via overwrite. */
   private def reapDropScratch(spark: SparkSession, indexPath: String,
-                              batchId: Long): Unit = {
-    val fs = fsFor(spark, indexPath)
-    val dropsRoot = new org.apache.hadoop.fs.Path(s"$indexPath/_drops")
-    if (fs.exists(dropsRoot)) {
-      fs.listStatus(dropsRoot).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch=") &&
-            scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-              .exists(_ < batchId)) {
-          fs.delete(st.getPath, true); ()
-        }
-      }
-    }
-  }
+                              batchId: Long): Unit =
+    Commits.sweep(fsFor(spark, indexPath), new Path(s"$indexPath/_drops"))(
+      batchIdOf(_).exists(_ < batchId))
+
+  /** The id of a `batch=<id>` dir name. */
+  private def batchIdOf(name: String): Option[Long] =
+    if (name.startsWith("batch=")) name.stripPrefix("batch=").toLongOption else None
 
   /** Compact a band-gate index — LEVELED (r16 verdict #1): fold the
     * `batch=<j>` dirs with j <= the mark into a SMALL L0 sub-blob per
@@ -915,23 +883,18 @@ object StreamingOps {
     * it. A call whose clamped mark does not advance past the current
     * hwm (an idle index) is a silent no-op, not an error.
     *
-    * Crash-safe by ordering (each step idempotent, re-runnable):
-    * (1) write the new blob(s) to `_compact/v=<n+1>` / `_compact/
-    *     l0=<n+1>` (overwrite);
-    * (2) PUBLISH the marker `_compact/hwm_<n+1>` as a
-    *     [[graft.store.Commits]] commit (content: the mark plus the
-    *     live blob versions) — readers pick the HIGHEST marker, so the
-    *     old state stays authoritative until its atomic rename;
-    * (3) sweep merged batch dirs, then stale blobs/markers with ONE
-    *     CYCLE of grace (r16 ADVICE): the previous marker and every
-    *     blob it references SURVIVE this sweep and are reclaimed by
-    *     the NEXT compaction — a gate micro-batch that resolved the
-    *     old marker just before this publish keeps every blob it
-    *     plans to scan. A crash mid-(3) only leaves garbage that
-    *     readers ignore and the next compaction sweeps.
+    * Each compaction writes the new blob(s) to `_compact/v=<n+1>` /
+    * `_compact/l0=<n+1>` (overwrite), publishes the marker
+    * `_compact/hwm_<n+1>` (content: the mark plus the live blob
+    * versions) and sweeps, under the one publish-and-sweep rule of
+    * [[graft.store.Commits]] (which also holds the crash reasoning):
+    * the two kept markers name the live blobs, so the previous marker
+    * and every blob it names survive until the NEXT compaction — a gate
+    * micro-batch that resolved the old marker just before this publish
+    * keeps every blob it plans to scan.
     *
-    * CONCURRENT GATE CAVEAT (r16 verdict #3): the grace cycle protects
-    * the old marker's BLOBS, but the batch dirs this call merges are
+    * CONCURRENT GATE CAVEAT (r16 verdict #3): the kept previous marker
+    * protects its BLOBS, but the batch dirs this call merges are
     * deleted in the same sweep — a gate micro-batch that listed those
     * dirs under the old marker can lose them mid-scan and fail its
     * read task (transient: the stream restart replays the batch, whose
@@ -952,7 +915,7 @@ object StreamingOps {
 
   /** [[compactBandIndex]] for a SEMANTIC gate index
     * ([[semNearDupScreenBatch]]) — same leveled machinery, marker
-    * protocol, clamp, and grace cycle; only the row schema differs
+    * protocol, clamp, and retention; only the row schema differs
     * (cluster + vector + int8 screen payload instead of a band
     * string). */
   def compactSemIndex(spark: SparkSession, indexPath: String,
@@ -970,7 +933,7 @@ object StreamingOps {
     require(l0Fraction >= 0.0, s"l0Fraction $l0Fraction must be >= 0")
     require(maxL0 >= 1, s"maxL0 $maxL0 must be >= 1")
     val fs = fsFor(spark, indexPath)
-    val root = new org.apache.hadoop.fs.Path(indexPath)
+    val root = new Path(indexPath)
     if (!fs.exists(root)) return
     val prev = compactState(fs, indexPath)
     require(upToBatch > prev.hwm,
@@ -978,12 +941,8 @@ object StreamingOps {
         s"current high-water mark ${prev.hwm} — nothing to merge")
     // Clamp (r16 ADVICE): the mark never advances past the highest dir
     // id actually present — see the scaladoc contract.
-    val dirIds = fs.listStatus(root).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("batch="))
-        scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
+    val dirIds = fs.listStatus(root).toSeq
+      .flatMap(st => if (st.isDirectory) batchIdOf(st.getPath.getName) else None)
     val mark = math.min(upToBatch,
       math.max(dirIds.foldLeft(-1L)(math.max), prev.hwm))
     if (mark <= prev.hwm) return // idle index: nothing new to fold
@@ -992,14 +951,14 @@ object StreamingOps {
         org.apache.spark.sql.types.LongType))
     val dataCols = dataSchema.fieldNames.toSeq.map(col)
     // New intake = dirs in (hwm, mark]. Dirs at or below hwm can
-    // linger from a prior cycle's grace window or a crashed sweep;
-    // they are NOT re-read — their content is already in the blobs.
+    // linger from a crashed sweep; they are NOT re-read — their content
+    // is already in the blobs.
     val dirBands = spark.read.schema(indexSchema)
       .option("basePath", indexPath).parquet(indexPath)
       .where(col("batch") > prev.hwm && col("batch") <= mark)
       .select(dataCols: _*)
     def bytesOf(p: String): Long = {
-      val hp = new org.apache.hadoop.fs.Path(p)
+      val hp = new Path(p)
       if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
     }
     val l1Bytes = if (prev.l1 < 0L) 0L else bytesOf(compactDataPath(indexPath, prev.l1))
@@ -1013,8 +972,7 @@ object StreamingOps {
     val promote = prev.l1 < 0L || (l0Bytes + newBytes) > l0Fraction * l1Bytes
     val (l1Out, l0Out) =
       if (promote) {
-        val all = (if (prev.l1 < 0L) Nil
-          else Seq(compactDataPath(indexPath, prev.l1))) ++ l0Paths
+        val all = prev.blobs.map(b => s"$indexPath/_compact/$b")
         val merged =
           if (all.isEmpty) dirBands else dirBands.unionAll(readBlobs(all))
         merged.distinct().write.mode("overwrite")
@@ -1031,36 +989,13 @@ object StreamingOps {
           .parquet(l0DataPath(indexPath, nextVersion))
         (prev.l1, prev.l0 :+ nextVersion)
       }
-    // Publish: the marker commit is the atomic switch, so a concurrent
-    // gate read can never glimpse a created-but-unwritten marker.
-    val compactDir = new org.apache.hadoop.fs.Path(s"$indexPath/_compact")
+    val compactDir = new Path(s"$indexPath/_compact")
     Commits.publish(fs, compactDir, MarkerPrefix, nextVersion,
       s"$mark l1=$l1Out l0=${l0Out.mkString(";")}\n")
-    // Sweep: merged dirs first, then stale blobs/markers with one cycle
-    // of grace — version `prev.version` and every blob IT references
-    // survive until the next compaction (see the scaladoc's concurrent
-    // gate caveat); everything older, plus crash orphans no marker
-    // references, goes now.
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch=") &&
-          scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-            .exists(_ <= mark)) {
-        fs.delete(st.getPath, true); ()
-      }
-    }
-    Commits.prune(fs, compactDir, MarkerPrefix, below = prev.version)
-    val keepBlobs: Set[String] =
-      (if (l1Out >= 0L) Set(s"v=$l1Out") else Set.empty[String]) ++
-        l0Out.map(v => s"l0=$v") ++
-        (if (prev.l1 >= 0L) Set(s"v=${prev.l1}") else Set.empty[String]) ++
-        prev.l0.map(v => s"l0=$v")
-    fs.listStatus(compactDir).foreach { st =>
-      val n = st.getPath.getName
-      if ((n.startsWith("v=") || n.startsWith("l0=")) && !keepBlobs.contains(n)) {
-        fs.delete(st.getPath, true); ()
-      }
-    }
+    Commits.sweep(fs, root)(batchIdOf(_).exists(_ <= mark))
+    val live = (CompactState(mark, nextVersion, l1Out, l0Out).blobs ++ prev.blobs).toSet
+    Commits.sweep(fs, compactDir)(n =>
+      (n.startsWith("v=") || n.startsWith("l0=")) && !live(n))
   }
 
   /** Published compaction state of a band-gate index: the high-water
@@ -1068,21 +1003,22 @@ object StreamingOps {
     * the live L0 sub-blob versions. [[CompactState.never]] when never
     * compacted. */
   private[streaming] final case class CompactState(
-      hwm: Long, version: Long, l1: Long, l0: Seq[Long])
+      hwm: Long, version: Long, l1: Long, l0: Seq[Long]) {
+    /** The blob names under `_compact` this state reads. */
+    def blobs: Seq[String] = (if (l1 >= 0L) Seq(s"v=$l1") else Nil) ++ l0.map(v => s"l0=$v")
+  }
   private[streaming] object CompactState {
     val never: CompactState = CompactState(-1L, -1L, -1L, Nil)
   }
 
   /** Read the newest published [[CompactState]]. Readers pick the
-    * HIGHEST hwm_<n> marker — see [[compactBandIndex]]'s publish/sweep
-    * ordering for why one stale lower marker coexists by design (the
-    * grace cycle) and is safe to ignore. Marker content is
+    * HIGHEST hwm_<n> marker; the previous marker is kept by design (see
+    * [[compactBandIndex]]) and is safe to ignore. Marker content is
     * `<hwm> l1=<v|-1> l0=<v;v;...>`; a bare `<hwm>` (the pre-leveled
     * format) reads as L1 = the marker's own version, no L0 — indexes
     * compacted by the monolithic implementation stay readable. */
-  private def compactState(fs: org.apache.hadoop.fs.FileSystem,
-                           indexPath: String): CompactState = {
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/_compact")
+  private def compactState(fs: FileSystem, indexPath: String): CompactState = {
+    val dir = new Path(s"$indexPath/_compact")
     Commits.latest(fs, dir, MarkerPrefix).fold(CompactState.never) { case (v, content) =>
       val tokens = content.trim.split("\\s+").toSeq
       val hwm = tokens.head.toLong

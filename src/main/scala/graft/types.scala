@@ -90,13 +90,15 @@ final case class StoreConfig(
     nlist: Int = 0,
     nprobe: Int = 8,
     // Snapshot versions kept on disk, the live one INCLUDED: after
-    // publishing version v the store deletes every version at or below
-    // v - keepVersions. The default 1 keeps the live version only, so
-    // the just-replaced version dir goes right after the manifest
-    // commit — a reader pinned concurrently with an async mutation can
-    // then fail loudly with FileNotFound mid-operation (never wrong
-    // rows). Concurrent async mutation + read REQUIRES keepVersions >=
-    // 2; keep 1 only for single-writer, no-overlapping-reads usage.
+    // publishing version v the store sweeps every version at or below
+    // v - keepVersions, strays a crash left behind included (the one
+    // publish-and-sweep rule of graft.store.Commits). The default 1
+    // keeps the live version only, so the just-replaced version dir
+    // goes right after the manifest commit — a reader pinned
+    // concurrently with an async mutation can then fail loudly with
+    // FileNotFound mid-operation (never wrong rows). Concurrent async
+    // mutation + read REQUIRES keepVersions >= 2; keep 1 only for
+    // single-writer, no-overlapping-reads usage.
     keepVersions: Int = 1,
     // False-positive rate for the persisted ingest-dedup Bloom filter
     // (~1.2 bytes/doc at 0.01, driver/broadcast-resident). 0 disables —

@@ -53,6 +53,18 @@ class CommitsSpec extends SparkSpec {
     assert(!fs.exists(new Path(dir, ".c_2.tmp")))
   }
 
+  test("publishing an already-published commit number raises and keeps the first content") {
+    // the local file system a plain path resolves to, as a store uses it
+    val root = tmpDir("graft-commits-twice")
+    val dir = new Path(root, "_commits")
+    val fs = Commits.fsFor(spark, root)
+    Commits.publish(fs, dir, "c_", 0L, "first")
+    val e = intercept[StorageException](Commits.publish(fs, dir, "c_", 0L, "second"))
+    assert(e.getMessage.contains("c_0"), e.getMessage)
+    assert(Commits.latest(fs, dir, "c_").contains(0L -> "first"))
+    assert(Commits.list(fs, dir, "c_") == Seq(0L))
+  }
+
   test("a store manifest publish whose rename fails raises, naming both paths") {
     val path = s"${failingPath("graft-failrename-store")}/store"
     val e = intercept[StorageException] {

@@ -164,6 +164,13 @@ class DriverBatchSpec extends SparkSpec {
         assert(payload.schema == spark.read.parquet(s"$dir/v$v/payload").schema, name)
       }
       assert(store.essential.count() == docs.length, name)
+      // the PQ index tables, plain on the flat store, rotated on the IVF one
+      store.buildPqIndex(m = 8, ksub = 4, rotate = name == "IVF")
+      val (hits, pqJobs) = JobProbe.record(spark)(
+        store.similaritySearchPq("schema doc 3 in group 3", k = 3, candidates = 6).collect())
+      val inferring = pqJobs.filter(_.callSite.startsWith("parquet at "))
+      assert(inferring.isEmpty, s"$name: ${inferring.map(_.details).mkString("\n---\n")}")
+      assert(hits.length == 3, name)
     }
   }
 }

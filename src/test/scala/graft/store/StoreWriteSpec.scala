@@ -79,6 +79,26 @@ class StoreWriteSpec extends SparkSpec {
     assert(rebuilt.documentCount == 4)
   }
 
+  test("a stray version dir far below the cutoff goes with the next write of a running instance") {
+    val dir = tmp()
+    val cfg = StoreConfig(keepVersions = 2)
+    val store = DocumentStore.fromTexts(spark, dir, Seq("doc 0"), Nil, cfg, emb)
+    (1 to 11).foreach(i => store.addTexts(Seq(s"doc $i")))
+    val live = store.currentManifest.version
+    // The instance has written; a stray appears 10 versions below the
+    // next write's cutoff (live + 1 - keepVersions + 1 = live).
+    val stray = new java.io.File(s"$dir/v${live - 10}")
+    assert(!stray.exists())
+    Files.write(Files.createDirectories(stray.toPath.resolve("essential"))
+      .resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    val before = listing(s"$dir/v$live")
+    store.addTexts(Seq("doc 12"))
+    assert(!stray.exists(), s"v${live - 10} leaked")
+    assert(listing(s"$dir/v$live") == before, "the kept version changed")
+    assert(new java.io.File(s"$dir/v${live + 1}").isDirectory)
+    assert(DocumentStore.load(spark, dir, emb, cfg).documentCount == 13)
+  }
+
   test("verifyIntegrity reports a forged manifest count as count_mismatch") {
     val dir = tmp()
     DocumentStore.fromTexts(spark, dir, Seq("one doc", "two doc", "three doc"), Nil,
