@@ -606,48 +606,48 @@ object Dedup {
     * canonical document (the one with `id == component`) per duplicate
     * family — pairs alone under-delete (A~B, B~C must drop B AND C).
     *
-    * Algorithm: iterative min-label propagation — each round every node
-    * adopts min(own label, neighbours' labels); converges in
-    * O(component diameter) rounds. Near-dup graphs have tiny, shallow
-    * components, so 3-5 rounds settle real corpora; `maxIter` bounds
-    * pathological chains. Each round is one hash-shuffle join + agg on
-    * (node, label) pairs only — edges are never widened — and the label
-    * frontier is localCheckpoint'ed to cut lineage (plan growth, not
-    * data, is the usual iterative-Spark killer at scale). For graphs
-    * with continent-sized components, switch to large-star/small-star
-    * (Kiveris et al. 2014) — same primitives, O(log n) rounds.
-    *
     * Returns (node, component), component = min id in the node's
-    * component; only nodes that appear in `pairs` are returned.
+    * component; every node that appears in `pairs` is returned, one
+    * that occurs only in a self-pair (u == v) too.
     *
-    * Size-adaptive: a near-dup edge list is usually MUCH smaller than
-    * the corpus that produced it (it lists only suspected duplicates),
-    * so when it fits on the driver (`smallGraphThreshold` edges,
-    * default 1M — budget ~100-200 MB of driver heap: collected Rows
-    * box both longs, and the union-find map holds up to 2 entries per
-    * edge) the components are solved in one collect + union-find — one
-    * job instead of 2·diameter. Above the threshold the distributed
-    * propagation loop runs. Both paths produce identical labels
-    * (asserted in DedupSpec). */
+    * Two solvers, chosen by graph size. A near-dup edge list is usually
+    * MUCH smaller than the corpus that produced it (it lists only
+    * suspected duplicates), so when it fits on the driver
+    * (`smallGraphThreshold` edges, default 1M — budget ~100-200 MB of
+    * driver heap: collected Rows box both longs, and the union-find map
+    * holds up to 2 entries per edge) the components are solved in one
+    * collect + union-find. Above the threshold, alternating LARGE-STAR /
+    * SMALL-STAR rewrites (Kiveris et al. 2014, "Connected Components in
+    * MapReduce and Beyond" — PAPERS.md) converge in O(log n) rounds
+    * regardless of component diameter (boilerplate families can chain
+    * millions of near-identical pages). Each round is one hash-shuffle
+    * groupBy for per-node minima + one join to rewrite edges, on the
+    * edge set only:
+    *  - large-star: every neighbor v > u re-points to
+    *    m = min(Γ(u) ∪ {u}) — tall trees flatten from above;
+    *  - small-star: every neighbor v ≤ u (and u itself) points to m —
+    *    the rest flatten.
+    * Self-loops drop each round; convergence = the small-star round is
+    * a fixpoint (set-equal edges), after which every node's edge points
+    * at its component min; `maxIter` bounds the rounds. Both solvers
+    * produce identical labels (asserted in DedupSpec). */
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
                           idBCol: String = "id_b", maxIter: Int = 25,
                           smallGraphThreshold: Long = 1L << 20): DataFrame = {
     require(smallGraphThreshold >= 0 && smallGraphThreshold < Int.MaxValue - 1,
       "smallGraphThreshold must fit a driver collect")
     val spark = pairs.sparkSession
-    val edges = pairs
-      .select(idAsLong(col(idACol), "connectedComponents").as("src"),
-        idAsLong(col(idBCol), "connectedComponents").as("dst"))
+    val raw = pairs
+      .select(idAsLong(col(idACol), "connectedComponents").as("u"),
+        idAsLong(col(idBCol), "connectedComponents").as("v"))
       // ONE evaluation of the (often expensive) upstream pair detector:
-      // the size probe and whichever solver branch runs both read this
-      // materialization. The old shape executed the detector for a
-      // 1M-row probe COLLECT, threw the rows away on the large path,
-      // and ran the detector again for the propagation rounds.
+      // the size probe and whichever solver runs both read this
+      // materialization.
       .localCheckpoint(true)
 
-    val cnt = edges.limit((smallGraphThreshold + 1).toInt).count()
+    val cnt = raw.limit((smallGraphThreshold + 1).toInt).count()
     if (cnt <= smallGraphThreshold) {
-      val head = edges.collect()
+      val head = raw.collect()
       // Driver union-find (path-halving; component = min id via min-root merge).
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x0: Long): Long = {
@@ -666,75 +666,11 @@ object Dedup {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       import spark.implicits._
-      parent.keys.toSeq.map(n => (n, find(n))).toDF("node", "component")
-    } else {
-      val sym = edges
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .localCheckpoint(true) // reused every round — one materialization
-      var labels = sym.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val nbrMin = sym.join(labels, sym("dst") === labels("node"))
-          .groupBy(col("src").as("n2")).agg(min("label").as("nbr"))
-        val stepped = labels.join(nbrMin, labels("node") === nbrMin("n2"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
-            (coalesce(col("nbr"), col("label")) < col("label")).as("changed"))
-          .localCheckpoint(true)
-        converged = stepped.where(col("changed")).isEmpty
-        labels = stepped.select("node", "label")
-        iter += 1
-      }
-      if (!converged)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"connectedComponents stopped at maxIter=$maxIter without " +
-            "converging: labels are min-within-" + maxIter + "-hops, not " +
-            "component minima. Raise maxIter or use connectedComponentsStar " +
-            "(O(log n) rounds).")
-      labels.select(col("node"), col("label").as("component"))
+      return parent.keys.toSeq.map(n => (n, find(n))).toDF("node", "component")
     }
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR
-    * rewrites (Kiveris et al. 2014, "Connected Components in MapReduce
-    * and Beyond" — PAPERS.md): converges in O(log n) rounds regardless
-    * of component DIAMETER, where [[connectedComponents]]'s label
-    * propagation needs O(diameter) rounds — this is the escalation
-    * path for continent-sized components (e.g. boilerplate families
-    * that chain millions of near-identical pages).
-    *
-    * Each round is the same primitive pair as propagation (one
-    * hash-shuffle groupBy for per-node minima + one join to rewrite
-    * edges), operating on the edge set only:
-    *  - large-star: every neighbor v > u re-points to
-    *    m = min(Γ(u) ∪ {u}) — tall trees flatten from above;
-    *  - small-star: every neighbor v ≤ u (and u itself) points to m —
-    *    the rest flatten.
-    * Self-loops drop each round; convergence = the small-star round is
-    * a fixpoint (set-equal edges), after which every node's edge points
-    * at its component min. Output matches [[connectedComponents]]
-    * exactly (asserted in DedupSpec on random graphs and a long chain).
-    *
-    * Returns (node, component), component = min id; only nodes
-    * appearing in `pairs` are returned. */
-  def connectedComponentsStar(pairs: DataFrame, idACol: String = "id_a",
-                              idBCol: String = "id_b",
-                              maxIter: Int = 30): DataFrame = {
-    val raw = pairs
-      .select(idAsLong(col(idACol), "connectedComponentsStar").as("u"),
-        idAsLong(col(idBCol), "connectedComponentsStar").as("v"))
-    // Every node in the INPUT must appear in the output, including one
-    // that only occurs in self-pairs (u == v) — the union-find path
-    // registers those too, and the parity guarantee holds to it.
     val allNodes = raw.select(col("u").as("node"))
       .union(raw.select(col("v").as("node"))).distinct()
-    var edges = raw
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    var edges = raw.where(col("u") =!= col("v")).distinct().localCheckpoint(true)
 
     def symmetric(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct()
@@ -776,12 +712,11 @@ object Dedup {
     }
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponentsStar stopped at maxIter=$maxIter without a " +
+        s"connectedComponents stopped at maxIter=$maxIter without a " +
           "fixpoint; labels may be incomplete. O(log n) rounds suffice in " +
           "theory - raise maxIter.")
-    val sym = symmetric(edges)
     allNodes.join(
-        minsOf(sym).select(col("u").as("node"), col("m")), Seq("node"), "left")
+        minsOf(symmetric(edges)).select(col("u").as("node"), col("m")), Seq("node"), "left")
       .select(col("node"), coalesce(col("m"), col("node")).as("component"))
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructType}
 
 import graft.functions.TextFunctions
 
@@ -128,7 +129,7 @@ object TextSearch {
     // ONE tokenize+explode+aggregate pass over the corpus; df and
     // corpus stats then derive from the (already aggregated, smaller)
     // written postings instead of re-scanning the raw text.
-    docs.where(col(textCol).isNotNull)
+    val postings = docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
         TextFunctions.tokens(col(textCol)).as("toks"))
       .select(col("id"), size(col("toks")).cast("double").as("dl"),
@@ -146,10 +147,11 @@ object TextSearch {
       .repartition(numFiles, col("term"))
       .groupBy("term", "id", "dl").agg(count(lit(1)).cast("double").as("tf"))
       .sortWithinPartitions("term", "id")
-      .write.mode("overwrite").parquet(s"$dir/postings")
-    val postings = spark.read.parquet(s"$dir/postings")
-    // df = postings rows per term (one row per doc containing it)
-    postings.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+    postings.write.mode("overwrite").parquet(s"$dir/postings")
+    // df = postings rows per term (one row per doc containing it), over
+    // the written postings (read with their known schema: no footer job)
+    val written = spark.read.schema(postings.schema).parquet(s"$dir/postings")
+    written.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
       .repartition(math.max(numFiles / 4, 1), col("term"))
       .sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$dir/terms")
@@ -158,7 +160,7 @@ object TextSearch {
     // filter null text); dl is constant per doc and integral, so the
     // long-sum keeps n_docs/avgdl bit-identical to the scan-time
     // aggregate.
-    postings.groupBy("id").agg(first(col("dl")).as("dl"))
+    written.groupBy("id").agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).cast("double").as("n_docs"),
         (sum(col("dl").cast("long")).cast("double") /
           count(lit(1)).cast("double")).as("avgdl"))
@@ -182,14 +184,25 @@ object TextSearch {
   def searchIndexScores(spark: org.apache.spark.sql.SparkSession, dir: String,
                         queryTerms: Seq[String],
                         k1: Double = 1.2, b: Double = 0.75,
-                        idCol: String = "id"): DataFrame = {
+                        idCol: String = "id"): DataFrame =
+    indexScores(spark, dir, queryTerms, k1, b, idCol,
+      spark.read.parquet(s"$dir/postings").schema("id").dataType)
+
+  /** [[searchIndexScores]] over an index whose ids are of `idType`:
+    * every table is read with its known schema (an inferring read runs
+    * a footer job per table). */
+  private[graft] def indexScores(spark: org.apache.spark.sql.SparkSession, dir: String,
+                                 queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
+                                 idCol: String = "id", idType: DataType): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     val terms = queryTerms.distinct
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = spark.read.schema(new StructType()
+        .add("term", StringType).add("id", idType).add("dl", DoubleType).add("tf", DoubleType))
+      .parquet(s"$dir/postings")
       .where(col("term").isin(terms: _*))
-    val dfreq = spark.read.parquet(s"$dir/terms")
+    val dfreq = spark.read.schema("term STRING, df DOUBLE").parquet(s"$dir/terms")
       .where(col("term").isin(terms: _*))
-    val stats = spark.read.parquet(s"$dir/stats")
+    val stats = spark.read.schema("n_docs DOUBLE, avgdl DOUBLE").parquet(s"$dir/stats")
     postings.join(broadcast(dfreq), "term")
       .crossJoin(broadcast(stats))
       .withColumn("w",

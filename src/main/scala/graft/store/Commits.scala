@@ -15,11 +15,11 @@ import graft.StorageException
   *
   * A commit is a write-once file `<dir>/<prefix><n>`:
   *  - '''publish''' writes the content to the dot-prefixed temp file
-  *    `<dir>/.<prefix><n>.tmp` and renames it into place — a reader
-  *    never sees a half-written commit, and a crash leaves only a temp
-  *    file no reader looks at. It then keeps the newest two commits: a
-  *    reader that listed the commits just before the publish can still
-  *    open the one it picked;
+  *    `<dir>/.<prefix><n>.tmp` and renames it into place unless commit
+  *    `n` exists — a reader never sees a half-written commit, and a
+  *    crash leaves only a temp file no reader looks at. It then keeps
+  *    the newest two commits: a reader that listed the commits just
+  *    before the publish can still open the one it picked;
   *  - '''read''': the highest published `n` wins, so the previous
   *    commit stays authoritative until the rename lands and there is
   *    no moment with no commit at all.
@@ -41,15 +41,18 @@ import graft.StorageException
   * lists its whole directory, so the next write collects them however
   * old they are.
   *
-  * '''File-system requirement:''' renaming a file onto an existing file
-  * must fail (return false or throw), as it does on HDFS and on
-  * Hadoop's checksummed local file system (`LocalFileSystem`, and
-  * Hive's `ProxyLocalFileSystem` over it, the `file:` default when Hive
-  * is on the classpath). That makes a commit number put-if-absent: of
-  * two writers that publish the same `n`, the second rename fails and
-  * raises, and the first commit's content stands (`CommitsSpec` pins
-  * it). `RawLocalFileSystem` does NOT qualify: its rename replaces an
-  * existing file.
+  * '''Put-if-absent:''' publish refuses a commit number that exists
+  * before it renames, because a `FileSystem.rename` onto an existing
+  * file replaces it on some file systems (`RawLocalFileSystem`). Of two
+  * writers that publish the same `n`, the second raises, and the first
+  * commit's content stands (`CommitsSpec` pins it on the default local
+  * file system and on `RawLocalFileSystem`). Where the rename itself
+  * refuses an existing destination (HDFS, Hadoop's checksummed local
+  * file system) that holds for two publishes that race; where it
+  * replaces, two publishes racing between the check and the rename can
+  * both succeed. (`FileContext.rename` without `OVERWRITE` checks
+  * before it renames too on the local file systems, and costs a
+  * `readlink` process per status it takes there.)
   *
   * '''One writer per `dir'''': the store detects a second writer before
   * it writes (`DocumentStore.exclusive`); the CDC pointer is
@@ -80,15 +83,15 @@ private[graft] object Commits {
     }
 
   /** Publish `content` as commit `n`, then keep the newest two commits.
-    * A rename that reports failure raises, naming both paths: a
-    * silently unpublished commit would leave readers on the previous
-    * state with no error anywhere. */
+    * An existing commit `n`, or a rename that reports failure, raises,
+    * naming both paths: a silently unpublished commit would leave
+    * readers on the previous state with no error anywhere. */
   def publish(fs: FileSystem, dir: Path, prefix: String, n: Long, content: String): Unit = {
     val tmp = new Path(dir, s".$prefix$n.tmp")
     val dst = new Path(dir, s"$prefix$n")
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(UTF_8)) finally out.close()
-    if (!fs.rename(tmp, dst))
+    if (fs.exists(dst) || !fs.rename(tmp, dst))
       throw new StorageException(s"commit rename failed: $tmp -> $dst")
     prune(fs, dir, prefix, below = n - 1)
   }

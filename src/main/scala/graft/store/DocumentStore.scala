@@ -38,8 +38,8 @@ import graft.store.Commits.fsFor
   * #                               curves and last tuning params
   * <path>/v<N>/essential/        # parquet: id, text, source, category,
   * #                               metadata_hash, vec [, cluster=...]
-  * <path>/v<N>/centroids         # binary (IVF only): nlist, dim, then
-  * #                               the centroid doubles in list order
+  * <path>/v<N>/centroids         # model file (IVF only): the centroid
+  * #                               matrix, nlist × dim
   * <path>/v<N>/payload/          # parquet: doc_id, text, metadata,
   * #                               payload_json (full-fidelity record)
   * <path>/v<N>/dedup_bloom.bin   # ingest-dedup Bloom filter
@@ -47,10 +47,16 @@ import graft.store.Commits.fsFor
   * <path>/v<N>/chunks/           # parquet (multi-vector only): id, vec
   * <path>/v<N>/lexical/          # optional BM25 index (postings, terms,
   * #                               stats), live iff the manifest says so
-  * <path>/v<N>/pq/               # optional PQ index (codebooks, codes
-  * #                               [, rotation]), live iff the manifest
-  * #                               says so
+  * <path>/v<N>/pq/model          # optional PQ index: model file (the m
+  * #                               codebooks [, the OPQ rotation]) and
+  * <path>/v<N>/pq/codes/          # parquet: id, codes; live iff the
+  * #                               manifest says so
   * }}}
+  *
+  * A model file is driver-written binary: a sequence of matrices, each
+  * its row and column counts (ints) and then its doubles row by row.
+  * One writer lays out a version's tables ([[writeTables]]), for a new
+  * version and for an in-place append alike.
   *
   * A derived-index build publishes the manifest without the index's
   * entry, writes the index in place, then publishes the entry, so a
@@ -156,6 +162,7 @@ final class DocumentStore private (
   private def dedupKeysDir(v: Long) = s"${versionDir(v)}/dedup_keys"
   private def lexicalDir(v: Long) = s"${versionDir(v)}/lexical"
   private def pqDir(v: Long) = s"${versionDir(v)}/pq"
+  private def pqModelPath(v: Long) = s"${pqDir(v)}/model"
   private def chunksDir(v: Long) = s"${versionDir(v)}/chunks"
 
   // --- snapshot pinning for multi-step reads -------------------------
@@ -614,7 +621,7 @@ final class DocumentStore private (
     * phantom (k, id) from a crashed append matches in step 2, fetches
     * nothing in step 3 (the id never published), and the row is
     * re-admitted. The key table always exists next to the Bloom: the
-    * same writeVersion writes both before the manifest publishes. More
+    * same writeTables writes both before the manifest publishes. More
     * than [[DocumentStore.MaxConfirmKeys]] maybe keys / candidate ids
     * (a batch that is mostly dups — corpus-sized work is then inherent)
     * run the plain anti-join. The key probe and the id fetch are the
@@ -695,9 +702,9 @@ final class DocumentStore private (
     * First-ever append delegates to the snapshot path (creates v1).
     *
     * Failure atomicity: all appends run off one CACHED row set
-    * (identical rows in every store by construction), payload and (in
-    * multi-vector mode) chunk rows land BEFORE essential, and the
-    * manifest count is bumped last — so a crash mid-append never
+    * (identical rows in every store by construction), the tables land
+    * in [[writeTables]]' order (essential last), and the manifest count
+    * is bumped last — so a crash mid-append never
     * publishes essential rows without their payload; it leaves either
     * nothing or orphan payload/chunk rows at ids >= the live count,
     * which the next snapshot rewrite (any add, delete, upsert or
@@ -720,76 +727,11 @@ final class DocumentStore private (
     val (base, nNew) = buildNewRows(staged, Some(existing), offset, bloom)
     try {
       if (nNew > 0) {
-        // Fold the new keys into the persisted Bloom filter BEFORE the
-        // essential rows publish (batch-sized driver work; capacity was
-        // sized at snapshot time, so sustained appends degrade fpp
-        // gracefully until the next compact()/writeVersion rebuilds
-        // it). Ordering is load-bearing for crash-retry dedup: a bloom
-        // that OVERAPPROXIMATES published texts only sends extra rows
-        // to the confirm anti-join, but a crash after the essential
-        // write with a stale bloom would make a retried batch MISS the
-        // probe and skip the anti-join — re-ingesting every text.
-        bloom.foreach { b =>
-          val keys = base.where(col("text").isNotNull)
-            .select(sha2(col("text"), 256).as("k"))
-          // Fold executor-side: build the batch's keys into a filter
-          // with the SAME creation params as the persisted one (from
-          // the manifest) — identical (expectedNumItems, fpp) yields
-          // identical numBits/numHashFunctions, so the bitwise
-          // mergeInPlace is exact. The driver receives ONE bloom-sized
-          // blob from the aggregate instead of every batch key — a
-          // 100M-row ingest batch no longer pins the driver. An
-          // all-null-text batch has no keys: Spark's aggregate then
-          // yields no filter at all (an NPE) and there is nothing to fold.
-          try b.mergeInPlace(keys.stat.bloomFilter("k", manifest.bloomExpected, manifest.bloomFpp))
-          catch { case _: NullPointerException => () }
-          writeBloom(manifest.version, b)
-          // Key-table append (every Bloom store has one), also BEFORE
-          // any row publishes — the same overapproximation discipline:
-          // a phantom (k, id) left by a crash here matches in
-          // confirmDups step 2 but fetches no essential row in step 3,
-          // so the retried batch is re-admitted — while appending AFTER
-          // publish would let a crash UNDERapproximate and re-ingest
-          // published texts as duplicates. One batch-sized file per
-          // ingest; writeVersion regenerates the sorted layout
-          // (compact() is the heal for accumulated small key files too).
-          base.select(sha2(col("text"), 256).as("k"), col("id"))
-            .write.mode("append").parquet(dedupKeysDir(manifest.version))
-        }
-        payloadProjection(base)
-          .write.mode("append").parquet(payloadDir(manifest.version))
-        val added = essentialProjection(base)
-        // Multi-vector mode: O(batch) chunk append, matching the chunk
-        // table's layout (clustered iff the store is clustered).
-        // Ordered BEFORE the essential append for the same reason
-        // payload is: a crash here leaves orphan chunk rows for ids
-        // that never published — invisible (searchMaxSim's enrichment
-        // drops hits with no essential row) — and never publishes
-        // searchable docs that silently have no chunks. A retried
-        // batch re-appends the same chunk rows (duplicate n_chunks
-        // until compact(), which rebuilds the chunk table — the same
-        // heal as duplicate payload rows).
-        val centroidModel = loadCentroids()
-        // Staleness ledger: this batch's assignment distances, observed
-        // on the essential append itself, fold into the drift ledger in
-        // the same commit that publishes the new count.
-        val drift = org.apache.spark.sql.Observation()
-        def appendTo(df: DataFrame, dir: String, observed: Boolean): Unit = centroidModel match {
-          case Some(model) =>
-            val clustered = df.withColumn("cluster", model.assignCol(col("vec")))
-            val d = model.distToCol(col("vec"), col("cluster"))
-            (if (observed) clustered.observe(drift, count(d).as("n"),
-                sum(coalesce(d, lit(0.0))).as("s")) else clustered)
-              .write.mode("append").partitionBy("cluster").parquet(dir)
-          case None => df.write.mode("append").parquet(dir)
-        }
-        if (manifest.chunkSize > 0)
-          appendTo(chunkRows(added), chunksDir(manifest.version), observed = false)
-        appendTo(added, essentialDir(manifest.version), observed = true)
-        val (dn, ds) = centroidModel.fold((0L, 0.0)) { _ =>
-          val r = drift.get
-          (r("n").asInstanceOf[Long], Option(r("s")).fold(0.0)(_.asInstanceOf[Double]))
-        }
+        val rows = essentialProjection(base)
+        // The batch's assignment distances to the live centroids fold
+        // into the drift ledger in the commit that publishes the count.
+        val (dn, ds) = writeTables(manifest, rows, payloadProjection(base),
+          if (manifest.chunkSize > 0) Some(chunkRows(rows)) else None, loadCentroids(), bloom)
         publish(manifest.copy(count = offset + nNew,
           ivfAppendedN = manifest.ivfAppendedN + dn,
           ivfAppendedSum = manifest.ivfAppendedSum + ds))
@@ -830,9 +772,12 @@ final class DocumentStore private (
     * `carriedChunks` (multi-vector mode): pre-embedded chunk rows
     * (id, vec) — already renumbered to the NEW snapshot's ids — that
     * replace the from-scratch chunk+embed rebuild ([[rewrite]] carries
-    * the previous snapshot's table through its id map); None rebuilds
-    * from the essential text (first build, compact(), chunk-config
-    * change).
+    * the previous snapshot's table through its id map). Chunk VECTORS
+    * are data, not derived state, so a delete or upsert embeds nothing
+    * over the standing corpus (the reference re-embeds everything on
+    * delete, index.py:404-440). None rebuilds from the essential text:
+    * first build, compact() (also the heal for crash-orphaned duplicate
+    * chunk rows, as for payload), or a chunk-config change.
     *
     * `essentialDf` may carry extra columns (the renumbering's __old_id);
     * only the essential projection is written. A frame the caller has
@@ -845,111 +790,31 @@ final class DocumentStore private (
     val cached = if (owned) essentialDf.cache() else essentialDf
     val ess = essentialProjection(cached)
     val count = ess.count()
-
-    var modelOpt: Option[IvfIndex.Model] = None
-    var ivfBaseline = 0.0
-    if (IvfIndex.shouldUseIvf(config.nlist, count)) {
-      // config.nlist = -1 (AUTO) fits with nlist = 0, the IvfIndex
-      // auto mode — the cluster count derives from the corpus via the
-      // √n rule, and the manifest records the model's ACTUAL nlist
-      // (nlistUsed below), so load/search/tune see a concrete value.
-      val model = IvfIndex.fit(ess, "vec",
-        if (config.nlist == -1) 0 else config.nlist, rowCount = count, dim = embedder.dim)
-      modelOpt = Some(model)
-      // Staleness baseline for incremental ingest: the fit-time mean
-      // assignment distance (per-row k-means cost) over every essential
-      // row, observed on the essential write itself. Appends against
-      // frozen centroids accumulate their own mean next to it in the
-      // manifest; the ratio is the drift gate (see needsCompaction).
-      val baseline = org.apache.spark.sql.Observation()
-      // Within each cluster partition, sort by id so point lookups still
-      // prune row groups on the id min/max statistics.
-      ess.withColumn("cluster", model.assignCol(col("vec")))
-        .observe(baseline, avg(model.distToCol(col("vec"), col("cluster"))).as("m"))
-        .sortWithinPartitions("cluster", "id")
-        .write.mode("overwrite").partitionBy("cluster").parquet(essentialDir(v))
-      writeCentroids(v, model)
-      baseline.get("m") match {
-        case m: Double => ivfBaseline = m
-        case _ => () // no row has a vector
-      }
-    } else {
-      // Range-partition + sort by id: each file covers a disjoint id
-      // range, so getDocumentById/getDocumentsByIds read one file's row
-      // groups instead of the whole store (parquet min/max pruning).
-      // Partition count targets ~250k rows/file — snapshot writes are
-      // where incremental-append small files get merged away.
-      val nParts = math.max(1L, (count + 249999L) / 250000L).toInt
-      ess.repartitionByRange(nParts, col("id"))
-        .sortWithinPartitions("id")
-        .write.mode("overwrite").parquet(essentialDir(v))
-    }
-    // Layout baseline for the small-files advisory: the data-file
-    // count this fresh write produced (one listing; appends grow the
-    // count from here, recommendCompaction compares against it).
-    val layoutFiles = countDataFiles(essentialDir(v))
-    payloadDf.write.mode("overwrite").parquet(payloadDir(v))
-    // Ingest-dedup Bloom filter for the new snapshot: one narrow pass
-    // over the (cached) essential rows; sized to the snapshot count.
-    // Its creation params go into the manifest: incremental appends
-    // rebuild a BATCH filter with the same (n, fpp) so the
-    // executor-side merge is bit-compatible (see addDFIncremental).
+    // config.nlist = -1 (AUTO) fits with nlist = 0, the IvfIndex auto
+    // mode — the cluster count derives from the corpus via the √n rule,
+    // and the manifest records the model's ACTUAL nlist, so
+    // load/search/tune see a concrete value.
+    val model = if (!IvfIndex.shouldUseIvf(config.nlist, count)) None
+      else Some(IvfIndex.fit(ess, "vec", if (config.nlist == -1) 0 else config.nlist,
+        rowCount = count, dim = embedder.dim))
     val bloomExpected = if (config.dedupBloomFpp > 0.0) math.max(count, 1L) else 0L
-    if (bloomExpected > 0L) {
-      writeBloom(v, ess.select(sha2(col("text"), 256).as("k"))
-        .stat.bloomFilter("k", bloomExpected, config.dedupBloomFpp))
-      // Dedup key table, SORTED by sha: the Bloom-confirm path probes
-      // it with an isin pushdown so parquet min/max skips every row
-      // group without a probed key — per-ingest confirm cost is then
-      // O(|maybe set|) row groups, corpus-independent (confirmDups).
-      // ~72 B/row; ≤ 4M keys per range partition keeps row-group stats
-      // selective.
-      val kparts = math.max(1L, (count + 3999999L) / 4000000L).toInt
-      ess.select(sha2(col("text"), 256).as("k"), col("id"))
-        .repartitionByRange(kparts, col("k"))
-        .sortWithinPartitions("k")
-        .write.mode("overwrite").parquet(dedupKeysDir(v))
-    }
-    // Multi-vector mode: chunk VECTORS are data, not derived state —
-    // mutation callers carry survivors through the delete/renumber
-    // (`carriedChunks`) so a delete/upsert performs ZERO embedding
-    // calls over the standing corpus (chunk text didn't change; only
-    // ids did). Model inference is the dominant per-row cost with any
-    // real embedder, and re-running it per mutation is exactly the
-    // reference artifact SURVEY §3.3 rules out (index.py:404-440's
-    // O(n) re-embed on delete). The from-scratch chunk+embed rebuild
-    // runs only when no carry is possible: first build, compact()
-    // (which is also the heal for crash-orphaned duplicate chunk rows,
-    // same as for payload), or a chunk-config change. Cluster
-    // assignment below is always recomputed against the NEW coarse
-    // quantizer — that's vector arithmetic over carried vecs, not
-    // embedding. Chunks are partitioned by the DOC-level coarse
-    // quantizer when IVF is active (chunk vectors live in the same
-    // metric space), which is what makes searchMaxSim's nprobe pruning
-    // file-level.
-    if (config.chunkSize > 0) {
-      val ch = carriedChunks.getOrElse(chunkRows(ess))
-      modelOpt match {
-        case Some(model) =>
-          ch.withColumn("cluster", model.assignCol(col("vec")))
-            .sortWithinPartitions("cluster", "id")
-            .write.mode("overwrite").partitionBy("cluster").parquet(chunksDir(v))
-        case None =>
-          ch.write.mode("overwrite").parquet(chunksDir(v))
-      }
-    }
-    if (owned) cached.unpersist()
-
-    val nlistUsed = modelOpt.map(_.nlist).getOrElse(0)
-    publish(StoreManifest(v, embedder.dim, config.metric, count, nlistUsed,
+    val m = StoreManifest(v, embedder.dim, config.metric, count, model.fold(0)(_.nlist),
       chunkSize = config.chunkSize,
       chunkOverlap = if (config.chunkSize > 0) config.chunkOverlap else 0,
       autoNlist = config.nlist == -1,
       bloomExpected = bloomExpected,
       bloomFpp = if (bloomExpected > 0L) config.dedupBloomFpp else 0.0,
-      layoutFiles = layoutFiles,
-      ivfBaselineMean = ivfBaseline,
-      tuned = manifest.tuned))
+      tuned = manifest.tuned)
+    val (n, total) = writeTables(m, ess, payloadDf,
+      if (config.chunkSize > 0) Some(carriedChunks.getOrElse(chunkRows(ess))) else None,
+      model, None)
+    if (owned) cached.unpersist()
+    // the small-files advisory's baseline: the data files this write
+    // produced (recommendCompaction compares against it); the staleness
+    // baseline: the fit-time mean assignment distance (see
+    // needsCompaction)
+    publish(m.copy(layoutFiles = countDataFiles(essentialDir(v)),
+      ivfBaselineMean = if (n > 0L) total / n else 0.0))
     // Retention (see Commits): keepVersions versions stay, the live one
     // included.
     Commits.sweep(fsFor(spark, path), hadoopPath(path))(
@@ -959,9 +824,87 @@ final class DocumentStore private (
     // and persists the curve; searches pick up the choice via
     // effectiveNprobe. Sample-sized work, but a real cost per build —
     // hence the explicit config gate.
-    if (config.tuneTargetRecall > 0.0 && nlistUsed > 0)
+    if (config.tuneTargetRecall > 0.0 && m.nlist > 0)
       tuneNprobe(config.tuneTargetRecall)
     ()
+  }
+
+  /** The one writer of a version's tables: the Bloom filter and the key
+    * table, payload, chunks (multi-vector mode), essential, and the
+    * centroids, of version `m.version`. `rows` are essential rows,
+    * `chunks` their chunk rows.
+    *
+    *  - A full write (`m` is the next version's manifest) lays the
+    *    version out anew: essential range-sorted by id in files of ~250k
+    *    rows, the key table range-sorted by sha in files of ≤ 4M keys
+    *    (min/max statistics prune the point lookups of both), a Bloom
+    *    filter sized by `m`, and the centroids file.
+    *  - An append (`m` is the live manifest) adds a batch's rows to the
+    *    live version as new unsorted files, assigned to the live
+    *    centroids, and folds the batch's keys into the live Bloom
+    *    filter `live` with `m`'s creation params (identical params give
+    *    identical bits, so the merge is exact; sustained appends degrade
+    *    its fpp until the next full write sizes a new one).
+    *
+    * With `model`, essential and chunks are partitioned by cluster
+    * (chunk vectors live in the doc vectors' space, so searchMaxSim's
+    * nprobe pruning is file-level too), sorted by (cluster, id) on a
+    * full write.
+    *
+    * The order is the append's crash reasoning, and a full write keeps
+    * it: the Bloom filter and the key table first, so a crash can only
+    * leave them OVERapproximating published texts (a phantom key sends a
+    * row to the exact confirm, which fetches no essential row for it and
+    * admits the row; an underapproximation would re-ingest published
+    * texts); then payload and chunks, so essential rows never publish
+    * without them (a crash leaves orphan rows at ids no live document
+    * has, which [[rewrite]] drops); essential last.
+    *
+    * Returns the (count, sum) of the essential rows' assignment
+    * distances, observed on the essential write itself ((0, 0) without
+    * a model): the fit baseline on a full write, the drift ledger's
+    * increment on an append. */
+  private def writeTables(m: StoreManifest, rows: DataFrame, payloadRows: DataFrame,
+                          chunks: Option[DataFrame], model: Option[IvfIndex.Model],
+                          live: Option[BloomFilter]): (Long, Double) = {
+    val (v, full) = (m.version, m.version != manifest.version)
+    val mode = if (full) "overwrite" else "append"
+    def rangeSorted(df: DataFrame, key: String, perFile: Long): DataFrame =
+      if (!full) df
+      else df.repartitionByRange(math.max(1L, (m.count + perFile - 1) / perFile).toInt, col(key))
+        .sortWithinPartitions(key)
+    if (m.bloomExpected > 0L) {
+      val keys = rows.select(sha2(col("text"), 256).as("k"), col("id"))
+      // One executor-side pass; the driver receives one filter-sized
+      // blob. With no non-null text the aggregate yields no filter (an
+      // NPE) and there is nothing to fold.
+      val built = try Some(keys.stat.bloomFilter("k", m.bloomExpected, m.bloomFpp))
+        catch { case _: NullPointerException => None }
+      val bloom = live.fold(built.getOrElse(BloomFilter.create(m.bloomExpected, m.bloomFpp))) {
+        b => built.foreach(b.mergeInPlace); b
+      }
+      writeFile(bloomPath(v))(bloom.writeTo)
+      rangeSorted(keys, "k", 4000000L).write.mode(mode).parquet(dedupKeysDir(v))
+    }
+    payloadRows.write.mode(mode).parquet(payloadDir(v))
+    val distances = org.apache.spark.sql.Observation()
+    def layout(df: DataFrame, observed: Boolean)(flat: DataFrame => DataFrame) = model match {
+      case Some(ivf) =>
+        val clustered = df.withColumn("cluster", ivf.assignCol(col("vec")))
+        val d = ivf.distToCol(col("vec"), col("cluster"))
+        val o = if (!observed) clustered
+          else clustered.observe(distances, count(d).as("n"), sum(coalesce(d, lit(0.0))).as("s"))
+        (if (full) o.sortWithinPartitions("cluster", "id") else o).write.partitionBy("cluster")
+      case None => flat(df).write
+    }
+    chunks.foreach(layout(_, observed = false)(identity).mode(mode).parquet(chunksDir(v)))
+    layout(rows, observed = true)(rangeSorted(_, "id", 250000L)).mode(mode)
+      .parquet(essentialDir(v))
+    if (full) model.foreach(ivf => writeModel(centroidsPath(v), Seq(ivf.centroids)))
+    model.fold((0L, 0.0)) { _ =>
+      val r = distances.get
+      (r("n").asInstanceOf[Long], Option(r("s")).fold(0.0)(_.asInstanceOf[Double]))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -971,30 +914,45 @@ final class DocumentStore private (
 
   private def hadoopPath(s: String) = new Path(s)
 
-  private def writeBloom(v: Long, bloom: BloomFilter): Unit = {
-    val out = fsFor(spark, bloomPath(v)).create(hadoopPath(bloomPath(v)), true)
-    try bloom.writeTo(out) finally out.close()
+  /** A version's driver-written files: the Bloom filter and the model
+    * files. */
+  private def writeFile(p: String)(body: java.io.DataOutputStream => Unit): Unit = {
+    val out = new java.io.DataOutputStream(fsFor(spark, p).create(hadoopPath(p), true))
+    try body(out) finally out.close()
   }
 
-  /** The centroids as one small driver-written file: nlist, dim, then
-    * the doubles, centroid by centroid. */
-  private def writeCentroids(v: Long, model: IvfIndex.Model): Unit = {
-    val out = new java.io.DataOutputStream(
-      fsFor(spark, centroidsPath(v)).create(hadoopPath(centroidsPath(v)), true))
-    try {
-      out.writeInt(model.nlist)
-      out.writeInt(model.centroids.head.length)
-      model.centroids.foreach(_.foreach(out.writeDouble))
-    } finally out.close()
+  private def readFile[A](p: String)(body: java.io.DataInputStream => A): A = {
+    val in = fsFor(spark, p).open(hadoopPath(p))
+    try body(in) finally in.close()
   }
+
+  /** Write a model file: the driver-held models' one format, a
+    * sequence of matrices, each its row count and column count (ints)
+    * and then its doubles row by row. The centroids file is the
+    * centroid matrix; the PQ model file is the m codebooks, then the
+    * OPQ rotation when there is one. */
+  private def writeModel(p: String, matrices: Seq[IndexedSeq[IndexedSeq[Double]]]): Unit =
+    writeFile(p) { out =>
+      matrices.foreach { m =>
+        out.writeInt(m.length)
+        out.writeInt(m.headOption.fold(0)(_.length))
+        m.foreach(_.foreach(out.writeDouble))
+      }
+    }
+
+  /** The matrices of a [[writeModel]] file, in order. */
+  private def readModel(p: String): Seq[IndexedSeq[IndexedSeq[Double]]] =
+    Seq.unfold(java.nio.ByteBuffer.wrap(
+        readFile(p)(org.apache.hadoop.io.IOUtils.readFullyToByteArray))) { b =>
+      Option.when(b.hasRemaining) {
+        val (rows, cols) = (b.getInt(), b.getInt())
+        (IndexedSeq.fill(rows)(IndexedSeq.fill(cols)(b.getDouble())), b)
+      }
+    }
 
   private def loadBloom(): Option[BloomFilter] =
     if (manifest.bloomExpected == 0L) None
-    else {
-      val p = bloomPath(manifest.version)
-      val in = fsFor(spark, p).open(hadoopPath(p))
-      try Some(BloomFilter.readFrom(in)) finally in.close()
-    }
+    else Some(readFile(bloomPath(manifest.version))(BloomFilter.readFrom))
 
   /** Count the `part-*` data files under `dir` (recursive — clustered
     * layouts nest them under partition dirs). One listing, no data IO. */
@@ -1067,8 +1025,6 @@ final class DocumentStore private (
     // be reachable here; the codebook fit collects its capped sample.
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     if (embedder.dim % m != 0) throw new IndexException(s"dim ${embedder.dim} not divisible by m=$m")
-    val dir = pqDir(manifest.version)
-    import spark.implicits._
     val rotOpt =
       if (rotate) Some(PqIndex.fitRotation(essential, "vec", m,
         fitFraction = fitFraction, seed = seed))
@@ -1083,28 +1039,13 @@ final class DocumentStore private (
           fitFraction = fitFraction), essential)
     }
     // A crash mid-rebuild would otherwise pair OLD codes with a NEW
-    // rotation behind a live entry — silently garbage ADC ranks.
+    // model behind a live entry — silently garbage ADC ranks.
     retract(manifest.copy(pqFor = None, pqRotated = false))
-    // A plain rebuild over a previously-rotated index removes the stale
-    // rotation too, so no reader can pair it with unrotated codes.
-    rotOpt match {
-      case Some(rot) =>
-        rot.rows.zipWithIndex.map { case (r, i) => (i, r) }
-          .toDF("idx", "row")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
-      case None =>
-        DocumentStore.deleteDir(spark, s"$dir/rotation")
-    }
-    val cbRows = for {
-      (book, sub) <- model.codebooks.zipWithIndex
-      (cent, code) <- book.zipWithIndex
-    } yield (sub, code, cent)
-    cbRows.toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
+    writeModel(pqModelPath(manifest.version), model.codebooks ++ rotOpt.map(_.rows))
     encodeInput.select(col("id"),
         model.encodeCol(
           col(if (rotate) "__rvec" else "vec"), roundScale = 4).as("codes"))
-      .write.mode("overwrite").parquet(s"$dir/codes")
+      .write.mode("overwrite").parquet(s"${pqDir(manifest.version)}/codes")
     publish(manifest.copy(pqFor = Some(manifest.count), pqRotated = rotate))
     // Opt-in measured-recall tuning: the PQ build ships with its
     // rerank-depth/recall curve (see tunePqCandidates).
@@ -1488,21 +1429,14 @@ final class DocumentStore private (
     val m = snap
     if (!m.pqFor.contains(m.count)) None
     else {
-      val dir = pqDir(m.version)
-      val books = spark.read.schema(PqCodebookSchema).parquet(s"$dir/codebooks")
-        .orderBy("sub", "code").collect()
-        .groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_.getAs[Int]("code"))
-          .map(_.getSeq[Double](2).toIndexedSeq).toIndexedSeq)
-        .toIndexedSeq
-      val rot =
-        if (!m.pqRotated) None
-        else Some(PqIndex.MatrixRotation(
-          spark.read.schema(PqRotationSchema).parquet(s"$dir/rotation").orderBy("idx")
-            .collect()
-            .map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq))
-      Some((PqIndex.Model(books), spark.read.schema(PqCodesSchema).parquet(s"$dir/codes"),
-        rot))
+      // Read on every call, not cached under (path, version): a PQ
+      // rebuild keeps the version.
+      val matrices = readModel(pqModelPath(m.version))
+      val (books, rot) =
+        if (m.pqRotated) (matrices.init, Some(PqIndex.MatrixRotation(matrices.last)))
+        else (matrices, None)
+      Some((PqIndex.Model(books.toIndexedSeq),
+        spark.read.schema(PqCodesSchema).parquet(s"${pqDir(m.version)}/codes"), rot))
     }
   }
 
@@ -1565,7 +1499,7 @@ final class DocumentStore private (
   private def lexicalScores(queryTerms: Seq[String]): DataFrame = {
     val m = snap
     if (m.lexicalFor.contains(m.count))
-      TextSearch.searchIndexScores(spark, lexicalDir(m.version), queryTerms)
+      TextSearch.indexScores(spark, lexicalDir(m.version), queryTerms, idType = LongType)
     else TextSearch.bm25Scores(essential.select(col("id"), col("text")),
       "id", "text", queryTerms)
   }
@@ -1657,15 +1591,8 @@ final class DocumentStore private (
   // versioned key IS the invalidation.
   private def loadCentroids(): Option[IvfIndex.Model] =
     if (snap.nlist > 0) {
-      Some(IvfIndex.modelCached(s"$path#centroids", snap.version) {
-        val p = centroidsPath(snap.version)
-        val in = new java.io.DataInputStream(fsFor(spark, p).open(hadoopPath(p)))
-        try {
-          val nlist = in.readInt()
-          val dim = in.readInt()
-          IvfIndex.Model(IndexedSeq.fill(nlist)(IndexedSeq.fill(dim)(in.readDouble())))
-        } finally in.close()
-      })
+      Some(IvfIndex.modelCached(s"$path#centroids", snap.version)(
+        IvfIndex.Model(readModel(centroidsPath(snap.version)).head)))
     } else None
 
   /** Search-space DataFrame for a query vector: IVF-pruned (nprobe
@@ -2112,9 +2039,7 @@ object DocumentStore {
     "doc_id BIGINT, text STRING, metadata MAP<STRING, STRING>, payload_json STRING")
   private val KeyTableSchema = StructType.fromDDL("k STRING, id BIGINT")
   private val ChunkSchema = StructType.fromDDL("id BIGINT, vec ARRAY<DOUBLE>")
-  // The PQ index tables buildPqIndex writes.
-  private val PqCodebookSchema = StructType.fromDDL("sub INT, code INT, centroid ARRAY<DOUBLE>")
-  private val PqRotationSchema = StructType.fromDDL("idx INT, row ARRAY<DOUBLE>")
+  // The PQ index's codes table (its model is a model file).
   private val PqCodesSchema = StructType.fromDDL("id BIGINT, codes ARRAY<INT>")
   /** A driver batch's new rows before the shared embed projection. */
   private val LocalRowSchema = StructType(Seq(StructField("id", LongType, nullable = false),

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -438,25 +438,10 @@ object StreamingOps {
   def imageNearDupScreenBatch(batch: DataFrame, indexPath: String,
                               batchId: Long, idCol: String,
                               bytesCol: String, tsCol: String,
-                              bands: Int = 4): DataFrame = {
-    val hash = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.ImageStatsExpr(
-        org.apache.spark.sql.GraftSqlBridge.expression(col(bytesCol))))
-      .getField("ahash63")
-    // Null-hash screen inside the generator, same rationale as the
-    // text gate: a where() on __h pushes below the projection and
-    // re-runs the DECODE per row. The when-guard is load-bearing
-    // beyond that: concat_ws skips nulls, so naked band keys on a null
-    // hash would emit degenerate "0","1",... bands colliding every
-    // undecodable asset with every other one.
-    val banded = batch
-      .select(col(idCol), col(tsCol), hash.as("__h"))
-      .select(col(idCol), struct(col(tsCol), col(idCol)).as("__tie"),
-        explode(when(col("__h").isNotNull,
-          graft.ops.Dedup.fingerprintBandKeys(col("__h"), bands)))
-          .as("band"))
-    bandGateScreenBatch(batch, banded, indexPath, batchId, idCol)
-  }
+                              bands: Int = 4): DataFrame =
+    fingerprintScreenBatch(batch, indexPath, batchId, idCol, tsCol, bands,
+      org.apache.spark.sql.GraftSqlBridge.column(graft.functions.ImageStatsExpr(
+        org.apache.spark.sql.GraftSqlBridge.expression(col(bytesCol)))).getField("ahash63"))
 
   /** Streaming AUDIO near-dup ingest gate — the third modality on the
     * shared band-gate core (r15 verdict #2: text and image front-ends
@@ -491,16 +476,23 @@ object StreamingOps {
   def audioNearDupScreenBatch(batch: DataFrame, indexPath: String,
                               batchId: Long, idCol: String,
                               bytesCol: String, tsCol: String,
-                              bands: Int = 4): DataFrame = {
-    val hash = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.WavStatsExpr(
-        org.apache.spark.sql.GraftSqlBridge.expression(col(bytesCol))))
-      .getField("audio_hash63")
-    // Null-hash screen inside the generator — same two reasons as the
-    // image gate: a where() on __h would push below the projection and
-    // re-run the WAV decode per row, and concat_ws skipping nulls
-    // would otherwise give every undecodable clip the same degenerate
-    // "0","1",... band keys, colliding them all with each other.
+                              bands: Int = 4): DataFrame =
+    fingerprintScreenBatch(batch, indexPath, batchId, idCol, tsCol, bands,
+      org.apache.spark.sql.GraftSqlBridge.column(graft.functions.WavStatsExpr(
+        org.apache.spark.sql.GraftSqlBridge.expression(col(bytesCol)))).getField("audio_hash63"))
+
+  /** One micro-batch of a fingerprint gate (image, audio): the band
+    * gate over the [[graft.ops.Dedup.fingerprintBandKeys]] of each
+    * row's 63-bit `hash`. */
+  private def fingerprintScreenBatch(batch: DataFrame, indexPath: String, batchId: Long,
+                                     idCol: String, tsCol: String, bands: Int,
+                                     hash: Column): DataFrame = {
+    // Null-hash screen inside the generator, same rationale as the
+    // text gate: a where() on __h pushes below the projection and
+    // re-runs the DECODE per row. The when-guard is load-bearing
+    // beyond that: concat_ws skips nulls, so naked band keys on a null
+    // hash would emit degenerate "0","1",... bands colliding every
+    // undecodable asset with every other one.
     val banded = batch
       .select(col(idCol), col(tsCol), hash.as("__h"))
       .select(col(idCol), struct(col(tsCol), col(idCol)).as("__tie"),
@@ -1014,22 +1006,16 @@ object StreamingOps {
   /** Read the newest published [[CompactState]]. Readers pick the
     * HIGHEST hwm_<n> marker; the previous marker is kept by design (see
     * [[compactBandIndex]]) and is safe to ignore. Marker content is
-    * `<hwm> l1=<v|-1> l0=<v;v;...>`; a bare `<hwm>` (the pre-leveled
-    * format) reads as L1 = the marker's own version, no L0 — indexes
-    * compacted by the monolithic implementation stay readable. */
+    * `<hwm> l1=<v|-1> l0=<v;v;...>`; other content raises, naming
+    * the marker. */
   private def compactState(fs: FileSystem, indexPath: String): CompactState = {
     val dir = new Path(s"$indexPath/_compact")
     Commits.latest(fs, dir, MarkerPrefix).fold(CompactState.never) { case (v, content) =>
-      val tokens = content.trim.split("\\s+").toSeq
-      val hwm = tokens.head.toLong
-      if (tokens.size == 1) CompactState(hwm, v, v, Nil) // legacy format
-      else {
-        def tok(prefix: String): Option[String] =
-          tokens.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
-        val l1 = tok("l1=").map(_.toLong).getOrElse(v)
-        val l0 = tok("l0=").toSeq.flatMap(_.split(";").toSeq)
-          .filter(_.nonEmpty).map(_.toLong)
-        CompactState(hwm, v, l1, l0)
+      content.trim.split("\\s+") match {
+        case Array(hwm, s"l1=$l1", s"l0=$l0") =>
+          CompactState(hwm.toLong, v, l1.toLong, l0.split(";").toSeq.filter(_.nonEmpty).map(_.toLong))
+        case _ => throw new IllegalStateException(
+          s"malformed gate marker $dir/$MarkerPrefix$v: ${content.trim}")
       }
     }
   }

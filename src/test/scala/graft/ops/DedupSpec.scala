@@ -291,8 +291,6 @@ class DedupSpec extends SparkSpec {
       Dedup.connectedComponents(uuidPairs, smallGraphThreshold = 0).collect()
     }
     assert(rootMsgs(e2).exists(_.contains("not castable to long")), rootMsgs(e2).mkString("|"))
-    val e3 = intercept[Exception] { Dedup.connectedComponentsStar(uuidPairs).collect() }
-    assert(rootMsgs(e3).exists(_.contains("not castable to long")), rootMsgs(e3).mkString("|"))
   }
 
   test("connected components: chains collapse to min id, components stay separate") {
@@ -310,14 +308,14 @@ class DedupSpec extends SparkSpec {
   test("connected components converge on a long path (label must propagate end-to-end)") {
     val n = 12
     val edges = (0 until n).map(i => (i.toLong + 1, i.toLong)).toDF("id_a", "id_b")
-    // threshold 0 forces the distributed propagation path
+    // threshold 0 forces the distributed (large-star/small-star) path
     val cc = Dedup.connectedComponents(edges, smallGraphThreshold = 0).collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("component")).toMap
     assert(cc.size == n + 1)
     assert(cc.values.forall(_ == 0L))
   }
 
-  test("large-star/small-star CC == label propagation on random graphs and a long chain") {
+  test("large-star/small-star CC == driver union-find on random graphs and a long chain") {
     val rnd = new scala.util.Random(19)
     // random graphs of varying density
     for (trial <- 0 until 3) {
@@ -325,21 +323,21 @@ class DedupSpec extends SparkSpec {
       val edges = (0 until 80).map { _ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
       }.filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      val viaProp = Dedup.connectedComponents(edges).collect()
+      val viaUnionFind = Dedup.connectedComponents(edges).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaStar = Dedup.connectedComponentsStar(edges).collect()
+      val viaStar = Dedup.connectedComponents(edges, smallGraphThreshold = 0).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaStar == viaProp, s"trial $trial")
+      assert(viaStar == viaUnionFind, s"trial $trial")
     }
     // a 60-node path: diameter 60, but star rounds are O(log n) — a
     // maxIter far below the diameter must still converge exactly
     val chain = (0 until 60).map(i => (i.toLong + 1, i.toLong)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponentsStar(chain, maxIter = 10).collect()
+    val cc = Dedup.connectedComponents(chain, maxIter = 10, smallGraphThreshold = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc.size == 61 && cc.values.forall(_ == 0L))
     // self-pair-only nodes stay in the output (parity with union-find)
     val withSelf = Seq((5L, 5L), (1L, 2L)).toDF("id_a", "id_b")
-    val ccSelf = Dedup.connectedComponentsStar(withSelf).collect()
+    val ccSelf = Dedup.connectedComponents(withSelf, smallGraphThreshold = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ccSelf == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
   }

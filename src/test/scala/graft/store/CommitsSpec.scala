@@ -65,6 +65,23 @@ class CommitsSpec extends SparkSpec {
     assert(Commits.list(fs, dir, "c_") == Seq(0L))
   }
 
+  test("a duplicate commit number is refused on RawLocalFileSystem, whose plain rename replaces") {
+    val fs = new RawLocalFileSystem
+    fs.initialize(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val root = tmpDir("graft-commits-raw")
+    // the hazard: this file system's rename replaces an existing file
+    Seq("a" -> "1", "b" -> "22").foreach { case (name, body) =>
+      val out = fs.create(new Path(root, name)); out.write(body.getBytes("UTF-8")); out.close()
+    }
+    assert(fs.rename(new Path(root, "a"), new Path(root, "b")))
+    assert(fs.getFileStatus(new Path(root, "b")).getLen == 1L)
+    val dir = new Path(root, "_commits")
+    Commits.publish(fs, dir, "c_", 0L, "first")
+    val e = intercept[StorageException](Commits.publish(fs, dir, "c_", 0L, "second"))
+    assert(e.getMessage.contains("c_0"), e.getMessage)
+    assert(Commits.latest(fs, dir, "c_").contains(0L -> "first"))
+  }
+
   test("a store manifest publish whose rename fails raises, naming both paths") {
     val path = s"${failingPath("graft-failrename-store")}/store"
     val e = intercept[StorageException] {

@@ -171,6 +171,16 @@ class DriverBatchSpec extends SparkSpec {
       val inferring = pqJobs.filter(_.callSite.startsWith("parquet at "))
       assert(inferring.isEmpty, s"$name: ${inferring.map(_.details).mkString("\n---\n")}")
       assert(hits.length == 3, name)
+      // the lexical index tables, through both searches that read them
+      store.buildLexicalIndex(numFiles = 2)
+      val terms = Seq("schema", "group")
+      val (lexHits, lexJobs) = JobProbe.record(spark)((
+        store.searchLexical(terms, k = 3).collect(),
+        store.hybridSearch("schema doc 3 in group 3", terms, k = 3).collect()))
+      val lexInferring = lexJobs.filter(_.callSite.startsWith("parquet at "))
+      assert(lexInferring.isEmpty,
+        s"$name: ${lexInferring.map(_.details).mkString("\n---\n")}")
+      assert(lexHits._1.length == 3 && lexHits._2.length == 3, name)
     }
   }
 }

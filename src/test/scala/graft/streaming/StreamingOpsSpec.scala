@@ -543,41 +543,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(kept == Set(24L), s"post-promote decisions: $kept")
   }
 
-  test("compactState: a legacy bare-number marker (pre-leveled format) stays readable") {
-    val dir = Files.createTempDirectory("graft-legacy-marker").toString
-    val b0 = Seq((1L, "the quick brown fox jumps over the lazy dog", ts(0)))
-      .toDF("id", "text", "ts")
-    def run(batchId: Long, df: org.apache.spark.sql.DataFrame) =
-      StreamingOps.nearDupScreenBatch(df, dir, batchId, "id", "text", "ts")
-        .select("id").collect().map(_.getLong(0)).toSet
-    run(0L, b0)
-    StreamingOps.compactBandIndex(spark, dir, upToBatch = 0L)
-    // Rewrite the marker to the r16 monolithic format: bare hwm, no
-    // blob fields — the blob version is implicitly the marker's own.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/_compact/hwm_0"), "0\n".getBytes("UTF-8"))
-    // The direct rewrite bypassed Hadoop's checksum layer — drop the
-    // stale .crc sidecar or every read of the marker fails checksum.
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/_compact/.hwm_0.crc"))
-    // Legacy read: the gate must resolve blob v=0 through the bare
-    // marker — the dup drops, and a replay below the mark is refused.
-    val b1 = Seq(
-      (7L, "the quick brown fox jumps over the lazy dog", ts(7)),
-      (8L, "a different sentence that matches nothing in the index", ts(8)))
-      .toDF("id", "text", "ts")
-    assert(run(1L, b1) == Set(8L), "legacy marker must still screen")
-    intercept[IllegalStateException] { run(0L, b0) }
-    // And the next compaction upgrades in place: new-format marker,
-    // old blob retained for the grace cycle, decisions intact.
-    StreamingOps.compactBandIndex(spark, dir, upToBatch = 1L)
-    val b2 = Seq(
-      (9L, "a different sentence that matches nothing in the index", ts(9)),
-      (10L, "yet another brand new sentence for the closing batch", ts(10)))
-      .toDF("id", "text", "ts")
-    assert(run(2L, b2) == Set(10L), "post-upgrade decisions must hold")
-  }
-
   test("compaction crash windows: orphan blobs and tmp markers are ignored and reclaimed") {
     // A crash between step (1) blob write and step (2) marker publish
     // leaves a blob no marker references; a crash mid-publish leaves a
