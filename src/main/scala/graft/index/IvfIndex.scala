@@ -163,7 +163,8 @@ object IvfIndex {
     * [[MaxSampleBytes]]) is collected in one Spark job and
     * [[LocalKMeans]] fits it — the reference's in-process faiss
     * training on a capped sample (index.py:239-291, 274).
-    * Deterministic for fixed data/partitioning and seed.
+    * An unsampled fit is a function of the rows and the seed alone (see
+    * [[trainingSet]]); a sampled one also of the partitioning.
     *
     * Coarse quantizers don't need polished centroids — recall comes
     * from nprobe — so `initMode = "random"` and a low `maxIter` are the
@@ -197,7 +198,15 @@ object IvfIndex {
     * of trusting a caller's fixed config — a pinned nlist=8 while the
     * corpus grew ×100 measured 544.8 s vs ~8.5 s with the √n value
     * (BENCH_NOTES r15). When the sample fits under the cap, k comes
-    * from the exact sample size; a capped sample uses the count. */
+    * from the exact sample size; a capped sample uses the count.
+    *
+    * The points are sorted (lexicographically) before the seeded
+    * k-means sees them: the collect returns them in scan order, which
+    * follows file listing and split packing, so without the sort the
+    * same rows in another layout would fit other centroids. An
+    * unsampled fit is so a function of the rows alone; a sampled one
+    * (`fitFraction` < 1, or a corpus over the cap) still depends on
+    * how `df.sample` meets the partitions. */
   private[index] def trainingSet(df: DataFrame, vecCol: String, nlist: Int,
       seed: Long, fitFraction: Double, rowCount: Long,
       dim: Int): (Array[Array[Double]], Int) = {
@@ -206,7 +215,8 @@ object IvfIndex {
     val (points, capped) = cappedSample(df, vecCol, n, d, fitFraction,
       MaxPointsPerCentroid.toLong * kEst, seed, "IvfIndex.fit")
     val k = if (nlist > 0) nlist else if (capped) kEst else autoNlist(points.length, fitFraction)
-    (capSample(points, MaxPointsPerCentroid * k, seed), k)
+    (capSample(points.sortWith(java.util.Arrays.compare(_, _) < 0),
+      MaxPointsPerCentroid * k, seed), k)
   }
 
   /** The scale-safe cluster count for a corpus of (estimated) size n:

@@ -58,6 +58,14 @@ import graft.store.Commits.fsFor
   * One writer lays out a version's tables ([[writeTables]]), for a new
   * version and for an in-place append alike.
   *
+  * Reads take one path too, the reference's "rank, then enrich hits by
+  * id" (index.py:309-338): every read surface pins one snapshot and
+  * refuses an empty store in [[reading]], prunes by the query's
+  * [[probeSet]], ranks, and hands its rows out through the one hit
+  * projection [[hits]]. A ranking that ends on the driver gets its
+  * essential columns by id ([[attachEssential]]); full metadata comes
+  * from the payload by id ([[enhanceWithFullMetadata]]).
+  *
   * A derived-index build publishes the manifest without the index's
   * entry, writes the index in place, then publishes the entry, so a
   * crash mid-build leaves the index absent, never torn.
@@ -1059,10 +1067,13 @@ final class DocumentStore private (
   // number, not a hope — completes the Eval story (ops/Eval.scala).
   // ------------------------------------------------------------------
 
+  /** A tuning pass's query sample: (id, vector) pairs. */
+  private type Sample = Array[(Long, Seq[Double])]
+
   /** Deterministic query sample for tuning: every row whose seeded id
     * hash lands on a stride, capped at `n` — stable across runs and
     * partitionings, spread over the id range. */
-  private def tuningSample(n: Int, seed: Long): Array[(Long, Seq[Double])] = {
+  private def tuningSample(n: Int, seed: Long): Sample = {
     val stride = math.max(1L, manifest.count / n)
     // Null vectors (null-text docs, which the store supports) can't be
     // queries; and the hash-stride filter can come back empty for tiny
@@ -1083,14 +1094,40 @@ final class DocumentStore private (
 
   /** Exact top-k ids per sample query — ONE batched job (the ground
     * truth the approximate settings are scored against). */
-  private def exactTopIds(sample: Array[(Long, Seq[Double])],
-                          k: Int): DataFrame = {
+  private def exactTopIds(sample: Sample, k: Int): DataFrame = {
     import spark.implicits._
     val queries = sample.toSeq.toDF("qid", "qv")
     VectorIndex.topKBatch(essential, "vec", queries, "qid", "qv", k,
         config.metric, scoreCol = "__s", tieBreak = Seq("id"), roundScale = 4)
       .select(col("qid"), col("id"))
   }
+
+  /** The one skeleton of a tuning pass, run under the mutation lock on
+    * a non-empty store: check the target; let `sweep` load its index
+    * and name the settings it measures with a `measure` that gives each
+    * setting's mean recall and mean cost fraction over a sample; draw
+    * the seeded sample ([[tuningSample]]); round each point to 4 dp;
+    * mark `chosen` the cheapest setting meeting `targetRecall` (the
+    * largest if none does); and publish the curve with the pass's
+    * params in one manifest commit. Returns the curve. */
+  private def tuningPass(kind: String, targetRecall: Double, k: Int, sampleQueries: Int,
+      seed: Long, asked: Seq[Int])(
+      sweep: => (Seq[Int], Sample => Seq[(Double, Double)])): Seq[TuningPoint] =
+    exclusive(reading {
+      require(targetRecall > 0.0 && targetRecall <= 1.0,
+        s"targetRecall out of (0,1]: $targetRecall")
+      val (settings, measure) = sweep
+      require(settings.nonEmpty, s"no usable $kind settings")
+      def dp4(x: Double) = math.rint(x * 10000) / 10000.0
+      val points = settings.zip(measure(tuningSample(sampleQueries, seed)))
+        .map { case (s, (recall, frac)) => (s, dp4(recall), dp4(frac)) }
+      val chosen = points.find(_._2 >= targetRecall).getOrElse(points.last)._1
+      val curve = points.map { case (s, r, f) => TuningPoint(s, r, f, chosen = s == chosen) }
+      publish(manifest.copy(curves = manifest.curves + (kind -> curve),
+        tuned = manifest.tuned + (kind ->
+          TuningParams(manifest.version, targetRecall, k, sampleQueries, seed, asked))))
+      curve
+    })
 
   /** Tune nprobe from a MEASURED recall target: sweep `candidates`
     * nprobe values over a seeded `sampleQueries`-query sample, score
@@ -1111,81 +1148,61 @@ final class DocumentStore private (
   def tuneNprobe(targetRecall: Double = 0.95, k: Int = 10,
                  sampleQueries: Int = 20,
                  candidates: Seq[Int] = Seq(1, 2, 4, 8),
-                 seed: Long = 42L): Seq[TuningPoint] = exclusive {
-    if (manifest.count == 0) throw new SearchException("store is empty or not built")
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall out of (0,1]: $targetRecall")
-    val model = loadCentroids().getOrElse(throw new IndexException(
-      "tuneNprobe requires an IVF store (nlist > 0 and enough rows)"))
-    val cands = candidates.filter(_ >= 1).map(math.min(_, model.nlist))
-      .distinct.sorted
-    require(cands.nonEmpty, "no usable nprobe candidates")
-    val sample = tuningSample(sampleQueries, seed)
-    // Null-vec docs land under the null cluster partition — they are
-    // unreachable by any probe, so they don't belong in the scan cost.
-    val clusterSizes = essential.groupBy("cluster").count().collect()
-      .filter(!_.isNullAt(0)).map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // Denominator = REACHABLE rows (sum of non-null cluster sizes), not
-    // the store count: null-vec docs are excluded from the numerator's
-    // probe sums, and counting them below would make costFraction
-    // understate the scan and never reach 1.0 even when every cluster
-    // is probed.
-    val total = math.max(clusterSizes.values.sum, 1L).toDouble
-    import spark.implicits._
-    // The WHOLE sweep is ONE batched scoring job: every (candidate
-    // nprobe, sample query) pair becomes a composite query id with its
-    // own probe set, so the cost is |settings|·|sample| broadcast query
-    // rows against one corpus scan — not one job per setting (at a
-    // handful of fixed-overhead jobs each, the job count, not the
-    // work, dominated the sweep).
-    def cqid(np: Int, qid: Long): Long = (np.toLong << 40) | qid
-    require(sample.forall(_._1 < (1L << 40)),
-      "tuning sample id exceeds the composite-id range (2^40)")
-    val exactRows = exactTopIds(sample, k).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val exact2 = cands.flatMap(np =>
-      exactRows.map { case (q, id) => (cqid(np, q), id) }).toDF("qid", "id")
-    val probedAll = cands.flatMap { np =>
-      sample.map { case (qid, qv) =>
-        (cqid(np, qid), qv, model.nearestCentroids(qv, np))
-      }
+                 seed: Long = 42L): Seq[TuningPoint] =
+    tuningPass("nprobe", targetRecall, k, sampleQueries, seed, candidates) {
+      val model = loadCentroids().getOrElse(throw new IndexException(
+        "tuneNprobe requires an IVF store (nlist > 0 and enough rows)"))
+      val cands = candidates.filter(_ >= 1).map(math.min(_, model.nlist))
+        .distinct.sorted
+      (cands, { sample =>
+        // Null-vec docs land under the null cluster partition — they are
+        // unreachable by any probe, so they don't belong in the scan cost.
+        val clusterSizes = essential.groupBy("cluster").count().collect()
+          .filter(!_.isNullAt(0)).map(r => r.getInt(0) -> r.getLong(1)).toMap
+        // Denominator = REACHABLE rows (sum of non-null cluster sizes), not
+        // the store count: null-vec docs are excluded from the numerator's
+        // probe sums, and counting them below would make costFraction
+        // understate the scan and never reach 1.0 even when every cluster
+        // is probed.
+        val total = math.max(clusterSizes.values.sum, 1L).toDouble
+        import spark.implicits._
+        // The WHOLE sweep is ONE batched scoring job: every (candidate
+        // nprobe, sample query) pair becomes a composite query id with its
+        // own probe set, so the cost is |settings|·|sample| broadcast query
+        // rows against one corpus scan — not one job per setting (at a
+        // handful of fixed-overhead jobs each, the job count, not the
+        // work, dominated the sweep).
+        def cqid(np: Int, qid: Long): Long = (np.toLong << 40) | qid
+        require(sample.forall(_._1 < (1L << 40)),
+          "tuning sample id exceeds the composite-id range (2^40)")
+        val exactRows = exactTopIds(sample, k).collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        val exact2 = cands.flatMap(np =>
+          exactRows.map { case (q, id) => (cqid(np, q), id) }).toDF("qid", "id")
+        val probedAll = cands.flatMap { np =>
+          sample.map { case (qid, qv) =>
+            (cqid(np, qid), qv, model.nearestCentroids(qv, np))
+          }
+        }
+        val approx = VectorIndex.topKBatch(essential, "vec",
+            probedAll.toDF("qid", "qv", "__probes"),
+            "qid", "qv", k, config.metric, scoreCol = "__s",
+            tieBreak = Seq("id"), roundScale = 4,
+            keep = Some(expr("array_contains(__probes, cluster)")))
+          .select(col("qid"), col("id"))
+        val perQuery = graft.ops.Eval.recallAtK(exact2, approx, "qid", "id")
+          .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
+        cands.map { np =>
+          val recalls = sample.map { case (qid, _) =>
+            perQuery.getOrElse(cqid(np, qid), 0.0) }
+          val frac = sample.map { case (qid, qv) =>
+            model.nearestCentroids(qv, np)
+              .map(p => clusterSizes.getOrElse(p, 0L)).sum / total
+          }.sum / sample.length
+          (recalls.sum / recalls.length, frac)
+        }
+      })
     }
-    val approx = VectorIndex.topKBatch(essential, "vec",
-        probedAll.toDF("qid", "qv", "__probes"),
-        "qid", "qv", k, config.metric, scoreCol = "__s",
-        tieBreak = Seq("id"), roundScale = 4,
-        keep = Some(expr("array_contains(__probes, cluster)")))
-      .select(col("qid"), col("id"))
-    val perQuery = graft.ops.Eval.recallAtK(exact2, approx, "qid", "id")
-      .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    val points = cands.map { np =>
-      val recalls = sample.map { case (qid, _) =>
-        perQuery.getOrElse(cqid(np, qid), 0.0) }
-      val recall = recalls.sum / recalls.length
-      val frac = sample.map { case (qid, qv) =>
-        model.nearestCentroids(qv, np)
-          .map(p => clusterSizes.getOrElse(p, 0L)).sum / total
-      }.sum / sample.length
-      (np, math.rint(recall * 10000) / 10000.0,
-        math.rint(frac * 10000) / 10000.0)
-    }
-    val chosenNp = points.find(_._2 >= targetRecall).map(_._1)
-      .getOrElse(points.last._1)
-    val curve = points.map { case (np, r, f) =>
-      TuningPoint(np, r, f, chosen = np == chosenNp)
-    }
-    publishTuning("nprobe", curve,
-      TuningParams(manifest.version, targetRecall, k, sampleQueries, seed, candidates))
-  }
-
-  /** Publish a tuning pass: the live version's curve and the pass's
-    * params, in one manifest commit. Returns the curve. */
-  private def publishTuning(kind: String, curve: Seq[TuningPoint],
-                            params: TuningParams): Seq[TuningPoint] = {
-    publish(manifest.copy(curves = manifest.curves + (kind -> curve),
-      tuned = manifest.tuned + (kind -> params)))
-    curve
-  }
 
   /** Tune the PQ rerank depth the same way: for each depth d =
     * factor·k, approx top-k = exact rerank of the d best ADC
@@ -1201,80 +1218,59 @@ final class DocumentStore private (
   def tunePqCandidates(targetRecall: Double = 0.95, k: Int = 10,
                        sampleQueries: Int = 20,
                        depthFactors: Seq[Int] = Seq(2, 4, 8),
-                       seed: Long = 42L): Seq[TuningPoint] = exclusive {
-    if (manifest.count == 0) throw new SearchException("store is empty or not built")
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall out of (0,1]: $targetRecall")
-    val (pqModel, codes, pqRot) = loadPq().getOrElse(throw new IndexException(
-      "tunePqCandidates requires a fresh buildPqIndex for this snapshot"))
-    val depths = depthFactors.filter(_ >= 1).map(f =>
-      math.min(f.toLong * k, manifest.count).toInt).distinct.sorted
-    require(depths.nonEmpty, "no usable rerank depths")
-    val sample = tuningSample(sampleQueries, seed)
-    val exactIds = exactTopIds(sample, k).collect()
-      .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val maxDepth = depths.max
-    val higherBetter = config.metric != "l2"
-    // One job per sample query: top max-depth ADC candidates joined to
-    // their exact vectors (depth-bounded collect).
-    val perQuery = sample.map { case (qid, qv) =>
-      // Rotated (OPQ) index: ADC against rotated codes needs the
-      // rotated query; the recall ground truth (exactTopIds) and the
-      // rerank scores below stay original-space, as in search.
-      val qAdc = pqRot.map(_.applyVec(qv).toSeq).getOrElse(qv)
-      val top = codes
-        .withColumn("__am", pqModel.adcMicrosCol(col("codes"), qAdc, roundScale = 4))
-        // null ADC = null-codes (null-vec) doc: never a result, and
-        // ASC NULLS FIRST would rank it ahead of every real candidate
-        // (then NPE at getLong). Same null discipline as
-        // similaritySearchPq's prescreen.
-        .where(col("__am").isNotNull)
-        .orderBy(col("__am"), col("id")).limit(maxDepth)
-        .join(essential.select(col("id"), col("vec")), Seq("id"))
-        .where(col("vec").isNotNull)
-        .select(col("id"), col("__am"), col("vec")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
-        .sortBy(t => (t._2, t._1))
-      (qid, qv, top)
+                       seed: Long = 42L): Seq[TuningPoint] =
+    tuningPass("pq", targetRecall, k, sampleQueries, seed, depthFactors) {
+      val prescreen = pqPrescreen().getOrElse(throw new IndexException(
+        "tunePqCandidates requires a fresh buildPqIndex for this snapshot"))
+      val depths = depthFactors.filter(_ >= 1).map(f =>
+        math.min(f.toLong * k, manifest.count).toInt).distinct.sorted
+      (depths, { sample =>
+        val exactIds = exactTopIds(sample, k).collect()
+          .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+        val higherBetter = config.metric != "l2"
+        // One job per sample query: top max-depth ADC candidates joined to
+        // their exact vectors (depth-bounded collect). The recall ground
+        // truth (exactTopIds) and the rerank scores below stay
+        // original-space, as in search.
+        val perQuery = sample.map { case (qid, qv) =>
+          val top = prescreen(qv, depths.max)
+            .join(essential.select(col("id"), col("vec")), Seq("id"))
+            .where(col("vec").isNotNull)
+            .select(col("id"), col("adc"), col("vec")).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
+            .sortBy(t => (t._2, t._1))
+          (qid, qv, top)
+        }
+        def scoreOf(a: Seq[Double], b: Seq[Double]): Double = {
+          var dot = 0.0; var na = 0.0; var nb = 0.0; var l2 = 0.0; var i = 0
+          while (i < a.length) {
+            dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i)
+            val d = a(i) - b(i); l2 += d * d; i += 1
+          }
+          val raw = config.metric match {
+            case "cosine" => dot / math.sqrt(na * nb)
+            case "ip"     => dot
+            case _        => math.sqrt(l2)
+          }
+          // A zero-norm vector under cosine gives NaN (BigDecimal(NaN)
+          // would throw); rank it strictly worst, mirroring the engine's
+          // usable() gate that drops unusable scores from results.
+          if (raw.isNaN) { if (higherBetter) Double.NegativeInfinity else Double.PositiveInfinity }
+          else BigDecimal(raw).setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+        }
+        depths.map { d =>
+          val recalls = perQuery.map { case (qid, qv, top) =>
+            val rerank = top.take(d)
+              .map { case (id, _, v) => (id, scoreOf(qv, v)) }
+              .sortBy { case (id, s) => (if (higherBetter) -s else s, id) }
+              .take(k).map(_._1).toSet
+            val truth = exactIds.getOrElse(qid, Set.empty)
+            if (truth.isEmpty) 1.0 else rerank.intersect(truth).size.toDouble / truth.size
+          }
+          (recalls.sum / recalls.length, d / manifest.count.toDouble)
+        }
+      })
     }
-    def scoreOf(a: Seq[Double], b: Seq[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var l2 = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i)
-        val d = a(i) - b(i); l2 += d * d; i += 1
-      }
-      val raw = config.metric match {
-        case "cosine" => dot / math.sqrt(na * nb)
-        case "ip"     => dot
-        case _        => math.sqrt(l2)
-      }
-      // A zero-norm vector under cosine gives NaN (BigDecimal(NaN)
-      // would throw); rank it strictly worst, mirroring the engine's
-      // usable() gate that drops unusable scores from results.
-      if (raw.isNaN) { if (higherBetter) Double.NegativeInfinity else Double.PositiveInfinity }
-      else BigDecimal(raw).setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    val points = depths.map { d =>
-      val recalls = perQuery.map { case (qid, qv, top) =>
-        val rerank = top.take(d)
-          .map { case (id, _, v) => (id, scoreOf(qv, v)) }
-          .sortBy { case (id, s) => (if (higherBetter) -s else s, id) }
-          .take(k).map(_._1).toSet
-        val truth = exactIds.getOrElse(qid, Set.empty)
-        if (truth.isEmpty) 1.0 else rerank.intersect(truth).size.toDouble / truth.size
-      }
-      val recall = math.rint(recalls.sum / recalls.length * 10000) / 10000.0
-      val frac = math.rint(d / manifest.count.toDouble * 10000) / 10000.0
-      (d, recall, frac)
-    }
-    val chosenD = points.find(_._2 >= targetRecall).map(_._1)
-      .getOrElse(points.last._1)
-    val curve = points.map { case (d, r, f) =>
-      TuningPoint(d, r, f, chosen = d == chosenD)
-    }
-    publishTuning("pq", curve,
-      TuningParams(manifest.version, targetRecall, k, sampleQueries, seed, depthFactors))
-  }
 
   /** The tuning curve of the current snapshot (`"nprobe"` or `"pq"`),
     * if a tuning pass has published one for it. */
@@ -1419,13 +1415,132 @@ final class DocumentStore private (
     reasons.toSeq
   }
 
-  /** Load the PQ index of the pinned snapshot when the manifest lists
-    * it as live (`pqFor` = the current count): the codebook model, the
-    * codes table, and — when `pqRotated` — the OPQ rotation, which
-    * consumers apply to the QUERY before any ADC against these
-    * (rotated-space) codes. None = absent or stale. */
-  private def loadPq(): Option[(PqIndex.Model, DataFrame,
-      Option[PqIndex.MatrixRotation])] = {
+  // ------------------------------------------------------------------
+  // The one read path (reference: rank, then enrich hits by id —
+  // index.py:309-338, vectorstore.py:602-684, :782-813). Every read
+  // surface runs under [[reading]]; a vector search takes its probe set
+  // from [[probeSet]]; a ranking ends in [[topHits]] (exact top-k on
+  // the executors) or, when the ranked k rows come to the driver, in
+  // [[attachEssential]]; every hit leaves through [[hits]], and full
+  // metadata through [[enhanceWithFullMetadata]]. A change to what a
+  // result row carries is a change here.
+  // ------------------------------------------------------------------
+
+  /** Run a read on ONE pinned snapshot ([[withSnapshot]]), refusing an
+    * empty store: the one empty-store error of every read surface (an
+    * empty store has no version dir to derive even an empty frame's
+    * schema from). */
+  private def reading[A](body: => A): A = withSnapshot {
+    if (snap.count == 0) throw new SearchException("store is empty or not built")
+    body
+  }
+
+  // Centroids are persisted per snapshot version, so the in-memory copy
+  // is memoized under (path, version): search-many reads the file once
+  // per snapshot instead of once per query, and a mutation (version
+  // bump) gets fresh centroids with NO manual invalidation — the
+  // versioned key IS the invalidation.
+  private def loadCentroids(): Option[IvfIndex.Model] =
+    if (snap.nlist > 0) {
+      Some(IvfIndex.modelCached(s"$path#centroids", snap.version)(
+        IvfIndex.Model(readModel(centroidsPath(snap.version)).head)))
+    } else None
+
+  /** The probe set of a query vector: its [[effectiveNprobe]] nearest
+    * clusters on an IVF snapshot (the measured-recall tuning choice
+    * when a tuning pass has run on it), None on a flat one. Batch and
+    * single-query search both take it from here, so they prune alike. */
+  private def probeSet(qv: Seq[Double]): Option[Seq[Int]] =
+    loadCentroids().map(_.nearestCentroids(qv, effectiveNprobe))
+
+  /** `table` (essential or chunks) cut to the clusters `probes` names —
+    * a `cluster IN (...)` filter that becomes partition pruning; the
+    * whole table when there is no probe set. */
+  private def probed(table: DataFrame, probes: Option[Seq[Int]]): DataFrame =
+    probes.fold(table)(p => table.where(col("cluster").isin(p: _*)))
+
+  /** Search-space DataFrame for a query vector: IVF-pruned when
+    * clustered, full scan otherwise. */
+  private def searchSpace(qv: Seq[Double]): DataFrame = probed(essential, probeSet(qv))
+
+  /** The one hit projection: `lead` (doc_id, renamed from `id`, plus
+    * the batch's query and rank or MMR's rank), text, source, category,
+    * the `score` column, any `extras`, and `metadata_type` =
+    * "essential" (Q3). */
+  private def hits(df: DataFrame, score: Column, extras: Seq[Column] = Nil,
+                   lead: Seq[Column] = Seq(col("id").as("doc_id"))): DataFrame =
+    df.select(lead ++ Seq(col("text"), col("source"), col("category"), score) ++ extras :+
+      lit("essential").as("metadata_type"): _*)
+
+  /** Exact top-k of `space` against `qv` as hits scored `similarity`:
+    * the ranking of [[similaritySearch]] and the exact rerank both
+    * prescreens ([[similaritySearchPq]], [[similaritySearchApprox]])
+    * end in. */
+  private def topHits(space: DataFrame, qv: Seq[Double], k: Int): DataFrame =
+    hits(VectorIndex.topK(space, "vec", qv, k, config.metric,
+      scoreCol = "similarity", tieBreak = Seq("id")), col("similarity"))
+
+  /** Shared k-row enrichment of a ranking that ends on the driver:
+    * `ranked` (an `id` column and its scores, k rows) is collected and
+    * re-served as a local frame, (text, source, category) attached from
+    * the essential store, the rows put in `order` and projected as
+    * [[hits]]. The id set pushes into the essential scan as an `isin`
+    * filter (parquet pruning reads only the matching row groups) and
+    * the k-row result is the broadcast build side. INNER join on
+    * purpose: a hit id with no essential row can only be a crash-orphan
+    * (e.g. chunk rows whose batch never published — see
+    * addDFIncremental), and surfacing it as a null-text result would be
+    * worse than one short-of-k response in a crash window. */
+  private def attachEssential(ranked: DataFrame, order: Seq[Column], score: Column,
+                              extras: Seq[Column] = Nil,
+                              lead: Seq[Column] = Seq(col("id").as("doc_id"))): DataFrame = {
+    val rows = ranked.collect()
+    // Its columns are ids, ranks and scores: none is ever null.
+    val local = spark.createDataFrame(rows.toSeq.asJava,
+      StructType(ranked.schema.map(_.copy(nullable = false))))
+    val matching = essential
+      .where(col("id").isin(rows.map(_.getAs[Long]("id")).toSeq: _*))
+      .select(col("id"), col("text"), col("source"), col("category"))
+    hits(local.join(broadcast(matching), Seq("id"), "inner").orderBy(order: _*),
+      score, extras, lead)
+  }
+
+  /** Full-metadata enrichment (reference Q6,
+    * vectorstore.py:782-813). Scale shape: the hit ids (k rows) are
+    * collected driver-side — exactly the reference's positional lookups
+    * — and pushed into the payload scan as an `isin` filter (parquet
+    * predicate pushdown), so only the k matching payload rows are read;
+    * those are then the BUILD side of the broadcast join. (Broadcasting
+    * the hits themselves would be ignored: Spark cannot build the
+    * stream-preserved left side of a LEFT OUTER join.) */
+  private def enhanceWithFullMetadata(hits: DataFrame): DataFrame = {
+    // Materialize the k hit rows: an orderBy.limit subquery left under a
+    // join is fragile (downstream limit pushdown can compose with it and
+    // surface rows outside the top-k — see SparkEntry.qEnrichmentJoin).
+    val hitRows = hits.drop("metadata_type").collect()
+    val local = spark.createDataFrame(
+      spark.sparkContext.parallelize(hitRows.toIndexedSeq, 1),
+      hits.drop("metadata_type").schema)
+    val ids = hitRows.map(_.getAs[Long]("doc_id")).toIndexedSeq
+    val matching = payload
+      .where(col("doc_id").isin(ids: _*))
+      .select(col("doc_id"), col("metadata"))
+    local.join(broadcast(matching), Seq("doc_id"), "left")
+      .withColumn("metadata_type",
+        when(col("metadata").isNotNull, lit("full")).otherwise(lit("essential")))
+  }
+
+  /** The ADC prescreen of the pinned snapshot's PQ index, when the
+    * manifest lists it as live (`pqFor` = the current count; None =
+    * absent or stale): for a query vector and a depth, the `depth` codes
+    * rows (id, adc) first in (ADC distance, id) order. The model file
+    * holds the codebooks and, when `pqRotated`, the OPQ rotation, which
+    * rotates the QUERY for the ADC against the rotated-space codes;
+    * exact reranks stay in the original space (the rotation is
+    * orthonormal, so ranks agree). A null ADC is a null-codes
+    * (null-vec) doc: never a result, and ASC NULLS FIRST would let such
+    * rows consume the whole candidate budget, so they are filtered. */
+  private def pqPrescreen(): Option[(Seq[Double], Int) => DataFrame] = {
     val m = snap
     if (!m.pqFor.contains(m.count)) None
     else {
@@ -1435,8 +1550,14 @@ final class DocumentStore private (
       val (books, rot) =
         if (m.pqRotated) (matrices.init, Some(PqIndex.MatrixRotation(matrices.last)))
         else (matrices, None)
-      Some((PqIndex.Model(books.toIndexedSeq),
-        spark.read.schema(PqCodesSchema).parquet(s"${pqDir(m.version)}/codes"), rot))
+      val model = PqIndex.Model(books.toIndexedSeq)
+      val codes = spark.read.schema(PqCodesSchema).parquet(s"${pqDir(m.version)}/codes")
+      Some((qv, depth) => codes
+        .withColumn("adc", model.adcMicrosCol(col("codes"),
+          rot.fold(qv)(_.applyVec(qv).toSeq), roundScale = 4))
+        .where(col("adc").isNotNull)
+        .orderBy(col("adc"), col("id"))
+        .limit(depth))
     }
   }
 
@@ -1459,34 +1580,15 @@ final class DocumentStore private (
     * does not transfer to that larger k (the exact rerank still makes
     * the returned k best-of-depth). */
   def similaritySearchPq(query: String, k: Int = 4,
-                         candidates: Int = 0): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
+                         candidates: Int = 0): DataFrame = reading {
     val depth = math.max(k,
       if (candidates > 0) candidates else effectivePqCandidates)
-    loadPq() match {
+    pqPrescreen() match {
       case None => similaritySearch(query, k)
-      case Some((model, codes, rot)) =>
-        val qv = embedder.embedQuery(query)
-        // OPQ index: codes live in rotated space — the ADC query must
-        // too. The exact rerank below stays in ORIGINAL space (the
-        // rotation is orthonormal; ranks agree, and the returned
-        // similarity is the plain-metric number callers expect).
-        val qAdc = rot.map(_.applyVec(qv.toSeq).toSeq).getOrElse(qv.toSeq)
-        val candIds = codes
-          .withColumn("adc", model.adcMicrosCol(col("codes"), qAdc, 4))
-          // null adc = null codes = null-vec doc: it can never be a
-          // result, and ASC NULLS FIRST would let such rows consume
-          // the whole candidate budget before any real row.
-          .where(col("adc").isNotNull)
-          .orderBy(col("adc"), col("id"))
-          .limit(depth)
-          .select("id").collect().map(_.getLong(0))
-        val cand = essential.where(col("id").isin(candIds: _*))
-        VectorIndex.topK(cand, "vec", qv.toSeq, k, config.metric,
-            scoreCol = "similarity", tieBreak = Seq("id"))
-          .select(col("id").as("doc_id"), col("text"), col("source"),
-            col("category"), col("similarity"),
-            lit("essential").as("metadata_type"))
+      case Some(prescreen) =>
+        val qv = embedder.embedQuery(query).toSeq
+        val candIds = prescreen(qv, depth).select("id").collect().map(_.getLong(0))
+        topHits(essential.where(col("id").isin(candIds: _*)), qv, k)
     }
   }
 
@@ -1512,33 +1614,21 @@ final class DocumentStore private (
     * MMR rank and the query similarity. */
   def maxMarginalRelevanceSearch(query: String, k: Int = 4,
                                  fetchK: Int = 20,
-                                 lambdaParam: Double = 0.5): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
-    val qv = embedder.embedQuery(query)
-    val sel = VectorIndex.mmr(searchSpace(qv), "vec", qv.toSeq, k, fetchK,
-      lambdaParam, config.metric, idCol = "id")
-    val ids = sel.select("id").collect().map(_.getLong(0))
-    attachEssential(sel, ids.toSeq)
-      .orderBy("rank")
-      .select(col("id").as("doc_id"), col("rank"), col("text"),
-        col("source"), col("category"), col("qsim").as("similarity"),
-        lit("essential").as("metadata_type"))
+                                 lambdaParam: Double = 0.5): DataFrame = reading {
+    val qv = embedder.embedQuery(query).toSeq
+    attachEssential(VectorIndex.mmr(searchSpace(qv), "vec", qv, k, fetchK,
+        lambdaParam, config.metric, idCol = "id"),
+      Seq(col("rank")), col("qsim").as("similarity"),
+      lead = Seq(col("id").as("doc_id"), col("rank")))
   }
 
   /** Keyword top-k over the store (BM25), the lexical sibling of
     * [[similaritySearch]]: returns (doc_id, text, source, category,
     * score, metadata_type). Uses the persisted index when fresh. */
-  def searchLexical(queryTerms: Seq[String], k: Int = 4): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
-    val hits = lexicalScores(queryTerms)
-      .orderBy(col("score").desc, col("id")).limit(k).collect()
-    import spark.implicits._
-    val hitsDf = hits.map(r => (r.getLong(0), r.getDouble(1)))
-      .toSeq.toDF("id", "score")
-    attachEssential(hitsDf, hits.map(_.getLong(0)).toSeq)
-      .orderBy(col("score").desc, col("id"))
-      .select(col("id").as("doc_id"), col("text"), col("source"),
-        col("category"), col("score"), lit("essential").as("metadata_type"))
+  def searchLexical(queryTerms: Seq[String], k: Int = 4): DataFrame = reading {
+    val byScore = Seq(col("score").desc, col("id"))
+    attachEssential(lexicalScores(queryTerms).orderBy(byScore: _*).limit(k),
+      byScore, col("score"))
   }
 
   /** Late-interaction (ColBERT-style max-sim) top-k over the persisted
@@ -1548,65 +1638,27 @@ final class DocumentStore private (
     * only (StoreConfig.chunkSize > 0).
     *
     * Composition mirrors [[hybridSearch]]'s building blocks: the
-    * IVF-prunable chunk space (nprobe nearest clusters of the DOC-level
+    * IVF-prunable chunk space (the query's probe set of the DOC-level
     * coarse quantizer → partition pruning on the chunk table) →
     * [[graft.index.VectorIndex.maxSimTopK]] (per-doc best-chunk partial
-    * aggregate + TakeOrdered, no window, no join) → k-row payload
-    * enrichment ([[searchLexical]]'s broadcast shape). Returns
-    * (doc_id, text, source, category, similarity, n_chunks,
-    * metadata_type); `n_chunks` is the doc's chunk count in the scored
-    * space. */
+    * aggregate + TakeOrdered, no window, no join) → k-row essential
+    * enrichment ([[attachEssential]]). Returns (doc_id, text, source,
+    * category, similarity, n_chunks, metadata_type); `n_chunks` is the
+    * doc's chunk count in the scored space. */
   def searchMaxSim(query: String, k: Int = 4,
-                   includeFullMetadata: Boolean = false): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
+                   includeFullMetadata: Boolean = false): DataFrame = reading {
     if (snap.chunkSize <= 0) throw new SearchException(
       "store is not multi-vector: build with StoreConfig.chunkSize > 0")
-    val qv = embedder.embedQuery(query)
-    val chunks = spark.read.schema(ChunkSchema).parquet(chunksDir(snap.version))
-    val space = loadCentroids() match {
-      case Some(model) =>
-        val probes = model.nearestCentroids(qv.toSeq, effectiveNprobe)
-        chunks.where(col("cluster").isin(probes: _*))
-      case None => chunks
-    }
-    val hits = VectorIndex.maxSimTopK(space, "id", "vec", qv.toSeq, k,
-        config.metric)
-      .withColumnRenamed("score", "similarity")
-      .collect()
-    import spark.implicits._
-    val hitsDf = hits.map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-      .toSeq.toDF("id", "similarity", "n_chunks")
-    val enriched = attachEssential(hitsDf, hits.map(_.getLong(0)).toSeq)
-      .orderBy(VectorIndex.ranking(config.metric, "similarity", Seq("id")): _*)
-      .select(col("id").as("doc_id"), col("text"), col("source"),
-        col("category"), col("similarity"), col("n_chunks"),
-        lit("essential").as("metadata_type"))
+    val qv = embedder.embedQuery(query).toSeq
+    val space = probed(spark.read.schema(ChunkSchema).parquet(chunksDir(snap.version)),
+      probeSet(qv))
+    val enriched = attachEssential(
+      VectorIndex.maxSimTopK(space, "id", "vec", qv, k, config.metric)
+        .withColumnRenamed("score", "similarity"),
+      VectorIndex.ranking(config.metric, "similarity", Seq("id")),
+      col("similarity"), extras = Seq(col("n_chunks")))
     if (includeFullMetadata) enhanceWithFullMetadata(enriched) else enriched
   }
-
-  // Centroids are persisted per snapshot version, so the in-memory copy
-  // is memoized under (path, version): search-many reads the file once
-  // per snapshot instead of once per query, and a mutation (version
-  // bump) gets fresh centroids with NO manual invalidation — the
-  // versioned key IS the invalidation.
-  private def loadCentroids(): Option[IvfIndex.Model] =
-    if (snap.nlist > 0) {
-      Some(IvfIndex.modelCached(s"$path#centroids", snap.version)(
-        IvfIndex.Model(readModel(centroidsPath(snap.version)).head)))
-    } else None
-
-  /** Search-space DataFrame for a query vector: IVF-pruned (nprobe
-    * nearest clusters → partition pruning) when clustered, full scan
-    * otherwise. */
-  private def searchSpace(qv: Array[Double]): DataFrame =
-    loadCentroids() match {
-      case Some(model) =>
-        // effectiveNprobe: the measured-recall tuning choice when a
-        // tuning pass has run on this snapshot (see tuneNprobe).
-        val probes = model.nearestCentroids(qv.toSeq, effectiveNprobe)
-        essential.where(col("cluster").isin(probes: _*))
-      case None => essential
-    }
 
   /** Top-k semantic search (reference Q1/Q4). Returns a DataFrame of
     * (doc_id, text, source, category, similarity, metadata_type
@@ -1614,21 +1666,14 @@ final class DocumentStore private (
     * semantics (higher=better for cosine/ip, distance for l2). */
   def similaritySearch(query: String, k: Int = 4,
                        includeFullMetadata: Boolean = false,
-                       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
-    val qv = embedder.embedQuery(query)
+                       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = reading {
+    val qv = embedder.embedQuery(query).toSeq
     // Metadata-filtered ANN (the `filter` arg of the LangChain
     // similarity_search surface): the predicate lands on the scored
     // scan BEFORE top-k selection — pre-filtering, so the result is
     // exactly "top-k among matching docs", never k minus casualties —
     // and pushes into the parquet read where the columns allow.
-    val space = filter.foldLeft(searchSpace(qv))((df, f) => df.where(f))
-    val hits = VectorIndex.topK(
-        space, "vec", qv.toSeq, k, config.metric,
-        scoreCol = "similarity", tieBreak = Seq("id"))
-      .select(col("id").as("doc_id"), col("text"), col("source"),
-        col("category"), col("similarity"),
-        lit("essential").as("metadata_type"))
+    val hits = topHits(filter.foldLeft(searchSpace(qv))((df, f) => df.where(f)), qv, k)
     if (includeFullMetadata) enhanceWithFullMetadata(hits) else hits
   }
 
@@ -1644,16 +1689,11 @@ final class DocumentStore private (
     * result size is data-dependent; pure scan + filter over the
     * (IVF-pruned) search space, no sort or limit. */
   def similaritySearchRadius(query: String, threshold: Double,
-                             includeFullMetadata: Boolean = false): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
-    val qv = embedder.embedQuery(query)
-    val hits = VectorIndex.radiusSearch(
-        searchSpace(qv), "vec", qv.toSeq, threshold, config.metric,
-        scoreCol = "similarity")
-      .select(col("id").as("doc_id"), col("text"), col("source"),
-        col("category"), col("similarity"),
-        lit("essential").as("metadata_type"))
-    if (includeFullMetadata) enhanceWithFullMetadata(hits) else hits
+                             includeFullMetadata: Boolean = false): DataFrame = reading {
+    val qv = embedder.embedQuery(query).toSeq
+    val found = hits(VectorIndex.radiusSearch(searchSpace(qv), "vec", qv, threshold,
+      config.metric, scoreCol = "similarity"), col("similarity"))
+    if (includeFullMetadata) enhanceWithFullMetadata(found) else found
   }
 
   /** Approximate top-k via a binary sign-bit prescreen: 63-bit codes
@@ -1665,12 +1705,11 @@ final class DocumentStore private (
     * it falls back to exact [[similaritySearch]]. Composable with IVF:
     * the prescreen runs over the nprobe-pruned search space. */
   def similaritySearchApprox(query: String, k: Int = 4,
-                             candidates: Int = 100): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
+                             candidates: Int = 100): DataFrame = reading {
     if (!VectorFunctions.higherIsBetter(config.metric))
       similaritySearch(query, k)
     else {
-      val qv = embedder.embedQuery(query)
+      val qv = embedder.embedQuery(query).toSeq
       val qbits = qv.take(63).zipWithIndex.foldLeft(0L) {
         case (acc, (x, j)) => if (x > 0.0) acc | (1L << j) else acc
       }
@@ -1682,11 +1721,7 @@ final class DocumentStore private (
         .where(col("hamming").isNotNull)
         .orderBy(col("hamming"), col("id"))
         .limit(candidates)
-      VectorIndex.topK(cand, "vec", qv.toSeq, k, config.metric,
-          scoreCol = "similarity", tieBreak = Seq("id"))
-        .select(col("id").as("doc_id"), col("text"), col("source"),
-          col("category"), col("similarity"),
-          lit("essential").as("metadata_type"))
+      topHits(cand, qv, k)
     }
   }
 
@@ -1716,33 +1751,23 @@ final class DocumentStore private (
     * per-(doc, query) probe-membership predicate restricts each query's
     * ranking to ITS clusters, so batch and single-query results agree
     * exactly. */
-  def similaritySearchBatch(queries: Seq[String], k: Int = 4): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
+  def similaritySearchBatch(queries: Seq[String], k: Int = 4): DataFrame = reading {
     import spark.implicits._
     // Distinct queries: a duplicated query string would score every doc
     // once per copy and interleave duplicate rows inside its own top-k.
-    val embedded = queries.distinct.map(q => (q, embedder.embedQuery(q).toSeq))
-    val (docs, qdf, keep) = loadCentroids() match {
-      case Some(model) =>
-        // effectiveNprobe everywhere a probe set is computed: batch
-        // and single-query search MUST prune identically or the
-        // documented batch==single parity breaks under tuning.
-        val withProbes = embedded.map { case (q, qv) =>
-          (q, qv, model.nearestCentroids(qv, effectiveNprobe))
-        }
-        val union = withProbes.flatMap(_._3).distinct
-        (essential.where(col("cluster").isin(union: _*)),
-          withProbes.toDF("query", "qv", "probes"),
-          Some(array_contains(col("probes"), col("cluster"))))
-      case None =>
-        (essential, embedded.toDF("query", "qv"), None)
+    val embedded = queries.distinct.map { q =>
+      val qv = embedder.embedQuery(q).toSeq
+      (q, qv, probeSet(qv))
     }
-    VectorIndex.topKBatch(docs, "vec", qdf, "query", "qv", k,
-        config.metric, scoreCol = "similarity", tieBreak = Seq("id"),
-        keep = keep)
-      .select(col("query"), col("rank"), col("id").as("doc_id"), col("text"),
-        col("source"), col("category"), col("similarity"),
-        lit("essential").as("metadata_type"))
+    val (docs, qdf, keep) =
+      if (snap.nlist > 0)
+        (probed(essential, Some(embedded.flatMap(_._3.get).distinct)),
+          embedded.map { case (q, qv, p) => (q, qv, p.get) }.toDF("query", "qv", "probes"),
+          Some(array_contains(col("probes"), col("cluster"))))
+      else (essential, embedded.map { case (q, qv, _) => (q, qv) }.toDF("query", "qv"), None)
+    hits(VectorIndex.topKBatch(docs, "vec", qdf, "query", "qv", k,
+        config.metric, scoreCol = "similarity", tieBreak = Seq("id"), keep = keep),
+      col("similarity"), lead = Seq(col("query"), col("rank"), col("id").as("doc_id")))
   }
 
   /** Hybrid retrieval over the store: BM25 keyword relevance on the
@@ -1755,68 +1780,19 @@ final class DocumentStore private (
     * (same scale shape as full-metadata enrichment: predicate pushdown
     * reads only k rows, which become the broadcast build side). */
   def hybridSearch(query: String, queryTerms: Seq[String], k: Int = 4,
-                   perSourceK: Int = 50, rrfK: Int = 60): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
-    val qv = embedder.embedQuery(query)
-    val vecScores = VectorIndex.topK(searchSpace(qv), "vec", qv.toSeq,
+                   perSourceK: Int = 50, rrfK: Int = 60): DataFrame = reading {
+    val qv = embedder.embedQuery(query).toSeq
+    val vecScores = VectorIndex.topK(searchSpace(qv), "vec", qv,
         perSourceK, config.metric, scoreCol = "score", tieBreak = Seq("id"))
       .select(col("id"), col("score"))
     val vecForFuse =
       if (VectorFunctions.higherIsBetter(config.metric)) vecScores
       else vecScores.withColumn("score", -col("score"))
-    val bmScores = lexicalScores(queryTerms)
-    val fused = TextSearch.hybridRrf(bmScores, vecForFuse, "id",
-      perSourceK, rrfK, k).collect()
-    import spark.implicits._
-    val fusedDf = fused.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-      r.getDouble(3))).toSeq.toDF("id", "rank_keyword", "rank_vector", "rrf")
-    attachEssential(fusedDf, fused.map(_.getLong(0)).toSeq)
-      .orderBy(col("rrf").desc, col("id"))
-      .select(col("id").as("doc_id"), col("text"), col("source"),
-        col("category"), col("rrf"), col("rank_keyword"), col("rank_vector"),
-        lit("essential").as("metadata_type"))
-  }
-
-  /** Shared k-row enrichment: attach (text, source, category) from the
-    * essential store to a driver-materialized hit frame keyed by `id`.
-    * The id set pushes into the essential scan as an `isin` filter
-    * (parquet pruning reads only the matching row groups) and the k-row
-    * result is the broadcast build side. INNER join on purpose: a hit
-    * id with no essential row can only be a crash-orphan (e.g. chunk
-    * rows whose batch never published — see addDFIncremental), and
-    * surfacing it as a null-text result would be worse than one
-    * short-of-k response in a crash window. One definition for every
-    * search surface, so a fix here fixes them all. */
-  private def attachEssential(hitsDf: DataFrame, ids: Seq[Long]): DataFrame = {
-    val matching = essential
-      .where(col("id").isin(ids: _*))
-      .select(col("id"), col("text"), col("source"), col("category"))
-    hitsDf.join(broadcast(matching), Seq("id"), "inner")
-  }
-
-  /** Full-metadata enrichment (reference Q6,
-    * vectorstore.py:782-813). Scale shape: the hit ids (k rows) are
-    * collected driver-side — exactly the reference's positional lookups
-    * — and pushed into the payload scan as an `isin` filter (parquet
-    * predicate pushdown), so only the k matching payload rows are read;
-    * those are then the BUILD side of the broadcast join. (Broadcasting
-    * the hits themselves would be ignored: Spark cannot build the
-    * stream-preserved left side of a LEFT OUTER join.) */
-  private def enhanceWithFullMetadata(hits: DataFrame): DataFrame = {
-    // Materialize the k hit rows: an orderBy.limit subquery left under a
-    // join is fragile (downstream limit pushdown can compose with it and
-    // surface rows outside the top-k — see SparkEntry.qEnrichmentJoin).
-    val hitRows = hits.drop("metadata_type").collect()
-    val local = spark.createDataFrame(
-      spark.sparkContext.parallelize(hitRows.toIndexedSeq, 1),
-      hits.drop("metadata_type").schema)
-    val ids = hitRows.map(_.getAs[Long]("doc_id")).toIndexedSeq
-    val matching = payload
-      .where(col("doc_id").isin(ids: _*))
-      .select(col("doc_id"), col("metadata"))
-    local.join(broadcast(matching), Seq("doc_id"), "left")
-      .withColumn("metadata_type",
-        when(col("metadata").isNotNull, lit("full")).otherwise(lit("essential")))
+    val fused = TextSearch.hybridRrf(lexicalScores(queryTerms), vecForFuse, "id",
+        perSourceK, rrfK, k)
+      .toDF("id", "rank_keyword", "rank_vector", "rrf")
+    attachEssential(fused, Seq(col("rrf").desc, col("id")), col("rrf"),
+      extras = Seq(col("rank_keyword"), col("rank_vector")))
   }
 
   /** Point lookup by id (reference Q7, retriever.py:258-316). */
@@ -1829,15 +1805,10 @@ final class DocumentStore private (
   }
 
   /** Set lookup — one semijoin job, not a loop (reference Q8 loops Q7,
-    * retriever.py:372-394). Empty store: typed SearchException like
-    * every other DataFrame-returning read (there is no version dir to
-    * derive an empty frame's schema from). */
-  def getDocumentsByIds(ids: Seq[Long], includeFullMetadata: Boolean = false): DataFrame = withSnapshot {
-    if (snap.count == 0) throw new SearchException("store is empty or not built")
-    val base = essential.where(col("id").isin(ids: _*))
-      .select(col("id").as("doc_id"), col("text"), col("source"),
-        col("category"), lit(0.0).as("similarity"),
-        lit("essential").as("metadata_type"))
+    * retriever.py:372-394). Empty store: the typed SearchException of
+    * every DataFrame-returning read ([[reading]]). */
+  def getDocumentsByIds(ids: Seq[Long], includeFullMetadata: Boolean = false): DataFrame = reading {
+    val base = hits(essential.where(col("id").isin(ids: _*)), lit(0.0).as("similarity"))
     if (includeFullMetadata) enhanceWithFullMetadata(base) else base
   }
 

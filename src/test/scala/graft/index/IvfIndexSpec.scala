@@ -153,6 +153,19 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
+  test("fit is a function of the rows: scan order and partitioning do not move the centroids") {
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 400).map(i => (i.toLong, Seq.fill(4)(rnd.nextDouble() * 2 - 1)))
+    // 400 points under the 256·nlist cap: every row trains, unsampled.
+    val onePartition = rows.toDF("id", "vec").repartition(1)
+    val fourShuffled = new scala.util.Random(9).shuffle(rows).toDF("id", "vec").repartition(4)
+    for (init <- Seq("k-means||", "random")) {
+      val a = IvfIndex.fit(onePartition, "vec", nlist = 4, initMode = init, rowCount = 400L, dim = 4)
+      val b = IvfIndex.fit(fourShuffled, "vec", nlist = 4, initMode = init, rowCount = 400L, dim = 4)
+      assert(a.centroids == b.centroids, s"initMode $init")
+    }
+  }
+
   test("fitCached: -1 and 0 share ONE cache entry (normalized key)") {
     val rnd = new scala.util.Random(11)
     val vecs = (0 until 60).map(i =>
