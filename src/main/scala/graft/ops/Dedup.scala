@@ -17,6 +17,23 @@ import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
   * candidates come from equi-joins on shingles / LSH band buckets /
   * SimHash prefix buckets, which shuffle-partition by key and scale out.
   * Exact similarity is computed only on candidate pairs.
+  *
+  * One candidate core: every pair detector is the same pattern (Broder's
+  * shingling and MinHash; the PPJoin prefix filter, Xiao et al. 2008):
+  * explode keys per document, cap hot keys, join documents on a shared
+  * key, verify the candidates exactly. Each step is one private
+  * definition the detectors call: the shingle set ([[shingleSets]],
+  * exploded by [[shingleKeys]]), the per-key document frequency
+  * ([[keyFreq]]), the hot-key cap ([[hotKeys]], [[withoutKeys]],
+  * [[capped]]) and the hot-band statistics ([[hotBandStats]]), the
+  * bucket self-join ([[bucketPairs]], [[candidateIds]]), the one-scan
+  * re-attach of each side's payload ([[withSides]]), and the rounded
+  * ratio against its threshold ([[ratioAtLeast]], [[jaccardAtLeast]],
+  * [[verifiedJaccard]]). What differs between detectors stays with the
+  * detector: the physical preparation before the self-join (the shingle
+  * repartition of [[ngramJaccardPairs]], none for [[fingerprintPairs]]),
+  * the windowed size recount under a cap, and the both-sides frequency
+  * of [[ngramJaccardAgainst]].
   */
 object Dedup {
 
@@ -40,6 +57,114 @@ object Dedup {
         .select(key.as("dedup_key"), col(idCol), lit(1L).as("dup_count")))
   }
 
+  // --- The candidate-pair core -----------------------------------------
+  // Each step of the detectors' one pattern is defined once here; the
+  // detectors below compose them (see the object's scaladoc).
+
+  /** A document's shingle set: (id, sh), `sh` the distinct word
+    * `n`-grams of `textCol`. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+                          n: Int): DataFrame =
+    df.select(col(idCol).as("id"), TextFunctions.shingles(col(textCol), n).as("sh"))
+
+  /** The exploded (id, n_sh, shingle) stream of [[shingleSets]]: one row
+    * per distinct shingle of a document, with the set's size. */
+  private def shingleKeys(sets: DataFrame): DataFrame =
+    sets.select(col("id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("shingle"))
+
+  /** Per-key document frequency `__df` of an exploded (id, key) stream.
+    * A key occurs once per document, so a row count is the document
+    * count, and the groupBy keeps map-side partial aggregation: a
+    * corpus-wide hot key collapses to one partial count per map task. */
+  private def keyFreq(keys: DataFrame, key: String): DataFrame =
+    keys.groupBy(key).agg(count(lit(1)).as("__df"))
+
+  /** The keys of a [[keyFreq]] table held by more than `cap` documents. */
+  private def hotKeys(freq: DataFrame, key: String, cap: Long): DataFrame =
+    freq.where(col("__df") > cap).select(key)
+
+  /** `keys` without the rows whose key is in `hot`. NO broadcast hint:
+    * the hot table's cardinality depends on the data and the cap (a low
+    * cap on a dup-heavy corpus makes most of the vocabulary "hot", a
+    * corpus-scale table the hint would force onto the driver and every
+    * executor). AQE broadcasts it at runtime when it measures small;
+    * otherwise a shuffled anti-join is the scale-safe shape. */
+  private def withoutKeys(keys: DataFrame, key: String, hot: DataFrame): DataFrame =
+    keys.join(hot, Seq(key), "left_anti")
+
+  /** The hot-key cap over a stream's own frequencies: `keys` without
+    * the keys held by more than `cap` documents. */
+  private def capped(keys: DataFrame, key: String, cap: Long): DataFrame =
+    withoutKeys(keys, key, hotKeys(keyFreq(keys, key), key, cap))
+
+  /** The bucket self-join: each pair of documents sharing a `key` value,
+    * once per shared value, with a.id < b.id; the sides are aliased `a`
+    * and `b`. Each caller prepares `keyed` physically first. */
+  private def bucketPairs(keyed: DataFrame, key: String): DataFrame =
+    keyed.as("a").join(keyed.as("b"),
+      col(s"a.$key") === col(s"b.$key") && col("a.id") < col("b.id"))
+
+  /** The distinct (id_a, id_b) pairs of [[bucketPairs]]. */
+  private def candidateIds(keyed: DataFrame, key: String): DataFrame =
+    bucketPairs(keyed, key).select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+
+  /** Attaches `payload`'s column `c` (keyed by `id`) to both sides of
+    * the candidate pairs `cand` as `<c>_a` and `<c>_b`, with ONE scan of
+    * `payload` (r17). Each pair explodes into its two (pair, id, side)
+    * rows, one candidate-bounded equi-join attaches the payload, and
+    * max(when(side...)) folds the two values back per pair: exactly one
+    * non-null per side per pair, and max of one value is that value.
+    * Joining `payload` once per side instead runs its whole subtree
+    * twice, and at bench-scale estimates the planner broadcast those
+    * corpus-sized legs. */
+  private def withSides(cand: DataFrame, payload: DataFrame, c: String): DataFrame = {
+    val sides = cand.select(col("id_a"), col("id_b"),
+        explode(array(
+          struct(col("id_a").as("id"), lit("a").as("s")),
+          struct(col("id_b").as("id"), lit("b").as("s")))).as("e"))
+      .select(col("id_a"), col("id_b"), col("e.id").as("id"), col("e.s").as("s"))
+    sides.join(payload, "id")
+      .groupBy("id_a", "id_b")
+      .agg(max(when(col("s") === "a", col(c))).as(s"${c}_a"),
+        max(when(col("s") === "b", col(c))).as(s"${c}_b"))
+  }
+
+  /** The ratio `common / denominator` as column `name`, rounded to 4
+    * places before it is compared, and kept when at least `threshold`. */
+  private def ratioAtLeast(pairs: DataFrame, name: String, denominator: Column,
+                           threshold: Double): DataFrame =
+    pairs.withColumn(name,
+        round(col("common").cast("double") / denominator.cast("double"), 4))
+      .where(col(name) >= threshold)
+
+  /** The Jaccard ratio of two sets of sizes `na` and `nb` that share
+    * `common` elements: |A∩B| / (|A| + |B| − |A∩B|). */
+  private def jaccardAtLeast(pairs: DataFrame, na: Column, nb: Column,
+                             threshold: Double): DataFrame =
+    ratioAtLeast(pairs, "jaccard", na + nb - col("common"), threshold)
+
+  /** The exact verify of candidate pairs carrying both shingle sets
+    * (`sh_a`, `sh_b`): (id_a, id_b, jaccard) at or above `threshold`. */
+  private def verifiedJaccard(pairs: DataFrame, threshold: Double): DataFrame =
+    jaccardAtLeast(
+        pairs.withColumn("common", size(array_intersect(col("sh_a"), col("sh_b")))),
+        size(col("sh_a")), size(col("sh_b")), threshold)
+      .select("id_a", "id_b", "jaccard")
+
+  /** The hot-band statistics over a band [[keyFreq]] table at `cap`:
+    * `hot_buckets`, `dropped_rows` and `max_bucket` (see
+    * [[minhashLshHotBandStats]]). Both the observed metrics of
+    * [[minhashLshPairsWithStats]] and the standalone form aggregate
+    * these columns. */
+  private def hotBandStats(cap: Long): Seq[Column] = Seq(
+    coalesce(sum(when(col("__df") > cap, 1L).otherwise(0L)), lit(0L)).as("hot_buckets"),
+    coalesce(sum(when(col("__df") > cap, col("__df")).otherwise(0L)), lit(0L))
+      .as("dropped_rows"),
+    coalesce(max(col("__df")), lit(0L)).as("max_bucket"))
+
+  // --- The detectors ----------------------------------------------------
+
   /** Candidate pairs sharing >= 1 word n-gram shingle, with exact
     * Jaccard similarity over distinct-shingle sets. Returns pairs with
     * jaccard >= threshold, id_a < id_b.
@@ -51,11 +176,8 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.5,
                         maxShingleFreq: Option[Long] = None): DataFrame =
-    shinglePairCounts(df, idCol, textCol, n, maxShingleFreq)
-      .withColumn("jaccard",
-        round(col("common").cast("double") /
-          (col("n_a") + col("n_b") - col("common")).cast("double"), 4))
-      .where(col("jaccard") >= threshold)
+    jaccardAtLeast(shinglePairCounts(df, idCol, textCol, n, maxShingleFreq),
+        col("n_a"), col("n_b"), threshold)
       .select("id_a", "id_b", "jaccard")
 
   /** Shared candidate machinery for the exact set-similarity pairs:
@@ -77,26 +199,8 @@ object Dedup {
     * corpus-sized broadcast). */
   private def shinglePairCounts(df: DataFrame, idCol: String, textCol: String,
                                 n: Int, maxShingleFreq: Option[Long]): DataFrame = {
-    val withSh = df.select(col(idCol).as("id"),
-      TextFunctions.shingles(col(textCol), n).as("shs"))
-    val filtered = maxShingleFreq match {
-      case Some(f) =>
-        val sh = withSh.select(col("id"), explode(col("shs")).as("sh"))
-        // NO broadcast hint: the hot table's cardinality is data- and
-        // threshold-dependent (a low cap on a dup-heavy corpus makes
-        // "hot" most of the shingle vocabulary — a corpus-scale string
-        // table the hint would force onto the driver and every
-        // executor). AQE broadcasts it at runtime when it measures
-        // small; otherwise a shuffled anti-join is the scale-safe shape.
-        val hot = sh.groupBy("sh").count().where(col("count") > f).select("sh")
-        val kept = sh.join(hot, Seq("sh"), "left_anti")
-        import org.apache.spark.sql.expressions.Window
-        kept.withColumn("n_sh",
-          count(lit(1)).over(Window.partitionBy("id")).cast("int"))
-      case None =>
-        withSh.select(col("id"), size(col("shs")).as("n_sh"),
-          explode(col("shs")).as("sh"))
-    }
+    import org.apache.spark.sql.expressions.Window
+    val keys = shingleKeys(shingleSets(df, idCol, textCol, n))
     // Explicit shingle-key repartition BEFORE the self-join (r17): the
     // two join legs are the same plan, so with both pre-partitioned on
     // the join key the planner reuses ONE exchange — the tokenize/
@@ -107,9 +211,10 @@ object Dedup {
     // collected to the driver and shipped to every executor — wrong at
     // every scale past toy corpora, and the leg duplication stands
     // even when it falls back to shuffle.
-    val keyed = filtered.repartition(col("sh"))
-    keyed.as("a").join(keyed.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
+    val keyed = maxShingleFreq.fold(keys)(f => capped(keys, "shingle", f)
+        .withColumn("n_sh", count(lit(1)).over(Window.partitionBy("id")).cast("int")))
+      .repartition(col("shingle"))
+    bucketPairs(keyed, "shingle")
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("common"),
         max(col("a.n_sh")).as("n_a"), max(col("b.n_sh")).as("n_b"))
@@ -139,11 +244,8 @@ object Dedup {
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             n: Int = 3, threshold: Double = 0.8,
                             maxShingleFreq: Option[Long] = None): DataFrame =
-    shinglePairCounts(df, idCol, textCol, n, maxShingleFreq)
-      .withColumn("containment",
-        round(col("common").cast("double") /
-          least(col("n_a"), col("n_b")).cast("double"), 4))
-      .where(col("containment") >= threshold)
+    ratioAtLeast(shinglePairCounts(df, idCol, textCol, n, maxShingleFreq),
+        "containment", least(col("n_a"), col("n_b")), threshold)
       .select("id_a", "id_b", "containment")
 
   /** Exact Jaccard pair join via PREFIX FILTERING (the set-similarity-
@@ -175,18 +277,13 @@ object Dedup {
     * only lengthens the prefix (more candidates, never a miss). */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = df.select(col(idCol).as("id"),
-      TextFunctions.shingles(col(textCol), n).as("shs"))
-    val cand = prefixCandidatesOf(withSh, threshold)
-    cand
-      .join(withSh.select(col("id").as("id_a"), col("shs").as("sh_a")), "id_a")
-      .join(withSh.select(col("id").as("id_b"), col("shs").as("sh_b")), "id_b")
-      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        round(col("common").cast("double") /
-          (col("n_a") + col("n_b") - col("common")).cast("double"), 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    val sets = shingleSets(df, idCol, textCol, n)
+    // One join of `sets` per side, not [[withSides]]: on sf0.1 (4
+    // cores) the one-scan shape measured slower here, a median 6.6 vs
+    // 4.9 s at threshold 0.5 and 7.9 vs 7.0 s at 0.3.
+    verifiedJaccard(prefixCandidatesOf(sets, threshold)
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b"), threshold)
   }
 
   /** The prefix-filtered candidate stage of [[prefixJaccardPairs]]:
@@ -197,25 +294,19 @@ object Dedup {
     * exists to bound. */
   def prefixCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, threshold: Double = 0.5): DataFrame =
-    prefixCandidatesOf(
-      df.select(col(idCol).as("id"),
-        TextFunctions.shingles(col(textCol), n).as("shs")), threshold)
+    prefixCandidatesOf(shingleSets(df, idCol, textCol, n), threshold)
 
-  private def prefixCandidatesOf(withSh: DataFrame,
-                                 threshold: Double): DataFrame = {
+  private def prefixCandidatesOf(sets: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = withSh.select(col("id"), size(col("shs")).as("n_sh"),
-      explode(col("shs")).as("sh"))
-    val freq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
+    val keys = shingleKeys(sets)
     val alpha = ceil(col("n_sh").cast("double") * threshold - lit(1e-9)).cast("int")
     val prefixLen = greatest(col("n_sh") - alpha + 1, lit(1))
-    val prefix = sh.join(freq, "sh")
+    val prefix = keys.join(keyFreq(keys, "shingle"), "shingle")
       .withColumn("rn", row_number().over(
-        Window.partitionBy("id").orderBy(col("df"), col("sh"))))
+        Window.partitionBy("id").orderBy(col("__df"), col("shingle"))))
       .where(col("rn") <= prefixLen)
-      .select("id", "n_sh", "sh")
-    prefix.as("a").join(prefix.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
+      .select("id", "n_sh", "shingle")
+    bucketPairs(prefix, "shingle")
       .select(col("a.id").as("id_a"), col("a.n_sh").as("n_a"),
         col("b.id").as("id_b"), col("b.n_sh").as("n_b"))
       .dropDuplicates("id_a", "id_b")
@@ -245,16 +336,16 @@ object Dedup {
     * them for a groupBy, and clustering the survivors is the right
     * pipeline (TrainingPipeline's order); same contract note as
     * [[simhashPairs]]' degenerate-doc screen. OBSERVABILITY (r13/r15):
-    * [[minhashLshPairsWithStats]] reports how many buckets a run
-    * dropped and how hot the hottest was FOR FREE on the pairs action
-    * itself (one scan); [[minhashLshHotBandStats]] is the standalone
-    * diagnostic form. */
+    * these are the pairs of [[minhashLshPairsWithStats]], which reports
+    * how many buckets a run dropped and how hot the hottest was FOR
+    * FREE on the pairs action itself (one scan);
+    * [[minhashLshHotBandStats]] is the standalone diagnostic form. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5,
                       capPerBand: Int = 1024): DataFrame =
-    lshPairsCore(df, idCol, textCol, n, numHashes, bands, threshold,
-      capPerBand, observeWith = None)
+    minhashLshPairsWithStats(df, idCol, textCol, n, numHashes, bands, threshold,
+      capPerBand)._1
 
   /** One-pass (pairs, stats) variant of [[minhashLshPairs]] — the
     * observability-for-free form (carried judge ask r13#2): the
@@ -277,21 +368,9 @@ object Dedup {
                                n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                                threshold: Double = 0.5, capPerBand: Int = 1024)
       : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val pairs = lshPairsCore(df, idCol, textCol, n, numHashes, bands,
-      threshold, capPerBand, observeWith = Some(obs))
-    (pairs, obs)
-  }
-
-  private def lshPairsCore(df: DataFrame, idCol: String, textCol: String,
-                           n: Int, numHashes: Int, bands: Int,
-                           threshold: Double, capPerBand: Int,
-                           observeWith: Option[org.apache.spark.sql.Observation])
-      : DataFrame = {
     require(capPerBand >= 2,
       s"capPerBand must leave room for at least one pair per bucket, got $capPerBand")
     val (sh, banded) = shingleBands(df, idCol, textCol, n, numHashes, bands)
-
     // Hot-bucket cap: the hot-key table is tiny by construction (keys
     // with > capPerBand members), so the anti-join broadcasts; the
     // counting pass shuffles on the same band key the candidate join
@@ -300,65 +379,25 @@ object Dedup {
     // sides' shared exchange (exchange reuse dedupes a/b) — measured
     // ~free on the ScaleBench row (x1 1.69 s capped vs 1.73 s r11
     // uncapped; the pair join dominates, not the sha pass).
-    val bandCounts0 = banded.groupBy("band")
-      .agg(count(lit(1)).as("__bf"))
+    //
     // The observed metrics fold the full band-count stream BEFORE the
-    // hot filter — the same rows minhashLshHotBandStats aggregates —
-    // as side-channel accumulators of the pairs action itself.
-    val bandCounts = observeWith.fold(bandCounts0)(o => bandCounts0.observe(o,
-      coalesce(sum(when(col("__bf") > capPerBand, 1L).otherwise(0L)),
-        lit(0L)).as("hot_buckets"),
-      coalesce(sum(when(col("__bf") > capPerBand, col("__bf"))
-        .otherwise(0L)), lit(0L)).as("dropped_rows"),
-      coalesce(max(col("__bf")), lit(0L)).as("max_bucket")))
-    val hotBandsReal = bandCounts
-      .where(col("__bf") > capPerBand)
-      .select("band")
-    // AQE guard for the observed variant (measured, not theorized): on
-    // a quiet corpus the hot side is EMPTY, and AQE's empty-relation
-    // propagation replaces the anti-join with its left child — pruning
-    // the CollectMetrics node with it, so the observation silently
-    // never completes. A sentinel band key no real key can equal (real
-    // keys are digits and '|') keeps the right side non-empty — the
-    // anti-join result is unchanged, the broadcast carries one extra
-    // row, and the observed subtree always reaches the executed plan.
-    val hotBands = observeWith match {
-      case None => hotBandsReal
-      case Some(_) => hotBandsReal.unionAll(
-        df.sparkSession.range(1).select(lit("§sentinel§").as("band")))
-    }
-    val kept = banded.join(hotBands, Seq("band"), "left_anti")
-
-    val cand = kept.as("a").join(kept.as("b"),
-        col("a.band") === col("b.band") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    // ONE shingle pass for the verify re-attach (r17): the old shape
-    // joined `sh` twice (once per pair side), and each join leg
-    // re-executed the whole tokenize+shingle subtree over the corpus —
-    // and at bench-scale estimates the planner BROADCAST those
-    // corpus-sized legs. Exploding each candidate pair into its two
-    // (pair, id, side) rows instead makes the verify a single
-    // candidate-bounded equi-join against one shingle scan; the pair's
-    // two arrays fold back with max(when(side...)) — exactly one
-    // non-null per side per pair, and arrays are orderable, so max is
-    // just "the value".
-    val sides = cand.select(col("id_a"), col("id_b"),
-        explode(array(
-          struct(col("id_a").as("id"), lit("a").as("s")),
-          struct(col("id_b").as("id"), lit("b").as("s")))).as("e"))
-      .select(col("id_a"), col("id_b"), col("e.id").as("id"), col("e.s").as("s"))
-    sides.join(sh, "id")
-      .groupBy("id_a", "id_b")
-      .agg(max(when(col("s") === "a", col("sh"))).as("sh_a"),
-        max(when(col("s") === "b", col("sh"))).as("sh_b"))
-      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        round(col("common").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("common")).cast("double"), 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    // hot filter — the rows minhashLshHotBandStats aggregates — as
+    // side-channel accumulators of the pairs action itself.
+    val obs = org.apache.spark.sql.Observation()
+    val stats = hotBandStats(capPerBand)
+    val freq = keyFreq(banded, "band").observe(obs, stats.head, stats.tail: _*)
+    // AQE guard (measured, not theorized): on a quiet corpus the hot
+    // side is EMPTY, and AQE's empty-relation propagation replaces the
+    // anti-join with its left child — pruning the CollectMetrics node
+    // with it, so the observation silently never completes. A sentinel
+    // band key no real key can equal (real keys are digits and '|')
+    // keeps the right side non-empty — the anti-join result is
+    // unchanged, the broadcast carries one extra row, and the observed
+    // subtree always reaches the executed plan.
+    val hot = hotKeys(freq, "band", capPerBand).unionAll(
+      df.sparkSession.range(1).select(lit("§sentinel§").as("band")))
+    val cand = candidateIds(withoutKeys(banded, "band", hot), "band")
+    (verifiedJaccard(withSides(cand, sh, "sh"), threshold), obs)
   }
 
   /** Shared LSH front half: (shingled docs, exploded (id, band) keys).
@@ -373,9 +412,7 @@ object Dedup {
                            n: Int, numHashes: Int,
                            bands: Int): (DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sh = df.select(col(idCol).as("id"),
-        TextFunctions.shingles(col(textCol), n).as("sh"))
-      .where(size(col("sh")) > 0)
+    val sh = shingleSets(df, idCol, textCol, n).where(size(col("sh")) > 0)
     val banded = sh.select(col("id"),
       explode(TextFunctions.minhashBands(col("sh"), numHashes, bands)).as("band"))
     (sh, banded)
@@ -407,13 +444,8 @@ object Dedup {
                              n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                              capPerBand: Int = 1024): DataFrame = {
     val (_, banded) = shingleBands(df, idCol, textCol, n, numHashes, bands)
-    banded.groupBy("band").agg(count(lit(1)).as("__bf"))
-      .agg(
-        coalesce(sum(when(col("__bf") > capPerBand, 1L).otherwise(0L)),
-          lit(0L)).as("hot_buckets"),
-        coalesce(sum(when(col("__bf") > capPerBand, col("__bf"))
-          .otherwise(0L)), lit(0L)).as("dropped_rows"),
-        coalesce(max(col("__bf")), lit(0L)).as("max_bucket"))
+    val stats = hotBandStats(capPerBand)
+    keyFreq(banded, "band").agg(stats.head, stats.tail: _*)
   }
 
   /** SimHash near-dup pairs: 63-bit token-vote fingerprints; candidate
@@ -502,8 +534,7 @@ object Dedup {
     // (1.02 -> 1.91 s on q_image_neardup). At corpus scale the
     // adversarial no-broadcast regime already pins the sort-merge
     // fallback's correctness.
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.id") < col("b.id"))
+    bucketPairs(banded, "band")
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.simhash").as("h_a"), col("b.simhash").as("h_b"))
       .dropDuplicates("id_a", "id_b")
@@ -762,9 +793,18 @@ object Dedup {
     * count because spans are distinct within a doc. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      window: Int = 8): DataFrame =
-    df.select(explode(TextFunctions.shingles(col(textCol), window)).as("span"))
-      .groupBy("span").agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") >= 2)
+    spansInDocs(df, textCol, window, 2).withColumnRenamed("__df", "n_docs")
+
+  /** (span, `__df`): the `window`-token spans held by at least `minDocs`
+    * documents, with that document count — a [[keyFreq]] over a shingle
+    * pass, whose spans are distinct within a document. The explode takes
+    * the shingle expression itself, not a projected column: over a
+    * column the optimizer infers a `size(...) > 0` filter and pushes it
+    * below the projection, which evaluates the shingles twice per row. */
+  private def spansInDocs(df: DataFrame, textCol: String, window: Int,
+                          minDocs: Int): DataFrame =
+    keyFreq(df.select(explode(TextFunctions.shingles(col(textCol), window)).as("span")), "span")
+      .where(col("__df") >= minDocs)
 
   /** Maximal duplicated token RANGES per document — the step after
     * [[duplicateSpans]]: positions of every `window`-token span that
@@ -817,14 +857,7 @@ object Dedup {
           concat_ws(" ", slice(col("toks"), i, lit(window))).as("span"))))
         .as("u"))
       .select(col("id"), col("u.p").as("p"), col("u.span").as("span"))
-    // Distinct-doc count per span WITH partial aggregation: shingles()
-    // is per-doc-distinct, so each (doc, span) contributes exactly one
-    // exploded row and count(*) == n distinct docs.
-    val qualifying = df
-      .select(explode(TextFunctions.shingles(col(textCol), window)).as("span"))
-      .groupBy("span").agg(count(lit(1)).as("__nd"))
-      .where(col("__nd") >= minDocs)
-      .select("span")
+    val qualifying = spansInDocs(df, textCol, window, minDocs).select("span")
     import org.apache.spark.sql.expressions.Window
     val hits = spans.join(qualifying, Seq("span")).select("id", "p")
     val w = Window.partitionBy("id").orderBy("p")
@@ -899,10 +932,8 @@ object Dedup {
     * deterministic — cache it otherwise. */
   def duplicateSpanFraction(df: DataFrame, idCol: String, textCol: String,
                             window: Int = 8): DataFrame = {
-    val withSh = df.select(col(idCol).as("id"),
-      TextFunctions.shingles(col(textCol), window).as("shs"))
-    val spans = withSh.select(col("id"), size(col("shs")).as("n_spans"),
-      explode(col("shs")).as("span"))
+    val spans = shingleSets(df, idCol, textCol, window)
+      .select(col("id"), size(col("sh")).as("n_spans"), explode(col("sh")).as("span"))
     // Per-span document counts come from a groupBy over a second
     // shingle pass, NOT a window over the exploded frame: shingles()
     // is per-doc-distinct, so count(*) per span == distinct docs, and
@@ -916,11 +947,7 @@ object Dedup {
     // applies to shuffle joins only), so hot boilerplate spans became
     // a single-task straggler at corpus scale. The price — shingling
     // the corpus twice — is embarrassingly parallel.
-    val dupSpans = df
-      .select(explode(TextFunctions.shingles(col(textCol), window)).as("span"))
-      .groupBy("span").agg(count(lit(1)).as("__nd"))
-      .where(col("__nd") >= 2)
-      .select("span")
+    val dupSpans = spansInDocs(df, textCol, window, 2).select("span")
     spans.join(dupSpans, Seq("span"))
       .groupBy(col("id"), col("n_spans"))
       .agg(count(lit(1)).as("n_dup_spans"))
@@ -991,20 +1018,7 @@ object Dedup {
             i => col("txt").substr(i, lit(n)))))
     }
     val sh = base.select(col("id"), explode(blocks).as("sh"))
-    val kept = maxShingleFreq match {
-      case Some(f) =>
-        // No broadcast hint — data-dependent cardinality; see
-        // shinglePairCounts (AQE broadcasts small hot tables itself).
-        val hot = sh.groupBy("sh").count().where(col("count") > f).select("sh")
-        sh.join(hot, Seq("sh"), "left_anti")
-      case None => sh
-    }
-    val cand = kept.as("a").join(kept.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    cand
-      .join(base.select(col("id").as("id_a"), col("txt").as("txt_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("txt").as("txt_b")), Seq("id_b"))
+    withSides(candidateIds(maxShingleFreq.fold(sh)(capped(sh, "sh", _)), "sh"), base, "txt")
       .where(abs(length(col("txt_a")) - length(col("txt_b"))) <= maxDist)
       .withColumn("dist", levenshtein(col("txt_a"), col("txt_b")))
       .where(col("dist") <= maxDist)
@@ -1079,34 +1093,27 @@ object Dedup {
                           idCol: String, textCol: String,
                           n: Int = 3, threshold: Double = 0.5,
                           maxShingleFreq: Option[Long] = None): DataFrame = {
-    def side(df: DataFrame) = df.select(col(idCol).as("id"),
-      TextFunctions.shingles(col(textCol), n).as("shs"))
-    val bs = side(batch)
-    val cs = side(corpus)
-    val be = bs.select(col("id"), explode(col("shs")).as("sh"))
-    val ce = cs.select(col("id"), explode(col("shs")).as("sh"))
+    val bs = shingleSets(batch, idCol, textCol, n)
+    val cs = shingleSets(corpus, idCol, textCol, n)
+    val be = shingleKeys(bs)
+    val ce = shingleKeys(cs)
     // Hot-shingle cap (web-scale posture, see ngramJaccardPairs): df is
     // computed over BOTH sides so a shingle hot in the corpus alone
     // still gets dropped from the batch side of the join.
     val (bKept, cKept, bSizes, cSizes) = maxShingleFreq match {
       case Some(f) =>
-        // No broadcast hint on the hot table — data-dependent
-        // cardinality (see shinglePairCounts); AQE broadcasts it at
-        // runtime when it measures small.
-        val hot = be.union(ce).groupBy("sh").count()
-          .where(col("count") > f).select("sh")
-        val bk = be.join(hot, Seq("sh"), "left_anti")
-        val ck = ce.join(hot, Seq("sh"), "left_anti")
+        val hot = hotKeys(keyFreq(be.union(ce), "shingle"), "shingle", f)
+        val bk = withoutKeys(be, "shingle", hot)
+        val ck = withoutKeys(ce, "shingle", hot)
         (bk, ck, bk.groupBy("id").agg(count(lit(1)).as("n_sh")),
           ck.groupBy("id").agg(count(lit(1)).as("n_sh")))
       case None =>
-        (be, ce, bs.select(col("id"), size(col("shs")).as("n_sh")),
-          cs.select(col("id"), size(col("shs")).as("n_sh")))
+        (be, ce, bs.select(col("id"), size(col("sh")).as("n_sh")),
+          cs.select(col("id"), size(col("sh")).as("n_sh")))
     }
-    val common = bKept.as("a").join(cKept.as("b"), col("a.sh") === col("b.sh"))
+    val pairs = bKept.as("a").join(cKept.as("b"), col("a.shingle") === col("b.shingle"))
       .groupBy(col("a.id").as("batch_id"), col("b.id").as("corpus_id"))
       .agg(count(lit(1)).as("common"))
-    common
       // No broadcast hint on the batch-size table: it is one row per
       // BATCH document, and nothing bounds the caller's batch (the
       // bench feeds half the corpus as the batch) — a forced broadcast
@@ -1116,10 +1123,7 @@ object Dedup {
         "batch_id")
       .join(cSizes.select(col("id").as("corpus_id"), col("n_sh").as("n_b")),
         "corpus_id")
-      .withColumn("jaccard",
-        round(col("common").cast("double") /
-          (col("n_a") + col("n_b") - col("common")).cast("double"), 4))
-      .where(col("jaccard") >= threshold)
+    jaccardAtLeast(pairs, col("n_a"), col("n_b"), threshold)
       .select("batch_id", "corpus_id", "jaccard")
   }
 
@@ -1168,8 +1172,7 @@ object Dedup {
         shiftleft(lit(1L), j)).otherwise(lit(0L))
     }.reduce(_ + _)
     val coded = df.select(col(idCol).as("id"), col(vecCol).as("v"), code.as("bucket"))
-    coded.as("a").join(coded.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+    bucketPairs(coded, "bucket")
       .withColumn("cosine",
         round(VectorFunctions.cosineSimilarity(col("a.v"), col("b.v")), 4))
       .where(col("cosine") >= threshold)

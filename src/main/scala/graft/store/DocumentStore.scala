@@ -42,7 +42,10 @@ import graft.store.Commits.fsFor
   * #                               matrix, nlist × dim
   * <path>/v<N>/payload/          # parquet: doc_id, text, metadata,
   * #                               payload_json (full-fidelity record)
-  * <path>/v<N>/dedup_bloom.bin   # ingest-dedup Bloom filter
+  * <path>/v<N>/dedup_bloom_<c>.bin # ingest-dedup Bloom filter over the
+  * #                               manifest's `count` c documents; an
+  * #                               append writes a new file and sweeps
+  * #                               the one it supersedes
   * <path>/v<N>/dedup_keys/       # parquet: sha-sorted (k, id) key table
   * <path>/v<N>/chunks/           # parquet (multi-vector only): id, vec
   * <path>/v<N>/lexical/          # optional BM25 index (postings, terms,
@@ -166,7 +169,8 @@ final class DocumentStore private (
   private def essentialDir(v: Long) = s"${versionDir(v)}/essential"
   private def payloadDir(v: Long) = s"${versionDir(v)}/payload"
   private def centroidsPath(v: Long) = s"${versionDir(v)}/centroids"
-  private def bloomPath(v: Long) = s"${versionDir(v)}/dedup_bloom.bin"
+  private def bloomName(m: StoreManifest) = s"dedup_bloom_${m.count}.bin"
+  private def bloomPath(m: StoreManifest) = s"${versionDir(m.version)}/${bloomName(m)}"
   private def dedupKeysDir(v: Long) = s"${versionDir(v)}/dedup_keys"
   private def lexicalDir(v: Long) = s"${versionDir(v)}/lexical"
   private def pqDir(v: Long) = s"${versionDir(v)}/pq"
@@ -738,11 +742,17 @@ final class DocumentStore private (
         val rows = essentialProjection(base)
         // The batch's assignment distances to the live centroids fold
         // into the drift ledger in the commit that publishes the count.
-        val (dn, ds) = writeTables(manifest, rows, payloadProjection(base),
-          if (manifest.chunkSize > 0) Some(chunkRows(rows)) else None, loadCentroids(), bloom)
-        publish(manifest.copy(count = offset + nNew,
-          ivfAppendedN = manifest.ivfAppendedN + dn,
-          ivfAppendedSum = manifest.ivfAppendedSum + ds))
+        val m = manifest.copy(count = offset + nNew)
+        val (dn, ds) = writeTables(m, rows, payloadProjection(base),
+          if (m.chunkSize > 0) Some(chunkRows(rows)) else None, loadCentroids(), bloom)
+        publish(m.copy(ivfAppendedN = m.ivfAppendedN + dn,
+          ivfAppendedSum = m.ivfAppendedSum + ds))
+        // The merged filter went to the new count's name, so the one the
+        // previous commit named was never rewritten; only the writer
+        // reads a filter, so it goes now.
+        if (m.bloomExpected > 0L)
+          Commits.sweep(fsFor(spark, path), hadoopPath(versionDir(m.version)))(n =>
+            n.startsWith("dedup_bloom_") && n != bloomName(m))
       }
     } finally base.unpersist()
   }
@@ -847,12 +857,14 @@ final class DocumentStore private (
     *    rows, the key table range-sorted by sha in files of ≤ 4M keys
     *    (min/max statistics prune the point lookups of both), a Bloom
     *    filter sized by `m`, and the centroids file.
-    *  - An append (`m` is the live manifest) adds a batch's rows to the
-    *    live version as new unsorted files, assigned to the live
-    *    centroids, and folds the batch's keys into the live Bloom
-    *    filter `live` with `m`'s creation params (identical params give
-    *    identical bits, so the merge is exact; sustained appends degrade
-    *    its fpp until the next full write sizes a new one).
+    *  - An append (`m` is the live manifest with the count it will
+    *    publish) adds a batch's rows to the live version as new unsorted
+    *    files, assigned to the live centroids, and folds the batch's keys
+    *    into the live Bloom filter `live` with `m`'s creation params
+    *    (identical params give identical bits, so the merge is exact;
+    *    sustained appends degrade its fpp until the next full write
+    *    sizes a new one). The merged filter goes to `m`'s file name, so
+    *    the file the live manifest names is never rewritten.
     *
     * With `model`, essential and chunks are partitioned by cluster
     * (chunk vectors live in the doc vectors' space, so searchMaxSim's
@@ -891,7 +903,7 @@ final class DocumentStore private (
       val bloom = live.fold(built.getOrElse(BloomFilter.create(m.bloomExpected, m.bloomFpp))) {
         b => built.foreach(b.mergeInPlace); b
       }
-      writeFile(bloomPath(v))(bloom.writeTo)
+      writeFile(bloomPath(m))(bloom.writeTo)
       rangeSorted(keys, "k", 4000000L).write.mode(mode).parquet(dedupKeysDir(v))
     }
     payloadRows.write.mode(mode).parquet(payloadDir(v))
@@ -960,7 +972,7 @@ final class DocumentStore private (
 
   private def loadBloom(): Option[BloomFilter] =
     if (manifest.bloomExpected == 0L) None
-    else Some(readFile(bloomPath(manifest.version))(BloomFilter.readFrom))
+    else Some(readFile(bloomPath(manifest))(BloomFilter.readFrom))
 
   /** Count the `part-*` data files under `dir` (recursive — clustered
     * layouts nest them under partition dirs). One listing, no data IO. */

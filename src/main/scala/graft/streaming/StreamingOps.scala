@@ -960,6 +960,10 @@ object StreamingOps {
     val l0Paths = prev.l0.map(l0DataPath(indexPath, _))
     def readBlobs(paths: Seq[String]) =
       spark.read.schema(dataSchema).parquet(paths: _*)
+    // Sorted within each partition, so a blob's bytes are a function of
+    // its rows: distinct() emits them in shuffle-fetch order.
+    def writeBlob(rows: DataFrame, p: String): Unit =
+      rows.distinct().sortWithinPartitions(dataCols: _*).write.mode("overwrite").parquet(p)
     val nextVersion = prev.version + 1L
     val promote = prev.l1 < 0L || (l0Bytes + newBytes) > l0Fraction * l1Bytes
     val (l1Out, l0Out) =
@@ -967,18 +971,15 @@ object StreamingOps {
         val all = prev.blobs.map(b => s"$indexPath/_compact/$b")
         val merged =
           if (all.isEmpty) dirBands else dirBands.unionAll(readBlobs(all))
-        merged.distinct().write.mode("overwrite")
-          .parquet(compactDataPath(indexPath, nextVersion))
+        writeBlob(merged, compactDataPath(indexPath, nextVersion))
         (nextVersion, Seq.empty[Long])
       } else if (prev.l0.size + 1 > maxL0) {
         val sub =
           if (l0Paths.isEmpty) dirBands else dirBands.unionAll(readBlobs(l0Paths))
-        sub.distinct().write.mode("overwrite")
-          .parquet(l0DataPath(indexPath, nextVersion))
+        writeBlob(sub, l0DataPath(indexPath, nextVersion))
         (prev.l1, Seq(nextVersion))
       } else {
-        dirBands.distinct().write.mode("overwrite")
-          .parquet(l0DataPath(indexPath, nextVersion))
+        writeBlob(dirBands, l0DataPath(indexPath, nextVersion))
         (prev.l1, prev.l0 :+ nextVersion)
       }
     val compactDir = new Path(s"$indexPath/_compact")

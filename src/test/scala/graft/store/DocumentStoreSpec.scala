@@ -122,7 +122,7 @@ class DocumentStoreSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val v = store.currentManifest.version
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v$v/dedup_bloom.bin")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v$v/dedup_bloom_${store.currentManifest.count}.bin")))
     // incremental append screens through the bloom: dups dropped, new kept
     import spark.implicits._
     store.addDFIncremental(Seq(
@@ -139,7 +139,7 @@ class DocumentStoreSpec extends SparkSpec {
     val s2 = DocumentStore.fromTexts(spark, d2, texts.take(3), Nil,
       StoreConfig(dedupBloomFpp = 0.0), emb)
     val v2 = s2.currentManifest.version
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$d2/v$v2/dedup_bloom.bin")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$d2/v$v2/dedup_bloom_${s2.currentManifest.count}.bin")))
     s2.addTexts(Seq(texts.head, "fresh"))
     assert(s2.documentCount == 4)
   }

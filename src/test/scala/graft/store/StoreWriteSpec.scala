@@ -142,6 +142,30 @@ class StoreWriteSpec extends SparkSpec {
       s"baseline ${m.ivfBaselineMean} != exact mean $exact")
   }
 
+  test("an addDFIncremental rewrites no file of the live version: the merged Bloom filter gets a new name") {
+    import spark.implicits._
+    val dir = tmp()
+    val store = DocumentStore.fromTexts(spark, dir, Seq("alpha one", "beta two", "gamma three"),
+      Nil, StoreConfig(), emb)
+    val live = s"$dir/v${store.currentManifest.version}"
+    def contents(): Map[String, Seq[Byte]] = listing(live).keys
+      .map(f => f -> Files.readAllBytes(java.nio.file.Paths.get(live, f)).toSeq).toMap
+    def append(texts: String*): Unit =
+      store.addDFIncremental(texts.map(t => (t, Map.empty[String, String])).toDF("text", "metadata"))
+    for (batch <- Seq(Seq("delta four", "alpha one"), Seq("epsilon five"))) {
+      val before = contents()
+      append(batch: _*)
+      val after = contents()
+      val rewritten = (before.keySet & after.keySet).filter(f => before(f) != after(f))
+      assert(rewritten.isEmpty, s"files rewritten in place: $rewritten")
+      assert(after.keySet.count(_.startsWith("dedup_bloom")) == 1, after.keySet)
+    }
+    assert(store.documentCount == 5)
+    // the filter the last append published screens that append's text
+    append("epsilon five")
+    assert(store.documentCount == 5)
+  }
+
   /** Bound on the jobs of a 20-doc `addTexts` on a 150-doc nlist=4
     * store: 12 measured on local[4], plus a margin of 7 for incidental
     * jobs (listing, adaptive-execution re-planning) that do not touch

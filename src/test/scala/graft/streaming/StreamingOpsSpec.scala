@@ -1276,4 +1276,27 @@ class StreamingOpsSpec extends SparkSpec {
       assert(log.where(col("batch_id") === 0).head().getAs[Long]("n_rows") == 2L)
     } finally q2.stop()
   }
+
+  test("compactBandIndex: every blob file holds its rows in ascending order (promote, L0 append, L0 consolidation)") {
+    // A blob's bytes must be a function of its rows: distinct() alone
+    // emits them in shuffle-fetch order, which varies run to run.
+    val dir = Files.createTempDirectory("graft-compact-sorted").toString
+    def run(batchId: Long): Unit = StreamingOps.nearDupScreenBatch(
+        (0 until 8).map { i =>
+          val id = batchId * 100L + i
+          (id, (0 until 12).map(j => s"t${id}_$j").mkString(" "), ts(i))
+        }.toDF("id", "text", "ts"),
+        dir, batchId, "id", "text", "ts").collect()
+    val noL1 = 1e9
+    run(0L); StreamingOps.compactBandIndex(spark, dir, 0L, l0Fraction = noL1, maxL0 = 1) // v=0
+    run(1L); StreamingOps.compactBandIndex(spark, dir, 1L, l0Fraction = noL1, maxL0 = 1) // l0=1
+    run(2L); StreamingOps.compactBandIndex(spark, dir, 2L, l0Fraction = noL1, maxL0 = 1) // l0=2
+    val blobs = new java.io.File(s"$dir/_compact").listFiles()
+      .filter(f => f.isDirectory && (f.getName.startsWith("v=") || f.getName.startsWith("l0=")))
+    assert(blobs.map(_.getName).toSet == Set("v=0", "l0=1", "l0=2"), blobs.map(_.getName).toSeq)
+    for (blob <- blobs; f <- blob.listFiles() if f.getName.endsWith(".parquet")) {
+      val bands = spark.read.parquet(f.getPath).collect().map(_.getString(0)).toSeq
+      assert(bands.nonEmpty && bands == bands.sorted, s"${blob.getName}/${f.getName}: $bands")
+    }
+  }
 }
